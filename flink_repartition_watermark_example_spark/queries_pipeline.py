@@ -559,13 +559,22 @@ def q_span_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "both exchanges are plain hash shuffles; nothing global.",
 )
 def q_span_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return span_dedup_rewrite(load_table(spark, sf_dir, "documents"))
+
+
+def span_dedup_rewrite(docs: DataFrame) -> DataFrame:
+    """``span_dedup_docs`` over ``docs``: keep the first (doc_id,
+    chunk_id) occurrence of every segment and reassemble."""
     from pyspark.sql.window import Window
 
-    segs = span_segments(load_table(spark, sf_dir, "documents"))
     w = Window.partitionBy("seg_key").orderBy("doc_id", "chunk_id")
-    kept = segs.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") == 1
-    )
+    kept = span_segments(docs).withColumn("rn", F.row_number().over(w))
+    return reassemble_spans(kept.where(F.col("rn") == 1))
+
+
+def reassemble_spans(kept: DataFrame) -> DataFrame:
+    """(doc_id, dedup_text, n_kept_segs): each doc's kept segments
+    joined in original order; a doc with none kept disappears."""
     return kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(

@@ -178,10 +178,20 @@ def stream_shuffle_width() -> int:
     overhead.  At 100 TB this default is WRONG on purpose-visible
     grounds: it exists only for bounded local replays; deployments
     must set the env var (or size shuffle.partitions themselves)
-    to key cardinality."""
+    to key cardinality.  A set value that is not a positive integer
+    (empty, ``0``, negative, non-numeric) raises, naming the variable,
+    instead of being guessed at."""
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        return max(1, int(env))
+    if env is not None:
+        try:
+            width = int(env)
+        except ValueError:
+            width = 0
+        if width < 1:
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got {env!r}"
+            )
+        return width
     from flink_repartition_watermark_example_spark.session import (
         _default_parallelism,
     )

@@ -17,6 +17,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from flink_repartition_watermark_example_spark.streaming.vstore import (
+    versions as _snapshot_versions,
+)
+
 
 def write_parquet_partitioned(
     df: DataFrame,
@@ -155,18 +159,6 @@ def cdc_merge_writer(
         )
 
     return write
-
-
-def _snapshot_versions(snapshot_path: str) -> list[int]:
-    if not os.path.isdir(snapshot_path):
-        return []
-    out = []
-    for name in os.listdir(snapshot_path):
-        if name.startswith("v") and name[1:].isdigit():
-            # only COMMITTED versions count (Spark writes _SUCCESS last)
-            if os.path.exists(os.path.join(snapshot_path, name, "_SUCCESS")):
-                out.append(int(name[1:]))
-    return sorted(out)
 
 
 def read_cdc_snapshot(spark, snapshot_path: str, version: int | None = None) -> DataFrame:

@@ -5,22 +5,18 @@ streaming/sketch.py counter discipline, not the dedup indexes'
 membership discipline).
 
 Each micro-batch contributes a delta of exact per-(event_type, hour)
-counts, written as a versioned ``v{batch_id}`` parquet directory with
-a ``_SUCCESS`` commit point:
+counts as one version of a versioned store (streaming/vstore.py holds
+the protocol: exactly-once under crash replay, staging, empty batches,
+compaction and crash recovery).
 
-- exactly-once under crash replay: a re-run batch overwrites its OWN
-  version (idempotent); a partial version without ``_SUCCESS`` is
-  invisible;
-- the merged state is a pure SUM over deltas — counts are algebraic,
-  so after replaying a corpus in ANY split order the merged hourly
-  counts equal the batch aggregation exactly, and the detector output
-  equals the batch query exactly (``tests/test_streaming_anomaly.py``
-  asserts row-set equality).  No arrival-order caveat at all — the
-  strongest stream==batch contract in the streaming package, because
-  counter addition commutes where dedup membership does not;
-- ``compact_counts`` folds all versions into one (sums are lossless),
-  reusing v{max} with the shared ``_COMPACTED`` marker so a replayed
-  pre-compaction batch skips its writes.
+Algebra: the merged state is a pure SUM over deltas — counts are
+algebraic, so after replaying a corpus in ANY split order the merged
+hourly counts equal the batch aggregation exactly, and the detector
+output equals the batch query exactly
+(``tests/test_streaming_anomaly.py`` asserts row-set equality).  No
+arrival-order caveat at all — the strongest stream==batch contract in
+the streaming package, because counter addition commutes where dedup
+membership does not.  Compaction is the same sum, so it is lossless.
 
 The detector itself is ``queries_catalog.rolling_zscore_anomalies``
 — the SAME function the batch query runs, applied to the merged
@@ -35,18 +31,14 @@ aggregate, exactly the bounded-state argument of the CMS index.
 
 from __future__ import annotations
 
-import os
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_repartition_watermark_example_spark.streaming.neardup import (
-    COMPACTED_MARKER,
-    recover_compaction,
-    replay_hits_compacted,
-)
-from flink_repartition_watermark_example_spark.streaming.sketch import _versions
+from flink_repartition_watermark_example_spark.streaming.vstore import VersionedStore
+
+
+def _sum_counts(df: DataFrame) -> DataFrame:
+    return df.groupBy("event_type", "h").agg(F.sum("n").cast("long").alias("n"))
 
 
 def hourly_count_writer(index_path: str, *, ts_col: str = "ts",
@@ -55,44 +47,20 @@ def hourly_count_writer(index_path: str, *, ts_col: str = "ts",
     count delta as ``v{batch_id}``.  Keyword-required columns (the
     streaming/sketch.py key_col lesson): a caller counting a
     different stream must say so explicitly."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        recover_compaction(index_path)
-        if replay_hits_compacted(index_path, batch_id):
-            return  # delta already folded into the compacted snapshot
-        # Aggregate first, then ONE job: write the delta to a tmp dir
-        # and publish via footer-count + rename (r13 — see
-        # int8scale._publish_delta_if_nonempty; the previous
-        # persist + isEmpty probe + write was two jobs per batch).
-        from flink_repartition_watermark_example_spark.streaming.int8scale import (
-            _publish_delta_if_nonempty,
-        )
-
-        delta = batch_df.groupBy(
+    return VersionedStore(index_path).writer(
+        lambda df: df.groupBy(
             F.col(key_col).alias("event_type"),
             F.date_trunc("hour", ts_col).alias("h"),
         ).agg(F.count(F.lit(1)).alias("n"))
-        _publish_delta_if_nonempty(delta, index_path, int(batch_id))
-
-    return write
+    )
 
 
 def read_hourly_counts(spark: SparkSession, index_path: str) -> DataFrame:
     """The merged counts: SUM of all committed deltas per (type,
     hour) — equals the batch aggregation over everything the
     committed versions saw, in any arrival order."""
-    vs = _versions(index_path)
-    if not vs:
-        return spark.createDataFrame(
-            [], "event_type string, h timestamp, n bigint"
-        )
-    parts = [
-        spark.read.parquet(os.path.join(index_path, f"v{v}")) for v in vs
-    ]
-    return (
-        reduce(lambda a, b: a.unionByName(b), parts)
-        .groupBy("event_type", "h")
-        .agg(F.sum("n").cast("long").alias("n"))
+    return VersionedStore(index_path).merged(
+        spark, _sum_counts, "event_type string, h timestamp, n bigint"
     )
 
 
@@ -107,19 +75,5 @@ def detect_anomalies(spark: SparkSession, index_path: str) -> DataFrame:
 
 def compact_counts(spark: SparkSession, index_path: str) -> int:
     """Fold every committed version into one (counter sums are
-    lossless); reuses v{max} via the shared staged-rename discipline.
-    Returns the number of versions removed."""
-    import shutil
-
-    recover_compaction(index_path)
-    vs = _versions(index_path)
-    if len(vs) <= 1:
-        return 0
-    merged = read_hourly_counts(spark, index_path)
-    tmp = os.path.join(index_path, f"_compact_tmp_v{vs[-1]}")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    for v in vs:
-        shutil.rmtree(os.path.join(index_path, f"v{v}"))
-    os.rename(tmp, os.path.join(index_path, f"v{vs[-1]}"))
-    return len(vs) - 1
+    lossless); returns the number of versions removed."""
+    return VersionedStore(index_path).compact(spark, _sum_counts)

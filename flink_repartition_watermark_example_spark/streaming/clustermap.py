@@ -9,13 +9,16 @@ labels.  The writer maintains, per micro-batch (foreachBatch):
 
 1. **simhash band index** — the batch's docs get 60-bit simhashes and
    4×15-bit band keys (identical geometry to the batch
-   ``simhash_neardup_pairs`` pipeline); the delta is versioned,
+   ``simhash_neardup_pairs`` pipeline); the delta is staged in the
+   versioned store (streaming/vstore.py holds the protocol),
    band-partitioned and (bucket, key)-clustered within each band's
    file (row-group min/max stats carry the bucket dimension), so the
    new-vs-index candidate join prunes to the bands/buckets the batch
-   touches and per-batch cost is independent of corpus age.
+   touches and per-batch cost is independent of corpus age.  Its
+   algebra is a plain union; the delta commits after the map write.
 2. **new pairs** — new-vs-new plus new-vs-index candidates on
-   (band, bucket, key), verified by ``bit_count(xor) <= max_hamming``.
+   (band, bucket, key) (``neardup.candidate_pairs``, shared with the
+   LSH index), verified by ``bit_count(xor) <= max_hamming``.
 3. **LABEL-GRAPH merge** — the genuinely incremental step: each new
    pair (a, b) is an edge between label(a) and label(b) (a new doc's
    initial label is itself), and connected components run over THAT
@@ -34,10 +37,10 @@ labels.  The writer maintains, per micro-batch (foreachBatch):
    highest committed version, older versions give AS-OF time travel
    (sinks.read_cdc_snapshot reads these directly).
 
-Compaction of the band index reuses streaming/neardup.py's
-crash-repairable machinery verbatim (same column conventions); the
-map needs no compaction — each version is already a full snapshot,
-and sinks.vacuum_cdc_snapshot applies for retention.
+Compaction of the band index (:func:`compact_index`) is the shared
+versioned-store compaction; the map needs none — each version is
+already a full snapshot, and sinks.vacuum_cdc_snapshot applies for
+retention.
 
 The bucket cap caveat is inherited from streaming/neardup.py: with
 ``max_bucket_docs`` set, candidate emission is capped against the
@@ -72,12 +75,14 @@ from flink_repartition_watermark_example_spark.operators.graph import (
     DRIVER_CC_MAX_EDGES,
     connected_components,
 )
+from flink_repartition_watermark_example_spark.sinks import read_cdc_snapshot
 from flink_repartition_watermark_example_spark.streaming.neardup import (
     INDEX_BUCKETS,
-    _read_index,
-    _versions,
-    recover_compaction,
-    replay_hits_compacted,
+    candidate_pairs,
+)
+from flink_repartition_watermark_example_spark.streaming.vstore import (
+    VersionedStore,
+    versions,
 )
 
 _W = SIMHASH_BITS // SIMHASH_BANDS
@@ -115,26 +120,35 @@ def _split_col(label):
     )
 
 
-def _map_versions(map_path: str) -> list[int]:
-    return _versions(map_path)
+# The materialized (doc_id, cluster_id, split) map: highest committed
+# version, or AS-OF ``version=`` (a batch id).
+read_cluster_map = read_cdc_snapshot
 
 
-def read_cluster_map(
-    spark: SparkSession, map_path: str, version: int | None = None
-) -> DataFrame:
-    """The materialized (doc_id, cluster_id, split) map: highest
-    committed version, or AS-OF ``version`` (a batch id) — the same
-    time-travel contract as sinks.read_cdc_snapshot."""
-    vs = _map_versions(map_path)
-    if not vs:
-        raise FileNotFoundError(f"no committed cluster map under {map_path}")
-    if version is None:
-        version = vs[-1]
-    elif version not in vs:
-        raise FileNotFoundError(
-            f"version {version} not committed under {map_path}; have {vs}"
-        )
-    return spark.read.parquet(os.path.join(map_path, f"v{version}"))
+def _index(index_path: str) -> VersionedStore:
+    return VersionedStore(index_path, ("band",))
+
+
+def _clustered(bands: DataFrame) -> DataFrame:
+    # Index-version layout (measured r12): partition dirs by BAND
+    # only (4 dirs/version) and cluster each band's file by
+    # (bucket, key) so parquet row-group min/max stats carry the
+    # bucket dimension — the guide §6 layout (partition by the
+    # low-cardinality column, sort by the high-cardinality one).
+    # The earlier partitionBy(band, bucket) wrote <=256 dirs per
+    # version; the per-dir commit overhead was 2.7 s/batch at
+    # sf0.1 (8.3 s of the 28.4 s replay) and the extra pruning it
+    # bought over row-group stats is marginal because a corpus-
+    # sized batch touches every bucket anyway.
+    return bands.repartition("band").sortWithinPartitions("bucket", "key")
+
+
+def compact_index(spark: SparkSession, index_path: str) -> int:
+    """Fold all committed band-index versions into one snapshot (a
+    plain union, re-clustered); returns the surviving version id, -1
+    when empty."""
+    _index(index_path).compact(spark, _clustered)
+    return (versions(index_path) or [-1])[-1]
 
 
 def cluster_map_writer(
@@ -149,102 +163,32 @@ def cluster_map_writer(
     docstring for the per-batch algorithm and the exactly-once /
     stream==batch contracts."""
 
+    index = _index(index_path)
+
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         bid = int(batch_id)
-        recover_compaction(index_path)
-        if replay_hits_compacted(index_path, bid):
+        if index.begin(bid):
             return  # delta already folded into the compacted snapshot
-        if batch_df.isEmpty():  # empty replay split: nothing to merge
-            return
 
-        # Commit the band-index delta FIRST and read it back for every
+        # Stage the band-index delta FIRST and read it back for every
         # downstream join (the streaming/semdedup.py discipline, r12):
         # the simhash+banding pipeline is materialized exactly once BY
         # the write the index needs anyway, replacing the separate
         # eager-localCheckpoint job that previously materialized the
-        # same rows a second time.  Crash-safe unchanged: a replayed
-        # batch overwrites its own version dir before recomputing the
-        # map, and the map write below still commits last.
-        # Index-version layout (measured r12): partition dirs by BAND
-        # only (4 dirs/version) and cluster each band's file by
-        # (bucket, key) so parquet row-group min/max stats carry the
-        # bucket dimension — the guide §6 layout (partition by the
-        # low-cardinality column, sort by the high-cardinality one).
-        # The earlier partitionBy(band, bucket) wrote <=256 dirs per
-        # version; the per-dir commit overhead was 2.7 s/batch at
-        # sf0.1 (8.3 s of the 28.4 s replay) and the extra pruning it
-        # bought over row-group stats is marginal because a corpus-
-        # sized batch touches every bucket anyway.
-        _banded(batch_df, text_col).repartition("band").sortWithinPartitions(
-            "bucket", "key"
-        ).write.mode("overwrite").partitionBy("band").parquet(
-            os.path.join(index_path, f"v{bid}")
-        )
-        new = spark.read.parquet(os.path.join(index_path, f"v{bid}"))
-        old = _read_index(spark, index_path, below=bid)
+        # same rows a second time.  The stage commits after the map
+        # write, so a folded delta always implies a committed map.
+        if index.stage(_clustered(_banded(batch_df, text_col)), bid) == 0:
+            return  # empty replay split: nothing to merge
+        new = index.read_stage(spark, bid)
+        old = index.read(spark, below=bid)
 
-        a = new.select(
-            F.col("doc_id").alias("doc_a"),
-            "band",
-            "bucket",
-            "key",
-            F.col("simhash").alias("sim_a"),
-        )
-        if max_bucket_docs is not None:
-            # emission-time cap over the population known at this
-            # batch's horizon (streaming/neardup.py discipline); the
-            # `a` side alone suffices — every candidate leg below
-            # takes its left side from `a`.
-            pop = new.select("doc_id", "band", "key")
-            if old is not None:
-                pop = pop.unionByName(old.select("doc_id", "band", "key"))
-            hot = (
-                pop.groupBy("band", "key")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .where(F.col("__n") > max_bucket_docs)
-                .select("band", "key")
-            )
-            a = a.join(F.broadcast(hot), ["band", "key"], "left_anti")
-
-        b_new = new.select(
-            F.col("doc_id").alias("doc_b"),
-            "band",
-            "bucket",
-            "key",
-            F.col("simhash").alias("sim_b"),
-        )
-        cand = (
-            a.join(b_new, ["band", "bucket", "key"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", "sim_a", "sim_b")
-        )
-        if old is not None:
-            b_old = old.select(
-                F.col("doc_id").alias("doc_b"),
-                "band",
-                "bucket",
-                "key",
-                F.col("simhash").alias("sim_b"),
-            )
-            # normalize both orientations to doc_a < doc_b
-            cross = a.join(b_old, ["band", "bucket", "key"]).select(
-                F.least("doc_a", "doc_b").alias("doc_a"),
-                F.greatest("doc_a", "doc_b").alias("doc_b"),
-                F.when(F.col("doc_a") < F.col("doc_b"), F.col("sim_a"))
-                .otherwise(F.col("sim_b"))
-                .alias("sim_a"),
-                F.when(F.col("doc_a") < F.col("doc_b"), F.col("sim_b"))
-                .otherwise(F.col("sim_a"))
-                .alias("sim_b"),
-            )
-            cand = cand.unionByName(cross)
+        cand = candidate_pairs(new, old, "key", "simhash", max_bucket_docs)
         pairs = (
-            cand.dropDuplicates(["doc_a", "doc_b"])
-            .select(
+            cand.select(
                 "doc_a",
                 "doc_b",
-                F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+                F.bit_count(F.col("val_a").bitwiseXOR(F.col("val_b")))
                 .cast("long")
                 .alias("hamming"),
             )
@@ -256,7 +200,7 @@ def cluster_map_writer(
             # r12: ~1 s/replay at sf0.1 batch sizes)
         )
 
-        prior = [v for v in _map_versions(map_path) if v < bid]
+        prior = [v for v in versions(map_path) if v < bid]
         if prior:
             base = read_cluster_map(spark, map_path, version=max(prior)).select(
                 "doc_id", "cluster_id"
@@ -344,5 +288,6 @@ def cluster_map_writer(
         merged.repartition("doc_id").write.mode("overwrite").parquet(
             os.path.join(map_path, f"v{bid}")
         )
+        index.commit(bid)
 
     return write

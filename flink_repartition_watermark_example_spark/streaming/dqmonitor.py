@@ -2,10 +2,10 @@
 
 The streaming face of the batch DQ family (queries_quality.py): each
 micro-batch contributes an additive DELTA of per-event-hour rule
-counters — (hour, n_events, n_errors, n_outliers, n_null_user) —
-written as a versioned parquet directory ``v{batch_id}`` under the
-streaming/neardup.py index discipline (``_SUCCESS`` commit point,
-replay-idempotent overwrite, ``_COMPACTED`` marker + crash repair):
+counters — (hour, n_events, n_errors, n_outliers, n_null_user) — as
+one version of a versioned store (streaming/vstore.py holds the
+protocol: exactly-once under crash replay, staging, empty batches,
+compaction and crash recovery).  Algebra:
 
 - counters are algebraic, so SUM over committed deltas equals the one
   batch aggregation over everything the stream saw — streamed in any
@@ -26,19 +26,10 @@ key on EVENT time, not arrival time.
 
 from __future__ import annotations
 
-import os
-import shutil
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_repartition_watermark_example_spark.streaming.neardup import (
-    COMPACTED_MARKER,
-    recover_compaction,
-    replay_hits_compacted,
-)
-from flink_repartition_watermark_example_spark.streaming.sketch import _versions
+from flink_repartition_watermark_example_spark.streaming.vstore import VersionedStore
 
 # SLO thresholds of the monitored rules.  `value` above the outlier
 # cut and the 'error' event type are the rules that actually fire on
@@ -72,38 +63,24 @@ def _batch_delta(batch_df: DataFrame) -> DataFrame:
     )
 
 
+def _sum_counters(df: DataFrame) -> DataFrame:
+    return df.groupBy("hour").agg(
+        *[
+            F.sum(c).cast("long").alias(c)
+            for c in ("n_events", "n_errors", "n_outliers", "n_null_user")
+        ]
+    )
+
+
 def dq_monitor_writer(state_path: str):
     """foreachBatch body: write the batch's per-hour counter delta as
-    ``v{batch_id}`` (overwrite ⇒ replay-idempotent)."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        recover_compaction(state_path)
-        if replay_hits_compacted(state_path, batch_id):
-            return  # delta already folded into the compacted snapshot
-        _batch_delta(batch_df).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(state_path, f"v{int(batch_id)}")
-        )
-
-    return write
+    ``v{batch_id}``."""
+    return VersionedStore(state_path).writer(_batch_delta)
 
 
 def read_dq_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Merged counters: SUM of all committed deltas per hour."""
-    recover_compaction(state_path)
-    vs = _versions(state_path)
-    if not vs:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    parts = [spark.read.parquet(os.path.join(state_path, f"v{v}")) for v in vs]
-    return (
-        reduce(lambda a, b: a.unionByName(b), parts)
-        .groupBy("hour")
-        .agg(
-            *[
-                F.sum(c).cast("long").alias(c)
-                for c in ("n_events", "n_errors", "n_outliers", "n_null_user")
-            ]
-        )
-    )
+    return VersionedStore(state_path).merged(spark, _sum_counters, _STATE_SCHEMA)
 
 
 def read_dq_report(spark: SparkSession, state_path: str) -> DataFrame:
@@ -124,17 +101,5 @@ def read_dq_report(spark: SparkSession, state_path: str) -> DataFrame:
 
 def compact_dq_state(spark: SparkSession, state_path: str) -> int:
     """Fold all committed versions into one (counter sum is lossless);
-    tmp-dir + reuse-max-id discipline exactly as compact_sketch, for
-    the same batch-id-collision reason."""
-    recover_compaction(state_path)
-    vs = _versions(state_path)
-    if len(vs) <= 1:
-        return 0
-    merged = read_dq_state(spark, state_path)
-    tmp = os.path.join(state_path, f"_compact_tmp_v{vs[-1]}")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    for v in vs:
-        shutil.rmtree(os.path.join(state_path, f"v{v}"))
-    os.rename(tmp, os.path.join(state_path, f"v{vs[-1]}"))
-    return len(vs) - 1
+    returns the number of versions removed."""
+    return VersionedStore(state_path).compact(spark, _sum_counters)

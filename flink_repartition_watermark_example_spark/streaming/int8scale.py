@@ -9,16 +9,15 @@ indexes (dedup grains: min-id/first-wins):
 - max is commutative and associative, so merged deltas equal the
   batch maximum in ANY arrival order (the counters' contract), AND
 - max is IDEMPOTENT: re-merging a duplicated delta cannot change the
-  result.  The shared ``v{batch_id}`` + ``_COMPACTED`` version
-  discipline is still reused (replays skip cheaply and crash repair
-  is shared), but idempotence means even a MISSED replay skip is
-  value-safe — a guarantee neither sums nor membership can offer,
-  pinned by tests/test_streaming_int8scale.py.
+  result.  The versioned-store protocol of streaming/vstore.py still
+  applies (replays skip cheaply and crash repair is shared), but
+  idempotence means even a MISSED replay skip is value-safe — a
+  guarantee neither sums nor membership can offer, pinned by
+  tests/test_streaming_int8scale.py.
 
 Each micro-batch contributes a 64-row (j, mx) delta — max|x_j| over
-the batch — written via the staged-commit parquet discipline.  The
-merged scale set is max-of-deltas / 127, exactly the batch
-computation.
+the batch — as one version of the store.  The merged scale set is
+max-of-deltas / 127, exactly the batch computation.
 
 Scale shape: per-batch state is O(dims); the merged read is O(dims ×
 versions) before compaction, O(dims) after — the vectors never
@@ -28,21 +27,17 @@ of the counter indexes, with an even smaller state.
 
 from __future__ import annotations
 
-import os
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_repartition_watermark_example_spark.functions.vectors import as_double
-from flink_repartition_watermark_example_spark.streaming.neardup import (
-    COMPACTED_MARKER,
-    recover_compaction,
-    replay_hits_compacted,
-)
-from flink_repartition_watermark_example_spark.streaming.sketch import _versions
+from flink_repartition_watermark_example_spark.streaming.vstore import VersionedStore
 
 INT8_LEVELS = 127.0
+
+
+def _max_abs(df: DataFrame) -> DataFrame:
+    return df.groupBy("j").agg(F.max("mx").alias("mx"))
 
 
 def dim_max_writer(index_path: str, *, vec_col: str = "embedding"):
@@ -50,55 +45,11 @@ def dim_max_writer(index_path: str, *, vec_col: str = "embedding"):
     ``v{batch_id}``.  Keyword-required column (the streaming/sketch.py
     key_col lesson): a caller streaming a differently-named vector
     column must say so explicitly."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        recover_compaction(index_path)
-        if replay_hits_compacted(index_path, batch_id):
-            return  # delta already folded into the compacted snapshot
-        delta = (
-            batch_df.select(
-                F.posexplode(as_double(vec_col)).alias("j0", "x")
-            )
-            .select((F.col("j0") + 1).cast("long").alias("j"), F.abs("x").alias("ax"))
-            .groupBy("j")
-            .agg(F.max("ax").alias("mx"))
-        )
-        _publish_delta_if_nonempty(delta, index_path, int(batch_id))
-
-    return write
-
-
-def _publish_delta_if_nonempty(delta: DataFrame, index_path: str, bid: int) -> None:
-    """ONE Spark job per batch (r13): write the delta to a non-version
-    tmp dir, read the row count from the parquet FOOTERS driver-side,
-    and atomically rename into ``v{bid}`` only when non-empty — an
-    idle tick publishes no version (test-pinned).  The previous
-    persist + isEmpty probe + write was two jobs per micro-batch on a
-    relation the size of the delta.  Crash-safe: the tmp dir has no
-    ``v`` prefix so readers never see it, a replayed batch overwrites
-    it, and the rename installs a complete dir (its ``_SUCCESS``
-    travels with it)."""
-    import shutil
-
-    tmp = os.path.join(index_path, f"_delta_tmp_v{bid}")
-    delta.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if _parquet_rows(tmp) == 0:
-        shutil.rmtree(tmp, ignore_errors=True)
-        return  # idle tick: contributes no components
-    vdir = os.path.join(index_path, f"v{bid}")
-    shutil.rmtree(vdir, ignore_errors=True)  # replay overwrite semantics
-    os.rename(tmp, vdir)
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count of a written parquet dir from its footers — no Spark
-    job.  pyarrow ships with pyspark (the Arrow interchange dep)."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(os.path.join(path, f)).num_rows
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
+    return VersionedStore(index_path).writer(
+        lambda df: df.select(F.posexplode(as_double(vec_col)).alias("j0", "x"))
+        .select((F.col("j0") + 1).cast("long").alias("j"), F.abs("x").alias("ax"))
+        .groupBy("j")
+        .agg(F.max("ax").alias("mx"))
     )
 
 
@@ -106,44 +57,12 @@ def read_dim_scales(spark: SparkSession, index_path: str) -> DataFrame:
     """The merged scales: MAX over all committed deltas per dimension,
     divided by 127 — equals the batch scale computation after any
     arrival order, and after any replay duplication (idempotence)."""
-    vs = _versions(index_path)
-    if not vs:
-        return spark.createDataFrame([], "j bigint, s double")
-    parts = [
-        spark.read.parquet(os.path.join(index_path, f"v{v}")) for v in vs
-    ]
-    return (
-        reduce(lambda a, b: a.unionByName(b), parts)
-        .groupBy("j")
-        .agg((F.max("mx") / F.lit(INT8_LEVELS)).alias("s"))
-    )
+    return VersionedStore(index_path).merged(
+        spark, _max_abs, "j bigint, mx double"
+    ).select("j", (F.col("mx") / F.lit(INT8_LEVELS)).alias("s"))
 
 
 def compact_scales(spark: SparkSession, index_path: str) -> int:
     """Fold every committed version into one (max-merge is lossless
-    AND idempotent); reuses v{max} via the shared staged-rename
-    discipline.  Returns the number of versions removed."""
-    import shutil
-
-    recover_compaction(index_path)
-    vs = _versions(index_path)
-    if len(vs) <= 1:
-        return 0
-    merged = (
-        reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                spark.read.parquet(os.path.join(index_path, f"v{v}"))
-                for v in vs
-            ],
-        )
-        .groupBy("j")
-        .agg(F.max("mx").alias("mx"))
-    )
-    tmp = os.path.join(index_path, f"_compact_tmp_v{vs[-1]}")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    for v in vs:
-        shutil.rmtree(os.path.join(index_path, f"v{v}"))
-    os.rename(tmp, os.path.join(index_path, f"v{vs[-1]}"))
-    return len(vs) - 1
+    AND idempotent); returns the number of versions removed."""
+    return VersionedStore(index_path).compact(spark, _max_abs)

@@ -14,10 +14,12 @@ Per micro-batch (foreachBatch, like the CDC MERGE sink):
    arrays) append to the pairs output, and the batch's signatures and
    bands merge into the index.
 
-Exactly-once under crash replay uses the same versioned-directory
-device as sinks.cdc_merge_writer: each batch writes its own
-``v{batch_id}`` delta of the index and its own pairs partition, so a
-replayed batch overwrites itself instead of duplicating.
+Algebra: the index is a plain union of per-batch deltas, written
+``partitionBy("band", "bucket")``; a batch writes its pairs before
+its index delta.  Exactly-once under crash replay, staging, empty
+batches and compaction are the versioned-store protocol of
+streaming/vstore.py; the pairs output is one ``v{batch_id}`` dir per
+batch, so a replayed batch overwrites its own.
 
 Scale shape: each index version is written ``partitionBy("band",
 "bucket")`` with bucket = band_hash mod INDEX_BUCKETS, and the
@@ -53,7 +55,6 @@ are per-doc and bucket membership is order-independent.
 from __future__ import annotations
 
 import os
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +63,11 @@ from flink_repartition_watermark_example_spark.operators.dedup import (
     MAX_BUCKET_DOCS,
     lsh_bands,
     minhash_sig_array,
+)
+from flink_repartition_watermark_example_spark.streaming.vstore import (
+    VersionedStore,
+    read_outputs,
+    versions,
 )
 
 # Partition fanout per index version: 4 bands × this many hash-mod
@@ -74,95 +80,76 @@ def _bucket(col):
     return F.pmod(F.col(col), F.lit(INDEX_BUCKETS)).cast("int")
 
 
-def _versions(path: str) -> list[int]:
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        int(n[1:])
-        for n in os.listdir(path)
-        if n.startswith("v")
-        and n[1:].isdigit()
-        and os.path.exists(os.path.join(path, n, "_SUCCESS"))
-    )
-
-
-COMPACTED_MARKER = "_COMPACTED"
-
-
-def replay_hits_compacted(path: str, batch_id: int) -> bool:
-    """True when ``v{batch_id}`` is a compacted snapshot rather than
-    that batch's own delta — i.e. compaction ran while the stream was
-    down and REUSED this id, and the checkpoint never committed the
-    batch.  A crash-replay of the batch must then SKIP its writes:
-    its delta is already folded into the snapshot, and overwriting
-    would silently destroy every pre-compaction delta."""
-    return os.path.exists(
-        os.path.join(path, f"v{int(batch_id)}", COMPACTED_MARKER)
-    )
-
-
-def recover_compaction(path: str) -> None:
-    """Repair a compaction that crashed between its deletes and its
-    final rename.  The staging dir name carries the target version id
-    (``_compact_tmp_v{N}``); a COMMITTED stage holds the merge of
-    every version <= N at staging time, so it supersedes whatever
-    subset of them a mid-delete crash left behind — finish the deletes
-    and install it.  An uncommitted stage is a dead partial write and
-    is removed.  Writers call this at the head of every batch and
-    compactors/readers at entry, so state can be transiently absent
-    but never silently lost.
-
-    "Committed" is gated on COMPACTED_MARKER, NOT parquet's _SUCCESS:
-    every compactor touches the marker immediately after the parquet
-    write, and the marker is what :func:`replay_hits_compacted` keys
-    on.  Gating on _SUCCESS alone would install a stage that crashed
-    between the parquet commit and the marker touch as ``v{N}``
-    WITHOUT the marker — a later replay of batch N would then miss the
-    compaction check and its overwrite-mode delta write would destroy
-    every pre-compaction delta folded into the snapshot (the exact
-    loss the marker exists to prevent)."""
-    import shutil
-
-    if not os.path.isdir(path):
-        return
-    for name in os.listdir(path):
-        if not name.startswith("_compact_tmp_v"):
-            continue
-        tmp = os.path.join(path, name)
-        n = name.removeprefix("_compact_tmp_v")
-        if n.isdigit() and os.path.exists(os.path.join(tmp, COMPACTED_MARKER)):
-            for v in _versions(path):
-                if v <= int(n):
-                    shutil.rmtree(
-                        os.path.join(path, f"v{v}"), ignore_errors=True
-                    )
-            os.rename(tmp, os.path.join(path, f"v{n}"))
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _read_index(spark: SparkSession, index_path: str, below: int) -> DataFrame | None:
-    vs = [v for v in _versions(index_path) if v < below]
-    if not vs:
-        return None
-    # One partition-discovering read per version, then unionByName:
-    # passing several partitioned roots to a single read would make
-    # Spark hunt for a common base path and mis-infer the v{n} dirs as
-    # partition values.
-    parts = [
-        spark.read.parquet(os.path.join(index_path, f"v{v}")) for v in vs
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)
+def _index(index_path: str) -> VersionedStore:
+    return VersionedStore(index_path, ("band", "bucket"))
 
 
 def _est_jaccard():
     agree = F.size(
         F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
+            F.zip_with(F.col("val_a"), F.col("val_b"), lambda x, y: x == y),
             lambda e: e,
         )
     )
-    return (agree.cast("double") / F.size(F.col("sig_a"))).alias("est_jaccard")
+    return (agree.cast("double") / F.size(F.col("val_a"))).alias("est_jaccard")
+
+
+def candidate_pairs(
+    new: DataFrame,
+    old: DataFrame | None,
+    hash_col: str,
+    val: str,
+    max_bucket_docs: int | None,
+) -> DataFrame:
+    """Distinct (doc_a < doc_b, val_a, val_b) candidates of a banded
+    batch ``new`` (doc_id, band, bucket, ``hash_col``, ``val``): its
+    docs sharing (band, bucket, ``hash_col``) with another new doc or
+    with the index ``old``.  The LSH (minhash) and the clustermap
+    (simhash) indexes share it.
+
+    ``max_bucket_docs`` caps a (band, ``hash_col``) population over new
+    plus indexed docs, so hot buckets propose nothing (None disables —
+    see the module docstring for the emission-time semantics)."""
+    keys = ["band", "bucket", hash_col]
+    a = new.select(F.col("doc_id").alias("doc_a"), *keys, F.col(val).alias("val_a"))
+    if max_bucket_docs is not None:
+        # Filtering the `a` side alone suffices: every candidate join
+        # below takes its left leg from `a`, so a dropped bucket
+        # proposes nothing.  `hot` is tiny (bucket keys over the cap)
+        # — broadcast anti-join, no extra pass over the index beyond
+        # the count.
+        pop = new.select("doc_id", "band", hash_col)
+        if old is not None:
+            pop = pop.unionByName(old.select("doc_id", "band", hash_col))
+        hot = (
+            pop.groupBy("band", hash_col)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .where(F.col("__n") > max_bucket_docs)
+            .select("band", hash_col)
+        )
+        a = a.join(F.broadcast(hot), ["band", hash_col], "left_anti")
+
+    def b_side(df: DataFrame) -> DataFrame:
+        return df.select(F.col("doc_id").alias("doc_b"), *keys, F.col(val).alias("val_b"))
+
+    cand = (
+        a.join(b_side(new), keys)
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", "val_a", "val_b")
+    )
+    if old is not None:
+        # new-vs-index: (band, bucket) in the join keys lines up with
+        # the index partitioning so the scan prunes to the buckets
+        # this batch touches; both orientations normalized to a < b.
+        a_first = F.col("doc_a") < F.col("doc_b")
+        cross = a.join(b_side(old), keys).select(
+            F.least("doc_a", "doc_b").alias("doc_a"),
+            F.greatest("doc_a", "doc_b").alias("doc_b"),
+            F.when(a_first, F.col("val_a")).otherwise(F.col("val_b")).alias("val_a"),
+            F.when(a_first, F.col("val_b")).otherwise(F.col("val_a")).alias("val_b"),
+        )
+        cand = cand.unionByName(cross)
+    return cand.dropDuplicates(["doc_a", "doc_b"])
 
 
 def neardup_index_writer(
@@ -182,11 +169,12 @@ def neardup_index_writer(
     for the emission-time semantics).
     """
 
+    index = _index(index_path)
+
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         bid = int(batch_id)
-        recover_compaction(index_path)
-        if replay_hits_compacted(index_path, bid):
+        if index.begin(bid):
             return  # this batch's delta is already in the snapshot
 
         sigs = minhash_sig_array(batch_df, text_col)
@@ -199,122 +187,27 @@ def neardup_index_writer(
             "sig",
         )
 
-        old = _read_index(spark, index_path, below=bid)
+        old = index.read(spark, below=bid)
 
-        a = new.select(
-            F.col("doc_id").alias("doc_a"),
-            "band",
-            "bucket",
-            "band_hash",
-            F.col("sig").alias("sig_a"),
-        )
-        if max_bucket_docs is not None:
-            # Hot-bucket cap over everything known at this batch's
-            # horizon.  Filtering the `a` side alone suffices: every
-            # candidate join below takes its left leg from `a`, so a
-            # dropped bucket proposes nothing.  `hot` is tiny (bucket
-            # keys over the cap) — broadcast anti-join, no extra pass
-            # over the index beyond the count.
-            pop = new.select("doc_id", "band", "band_hash")
-            if old is not None:
-                pop = pop.unionByName(old.select("doc_id", "band", "band_hash"))
-            hot = (
-                pop.groupBy("band", "band_hash")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .where(F.col("__n") > max_bucket_docs)
-                .select("band", "band_hash")
-            )
-            a = a.join(F.broadcast(hot), ["band", "band_hash"], "left_anti")
-
-        # new-vs-new: within-batch candidates
-        b_new = new.select(
-            F.col("doc_id").alias("doc_b"),
-            "band",
-            "bucket",
-            "band_hash",
-            F.col("sig").alias("sig_b"),
-        )
-        cand = a.join(b_new, ["band", "bucket", "band_hash"]).where(
-            F.col("doc_a") < F.col("doc_b")
-        )
-        if old is not None:
-            # new-vs-index: (band, bucket) in the join keys lines up
-            # with the index partitioning so the scan prunes to the
-            # buckets this batch touches; both orientations normalized
-            # to a < b.
-            b_old = old.select(
-                F.col("doc_id").alias("doc_b"),
-                "band",
-                "bucket",
-                "band_hash",
-                F.col("sig").alias("sig_b"),
-            )
-            cross = a.join(b_old, ["band", "bucket", "band_hash"]).select(
-                F.least("doc_a", "doc_b").alias("doc_a_n"),
-                F.greatest("doc_a", "doc_b").alias("doc_b_n"),
-                F.when(F.col("doc_a") < F.col("doc_b"), F.col("sig_a"))
-                .otherwise(F.col("sig_b"))
-                .alias("sig_a"),
-                F.when(F.col("doc_a") < F.col("doc_b"), F.col("sig_b"))
-                .otherwise(F.col("sig_a"))
-                .alias("sig_b"),
-            ).select(
-                F.col("doc_a_n").alias("doc_a"),
-                F.col("doc_b_n").alias("doc_b"),
-                "sig_a",
-                "sig_b",
-            )
-            cand = cand.select("doc_a", "doc_b", "sig_a", "sig_b").unionByName(
-                cross
-            )
-        else:
-            cand = cand.select("doc_a", "doc_b", "sig_a", "sig_b")
-
-        pairs = (
-            cand.dropDuplicates(["doc_a", "doc_b"])
-            .select("doc_a", "doc_b", _est_jaccard())
-            .where(F.col("est_jaccard") >= threshold)
+        cand = candidate_pairs(new, old, "band_hash", "sig", max_bucket_docs)
+        pairs = cand.select("doc_a", "doc_b", _est_jaccard()).where(
+            F.col("est_jaccard") >= threshold
         )
         pairs.write.mode("overwrite").parquet(
             os.path.join(pairs_path, f"v{bid}")
         )
-        new.write.mode("overwrite").partitionBy("band", "bucket").parquet(
-            os.path.join(index_path, f"v{bid}")
-        )
+        index.publish(new, bid)
 
     return write
 
 
 def read_neardup_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:
     """All pairs emitted so far (union of committed batch outputs)."""
-    vs = _versions(pairs_path)
-    if not vs:
-        raise FileNotFoundError(f"no committed pairs under {pairs_path}")
-    return spark.read.parquet(
-        *[os.path.join(pairs_path, f"v{v}") for v in vs]
-    )
+    return read_outputs(spark, pairs_path, "pairs")
 
 
 def compact_index(spark: SparkSession, index_path: str) -> int:
-    """Fold all committed index versions into a single v{max}
-    partitioned snapshot and drop the olders — bounds the
-    versions-per-read cost for long-running streams.  Returns the
-    surviving version number.  Crash-recoverable via
-    :func:`recover_compaction` (the staged dir name carries the
-    target id); not atomic against a CONCURRENT writer — run from
-    the maintenance path (same operational slot as
-    sinks.vacuum_versions)."""
-    import shutil
-
-    recover_compaction(index_path)
-    vs = _versions(index_path)
-    if len(vs) <= 1:
-        return vs[0] if vs else -1
-    merged = _read_index(spark, index_path, below=vs[-1] + 1)
-    tmp = os.path.join(index_path, f"_compact_tmp_v{vs[-1]}")
-    merged.write.mode("overwrite").partitionBy("band", "bucket").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    for v in vs:
-        shutil.rmtree(os.path.join(index_path, f"v{v}"))
-    os.rename(tmp, os.path.join(index_path, f"v{vs[-1]}"))
-    return vs[-1]
+    """Fold all committed index versions into one partitioned snapshot
+    (a plain union); returns the surviving version id, -1 when empty."""
+    _index(index_path).compact(spark, lambda df: df)
+    return (versions(index_path) or [-1])[-1]

@@ -18,9 +18,12 @@ Per micro-batch (foreachBatch, the CDC-MERGE-sink device):
    later arrivals, exactly as in the batch rule) merge into the
    index.
 
-Exactly-once under crash replay uses the versioned-directory device
-(`v{batch_id}` deltas + parquet ``_SUCCESS`` commit markers): a
-replayed batch overwrites itself instead of duplicating.
+Algebra: the index is a plain union of per-batch deltas, written
+``partitionBy("list_id")``; a batch stages its index delta, writes its
+survivors, and only then commits the delta.  Exactly-once under crash
+replay, staging, empty batches and compaction are the versioned-store
+protocol of streaming/vstore.py; the survivors output is one
+``v{batch_id}`` dir per batch, so a replayed batch overwrites its own.
 
 Scale shape: each index version is written ``partitionBy("list_id")``
 and the new-vs-index join carries list_id in its keys, so the lookup
@@ -45,7 +48,6 @@ semantics are required.
 from __future__ import annotations
 
 import os
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,22 +58,15 @@ from flink_repartition_watermark_example_spark.operators.similarity import (
     _fold_norm,
     _score_pairs,
 )
-from flink_repartition_watermark_example_spark.streaming.neardup import (
-    COMPACTED_MARKER,
-    _versions,
-    recover_compaction,
-    replay_hits_compacted,
+from flink_repartition_watermark_example_spark.streaming.vstore import (
+    VersionedStore,
+    read_outputs,
+    versions,
 )
 
 
-def _read_index(spark: SparkSession, index_path: str, below: int) -> DataFrame | None:
-    vs = [v for v in _versions(index_path) if v < below]
-    if not vs:
-        return None
-    parts = [
-        spark.read.parquet(os.path.join(index_path, f"v{v}")) for v in vs
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)
+def _index(index_path: str) -> VersionedStore:
+    return VersionedStore(index_path, ("list_id",))
 
 
 def semdedup_index_writer(
@@ -110,55 +105,34 @@ def semdedup_index_writer(
                 }
             )
 
+    index = _index(index_path)
+
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         bid = int(batch_id)
-        recover_compaction(index_path)
-        if replay_hits_compacted(index_path, bid):
+        if index.begin(bid):
             return  # this batch's vectors are already in the snapshot
-        if batch_df.isEmpty():
-            # An empty micro-batch (source idle tick, or a replayed
-            # trigger whose files were all consumed) must be a no-op:
-            # the partitionBy staging write below would produce a dir
-            # with no data files and the re-read would die on
-            # UNABLE_TO_INFER_SCHEMA — a crash loop, since every
-            # replay of the batch is empty again.  No v{bid} dir is
-            # published, which is correct: an empty batch contributes
-            # neither index rows nor survivors.
-            return
 
-        # Write the assignment to a NON-version staging dir first and
-        # re-read it for the joins: the Arrow assignment kernel runs
-        # exactly once per batch (uncached, the self-join + anti-join
-        # would recompute it ~4x).  The index delta is only PUBLISHED
-        # (staging renamed to v{bid}) after the survivors write
-        # commits — the same pairs-before-index ordering as
-        # streaming/neardup.py — so a folded delta always implies
-        # committed survivors.  The reverse order would lose a batch's
-        # survivors forever if it crashed between the two writes and
-        # compact_index ran while the stream was down: the replay
-        # would hit replay_hits_compacted and return before writing
-        # them.  Both writes are mode=overwrite, so replays of any
-        # crash point are idempotent.
-        vdir = os.path.join(index_path, f"v{bid}")
-        tmp = os.path.join(index_path, f"_batch_tmp_v{bid}")
-        (
-            batch_df.select("vec_id", as_double("embedding").alias("v"))
-            .mapInPandas(
-                assign_top1,
-                schema="vec_id long, v array<double>, nv double, list_id long",
-            )
-            .write.mode("overwrite")
-            .partitionBy("list_id")
-            .parquet(tmp)
+        # Stage the assignment and re-read it for the joins: the Arrow
+        # assignment kernel runs exactly once per batch (uncached, the
+        # self-join + anti-join would recompute it ~4x).  The stage is
+        # committed as v{bid} only after the survivors write, so a
+        # folded delta always implies committed survivors.
+        assigned = batch_df.select(
+            "vec_id", as_double("embedding").alias("v")
+        ).mapInPandas(
+            assign_top1,
+            schema="vec_id long, v array<double>, nv double, list_id long",
         )
+        if index.stage(assigned, bid) == 0:
+            return  # empty micro-batch: no index rows, no survivors
         # partition-column type inference can narrow list_id to int
-        new = spark.read.parquet(tmp).withColumn(
+        new = index.read_stage(spark, bid).withColumn(
             "list_id", F.col("list_id").cast("long")
         )
 
         mates = new.select("vec_id", "v", "nv", "list_id")
-        old = _read_index(spark, index_path, below=bid)
+        old = index.read(spark, below=bid)
         if old is not None:
             mates = mates.unionByName(
                 old.select("vec_id", "v", "nv", "list_id")
@@ -186,53 +160,18 @@ def semdedup_index_writer(
         survivors.write.mode("overwrite").parquet(
             os.path.join(survivors_path, f"v{bid}")
         )
-        # survivors are durable — publish the index delta last.  A
-        # replay after a crash between the survivors write and this
-        # rename re-runs the whole batch (v{bid} absent, so neither
-        # _versions nor replay_hits_compacted sees it) and overwrites
-        # both staging and survivors before publishing again.
-        import shutil
-
-        if os.path.isdir(vdir):
-            shutil.rmtree(vdir)  # replay of a published-but-uncommitted batch
-        os.rename(tmp, vdir)
+        index.commit(bid)
 
     return write
 
 
 def read_semdedup_survivors(spark: SparkSession, survivors_path: str) -> DataFrame:
     """All survivors emitted so far (union of committed batch outputs)."""
-    vs = _versions(survivors_path)
-    if not vs:
-        raise FileNotFoundError(f"no committed survivors under {survivors_path}")
-    return spark.read.parquet(
-        *[os.path.join(survivors_path, f"v{v}") for v in vs]
-    )
+    return read_outputs(spark, survivors_path, "survivors")
 
 
 def compact_index(spark: SparkSession, index_path: str) -> int:
-    """Fold all committed index versions into a single v{max}
-    partitioned snapshot and drop the olders — reusing the max id so
-    future batch_ids never collide (the sketch-module lesson).
-    Returns the surviving version number.
-
-    Crash safety: the staging dir name carries the target id
-    (``_compact_tmp_v{max}``), so a crash anywhere between the
-    deletes and the final rename is repaired by
-    :func:`streaming.neardup.recover_compaction` (run at the head of every writer
-    batch and of this function) — the index can be transiently
-    ABSENT but never silently empty-forever."""
-    import shutil
-
-    recover_compaction(index_path)
-    vs = _versions(index_path)
-    if len(vs) <= 1:
-        return vs[0] if vs else -1
-    merged = _read_index(spark, index_path, below=vs[-1] + 1)
-    tmp = os.path.join(index_path, f"_compact_tmp_v{vs[-1]}")
-    merged.write.mode("overwrite").partitionBy("list_id").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    for v in vs:
-        shutil.rmtree(os.path.join(index_path, f"v{v}"))
-    os.rename(tmp, os.path.join(index_path, f"v{vs[-1]}"))
-    return vs[-1]
+    """Fold all committed index versions into one partitioned snapshot
+    (a plain union); returns the surviving version id, -1 when empty."""
+    _index(index_path).compact(spark, lambda df: df)
+    return (versions(index_path) or [-1])[-1]

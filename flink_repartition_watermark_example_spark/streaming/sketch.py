@@ -1,34 +1,26 @@
 """Incremental count-min sketch maintenance over a stream.
 
 Each micro-batch contributes an algebraic DELTA sketch — the batch's
-own (depth, cell, n) counts — written as a versioned parquet directory
-``v{batch_id}`` with a ``_SUCCESS`` commit point, exactly the
-streaming/neardup.py index discipline:
+own (depth, cell, n) counts — as one version of a versioned store
+(streaming/vstore.py holds the protocol: exactly-once under crash
+replay, staging, empty batches, compaction and crash recovery).
 
-- exactly-once under crash replay: a re-run batch overwrites its OWN
-  version directory (idempotent), and a partial version without
-  ``_SUCCESS`` is invisible to readers and repaired by the replay;
-- the merged sketch is a pure sum: count-min cells are counters, so
-  SUM over deltas is bit-identical to building one sketch over the
-  union of all batches — streamed-in-any-split == batch, exactly
-  (``tests/test_streaming_sketch.py`` asserts set equality);
-- per-batch cost is O(batch × depth); the stored state is at most
-  depth × width rows per version regardless of stream length, and
-  ``compact_sketch`` folds all versions into one (the counters sum, so
-  compaction is also lossless).
+Algebra: the merged sketch is a pure SUM over deltas.  Count-min
+cells are counters, so SUM over deltas is bit-identical to building
+one sketch over the union of all batches — streamed-in-any-split ==
+batch, exactly (``tests/test_streaming_sketch.py`` asserts set
+equality) — and compaction, the same sum, is lossless.  Per-batch
+cost is O(batch × depth); the stored state is at most depth × width
+rows per version regardless of stream length.
 
 At 100 TB the sketch answers heavy-hitter / frequency queries over an
 unbounded stream with bounded state — the same algebraic-partials
 argument the batch CMS (operators/sketch.py) makes, extended across
 micro-batches and restarts.  The HLL variant below maintains per-group
-distinct counts under the identical discipline (register-max union in
-place of counter sum).
-"""
+distinct counts under the identical protocol (register-max union in
+place of counter sum)"""
 
 from __future__ import annotations
-
-import os
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,93 +29,37 @@ from flink_repartition_watermark_example_spark.operators.sketch import (
     cms_build,
     cms_estimate,
 )
-from flink_repartition_watermark_example_spark.streaming.neardup import (
-    COMPACTED_MARKER,
-    recover_compaction,
-    replay_hits_compacted,
-)
+from flink_repartition_watermark_example_spark.streaming.vstore import VersionedStore
 
 
-def _versions(path: str) -> list[int]:
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        int(n[1:])
-        for n in os.listdir(path)
-        if n.startswith("v")
-        and n[1:].isdigit()
-        and os.path.exists(os.path.join(path, n, "_SUCCESS"))
-    )
+def _cms_sum(df: DataFrame) -> DataFrame:
+    return df.groupBy("depth", "cell").agg(F.sum("n").cast("long").alias("n"))
 
 
 def cms_sketch_writer(sketch_path: str, *, key_col: str):
     """foreachBatch body: write each batch's delta sketch as
-    ``v{batch_id}``.  Replayed batches overwrite their own version —
-    idempotent by construction.
+    ``v{batch_id}``.
 
     ``key_col`` is keyword-required with no default: the old
     ``key_col="url"`` default let a caller sketching a different
     column silently count the wrong thing (the exact foot-gun behind
     round 5's red streaming-sketch tests)."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        recover_compaction(sketch_path)
-        if replay_hits_compacted(sketch_path, batch_id):
-            return  # delta already folded into the compacted snapshot
-        delta = cms_build(batch_df, F.col(key_col))
-        delta.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(sketch_path, f"v{int(batch_id)}")
-        )
-
-    return write
+    return VersionedStore(sketch_path).writer(lambda df: cms_build(df, F.col(key_col)))
 
 
 def read_cms_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
     """The merged sketch: SUM of all committed deltas per (depth,
     cell).  Counters are algebraic, so this equals the batch sketch
     over everything the committed versions saw."""
-    vs = _versions(sketch_path)
-    if not vs:
-        return spark.createDataFrame([], "depth int, cell bigint, n bigint")
-    parts = [
-        spark.read.parquet(os.path.join(sketch_path, f"v{v}")) for v in vs
-    ]
-    return (
-        reduce(lambda a, b: a.unionByName(b), parts)
-        .groupBy("depth", "cell")
-        .agg(F.sum("n").cast("long").alias("n"))
+    return VersionedStore(sketch_path).merged(
+        spark, _cms_sum, "depth int, cell bigint, n bigint"
     )
 
 
 def compact_sketch(spark: SparkSession, sketch_path: str) -> int:
-    """Fold every committed version into a single version (the counters
-    sum losslessly), drop the olds; returns the number of versions
-    removed.
-
-    The merged sketch REUSES the max existing version id, via a
-    non-version tmp dir (streaming/neardup.compact_index discipline):
-    a fresh id one past the max would equal the resumed stream's next
-    batch_id, whose overwrite-mode delta write would silently destroy
-    every pre-compaction count; and writing the merged version before
-    removing the olds would double-count during the overlap window.
-    The tmp dir has no ``v`` prefix so ``_versions`` never sees a
-    half-written snapshot; the final ``os.rename`` is atomic.  Not
-    crash-atomic against a CONCURRENT writer — run from the maintenance
-    path, like compact_index."""
-    import shutil
-
-    recover_compaction(sketch_path)
-    vs = _versions(sketch_path)
-    if len(vs) <= 1:
-        return 0
-    merged = read_cms_sketch(spark, sketch_path)
-    tmp = os.path.join(sketch_path, f"_compact_tmp_v{vs[-1]}")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    for v in vs:
-        shutil.rmtree(os.path.join(sketch_path, f"v{v}"))
-    os.rename(tmp, os.path.join(sketch_path, f"v{vs[-1]}"))
-    return len(vs) - 1
+    """Fold every committed version into one (the counters sum
+    losslessly); returns the number of versions removed."""
+    return VersionedStore(sketch_path).compact(spark, _cms_sum)
 
 
 def estimate_from_sketch(
@@ -149,38 +85,23 @@ def estimate_from_sketch(
 # bounded state.
 
 
+def _hll_union(group_col: str):
+    return lambda df: df.groupBy(group_col).agg(F.hll_union_agg("sk").alias("sk"))
+
+
 def hll_sketch_writer(sketch_path: str, key_col: str, group_col: str):
     """foreachBatch body: write each batch's per-group HLL sketch as
-    the ``v{batch_id}`` delta (overwrite ⇒ replay-idempotent)."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        recover_compaction(sketch_path)
-        if replay_hits_compacted(sketch_path, batch_id):
-            return  # delta already folded into the compacted snapshot
-        delta = batch_df.groupBy(group_col).agg(
-            F.hll_sketch_agg(key_col).alias("sk")
-        )
-        delta.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(sketch_path, f"v{int(batch_id)}")
-        )
-
-    return write
+    the ``v{batch_id}`` delta."""
+    return VersionedStore(sketch_path).writer(
+        lambda df: df.groupBy(group_col).agg(F.hll_sketch_agg(key_col).alias("sk"))
+    )
 
 
 def read_hll_sketch(spark: SparkSession, sketch_path: str, group_col: str) -> DataFrame:
     """The merged per-group sketch: register-max union of all committed
     deltas — equals the one-shot sketch over everything they saw."""
-    recover_compaction(sketch_path)
-    vs = _versions(sketch_path)
-    if not vs:
-        return spark.createDataFrame([], f"{group_col} string, sk binary")
-    parts = [
-        spark.read.parquet(os.path.join(sketch_path, f"v{v}")) for v in vs
-    ]
-    return (
-        reduce(lambda a, b: a.unionByName(b), parts)
-        .groupBy(group_col)
-        .agg(F.hll_union_agg("sk").alias("sk"))
+    return VersionedStore(sketch_path).merged(
+        spark, _hll_union(group_col), f"{group_col} string, sk binary"
     )
 
 
@@ -188,20 +109,5 @@ def compact_hll_sketch(
     spark: SparkSession, sketch_path: str, group_col: str
 ) -> int:
     """Fold all committed versions into one (register-max is lossless);
-    same tmp-dir + reuse-max-id discipline as compact_sketch so the
-    snapshot can never collide with the resumed stream's next
-    batch_id."""
-    import shutil
-
-    recover_compaction(sketch_path)
-    vs = _versions(sketch_path)
-    if len(vs) <= 1:
-        return 0
-    merged = read_hll_sketch(spark, sketch_path, group_col)
-    tmp = os.path.join(sketch_path, f"_compact_tmp_v{vs[-1]}")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    for v in vs:
-        shutil.rmtree(os.path.join(sketch_path, f"v{v}"))
-    os.rename(tmp, os.path.join(sketch_path, f"v{vs[-1]}"))
-    return len(vs) - 1
+    returns the number of versions removed."""
+    return VersionedStore(sketch_path).compact(spark, _hll_union(group_col))

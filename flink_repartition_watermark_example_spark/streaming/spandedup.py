@@ -21,13 +21,13 @@ with the CDC MERGE sink and the other streaming indexes):
    seen disappears), and the batch's FRESH seg_keys merge into the
    index.
 
-Exactly-once under crash replay: each batch writes its own
-``v{batch_id}`` delta of the index and its own docs partition, so a
-replayed batch overwrites itself instead of duplicating.  The docs
-output publishes BEFORE the index delta (the pairs-before-index
-ordering of streaming/neardup.py): a folded index delta therefore
-always implies committed docs, so compaction while the stream is down
-can never strand a batch's output.
+Algebra: the index is a plain union of per-batch deltas of FRESH
+keys (each key enters exactly once), written ``partitionBy("bucket")``;
+a batch writes its docs output before its index delta.  Exactly-once
+under crash replay, staging, empty batches and compaction are the
+versioned-store protocol of streaming/vstore.py; the docs output is
+one ``v{batch_id}`` dir per batch, so a replayed batch overwrites its
+own.
 
 Scale shape: the index is partitioned by ``bucket = crc32(seg_key)
 mod SPAN_INDEX_BUCKETS`` and the new-vs-index anti-join carries
@@ -59,16 +59,14 @@ DISTINCT span count, not the corpus size.
 from __future__ import annotations
 
 import os
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_repartition_watermark_example_spark.streaming.neardup import (
-    COMPACTED_MARKER,
-    _versions,
-    recover_compaction,
-    replay_hits_compacted,
+from flink_repartition_watermark_example_spark.streaming.vstore import (
+    VersionedStore,
+    read_outputs,
+    versions,
 )
 
 # Partition fanout per index version — coarse enough to avoid a
@@ -81,17 +79,8 @@ def _bucket(col: str) -> Column:
     return F.pmod(F.crc32(F.col(col)), F.lit(SPAN_INDEX_BUCKETS)).cast("int")
 
 
-def _read_index(spark: SparkSession, index_path: str, below: int) -> DataFrame | None:
-    vs = [v for v in _versions(index_path) if v < below]
-    if not vs:
-        return None
-    # One partition-discovering read per version, then unionByName
-    # (several partitioned roots in one read would mis-infer the
-    # v{n} dirs as partition values — the neardup lesson).
-    parts = [
-        spark.read.parquet(os.path.join(index_path, f"v{v}")) for v in vs
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)
+def _index(index_path: str) -> VersionedStore:
+    return VersionedStore(index_path, ("bucket",))
 
 
 def spandedup_index_writer(index_path: str, docs_path: str):
@@ -101,20 +90,18 @@ def spandedup_index_writer(index_path: str, docs_path: str):
     """
     from pyspark.sql.window import Window
 
-    from flink_repartition_watermark_example_spark.queries_pipeline import span_segments
+    from flink_repartition_watermark_example_spark.queries_pipeline import (
+        reassemble_spans,
+        span_segments,
+    )
+
+    index = _index(index_path)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         bid = int(batch_id)
-        recover_compaction(index_path)
-        if replay_hits_compacted(index_path, bid):
+        if index.begin(bid):
             return  # this batch's keys are already in the snapshot
-        if batch_df.isEmpty():
-            # Empty micro-batch (idle tick / empty replay) must be a
-            # no-op — a partitionBy write with no data files would
-            # make the next _read_index die on UNABLE_TO_INFER_SCHEMA
-            # in a crash loop (the streaming/semdedup.py lesson).
-            return
 
         segs = span_segments(batch_df).withColumn(
             "bucket", _bucket("seg_key")
@@ -123,7 +110,7 @@ def spandedup_index_writer(index_path: str, docs_path: str):
         firsts = segs.withColumn("rn", F.row_number().over(w)).where(
             F.col("rn") == 1
         )
-        old = _read_index(spark, index_path, below=bid)
+        old = index.read(spark, below=bid)
         if old is not None:
             # (bucket, seg_key) in the join keys lines up with the
             # index partitioning so the scan prunes to the buckets
@@ -133,39 +120,20 @@ def spandedup_index_writer(index_path: str, docs_path: str):
                 ["bucket", "seg_key"],
                 "left_anti",
             )
-        # `firsts` feeds three actions (docs write, emptiness probe,
-        # index delta) — persist so the window + anti-join run once.
+        # `firsts` feeds two writes (docs output, index delta) —
+        # persist so the window + anti-join run once.
         kept = firsts.select(
             "bucket", "seg_key", "doc_id", "chunk_id", "chunk_text"
         ).persist()
         try:
-            docs_out = kept.groupBy("doc_id").agg(
-                F.array_join(
-                    F.transform(
-                        F.sort_array(
-                            F.collect_list(F.struct("chunk_id", "chunk_text"))
-                        ),
-                        lambda s: s["chunk_text"],
-                    ),
-                    " ",
-                ).alias("dedup_text"),
-                F.count(F.lit(1)).cast("long").alias("n_kept_segs"),
-            )
             # docs publish FIRST (see module docstring) — an empty
-            # rewrite (every span already seen) still writes a
-            # readable empty parquet, unlike the partitioned index.
-            docs_out.write.mode("overwrite").parquet(
+            # rewrite (every span already seen, or an empty batch)
+            # still writes a readable empty parquet, unlike the
+            # partitioned index, whose empty delta is never published.
+            reassemble_spans(kept).write.mode("overwrite").parquet(
                 os.path.join(docs_path, f"v{bid}")
             )
-            if not kept.isEmpty():
-                kept.select("bucket", "seg_key", "doc_id", "chunk_id").write.mode(
-                    "overwrite"
-                ).partitionBy("bucket").parquet(
-                    os.path.join(index_path, f"v{bid}")
-                )
-            # an all-duplicates batch publishes NO index version: it
-            # contributed no fresh keys, and _versions skipping bid is
-            # exactly the right recovery semantics on replay.
+            index.publish(kept.select("bucket", "seg_key", "doc_id", "chunk_id"), bid)
         finally:
             kept.unpersist()
 
@@ -175,33 +143,12 @@ def spandedup_index_writer(index_path: str, docs_path: str):
 def read_spandedup_docs(spark: SparkSession, docs_path: str) -> DataFrame:
     """All document rewrites emitted so far (union of committed batch
     outputs) — one row per surviving doc, the span_dedup_docs schema."""
-    vs = _versions(docs_path)
-    if not vs:
-        raise FileNotFoundError(f"no committed docs under {docs_path}")
-    return spark.read.parquet(
-        *[os.path.join(docs_path, f"v{v}") for v in vs]
-    )
+    return read_outputs(spark, docs_path, "docs")
 
 
 def compact_index(spark: SparkSession, index_path: str) -> int:
-    """Fold all committed index versions into a single v{max}
-    partitioned snapshot and drop the olders — bounds the
-    versions-per-read cost for long-running streams.  Keys enter the
-    index exactly once (fresh-only deltas), so the fold is a pure
-    union.  Crash-recoverable via recover_compaction (the staged dir
-    name carries the target id); not atomic against a CONCURRENT
-    writer — run from the maintenance path."""
-    import shutil
-
-    recover_compaction(index_path)
-    vs = _versions(index_path)
-    if len(vs) <= 1:
-        return vs[0] if vs else -1
-    merged = _read_index(spark, index_path, below=vs[-1] + 1)
-    tmp = os.path.join(index_path, f"_compact_tmp_v{vs[-1]}")
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    for v in vs:
-        shutil.rmtree(os.path.join(index_path, f"v{v}"))
-    os.rename(tmp, os.path.join(index_path, f"v{vs[-1]}"))
-    return vs[-1]
+    """Fold all committed index versions into one partitioned snapshot
+    (keys enter exactly once, so the fold is a plain union); returns
+    the surviving version id, -1 when empty."""
+    _index(index_path).compact(spark, lambda df: df)
+    return (versions(index_path) or [-1])[-1]

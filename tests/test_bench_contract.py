@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 import bench
 
 
@@ -97,6 +99,19 @@ def test_stream_shuffle_width_env_override(monkeypatch):
     assert stream_shuffle_width() == 2
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
     assert stream_shuffle_width() == 8  # clamped
+
+
+def test_stream_shuffle_width_rejects_bad_override(monkeypatch):
+    # ADVICE r13 #5: a set value that is not a positive integer fails
+    # loudly, naming the variable, instead of being guessed at
+    from flink_repartition_watermark_example_spark.queries_streaming import (
+        stream_shuffle_width,
+    )
+
+    for bad in ("", "0", "-3", "8.0", "eight"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE"):
+            stream_shuffle_width()
 
 
 def test_accepted_regressions_are_recorded():

@@ -106,109 +106,6 @@ def test_replayed_batch_is_idempotent_and_compaction_lossless(
     assert after == once
 
 
-def test_compaction_crash_mid_deletes_recovers_losslessly(
-    spark, sf_dir, tmp_path
-):
-    """Simulate the worst compaction crash: the staged merge is
-    committed and SOME old versions are already deleted, but the
-    final rename never ran.  The next writer batch must repair the
-    index to exactly the merged state — no silent reset to empty, no
-    loss of the already-deleted versions' vectors."""
-    import shutil
-
-    from flink_repartition_watermark_example_spark.streaming.semdedup import _read_index
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    first = emb.where(F.col("vec_id") < n // 2)
-    second = emb.where(F.col("vec_id") >= n // 2)
-
-    index = str(tmp_path / "index")
-    surv = str(tmp_path / "surv")
-    w = semdedup_index_writer(index, surv, _centroids(emb))
-    w(first, 0)
-    w(second, 1)
-    once = _survivor_set(read_semdedup_survivors(spark, surv))
-
-    # stage the merge exactly as compact_index does (parquet write,
-    # then the _COMPACTED marker touch that commits the stage), then
-    # "crash" after deleting v0 (v1 still present, rename never ran)
-    from flink_repartition_watermark_example_spark.streaming.neardup import COMPACTED_MARKER
-
-    merged = _read_index(spark, index, below=2)
-    tmp = os.path.join(index, "_compact_tmp_v1")
-    merged.write.mode("overwrite").partitionBy("list_id").parquet(tmp)
-    open(os.path.join(tmp, COMPACTED_MARKER), "w").close()
-    shutil.rmtree(os.path.join(index, "v0"))
-
-    # the next batch's writer runs recovery first; re-sending batch
-    # 1's data as batch 2 must purge everything already indexed —
-    # i.e. the recovered index saw batch 0's vectors too
-    w(second, 2)
-    assert not any(
-        d.startswith("_compact_tmp") for d in os.listdir(index)
-    )
-    after = _survivor_set(read_semdedup_survivors(spark, surv))
-    assert after == once
-    assert once == _survivor_set(semantic_dedup(emb))
-
-
-def test_crash_before_index_publish_replays_fully_even_after_compaction(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Round-6 advisor finding: the index delta must publish LAST
-    (survivors-first, the neardup pairs-first ordering).  The loss
-    scenario under the old index-first ordering: batch N commits its
-    index version, crashes before the survivors write, compact_index
-    runs while the stream is down and folds the delta — the replay
-    then hits the _COMPACTED marker and returns early, so batch N's
-    survivors are never written.  With publish-last, a crash between
-    the survivors write and the rename leaves v{N} absent: compaction
-    can't fold it, the replay re-runs the whole batch, and a folded
-    delta always implies committed survivors."""
-    import flink_repartition_watermark_example_spark.streaming.semdedup as sd
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    parts = [
-        emb.where(F.col("vec_id") < n // 3),
-        emb.where((F.col("vec_id") >= n // 3) & (F.col("vec_id") < 2 * n // 3)),
-        emb.where(F.col("vec_id") >= 2 * n // 3),
-    ]
-
-    index = str(tmp_path / "index")
-    surv = str(tmp_path / "surv")
-    w = semdedup_index_writer(index, surv, _centroids(emb))
-    w(parts[0], 0)
-    w(parts[1], 1)
-
-    # batch 2 crashes at the index publish (survivors already written)
-    real_rename = os.rename
-
-    def crash_at_publish(src, dst, *a, **k):
-        if os.path.basename(dst) == "v2" and "_batch_tmp" in src:
-            raise OSError("simulated crash before index publish")
-        return real_rename(src, dst, *a, **k)
-
-    monkeypatch.setattr(sd.os, "rename", crash_at_publish)
-    with pytest.raises(OSError):
-        w(parts[2], 2)
-    monkeypatch.setattr(sd.os, "rename", real_rename)
-    assert not os.path.isdir(os.path.join(index, "v2"))
-
-    # maintenance compaction runs while the stream is down — it can
-    # only fold v0+v1 (v2 was never published), reusing id 1
-    assert compact_index(spark, index) == 1
-
-    # resume: the checkpoint never committed batch 2, so it replays;
-    # v2 carries no marker, so the batch re-runs fully
-    w(parts[2], 2)
-    got = _survivor_set(read_semdedup_survivors(spark, surv))
-    assert got == _survivor_set(semantic_dedup(emb))
-    # batch 2 genuinely contributed rows (its survivors weren't lost)
-    assert any(vid >= 2 * n // 3 for vid, _ in got)
-
-
 def test_replay_of_last_precompaction_batch_is_skipped(spark, sf_dir, tmp_path):
     """Compaction reuses v{max}; a crash-replay of that same batch id
     must skip its writes (the _COMPACTED marker) — overwriting would

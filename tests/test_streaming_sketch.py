@@ -156,44 +156,6 @@ def test_resume_after_compaction_preserves_counts(spark, sf_dir, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_compaction_crash_before_marker_is_discarded_not_installed(
-    spark, sf_dir, tmp_path
-):
-    """Round-6 advisor finding: a compaction that crashed BETWEEN its
-    parquet commit (_SUCCESS) and the _COMPACTED marker touch must be
-    DISCARDED by recovery, never installed.  Installing it as v{max}
-    without the marker would let a replay of batch max miss the
-    compaction check, and its overwrite-mode delta write would destroy
-    every pre-compaction count.  Discarding is lossless here: the
-    compactor only starts deleting old versions AFTER the marker, so
-    every original version is still present."""
-    import os
-
-    events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    b0 = events.where(F.col("event_id") % 2 == 0)
-    b1 = events.where(F.col("event_id") % 2 == 1)
-
-    sketch = str(tmp_path / "sketch")
-    w = cms_sketch_writer(sketch, key_col="event_type")
-    w(b0, 0)
-    w(b1, 1)
-    want = _cells(read_cms_sketch(spark, sketch))
-
-    # stage the merge as compact_sketch would, but "crash" right after
-    # the parquet write — _SUCCESS present, marker never touched
-    read_cms_sketch(spark, sketch).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sketch, "_compact_tmp_v1")
-    )
-
-    # the resumed stream replays batch 1; recovery at the writer head
-    # must drop the dead stage and leave both original versions, so
-    # the replay is the usual idempotent overwrite of v1's own delta
-    w(b1, 1)
-    assert not any(d.startswith("_compact_tmp") for d in os.listdir(sketch))
-    assert os.path.exists(os.path.join(sketch, "v0", "_SUCCESS"))
-    assert _cells(read_cms_sketch(spark, sketch)) == want
-
-
 def test_replay_of_last_precompaction_batch_is_skipped(spark, sf_dir, tmp_path):
     """The nastiest replay window: compaction runs while the stream is
     down and reuses v{max} — but the checkpoint never committed that
