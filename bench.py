@@ -279,7 +279,8 @@ ACCEPTED_REGRESSIONS = {
 def compact_line(
     timings: dict[str, float],
     sf: float,
-    prev_queries: dict[str, float] | None = None,
+    prev: dict | None = None,
+    cpus: int | None = None,
 ) -> str:
     """The stdout summary line (VERDICT r10 #3): the driver tail-
     captures a bounded (~2000-char) window and the full per-query map
@@ -293,8 +294,12 @@ def compact_line(
     driver's own round-over-round view is limited to the two rounds'
     top-5 stdout windows (n_common collapsed to 1 in r12), so the
     harness computes the full-common-set geomean speedup against the
-    per-query map of whatever BENCH_local.json it found on disk at
-    start — still ONE bounded JSON line."""
+    per-query map of the BENCH_local.json it found on disk at start
+    (``prev``) — still ONE bounded JSON line.  Only an artifact taken
+    at the same ``sf`` and ``cpus`` is compared (ADVICE r13 #1): a
+    ratio across scale factors or core counts is not a round-over-round
+    speedup, so the line then reads null, as it does when ``cpus`` is
+    unknown."""
     import hashlib
     import math
 
@@ -306,10 +311,17 @@ def compact_line(
             {k: timings[k] for k in sorted(timings)}, separators=(",", ":")
         ).encode()
     ).hexdigest()
+    comparable = (
+        prev is not None
+        and cpus is not None
+        and prev.get("sf") == sf
+        and prev.get("cpus") == cpus
+    )
+    prev_queries = (prev.get("queries") or {}) if comparable else {}
     common = {
         k: prev_queries[k] / v
         for k, v in timings.items()
-        if prev_queries and prev_queries.get(k) and v > 0
+        if prev_queries.get(k) and v > 0
     }
     geo = (
         round(
@@ -330,6 +342,7 @@ def compact_line(
             "n_common_prev": len(common),
             "full_artifact": "BENCH_local.json",
             "sf": sf,
+            "cpus": cpus,
         },
         separators=(",", ":"),
     )
@@ -339,6 +352,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark(app_name="engine-bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     # JVM/codegen warmup + one touch per table so the first measured
     # query isn't charged for JIT or file-index building.
@@ -453,17 +467,16 @@ def main() -> None:
     OWN_KEYS = {"metric", "value", "unit", "queries", "spread", "reps",
                 "reruns", "sf", "accepted_regressions", "cluster_build_sec",
                 "kmeans_train_sec", "lsh_index_build_sec",
-                "stream_shuffle_partitions", "consumes"}
+                "stream_shuffle_partitions", "consumes", "cpus"}
     preserved: dict = {}
-    prev_queries: dict = {}
+    prev: dict | None = None
     if os.path.exists(out_path):
         try:
             with open(out_path) as f:
                 prev = json.load(f)
             preserved = {k: v for k, v in prev.items() if k not in OWN_KEYS}
-            prev_queries = prev.get("queries") or {}
         except (json.JSONDecodeError, OSError):
-            preserved = {}
+            preserved, prev = {}, None
     full = json.dumps(
         {
             **preserved,
@@ -481,11 +494,12 @@ def main() -> None:
             "consumes": CONSUMES,
             "stream_shuffle_partitions": stream_width,
             "sf": sf,
+            "cpus": cpus,
         }
     )
     with open(out_path, "w") as f:
         f.write(full + "\n")
-    print(compact_line(timings, sf, prev_queries), flush=True)
+    print(compact_line(timings, sf, prev, cpus), flush=True)
 
 
 if __name__ == "__main__":

@@ -137,8 +137,10 @@ def _pca_key(emb: DataFrame, dim: int, q: float):
     inputFiles alone would let pca_components(emb.where(...)) silently
     reuse a full-corpus basis fitted earlier over the same files — any
     filter/projection on the relation must miss the memo and fit its
-    own basis."""
-    import hashlib
+    own basis.  It is Catalyst's ``semanticHash`` of the canonicalized
+    plan, which drops the per-read exprIds (two loads of the IDENTICAL
+    query share the memo) and, unlike the plan string, is not cut off
+    at ``spark.sql.debug.maxToStringFields`` (ADVICE r13 #2)."""
     import os
 
     files = sorted(emb.inputFiles())
@@ -152,18 +154,10 @@ def _pca_key(emb: DataFrame, dim: int, q: float):
             fps.append((f, st.st_size, st.st_mtime_ns))
         except OSError:
             fps.append((f, None, None))
-    # exprIds (#123) are fresh per read of the same source; strip them
-    # so two loads of the IDENTICAL logical query share the memo while
-    # any added Filter/Project node still changes the key.
-    import re
-
-    plan = re.sub(
-        r"#\d+", "#", emb._jdf.queryExecution().analyzed().toString()
-    )
     return (
         emb.sparkSession.sparkContext.applicationId,
         tuple(fps),
-        hashlib.sha256(plan.encode()).hexdigest()[:16],
+        emb._jdf.queryExecution().analyzed().semanticHash(),
         int(dim),
         float(q),
     )

@@ -13,6 +13,27 @@ for correctness and 100 TB scale are made once:
   lets one logical plan serve sf0.001 and 100 TB.
 - **Arrow on** — every pandas interchange (Pandas UDFs, toPandas) is
   Arrow-batched, never per-row pickled.
+- **FileSystem checkpoint manager** — every micro-batch writes offset,
+  commit and source logs plus state-store changelogs.  Spark's default
+  FileContext manager renames each one with ``FileContext.rename``,
+  which on the local filesystem asks
+  ``RawLocalFileSystem.getFileLinkStatus`` about the source; without
+  Hadoop's native library that forks a ``readlink`` process, and every
+  create forks a ``chmod``.  A JFR ``jdk.ProcessStart`` count over one
+  nine-trigger skew-backfill drain (perfbench ``skew_backfill``,
+  pyspark 4.1.2 with its bundled Hadoop 3.4.2 client, Java 17) read 744
+  spawns: 584 ``readlink``, 158 ``chmod``, 2 ``rm``.  With
+  ``FileSystemBasedCheckpointFileManager``, which renames with
+  ``FileSystem.rename`` (``File.renameTo`` locally), it read 161.
+  What this gives up: FileContext's no-overwrite rename is truly
+  atomic only on HDFS and object stores.  On ``file:`` paths Hadoop's
+  ``AbstractFileSystem.renameInternal`` checks that the target is
+  absent and then renames, which is what this manager does too.
+  Elsewhere the pin would lose that atomicity, so the ``sinks`` writers
+  that take a caller-chosen checkpoint location refuse a non-``file:``
+  one while this manager is pinned.  ``extra_conf`` may set
+  ``CHECKPOINT_MANAGER_CONF`` back to ``FILECONTEXT_CHECKPOINT_MANAGER``,
+  Spark's default.
 """
 
 from __future__ import annotations
@@ -20,6 +41,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FILESYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+FILECONTEXT_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
 
 
 def _default_parallelism() -> int:
@@ -77,6 +108,10 @@ def get_spark(
             ".enabled",
             "true",
         )
+        # Checkpoint files are renamed with FileSystem.rename, not
+        # FileContext.rename, which forks `readlink` per file on a
+        # local filesystem without libhadoop (module docstring).
+        .config(CHECKPOINT_MANAGER_CONF, FILESYSTEM_CHECKPOINT_MANAGER)
         # Driver heap is left at Spark's default: measured on this
         # workload, larger heaps are strictly slower (1g→25.7s,
         # 4g→57.9s, 8g→116s over the heavy-query set — allocation-heavy

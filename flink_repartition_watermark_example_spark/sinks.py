@@ -7,19 +7,53 @@ Scale notes baked in:
   (usually a date) makes downstream partition pruning free.
 - Streaming writers default to append mode (the reference's
   exactly-once window emission contract, S10) with a mandatory
-  checkpoint location.
+  checkpoint location, which must be on the local filesystem while the
+  session pins the FileSystem checkpoint manager (``session.py``).
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from flink_repartition_watermark_example_spark.session import (
+    CHECKPOINT_MANAGER_CONF,
+    FILECONTEXT_CHECKPOINT_MANAGER,
+    FILESYSTEM_CHECKPOINT_MANAGER,
+)
 from flink_repartition_watermark_example_spark.streaming.vstore import (
     versions as _snapshot_versions,
 )
+
+
+def _checkpoint(df: DataFrame, location: str) -> str:
+    """``location``, once it is known to be safe for the session's
+    checkpoint manager.  The FileSystem manager's no-overwrite rename
+    (exists check, then rename) is only as strong as FileContext's on
+    ``file:`` paths; on HDFS or an object store the metadata logs would
+    lose their atomic no-overwrite commit, so such a location is
+    refused unless the session uses another manager."""
+    spark = df.sparkSession
+    if spark.conf.get(CHECKPOINT_MANAGER_CONF, None) != FILESYSTEM_CHECKPOINT_MANAGER:
+        return location
+    scheme = urlparse(location).scheme or urlparse(
+        spark._jsparkSession.sessionState().newHadoopConf().get(
+            "fs.defaultFS", "file:///"
+        )
+    ).scheme
+    if scheme != "file":
+        raise ValueError(
+            f"checkpoint location {location!r} is not on the local "
+            f"filesystem, but {CHECKPOINT_MANAGER_CONF} is "
+            f"{FILESYSTEM_CHECKPOINT_MANAGER}, whose rename is only "
+            "no-overwrite-safe on file: paths; start the session with "
+            f"get_spark(extra_conf={{{CHECKPOINT_MANAGER_CONF!r}: "
+            f"{FILECONTEXT_CHECKPOINT_MANAGER!r}}})"
+        )
+    return location
 
 
 def write_parquet_partitioned(
@@ -47,7 +81,7 @@ def stream_to_console(df: DataFrame, checkpoint: str) -> StreamingQuery:
         df.writeStream.outputMode("append")
         .format("console")
         .option("truncate", "false")
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", _checkpoint(df, checkpoint))
         .start()
     )
 
@@ -62,7 +96,7 @@ def stream_to_parquet(
         df.writeStream.outputMode("append")
         .format("parquet")
         .option("path", path)
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", _checkpoint(df, checkpoint))
     )
     if partition_by:
         w = w.partitionBy(*partition_by)
@@ -107,7 +141,7 @@ def stream_to_parquet_idempotent(
     return (
         df.writeStream.outputMode("append")
         .foreachBatch(batch_upsert_writer(path))
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", _checkpoint(df, checkpoint))
         .start()
     )
 
@@ -282,6 +316,6 @@ def stream_to_memory(df: DataFrame, name: str, checkpoint: str) -> StreamingQuer
         df.writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", _checkpoint(df, checkpoint))
         .start()
     )

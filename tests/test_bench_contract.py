@@ -55,19 +55,43 @@ def test_compact_line_geomean_vs_prev():
     # bounded line — geomean speedup over the full common set of the
     # previous artifact's per-query map
     t = {"a": 1.0, "b": 2.0, "c": 4.0}
-    prev = {"a": 2.0, "b": 2.0, "d": 9.0}
-    d = json.loads(bench.compact_line(t, 0.1, prev))
+    prev = {"sf": 0.1, "cpus": 4, "queries": {"a": 2.0, "b": 2.0, "d": 9.0}}
+    d = json.loads(bench.compact_line(t, 0.1, prev, cpus=4))
     assert d["n_common_prev"] == 2  # a and b; d not in this run
     # speedups: a 2.0/1.0=2.0, b 1.0 -> geomean sqrt(2)
     assert abs(d["geomean_vs_prev"] - 1.414) < 0.001
     # no previous artifact -> nulls, line still parses
-    d0 = json.loads(bench.compact_line(t, 0.1, None))
+    d0 = json.loads(bench.compact_line(t, 0.1, None, cpus=4))
     assert d0["geomean_vs_prev"] is None and d0["n_common_prev"] == 0
     # the length pin covers the new fields at full registry size
     line = bench.compact_line(
-        _fake_timings(), 0.1, {n: 123.4567 for n in _fake_timings()}
+        _fake_timings(),
+        0.1,
+        {"sf": 0.1, "cpus": 32, "queries": {n: 123.4567 for n in _fake_timings()}},
+        cpus=32,
     )
     assert len(line) < 1500 and "\n" not in line
+
+
+def test_compact_line_compares_only_same_sf_and_cpus():
+    # ADVICE r13 #1: a previous artifact from another scale factor or
+    # core count (or one that never recorded its cores) yields null,
+    # not a cross-box "speedup"; the line carries this run's cpus.
+    t = {"a": 1.0, "b": 2.0}
+    queries = {"a": 2.0, "b": 4.0}
+    same = {"sf": 0.1, "cpus": 4, "queries": queries}
+    assert json.loads(bench.compact_line(t, 0.1, same, cpus=4))[
+        "geomean_vs_prev"
+    ] == 2.0
+    for prev, cpus in [
+        ({**same, "sf": 1.0}, 4),
+        ({**same, "cpus": 32}, 4),
+        ({"sf": 0.1, "queries": queries}, 4),
+        (same, None),
+    ]:
+        d = json.loads(bench.compact_line(t, 0.1, prev, cpus=cpus))
+        assert d["geomean_vs_prev"] is None and d["n_common_prev"] == 0, prev
+        assert d["cpus"] == cpus
 
 
 def test_consumes_map_names_benched_queries_and_build_keys():

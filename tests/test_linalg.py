@@ -136,3 +136,30 @@ def test_pca_memo_distinguishes_derived_relations(spark, sf_dir):
     k_filt = _pca_key(filt, 64, 1024.0)
     assert k_full == k_full2
     assert k_full != k_filt
+
+
+def test_pca_memo_key_sees_past_plan_string_truncation(spark, sf_dir):
+    # ADVICE r13 #2: the analyzed plan's string form stops listing
+    # Project columns at spark.sql.debug.maxToStringFields (25), so two
+    # relations differing only in the 30th column printed identically
+    # and shared one memo key.  The key now comes from semanticHash.
+    from pyspark.sql import functions as F
+
+    from flink_repartition_watermark_example_spark.operators.linalg import (
+        _pca_key,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+
+    def widened(df, last):
+        return df.select(
+            "*",
+            *[F.lit(last if i == 29 else i).alias(f"c{i}") for i in range(30)],
+        )
+
+    a, b = widened(emb, 29), widened(emb, 99)
+    assert "more fields" in a._jdf.queryExecution().analyzed().toString()
+    assert _pca_key(a, 64, 1024.0) != _pca_key(b, 64, 1024.0)
+    # the same query read twice still shares one key
+    again = widened(load_table(spark, sf_dir, "embeddings"), 29)
+    assert _pca_key(a, 64, 1024.0) == _pca_key(again, 64, 1024.0)

@@ -16,11 +16,18 @@ Asserts the three invariants of reference README.md:49-58:
 
 from __future__ import annotations
 
+import re
 from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
+from flink_repartition_watermark_example_spark import session, sinks
+from flink_repartition_watermark_example_spark.session import (
+    CHECKPOINT_MANAGER_CONF,
+    FILECONTEXT_CHECKPOINT_MANAGER,
+    FILESYSTEM_CHECKPOINT_MANAGER,
+)
 from flink_repartition_watermark_example_spark.sources.generator import pageviews
 from flink_repartition_watermark_example_spark.streaming.replica import (
     run_skew_experiment,
@@ -116,6 +123,112 @@ def test_state_store_is_rocksdb(spark):
     assert "RocksDBStateStoreProvider" in spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass"
     )
+
+
+def _checkpoint_manager(spark, path: str):
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def test_checkpoint_manager_is_filesystem_based(spark, tmp_path):
+    """Checkpoint files are renamed with FileSystem.rename, which forks
+    no `readlink` per file on a local filesystem without libhadoop
+    (session.py)."""
+    mgr = _checkpoint_manager(spark, f"file://{tmp_path}")
+    assert mgr.getClass().getName() == FILESYSTEM_CHECKPOINT_MANAGER
+
+
+def test_checkpoint_create_atomic_never_overwrites(spark, tmp_path):
+    """The metadata logs commit batch N by an atomic create of file N
+    that must fail if N exists: a second writer (or a replay racing the
+    first) must not replace a committed log entry."""
+    from py4j.protocol import Py4JJavaError
+
+    mgr = _checkpoint_manager(spark, f"file://{tmp_path}")
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}/0")
+    first = mgr.createAtomic(path, False)
+    first.write(1)
+    first.close()
+    second = mgr.createAtomic(path, False)
+    second.write(2)
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"\x01"
+
+
+@pytest.mark.parametrize(
+    "start",
+    [
+        lambda df, ck: sinks.stream_to_console(df, ck),
+        lambda df, ck: sinks.stream_to_parquet(df, "/tmp/unused", ck),
+        lambda df, ck: sinks.stream_to_parquet_idempotent(df, "/tmp/unused", ck),
+        lambda df, ck: sinks.stream_to_memory(df, "unused", ck),
+    ],
+    ids=["console", "parquet", "parquet_idempotent", "memory"],
+)
+def test_sinks_refuse_remote_checkpoint(spark, start):
+    """The FileSystem manager's no-overwrite rename is only as strong as
+    FileContext's on file: paths, so a remote checkpoint is refused
+    before the query starts, with the conf that lifts the refusal."""
+    df = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match=re.escape(CHECKPOINT_MANAGER_CONF)):
+        start(df, "hdfs://localhost:9/ckpt")
+    assert not spark.streams.active
+
+
+def test_schemeless_checkpoint_follows_default_fs(spark, tmp_path):
+    """A path without a scheme lives on fs.defaultFS, so it is refused
+    when that is not the local filesystem."""
+    assert sinks._checkpoint(spark.range(1), str(tmp_path)) == str(tmp_path)
+    spark.conf.set("fs.defaultFS", "hdfs://localhost:9")
+    try:
+        with pytest.raises(ValueError, match="not on the local filesystem"):
+            sinks._checkpoint(spark.range(1), str(tmp_path))
+    finally:
+        spark.conf.unset("fs.defaultFS")
+
+
+def test_extra_conf_checkpoint_manager_override_is_kept(spark, monkeypatch, tmp_path):
+    """get_spark(extra_conf=...) can put the FileContext manager back;
+    the pin must not win over it, and the sinks then accept any
+    checkpoint location."""
+    class Builder:
+        """Records the conf get_spark hands the session builder; the
+        last value per key wins, as in SparkSession.Builder."""
+
+        def __init__(self):
+            self.conf = {}
+
+        def __getattr__(self, name):  # appName, master
+            return lambda *a: self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return spark
+
+    builder = Builder()
+    monkeypatch.setattr(session.SparkSession, "builder", builder)
+    session.get_spark(
+        extra_conf={CHECKPOINT_MANAGER_CONF: FILECONTEXT_CHECKPOINT_MANAGER}
+    )
+    assert builder.conf[CHECKPOINT_MANAGER_CONF] == FILECONTEXT_CHECKPOINT_MANAGER
+
+    monkeypatch.undo()
+    previous = spark.conf.get(CHECKPOINT_MANAGER_CONF)
+    spark.conf.set(CHECKPOINT_MANAGER_CONF, FILECONTEXT_CHECKPOINT_MANAGER)
+    try:
+        mgr = _checkpoint_manager(spark, f"file://{tmp_path}")
+        assert mgr.getClass().getName() == FILECONTEXT_CHECKPOINT_MANAGER
+        remote = "hdfs://localhost:9/ckpt"
+        assert sinks._checkpoint(spark.range(1), remote) == remote
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, previous)
 
 
 def test_checkpoint_restart_does_not_reemit(spark, skew_dirs, tmp_path):
