@@ -154,7 +154,7 @@ def main(sf_dir: str) -> dict:
         .collect()
     )
     if live_cids:
-        sem_kept = semantic_dedup(cand, centroid_ids=live_cids).select(
+        sem_kept = semantic_dedup(cand, centroids=live_cids).select(
             F.col("vec_id").alias("doc_id")
         )
         sem_purged = cand.select(F.col("vec_id").alias("doc_id")).join(

@@ -68,7 +68,7 @@ def _small_star(e: DataFrame) -> DataFrame:
 # at bench/test SFs) is labeled in one collect, and a corpus whose
 # pair graph outgrows the budget falls through to the distributed
 # star-contraction automatically — the scale-adaptive tier discipline
-# of semantic_dedup_dispatch.
+# of the SemDeDup tier chooser (similarity._choose_tier).
 DRIVER_CC_MAX_EDGES = 1_000_000
 
 
@@ -134,7 +134,7 @@ def connected_components(
     self-loops (dropped up front).
 
     ``driver_max_edges`` enables a BOUNDED-COLLECT small tier (the
-    semantic_dedup_dispatch discipline): when the deduplicated edge
+    SemDeDup tier-chooser discipline): when the deduplicated edge
     count is within the budget, the edges collect to the driver and a
     min-root union-find labels them in O(E α(E)) — one job instead of
     O(log n) shuffle rounds with per-round checkpoints.  Callers pass

@@ -210,61 +210,47 @@ IVF_PRODUCTION_NPROBE = 15
 # vs ~25 h extrapolated at k=16.
 SEMDEDUP_PER_CLUSTER = 500
 
-# Assignment-path threshold: with k centroids of EMBED_DIM doubles the
+# Closure-matrix ceiling: with k centroids of EMBED_DIM doubles the
 # task closure carries k*64*8 bytes; 4096 keeps that under ~2 MB (fine
-# to serialize per task batch).  Above it, semantic_dedup_joined ships
-# the centroids as a broadcast RELATION instead — one torrent transfer
-# per executor, no per-task closure cost, no O(k) driver collect.
+# to serialize per task batch).  Above it the centroids ship as a
+# broadcast RELATION instead — one torrent transfer per executor, no
+# per-task closure cost, no O(k) driver collect.
 SEMDEDUP_CLOSURE_K_MAX = 4096
 
-# Broadcast ceiling for the JOINED flat-assignment path: past ~256 MB
-# of centroid vectors (k ~ 500k at dim 64) even a broadcast relation
-# is the wrong plan — flat assignment is O(n*k) pair rows by then, and
+# Broadcast ceiling for the flat relation tier: past ~256 MB of
+# centroid vectors (k ~ 500k at dim 64) even a broadcast relation is
+# the wrong plan — flat assignment is O(n*k) pair rows by then, and
 # the two-level router (O(n*sqrt(k)) equi-joins, shuffled fine) is the
-# documented next tier.
+# next tier.
 SEMDEDUP_BROADCAST_BYTES = 256 * 1024 * 1024
 
 # Pair-row budget for FLAT assignment.  Flat assignment materializes
 # one candidate row per (vector, centroid) — n*k rows, each carrying
-# two EMBED_DIM-double arrays on the joined path — so its regime ends
+# two EMBED_DIM-double arrays on the relation tier — so its regime ends
 # long before the broadcast ceiling trips: at sf100 the centroid set
 # is a harmless 2 MB (k=4000), but 2M vectors x 4000 = 8e9 pair rows
 # is TBs of transient Arrow transfer, and the round-11 sweep leg was
 # killed after 40 min (BENCH_sf100.json.fenced_out post-mortem).
-# Measured brackets at dim 64: 8e7 pair rows (sf10) ran the joined
+# Measured brackets at dim 64: 8e7 pair rows (sf10) ran the relation
 # tier in 87 s; the two-level router ran the 8e9-pair corpus in
 # ~480 s.  5e8 places the switch at the measured regime boundary
 # (~500 s of flat work extrapolating linearly — right where
 # O(n*sqrt(k)) routing takes over).  Above the budget
-# :func:`semantic_dedup_dispatch` routes assignment through the
-# two-level router automatically (VERDICT r11 #1); results then
-# follow the router's documented IVF boundary trade (purge recall
-# 0.991 at sf1, 0.999 at sf10 vs flat) instead of requiring the user
-# to know the regime map.
+# :func:`semantic_dedup` routes assignment through the two-level
+# router (VERDICT r11 #1); results then follow the router's
+# documented IVF boundary trade (purge recall 0.991 at sf1, 0.999 at
+# sf10 vs flat) instead of requiring the user to know the regime map.
+#
+# The budget bounds assignment, not the purge.  The purge materializes
+# one list_id group in one Python worker (FlatMapGroupsInPandasExec),
+# so its per-group memory is the group's vectors — m*d*8 bytes for a
+# cluster of m vectors at dimension d — plus cosine slabs capped at
+# SEMDEDUP_PURGE_SLAB_BYTES each (the kernel derives its row block from
+# m; _fold_dot_matrix holds about three slab-sized arrays at once).
+# m is what the corpus-scaled k bounds (~SEMDEDUP_PER_CLUSTER on
+# evenly spread data); a skewed cluster grows the vector term only.
 SEMDEDUP_PAIRROW_BUDGET = 500_000_000
-
-
-def scaled_centroid_ids(emb: DataFrame, per_cluster: int = SEMDEDUP_PER_CLUSTER) -> list[int]:
-    """Corpus-scaled SemDeDup centroid set: the first max(16, n //
-    per_cluster) eligible vec_ids, ascending (eligible = vec_id >= 10,
-    the query-row convention).  Deterministic, guaranteed present in
-    the corpus as :func:`semantic_dedup` requires, and expressible as
-    a fixed SQL string (row_number over vec_id <= GREATEST(16,
-    count(*) // per_cluster)) so the DuckDB oracle computes the same
-    set without parameter plumbing.  Driver cost: one count() plus an
-    O(k) collect — fine at the k<=SEMDEDUP_CLOSURE_K_MAX tier this
-    path serves; above it, :func:`scaled_centroids_df` derives the
-    SAME set as a DataFrame with no O(k) driver traffic."""
-    n = emb.count()
-    k = max(16, n // per_cluster)
-    return [
-        r["vec_id"]
-        for r in emb.where(F.col("vec_id") >= 10)
-        .select("vec_id")
-        .orderBy("vec_id")
-        .limit(k)
-        .collect()
-    ]
+SEMDEDUP_PURGE_SLAB_BYTES = 32 * 1024 * 1024
 
 
 def exact_kth_smallest(df: DataFrame, col: str, k: int, buckets: int = 128,
@@ -313,60 +299,6 @@ def exact_kth_smallest(df: DataFrame, col: str, k: int, buckets: int = 128,
         df, k, total = sliced, k - base, new_total
     row = df.orderBy(col).limit(k).agg(F.max(col).alias("m")).collect()[0]
     return row["m"]
-
-
-def scaled_centroid_plan(
-    emb: DataFrame, per_cluster: int = SEMDEDUP_PER_CLUSTER
-) -> tuple[DataFrame, int, int]:
-    """(cent_df, k, n): :func:`scaled_centroids_df` plus the CLAMPED
-    k and the corpus count that sized it.  Callers doing guard math —
-    the broadcast-bytes ceiling, the pair-row budget — reuse these
-    instead of re-counting, so the guards always agree with the
-    actual centroid set (ADVICE r11: an unclamped expected_k computed
-    from a third count() could exceed the clamped set on degenerate
-    inputs)."""
-    # one job for both counts (r12): corpus size and eligible size are
-    # a single aggregate over one scan, not two count() jobs.
-    row = emb.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("vec_id") >= 10, 1)).alias("ecount"),
-    ).collect()[0]
-    n, ecount = int(row["n"]), int(row["ecount"])
-    k = max(16, n // per_cluster)
-    elig = emb.where(F.col("vec_id") >= 10)
-    # Clamp k to the eligible row count (ADVICE r10): the id-list twin
-    # silently truncates via limit(k), so on degenerate inputs (tiny
-    # corpora, per_cluster=1) an unclamped rank cut would raise where
-    # the twin runs with fewer centroids — both tiers must derive the
-    # IDENTICAL set on all inputs.  Sparse ids mean n-10 is not the
-    # eligible count; count it (in the same aggregate).
-    k = min(k, ecount)
-    if k < 1:
-        cent = elig.select(
-            F.col("vec_id").alias("centroid_id"),
-            as_double("embedding").alias("cv"),
-        )
-        return cent, 0, n
-    cutoff = exact_kth_smallest(elig.select("vec_id"), "vec_id", k)
-    cent = elig.where(F.col("vec_id") <= F.lit(cutoff)).select(
-        F.col("vec_id").alias("centroid_id"),
-        as_double("embedding").alias("cv"),
-    )
-    return cent, k, n
-
-
-def scaled_centroids_df(emb: DataFrame, per_cluster: int = SEMDEDUP_PER_CLUSTER) -> DataFrame:
-    """DataFrame twin of :func:`scaled_centroid_ids` — the SAME
-    centroid set (first max(16, n // per_cluster) eligible vec_ids
-    ascending) as a (centroid_id, cv) RELATION, derived with no O(k)
-    driver collect: one count(), one exact distributed rank cut
-    (O(buckets) driver traffic), one filter.  This is the 4th-decade
-    form — at n = 1e9 vectors k is ~2M and the id list alone would be
-    16 MB of driver traffic plus GBs of task-closure centroid matrix;
-    here the centroids stay a relation the engine broadcasts or
-    shuffles (VERDICT r9 #2 / the reference's S14 discipline:
-    README.md:28-45 — state ships via the engine, not the driver)."""
-    return scaled_centroid_plan(emb, per_cluster)[0]
 
 
 # --- fold-exact numpy kernels ---------------------------------------------
@@ -481,13 +413,12 @@ def _bucketize_fold(vdf: DataFrame, planes: list[list[float]]) -> DataFrame:
     )
 
 
-def _centroids(emb: DataFrame, centroid_ids: list[int] | None = None):
-    cents = (
-        emb.where(F.col("vec_id").isin(centroid_ids or CENTROID_IDS))
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect()
+def _centroids(emb: DataFrame):
+    return _collect_centroids(
+        emb.where(F.col("vec_id").isin(CENTROID_IDS)).select(
+            F.col("vec_id").alias("centroid_id"), as_double("embedding").alias("cv")
+        )
     )
-    return sorted((r["vec_id"], list(r["v"])) for r in cents)
 
 
 def ivf_topk(
@@ -1273,10 +1204,24 @@ def pq_adc_topk_fast(
     )
 
 
+# --- SemDeDup ---------------------------------------------------------------
+# One entry point (semantic_dedup) and its assignment stage
+# (semantic_assign, which the cluster-size histograms call).  The
+# assignment tier is a data decision made in ONE place, _choose_tier.
+# The four tier implementations below stay separate private functions
+# because each is another's bit-equality reference in the tests: flat
+# closure == flat relation, two-level closure == two-level relation,
+# and two-level at full probe == flat.
+
+SEMDEDUP_TIERS = ("closure", "relation", "two_level")
+
+
 def semantic_dedup(
     emb: DataFrame,
     threshold: float = 0.25,
-    centroid_ids: list[int] | None = None,
+    centroids: list[int] | int | None = None,
+    tier: str | None = None,
+    nprobe: int = 2,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): assign EVERY vector to its nearest coarse
@@ -1285,60 +1230,193 @@ def semantic_dedup(
     cluster-mate is >= threshold — the min-id representative of each
     epsilon-ball survives.  Returns the surviving (vec_id, list_id).
 
-    Scale shape: assignment is a shuffle-free scan through the
-    fold-exact kernel stage (centroids ship in the task closure);
-    candidate pairing is an equi-join on list_id, quadratic only
-    within a cluster — the centroid count is the corpus-size lever
-    (grow it ~sqrt(n) so cluster sizes stay bounded; same operator,
-    same oracle construction, different constant).  Never all-pairs
-    across clusters.
+    ``centroids`` picks the clustering (see :func:`semantic_assign`):
+    None for the fixed CENTROID_IDS index, a list of vec_ids for an
+    explicit set, or an int ``per_cluster`` for the corpus-scaled set
+    (the first max(16, n // per_cluster) vec_ids >= 10, ascending —
+    the production config, SEMDEDUP_PER_CLUSTER).  ``tier`` pins the
+    assignment tier; None lets the data decide (:func:`_choose_tier`).
 
-    Parity: assignment + pair scoring run the same fold-exact kernels
-    as `ivf_topk`, so doubles are bit-identical to the DuckDB
-    oracle's list_reduce folds and the >= threshold cut is exact.
+    Scale shape: candidate pairing is per list_id, quadratic only
+    within a cluster — the centroid count is the corpus-size lever.
+    Never all-pairs across clusters.
 
-    Centroid rows must exist in ``emb``: missing ids raise rather
-    than silently shrinking the clustering (a filtered corpus that
-    lost centroid rows would otherwise cluster differently than the
-    caller believes — pass the surviving ids explicitly instead)."""
-    import numpy as np
-    import pandas as pd
-
-    if centroid_ids is not None and not centroid_ids:
-        raise ValueError("centroid_ids must be non-empty (or None for defaults)")
-    assigned = (
-        closure_assignment(emb, centroid_ids)
-        # persist + pin: the relation feeds both sides of the pair
-        # self-join AND the final anti-join — uncached, the Arrow
-        # assignment kernel would run 3x per action (the documented
-        # round-5 concurrent-fan-in trap)
-        .persist()
-    )
-    assigned.count()
+    Parity: assignment and purge run the fold-exact kernels, so
+    doubles are bit-identical to the DuckDB oracle's list_reduce folds
+    and the >= threshold cut is exact."""
+    # persist(): the purge is the assignment's only consumer, so this
+    # is not about fan-in.  Spark's CacheManager matches a later
+    # persist() of an identical plan to this one, so repeated calls in
+    # one session (a re-run query, every pass of a benchmark that does
+    # not clearCache) reuse the first call's assignment instead of
+    # re-running the Arrow kernel.  No eager count(): the purge's job
+    # fills the cache on a miss, and the count cost two jobs per call.
+    assigned = semantic_assign(emb, centroids, tier, nprobe).persist()
     return _purge_within_lists(assigned, threshold)
 
 
-def closure_assignment(
-    emb: DataFrame, centroid_ids: list[int] | None = None
+def semantic_assign(
+    emb: DataFrame,
+    centroids: list[int] | int | None = None,
+    tier: str | None = None,
+    nprobe: int = 2,
 ) -> DataFrame:
-    """The nearest-centroid assignment stage of :func:`semantic_dedup`
-    on its own — (vec_id, v, nv, list_id) via the closure-matrix
-    fold-exact kernel (centroids collected once, shipped per task) —
-    exposed for monitoring queries that need the assignment without
-    the purge.  The k <= SEMDEDUP_CLOSURE_K_MAX tier; use
-    :func:`assign_by_join` above it."""
+    """SemDeDup's nearest-centroid assignment: (vec_id, v, nv,
+    list_id) for every row of ``emb``, ties broken (cos DESC,
+    centroid_id ASC).
+
+    Centroids are corpus rows.  ``centroids`` None means the fixed
+    CENTROID_IDS index; a list names the vec_ids explicitly (every one
+    must be present — a filtered corpus that lost centroid rows would
+    otherwise cluster differently than the caller believes, so missing
+    ids raise); an int ``per_cluster`` derives the corpus-scaled set,
+    the first max(16, n // per_cluster) eligible vec_ids (>= 10, the
+    query-row convention) clamped to the eligible count — the set the
+    oracle computes from fixed SQL.
+
+    Tiers (``tier`` pins one; None lets :func:`_choose_tier` decide):
+    - "closure": flat, the centroid matrix ships in the task closure;
+    - "relation": flat, the centroids stay a relation broadcast into a
+      per-(vector, centroid)-row kernel — no O(k) driver collect;
+    - "two_level": one fold-exact Lloyd round builds ceil(sqrt(k))
+      mean supers, each vector probes its top-``nprobe`` supers and
+      picks the nearest centroid among their children — O(n*sqrt(k))
+      folds.  Deterministic (the DuckDB hier CTEs reproduce it
+      hash-exactly) but it may differ from flat near cluster
+      boundaries, the IVF coarse-quantizer trade.  Its centroids ship
+      in the closure or as a relation by the same k rule as flat."""
+    if nprobe < 1:
+        raise ValueError("nprobe must be >= 1")
+    n, k, derive = _centroid_set(emb, centroids)
+    if k < 1:
+        raise ValueError("no eligible centroid rows (vec_id >= 10) in the corpus")
+    tier, closure = _choose_tier(n, k, tier)
+    vectors = fan_out(emb, "vec_id").select("vec_id", as_double("embedding").alias("v"))
+    cent = derive(closure)
+    if closure:
+        cents = _collect_centroids(cent)
+        if tier == "two_level":
+            return _two_level_assignment(vectors, cents, nprobe)
+        return _closure_assignment(vectors, cents)
+    if tier == "two_level":
+        return _two_level_joined_assignment(vectors, cent, k, nprobe)
+    return _assign_by_join(vectors, cent)
+
+
+def _choose_tier(n: int, k: int, tier: str | None = None) -> tuple[str, bool]:
+    """The SemDeDup tier rule — the only code that reads
+    SEMDEDUP_CLOSURE_K_MAX and SEMDEDUP_PAIRROW_BUDGET.  Returns
+    (tier, closure): closure says the centroids ship as a task-closure
+    matrix rather than a broadcast relation.
+
+    Unpinned: two-level when n*k > SEMDEDUP_PAIRROW_BUDGET (flat
+    assignment is out of regime), else the closure matrix when
+    k <= SEMDEDUP_CLOSURE_K_MAX, else the broadcast relation.  A pinned
+    relation tier still refuses past the broadcast ceiling and the
+    pair-row budget: raising beats silently planning the killed
+    round-11 sf100 shape."""
+    if tier is None:
+        if n * k > SEMDEDUP_PAIRROW_BUDGET:
+            tier = "two_level"
+        elif k <= SEMDEDUP_CLOSURE_K_MAX:
+            tier = "closure"
+        else:
+            tier = "relation"
+    elif tier not in SEMDEDUP_TIERS:
+        raise ValueError(f"tier must be one of {SEMDEDUP_TIERS} or None, got {tier!r}")
+    if tier == "relation":
+        if k * EMBED_DIM * 8 > SEMDEDUP_BROADCAST_BYTES:
+            raise ValueError(
+                f"k={k} centroids exceed the broadcast ceiling "
+                f"({SEMDEDUP_BROADCAST_BYTES} B of vectors): flat assignment is "
+                "O(n*k) pair rows by this size — use tier='two_level' "
+                "(O(n*sqrt(k)) equi-join routing) instead"
+            )
+        if n * k > SEMDEDUP_PAIRROW_BUDGET:
+            raise ValueError(
+                f"n*k = {n}*{k} exceeds the flat-assignment pair-row budget "
+                f"({SEMDEDUP_PAIRROW_BUDGET}): the candidate relation would "
+                "materialize that many two-array Arrow rows (the killed "
+                "round-11 sf100 sweep leg) — leave tier unset or use "
+                "tier='two_level'"
+            )
+    closure = tier == "closure" or (
+        tier == "two_level" and k <= SEMDEDUP_CLOSURE_K_MAX
+    )
+    return tier, closure
+
+
+def _centroid_set(emb: DataFrame, centroids: list[int] | int | None):
+    """(n, k, derive) for :func:`semantic_assign`'s ``centroids``: the
+    corpus size, the centroid count, and derive(closure) → the
+    (centroid_id, cv) relation.  One aggregate job gives n (and the
+    eligible or present count); derive(True) is a relation meant to be
+    collected (one ordered TakeOrdered job for the scaled set), while
+    derive(False) keeps the centroids in the engine — the scaled set
+    via an exact distributed rank cut, O(buckets) driver traffic and
+    no O(k) collect (VERDICT r9 #2)."""
+    if isinstance(centroids, int):
+        per_cluster = centroids
+        if per_cluster < 1:
+            raise ValueError("per_cluster must be >= 1")
+        row = emb.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("vec_id") >= 10, 1)).alias("eligible"),
+        ).collect()[0]
+        n = int(row["n"])
+        # clamped to the eligible count (sparse ids: n - 10 is not it),
+        # so the closure and relation derivations agree on every input
+        k = min(max(16, n // per_cluster), int(row["eligible"]))
+        elig = emb.where(F.col("vec_id") >= 10)
+
+        def derive(closure: bool) -> DataFrame:
+            if closure:
+                picked = elig.orderBy("vec_id").limit(k)
+            else:
+                cutoff = exact_kth_smallest(elig.select("vec_id"), "vec_id", k)
+                picked = elig.where(F.col("vec_id") <= F.lit(cutoff))
+            return picked.select(
+                F.col("vec_id").alias("centroid_id"), as_double("embedding").alias("cv")
+            )
+
+        return n, k, derive
+
+    ids = sorted(set(centroids if centroids is not None else CENTROID_IDS))
+    if not ids:
+        raise ValueError("centroids must be non-empty (or None for defaults)")
+    present = F.col("vec_id").isin(ids)
+    row = emb.agg(
+        F.count(F.lit(1)).alias("n"), F.count(F.when(present, 1)).alias("present")
+    ).collect()[0]
+    if row["present"] != len(ids):
+        found = {r["vec_id"] for r in emb.where(present).select("vec_id").collect()}
+        raise ValueError(
+            f"centroid vec_ids missing from the input corpus: "
+            f"{sorted(set(ids) - found)} — semantic_dedup requires every "
+            "centroid row to be present; pass centroids= with ids that "
+            "exist in this relation"
+        )
+    rel = emb.where(present).select(
+        F.col("vec_id").alias("centroid_id"), as_double("embedding").alias("cv")
+    )
+    return int(row["n"]), len(ids), lambda closure: rel
+
+
+def _collect_centroids(cent: DataFrame) -> list[tuple[int, list[float]]]:
+    """A (centroid_id, cv) relation as driver rows, ascending id — the
+    order every closure kernel's first-win argmax tie-break relies on."""
+    return sorted((r["centroid_id"], list(r["cv"])) for r in cent.collect())
+
+
+def _closure_assignment(
+    vectors: DataFrame, cents: list[tuple[int, list[float]]]
+) -> DataFrame:
+    """Flat closure tier: (vec_id, v) → (vec_id, v, nv, list_id), the
+    centroid matrix shipped in the task closure, one shuffle-free
+    fold-exact Arrow pass.  Also the streaming twin's kernel."""
     import numpy as np
     import pandas as pd
 
-    want = sorted(centroid_ids if centroid_ids is not None else CENTROID_IDS)
-    cents = _centroids(emb, want)
-    if [cid for cid, _ in cents] != want:
-        missing = sorted(set(want) - {cid for cid, _ in cents})
-        raise ValueError(
-            f"centroid vec_ids missing from the input corpus: {missing} — "
-            "semantic_dedup requires every centroid row to be present; "
-            "pass centroid_ids= with ids that exist in this relation"
-        )
     cids = np.array([cid for cid, _ in cents], dtype=np.int64)
     C = np.array([cv for _, cv in cents], dtype=np.float64)
     cnorms = _fold_norm(C)
@@ -1361,12 +1439,8 @@ def closure_assignment(
                 }
             )
 
-    return (
-        fan_out(emb, "vec_id")
-        .select("vec_id", as_double("embedding").alias("v"))
-        .mapInPandas(
-            assign_top1, schema="vec_id long, v array<double>, nv double, list_id long"
-        )
+    return vectors.mapInPandas(
+        assign_top1, schema="vec_id long, v array<double>, nv double, list_id long"
     )
 
 
@@ -1402,95 +1476,6 @@ def _score_candidates(cand: DataFrame) -> DataFrame:
     )
 
 
-def assign_by_join(vectors: DataFrame, cent_df: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment as a JOIN against the centroid
-    relation: (vec_id, v) × (centroid_id, cv) → (vec_id, v, nv,
-    list_id).  The centroids ship through the ENGINE — a broadcast
-    exchange (one torrent transfer per executor), never in the task
-    closure and never via a driver collect (reference S14 discipline,
-    README.md:28-45).  Fold-exact cosine per candidate row, then a
-    hash-aggregate argmax: max(struct(cos, -centroid_id)) realizes the
-    (cos DESC, centroid_id ASC) tie-break without a window sort.  The
-    vector side re-joins by vec_id to regain the embedding — the
-    n-row side shuffles ONCE on its key; the n×k candidate relation
-    never carries the 64-double vectors into the aggregate."""
-    scored = _score_candidates(
-        vectors.crossJoin(F.broadcast(cent_df))
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.max(
-            F.struct(
-                F.col("cos"),
-                (-F.col("centroid_id")).alias("neg_id"),
-                F.col("nv"),
-            )
-        ).alias("b")
-    )
-    return vectors.join(best, "vec_id").select(
-        "vec_id",
-        "v",
-        F.col("b.nv").alias("nv"),
-        (-F.col("b.neg_id")).alias("list_id"),
-    )
-
-
-def semantic_dedup_joined(
-    emb: DataFrame,
-    cent_df: DataFrame,
-    threshold: float = 0.25,
-    expected_k: int | None = None,
-    expected_n: int | None = None,
-) -> DataFrame:
-    """:func:`semantic_dedup` with JOIN-BASED assignment — the
-    k > SEMDEDUP_CLOSURE_K_MAX tier (VERDICT r9 #2).  Identical
-    semantics and bit-identical doubles to the closure path (asserted
-    in tests/test_semdedup_joined.py); the difference is purely how
-    the centroids reach the tasks: a broadcast relation instead of a
-    serialized closure matrix, and no O(k) driver collect anywhere —
-    ``cent_df`` is typically :func:`scaled_centroids_df`.
-
-    ``expected_k`` (when known from the same count() that sized the
-    centroid set) guards the broadcast ceiling: past
-    SEMDEDUP_BROADCAST_BYTES of centroid vectors, flat O(n·k)
-    assignment is the wrong plan at ANY transport and the caller
-    should route through :func:`semantic_dedup_two_level` — raising
-    here beats silently planning a 100-TB-scale cross product.
-    ``expected_n`` (the corpus count, when the caller already has it)
-    arms the second guard: past SEMDEDUP_PAIRROW_BUDGET candidate
-    rows the flat shape is out of regime regardless of broadcast size
-    (the round-11 sf100 post-mortem) — callers who don't know the
-    regime map should use :func:`semantic_dedup_dispatch`, which
-    picks the tier instead of raising."""
-    if expected_k is not None and expected_k * EMBED_DIM * 8 > SEMDEDUP_BROADCAST_BYTES:
-        raise ValueError(
-            f"k={expected_k} centroids exceed the broadcast ceiling "
-            f"({SEMDEDUP_BROADCAST_BYTES} B of vectors): flat assignment is "
-            "O(n*k) pair rows by this size — use semantic_dedup_two_level "
-            "(O(n*sqrt(k)) equi-join routing) instead"
-        )
-    if (
-        expected_k is not None
-        and expected_n is not None
-        and expected_n * expected_k > SEMDEDUP_PAIRROW_BUDGET
-    ):
-        raise ValueError(
-            f"n*k = {expected_n}*{expected_k} exceeds the flat-assignment "
-            f"pair-row budget ({SEMDEDUP_PAIRROW_BUDGET}): the candidate "
-            "relation would materialize that many two-array Arrow rows "
-            "(the killed round-11 sf100 sweep leg) — use "
-            "semantic_dedup_dispatch (auto-tier) or "
-            "semantic_dedup_two_level_joined (O(n*sqrt(k)) routing)"
-        )
-    vectors = fan_out(emb, "vec_id").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    assigned = assign_by_join(vectors, cent_df).persist()
-    # persist + pin: feeds both sides of the pair self-join AND the
-    # final anti-join (the round-5 concurrent-fan-in trap)
-    assigned.count()
-    return _purge_within_lists(assigned, threshold)
-
-
 def _argmax_by_cos(scored: DataFrame, id_col: str) -> DataFrame:
     """(vec_id, nv, <id_col>, cos) → per-vec_id argmax with the
     (cos DESC, id ASC) tie-break as a map-side-combinable struct max —
@@ -1514,21 +1499,151 @@ def _argmax_by_cos(scored: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def semantic_dedup_two_level_joined(
-    emb: DataFrame,
-    cent_df: DataFrame,
-    threshold: float = 0.25,
-    nprobe: int = 2,
-    expected_k: int | None = None,
+def _assign_by_join(vectors: DataFrame, cent_df: DataFrame) -> DataFrame:
+    """Flat relation tier: (vec_id, v) × (centroid_id, cv) → (vec_id,
+    v, nv, list_id).  The centroids ship through the ENGINE — a
+    broadcast exchange (one torrent transfer per executor), never in
+    the task closure and never via a driver collect (reference S14
+    discipline, README.md:28-45).  Fold-exact cosine per candidate
+    row, then the struct-max argmax of :func:`_argmax_by_cos` — no
+    window sort.  The vector side re-joins by vec_id to regain the
+    embedding, so the n×k candidate relation never carries the
+    64-double vectors into the aggregate."""
+    best = _argmax_by_cos(
+        _score_candidates(vectors.crossJoin(F.broadcast(cent_df))), "centroid_id"
+    )
+    return vectors.join(best, "vec_id").select(
+        "vec_id", "v", "nv", F.col("centroid_id").alias("list_id")
+    )
+
+
+def _lloyd_round_supers(C, cnorms):
+    """One fold-exact Lloyd round over the centroid matrix: init
+    supers are every m-th centroid (m = ceil(sqrt(k)) over the
+    ascending-id list), each centroid routes to its nearest init
+    (self-forced for the inits — an FP self-cosine is 1±ulp and could
+    lose a tie, emptying a member set), and each super becomes the
+    per-dim MEAN of its members in ascending-centroid-index fold
+    order (acc seeded 0.0, one division by the member count) — the
+    identical operation sequence the DuckDB oracle's
+    list_reduce/count(*) expression runs, so the means are
+    bit-reproducible.  Returns (S_means, member_parent0) — the means
+    and the init membership.  Means track the local data mass, so
+    child-set sizes stay far more even than raw every-m-th-id supers
+    (the measured skew that made nprobe=1 routing lose below the
+    crossover — VERDICT r9 #3)."""
+    import math
+
+    import numpy as np
+
+    k = C.shape[0]
+    m = int(math.ceil(math.sqrt(k)))  # float sqrt: lockstep with the oracle
+    sup_idx = np.arange(0, k, m)
+    S0, s0norms = C[sup_idx], cnorms[sup_idx]
+    parent0 = np.argmax(
+        _fold_dot_matrix(C, S0) / (cnorms[:, None] * s0norms[None, :]), axis=1
+    )
+    parent0[sup_idx] = np.arange(len(sup_idx))
+    S = np.zeros((len(sup_idx), C.shape[1]))
+    for p in range(len(sup_idx)):
+        members = np.flatnonzero(parent0 == p)  # ascending centroid index
+        acc = np.zeros(C.shape[1])
+        for i in members:
+            acc = acc + C[i]
+        S[p] = acc / len(members)
+    return S, parent0
+
+
+def _two_level_assignment(
+    vectors: DataFrame, cents: list[tuple[int, list[float]]], nprobe: int
 ) -> DataFrame:
-    """:func:`semantic_dedup_two_level` with every stage RELATIONAL —
-    the k > SEMDEDUP_CLOSURE_K_MAX tier of the router (and the only
-    form that works at k ~ 1e5+, where the closure path's O(k) driver
+    """Two-level tier, closure form: supers from ONE fold-exact Lloyd
+    round (see _lloyd_round_supers), every centroid routes to its
+    nearest mean, and each vector probes its top-``nprobe`` supers
+    then picks the nearest centroid among their children — O(n·(sqrt(k)
+    + nprobe·k/sqrt(k))) = O(n·sqrt(k)) folds instead of flat O(n·k).
+    All tie-breaks are cos DESC, index ASC, so the DuckDB hier CTEs
+    reproduce the assignment hash-exactly.
+
+    Vectors rank only supers that HAVE children after the final
+    routing (a mean can end up childless; probing it would strand the
+    vector) — the oracle applies the same restriction.  DEGENERACY
+    CONTRACT, pinned by tests: with nprobe >= the (non-empty) super
+    count every centroid is a candidate for every vector, so the
+    routing collapses to exactly flat assignment."""
+    import numpy as np
+    import pandas as pd
+
+    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    C = np.array([cv for _, cv in cents], dtype=np.float64)
+    cnorms = _fold_norm(C)
+    S, _ = _lloyd_round_supers(C, cnorms)
+    snorms = _fold_norm(S)
+    # final routing: EVERY centroid (inits included) to its nearest
+    # mean — argmax first-win over ascending super index == (cos DESC,
+    # super_idx ASC)
+    parent = np.argmax(
+        _fold_dot_matrix(C, S) / (cnorms[:, None] * snorms[None, :]), axis=1
+    )
+    children = [np.flatnonzero(parent == p) for p in range(S.shape[0])]
+    nonempty = np.array(
+        [p for p in range(S.shape[0]) if children[p].size], dtype=np.int64
+    )
+    S_act, s_act_norms = S[nonempty], snorms[nonempty]
+
+    probe = min(nprobe, len(nonempty))
+
+    def assign_two_level(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            nv = _fold_norm(V)
+            sup_cos = _fold_dot_matrix(V, S_act) / (
+                nv[:, None] * s_act_norms[None, :]
+            )
+            # top-`probe` supers per row via repeated first-win argmax
+            # (each round == next rank of (cos DESC, super_idx ASC),
+            # restricted to non-empty supers like the oracle)
+            p_mat = np.empty((len(V), probe), dtype=np.int64)
+            for t in range(probe):
+                p_mat[:, t] = np.argmax(sup_cos, axis=1)
+                sup_cos[np.arange(len(V)), p_mat[:, t]] = -np.inf
+            lists = np.empty(len(V), dtype=np.int64)
+            # group rows by their (sorted) probed-super set — candidate
+            # centroids depend only on the set
+            combos = np.sort(p_mat, axis=1)
+            for combo in np.unique(combos, axis=0):
+                rows = np.flatnonzero((combos == combo).all(axis=1))
+                ch = np.sort(
+                    np.concatenate(
+                        [children[nonempty[p]] for p in np.unique(combo)]
+                    )
+                )  # ascending cidx == ascending centroid_id tiebreak
+                cos = _fold_dot_matrix(V[rows], C[ch]) / (
+                    nv[rows, None] * cnorms[ch][None, :]
+                )
+                lists[rows] = cids[ch[np.argmax(cos, axis=1)]]
+            yield pd.DataFrame(
+                {"vec_id": pdf["vec_id"], "v": pdf["v"], "nv": nv, "list_id": lists}
+            )
+
+    return vectors.mapInPandas(
+        assign_two_level,
+        schema="vec_id long, v array<double>, nv double, list_id long",
+    )
+
+
+def _two_level_joined_assignment(
+    vectors: DataFrame, cent_df: DataFrame, k: int, nprobe: int
+) -> DataFrame:
+    """Two-level tier with every stage RELATIONAL — the form for
+    k > SEMDEDUP_CLOSURE_K_MAX, where the closure form's O(k) driver
     collect and per-task centroid matrix are exactly the bottlenecks
-    VERDICT r9 #2 banned).  Bit-identical to the closure path
+    VERDICT r9 #2 banned.  Bit-identical to :func:`_two_level_assignment`
     (tests/test_semdedup_joined.py): same Lloyd-mean supers in the
-    same fold order, same tie-breaks realized as struct-max
-    aggregates and (cos DESC, id ASC) windows.
+    same fold order, same tie-breaks realized as struct-max aggregates
+    and (cos DESC, id ASC) windows.
 
     Stage shapes, for k centroids / m = ceil(sqrt(k)) supers:
     - centroid ranking: a global row_number over the k-row id column
@@ -1542,18 +1657,10 @@ def semantic_dedup_two_level_joined(
       n·nprobe·(k/m) rows, the O(n·sqrt(k)) term.
     The m-row mean-super relation broadcasts; the k-row child relation
     moves by shuffle — nothing scales with n on the build side."""
+    import math
+
     import numpy as np
     import pandas as pd
-
-    if nprobe < 1:
-        raise ValueError("nprobe must be >= 1")
-    # expected_k (from the scaled_centroid_plan that built cent_df)
-    # skips a recount of the centroid relation — which would re-run
-    # its rank-cut derivation end to end.
-    k = expected_k if expected_k is not None else cent_df.count()
-    if k < 1:
-        raise ValueError("centroid relation is empty")
-    import math
 
     m = int(math.ceil(math.sqrt(k)))  # float sqrt: lockstep everywhere
 
@@ -1623,9 +1730,6 @@ def semantic_dedup_two_level_joined(
 
     asup = sup.join(childs.select("sidx").distinct(), "sidx")
 
-    vectors = fan_out(emb, "vec_id").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
     vprobe_scored = _score_candidates(
         vectors.crossJoin(
             F.broadcast(
@@ -1649,278 +1753,77 @@ def semantic_dedup_two_level_joined(
         _score_candidates(cand.select("vec_id", "v", "centroid_id", "cv")),
         "centroid_id",
     )
-    assigned = vectors.join(
+    return vectors.join(
         best.select("vec_id", "nv", F.col("centroid_id").alias("list_id")),
         "vec_id",
-    ).persist()
-    assigned.count()
-    return _purge_within_lists(assigned, threshold)
+    )
+
+
+def _purge_survivors(V, nv, fresh, threshold: float, slab_bytes: int):
+    """Row indices of the surviving FRESH rows of one cluster, rows
+    sorted by vec_id.  Fresh row j is purged when some row i has
+    cos(i, j) >= threshold and either i is not fresh (an indexed row,
+    any id) or i is an earlier fresh row (lower id).  With every row
+    fresh this is exactly SemDeDup's lower-id rule.
+
+    Only fresh columns are scored, in row blocks sized so each
+    (block, fresh) cosine slab stays under ``slab_bytes``.  Blocking
+    cannot change the result: every cell is its own left fold."""
+    import numpy as np
+
+    cols = np.flatnonzero(fresh)
+    if len(cols) == 0:
+        return cols
+    Vf, nf = V[cols], nv[cols]
+    block = max(1, slab_bytes // (8 * len(cols)))
+    purged = np.zeros(len(cols), dtype=bool)
+    for i0 in range(0, len(V), block):
+        i1 = min(i0 + block, len(V))
+        cos = _fold_dot_matrix(V[i0:i1], Vf) / (nv[i0:i1, None] * nf[None, :])
+        can = ~fresh[i0:i1, None] | (cols[None, :] > np.arange(i0, i1)[:, None])
+        purged |= ((cos >= threshold) & can).any(axis=0)
+    return cols[~purged]
 
 
 def _purge_within_lists(assigned: DataFrame, threshold: float) -> DataFrame:
-    """SemDeDup's purge stage over an assigned (vec_id, v, nv, list_id)
-    relation (caller persists + count-pins it): within each list_id,
-    drop every vector with a >= threshold cosine to a LOWER-id
-    cluster-mate; the min-id representative of each epsilon-ball
-    survives.  Never all-pairs across clusters.
+    """SemDeDup's purge over an assigned (vec_id, v, nv, list_id)
+    relation: within each list_id, drop every vector with a
+    >= threshold cosine to a LOWER-id cluster-mate; the min-id
+    representative of each epsilon-ball survives.  An optional boolean
+    ``fresh`` column marks the rows to judge (the streaming twin's new
+    rows); rows with fresh = false are already-indexed mates that
+    purge any fresh row they match and are never emitted.  Without the
+    column every row is fresh.  Never all-pairs across clusters.
 
-    ONE grouped Arrow kernel per cluster (r13, the ivf_scored_pair
-    discipline): the former list_id self-join materialized O(pairs)
-    rows EACH carrying two EMBED_DIM-double vectors through the Arrow
-    boundary of the scoring kernel, then paid a distinct + anti-join
-    shuffle pair — while the join's list_id hash partitioning had
-    already serialized each cluster's pair generation into one task
-    anyway.  Grouping ships each vector ONCE — O(n·d) Arrow bytes
-    instead of O(pairs·d) — and the kernel emits survivors directly
+    ONE grouped Arrow kernel per cluster (r13): grouping ships each
+    vector ONCE — O(n·d) Arrow bytes instead of the former pair
+    self-join's O(pairs·d) — and the kernel emits survivors directly
     (no distinct, no anti-join).  Bit-equality: cell (i, j) of the
     blocked _fold_dot_matrix pass is the identical left-fold operation
-    sequence as _score_pairs' per-pair _fold_dot_rows with the
-    lower-id vector as left factor (rows sorted by vec_id), and the
-    denominator multiplies norms in the same (lower, higher) order —
-    pinned by tests/test_semdedup_joined.py
-    test_grouped_purge_bit_identical_to_pair_join_path."""
+    sequence as _score_pairs' per-pair _fold_dot_rows, and IEEE
+    multiplication is commutative, so the cosines equal the pair
+    path's — pinned by tests/test_semdedup_joined.py
+    test_grouped_purge_bit_identical_to_pair_join_path.  Per-group
+    memory: see SEMDEDUP_PAIRROW_BUDGET."""
     import numpy as np
-    import pandas as pd
 
-    def purge(pdf: pd.DataFrame) -> pd.DataFrame:
+    slab_bytes = SEMDEDUP_PURGE_SLAB_BYTES  # read on the driver: workers re-import the module
+
+    def purge(pdf):
         pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
-        m = len(pdf)
-        if m <= 1:
-            return pdf[["vec_id", "list_id"]]
-        V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        nv = pdf["nv"].to_numpy()
-        purged = np.zeros(m, dtype=bool)
-        jj = np.arange(m)[None, :]
-        block = 2048  # caps the (block, m) cosine slab, like _dists_int
-        for i0 in range(0, m, block):
-            i1 = min(i0 + block, m)
-            cos = _fold_dot_matrix(V[i0:i1], V) / (
-                nv[i0:i1, None] * nv[None, :]
-            )
-            ii = np.arange(i0, i1)[:, None]
-            purged |= ((cos >= threshold) & (jj > ii)).any(axis=0)
-        return pdf.loc[~purged, ["vec_id", "list_id"]]
+        keep = _purge_survivors(
+            np.stack(pdf["v"].to_numpy()).astype(np.float64),
+            pdf["nv"].to_numpy(),
+            pdf["fresh"].to_numpy(dtype=bool),
+            threshold,
+            slab_bytes,
+        )
+        return pdf.loc[keep, ["vec_id", "list_id"]]
 
+    if "fresh" not in assigned.columns:
+        assigned = assigned.withColumn("fresh", F.lit(True))
     return (
-        assigned.select("vec_id", "nv", "list_id", "v")
+        assigned.select("vec_id", "nv", "list_id", "v", "fresh")
         .groupBy("list_id")
         .applyInPandas(purge, schema="vec_id long, list_id long")
-    )
-
-
-def _lloyd_round_supers(C, cnorms):
-    """One fold-exact Lloyd round over the centroid matrix: init
-    supers are every m-th centroid (m = ceil(sqrt(k)) over the
-    ascending-id list), each centroid routes to its nearest init
-    (self-forced for the inits — an FP self-cosine is 1±ulp and could
-    lose a tie, emptying a member set), and each super becomes the
-    per-dim MEAN of its members in ascending-centroid-index fold
-    order (acc seeded 0.0, one division by the member count) — the
-    identical operation sequence the DuckDB oracle's
-    list_reduce/count(*) expression runs, so the means are
-    bit-reproducible.  Returns (S_means, member_parent0) — the means
-    and the init membership.  Means track the local data mass, so
-    child-set sizes stay far more even than raw every-m-th-id supers
-    (the measured skew that made nprobe=1 routing lose below the
-    crossover — VERDICT r9 #3)."""
-    import math
-
-    import numpy as np
-
-    k = C.shape[0]
-    m = int(math.ceil(math.sqrt(k)))  # float sqrt: lockstep with the oracle
-    sup_idx = np.arange(0, k, m)
-    S0, s0norms = C[sup_idx], cnorms[sup_idx]
-    parent0 = np.argmax(
-        _fold_dot_matrix(C, S0) / (cnorms[:, None] * s0norms[None, :]), axis=1
-    )
-    parent0[sup_idx] = np.arange(len(sup_idx))
-    S = np.zeros((len(sup_idx), C.shape[1]))
-    for p in range(len(sup_idx)):
-        members = np.flatnonzero(parent0 == p)  # ascending centroid index
-        acc = np.zeros(C.shape[1])
-        for i in members:
-            acc = acc + C[i]
-        S[p] = acc / len(members)
-    return S, parent0
-
-
-def two_level_assignment(
-    emb: DataFrame,
-    centroid_ids: list[int] | None = None,
-    nprobe: int = 2,
-) -> DataFrame:
-    """The ASSIGNMENT stage of :func:`semantic_dedup_two_level` —
-    (vec_id, v, nv, list_id) via super-routing, shared by the dedup
-    path (which persists it and purges within lists) and the
-    monitoring queries that need the router's list structure WITHOUT
-    the quadratic purge (semantic_cluster_sizes_routed: the histogram
-    at the decade where exact flat assignment is fenced,
-    BENCH_sf100.json fenced_out).  Deterministic pure function — the
-    DuckDB hier CTEs reproduce it hash-exactly.
-
-    SemDeDup with TWO-LEVEL centroid routing — the assignment-cost
-    fix for the fourth decade.  Flat assignment is O(n·k) cosine
-    folds; with the corpus-scaled k ~ n/500 that term grows ~n²/500
-    and eventually dominates (the SemDeDup paper pays it on GPUs).
-    Supers come from ONE fold-exact Lloyd round (init = every m-th
-    centroid, m = ceil(sqrt(k)); supers = member MEANS — see
-    _lloyd_round_supers: means track data mass, so child sets stay
-    even), every centroid routes to its nearest mean, and each vector
-    probes its top-``nprobe`` supers (default 2) then picks the
-    nearest centroid among their children — O(n·(sqrt(k) +
-    nprobe·k/sqrt(k))) = O(n·sqrt(k)) folds.
-
-    The routing is a deterministic pure function (all tiebreaks
-    cos DESC, index ASC; same fold kernels as ivf_topk; the Lloyd
-    means in a fixed fold order), so the DuckDB oracle reproduces the
-    identical two-level assignment from fixed SQL — hash-exact, not
-    approximately-equal.  Routing may differ from flat assignment for
-    vectors near cluster boundaries (the standard IVF
-    coarse-quantizer trade), so this is a sibling of semantic_dedup,
-    not a drop-in twin.
-
-    Purge semantics after assignment are identical (shared
-    _purge_within_lists).
-
-    Vectors rank only supers that HAVE children after the final
-    routing (a mean can end up childless; probing it would strand the
-    vector) — the oracle applies the same restriction.
-    DEGENERACY CONTRACT, pinned by tests: with nprobe >= the
-    (non-empty) super count every centroid is a candidate for every
-    vector, so the routing collapses to exactly flat assignment and
-    the result equals semantic_dedup bit-for-bit."""
-    import numpy as np
-    import pandas as pd
-
-    if nprobe < 1:
-        raise ValueError("nprobe must be >= 1")
-    if centroid_ids is not None and not centroid_ids:
-        raise ValueError("centroid_ids must be non-empty (or None for defaults)")
-    want = sorted(centroid_ids if centroid_ids is not None else CENTROID_IDS)
-    cents = _centroids(emb, want)
-    if [cid for cid, _ in cents] != want:
-        missing = sorted(set(want) - {cid for cid, _ in cents})
-        raise ValueError(
-            f"centroid vec_ids missing from the input corpus: {missing} — "
-            "semantic_dedup_two_level requires every centroid row to be "
-            "present; pass centroid_ids= with ids that exist in this relation"
-        )
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    C = np.array([cv for _, cv in cents], dtype=np.float64)
-    cnorms = _fold_norm(C)
-    S, _ = _lloyd_round_supers(C, cnorms)
-    snorms = _fold_norm(S)
-    # final routing: EVERY centroid (inits included) to its nearest
-    # mean — argmax first-win over ascending super index == (cos DESC,
-    # super_idx ASC)
-    parent = np.argmax(
-        _fold_dot_matrix(C, S) / (cnorms[:, None] * snorms[None, :]), axis=1
-    )
-    children = [np.flatnonzero(parent == p) for p in range(S.shape[0])]
-    nonempty = np.array(
-        [p for p in range(S.shape[0]) if children[p].size], dtype=np.int64
-    )
-    S_act, s_act_norms = S[nonempty], snorms[nonempty]
-
-    probe = min(nprobe, len(nonempty))
-
-    def assign_two_level(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nv = _fold_norm(V)
-            sup_cos = _fold_dot_matrix(V, S_act) / (
-                nv[:, None] * s_act_norms[None, :]
-            )
-            # top-`probe` supers per row via repeated first-win argmax
-            # (each round == next rank of (cos DESC, super_idx ASC),
-            # restricted to non-empty supers like the oracle)
-            p_mat = np.empty((len(V), probe), dtype=np.int64)
-            for t in range(probe):
-                p_mat[:, t] = np.argmax(sup_cos, axis=1)
-                sup_cos[np.arange(len(V)), p_mat[:, t]] = -np.inf
-            lists = np.empty(len(V), dtype=np.int64)
-            # group rows by their (sorted) probed-super set — candidate
-            # centroids depend only on the set
-            combos = np.sort(p_mat, axis=1)
-            for combo in np.unique(combos, axis=0):
-                rows = np.flatnonzero((combos == combo).all(axis=1))
-                ch = np.sort(
-                    np.concatenate(
-                        [children[nonempty[p]] for p in np.unique(combo)]
-                    )
-                )  # ascending cidx == ascending centroid_id tiebreak
-                cos = _fold_dot_matrix(V[rows], C[ch]) / (
-                    nv[rows, None] * cnorms[ch][None, :]
-                )
-                lists[rows] = cids[ch[np.argmax(cos, axis=1)]]
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "v": pdf["v"], "nv": nv, "list_id": lists}
-            )
-
-    return (
-        fan_out(emb, "vec_id")
-        .select("vec_id", as_double("embedding").alias("v"))
-        .mapInPandas(
-            assign_two_level,
-            schema="vec_id long, v array<double>, nv double, list_id long",
-        )
-    )
-
-
-def semantic_dedup_two_level(
-    emb: DataFrame,
-    threshold: float = 0.25,
-    centroid_ids: list[int] | None = None,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Two-level-routed SemDeDup: :func:`two_level_assignment` (see
-    its docstring for the routing model and determinism contract) +
-    the shared within-list purge.  The assignment relation feeds both
-    sides of the pair self-join AND the final anti-join, so it is
-    persist-pinned here (the round-5 concurrent-fan-in trap)."""
-    assigned = two_level_assignment(
-        emb, centroid_ids=centroid_ids, nprobe=nprobe
-    ).persist()
-    assigned.count()
-    return _purge_within_lists(assigned, threshold)
-
-
-def semantic_dedup_dispatch(
-    emb: DataFrame,
-    per_cluster: int = SEMDEDUP_PER_CLUSTER,
-    threshold: float = 0.25,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Regime-aware SemDeDup: ONE entry point that picks the
-    assignment tier from the measured cost model, so no caller has to
-    know the regime map (VERDICT r11 #1 — the only guard used to be
-    the broadcast-bytes ceiling, which the killed sf100 sweep leg
-    never tripped: its k=4000 centroid set was a harmless 2 MB while
-    the pair relation was 8e9 Arrow rows).
-
-    - n*k <= SEMDEDUP_PAIRROW_BUDGET: FLAT assignment through the
-      broadcast-relation joined tier — exact, bit-identical to the
-      closure tier (tests/test_semdedup_joined.py).
-    - above the budget: TWO-LEVEL routing through
-      :func:`semantic_dedup_two_level_joined` — O(n*sqrt(k))
-      assignment, fully relational (no O(k) driver traffic at any k).
-      Results then follow the router's documented IVF boundary trade
-      (purge recall vs flat: 0.991 at sf1, 0.999 at sf10; 2.5x faster
-      at sf100 where flat is out of regime entirely) — the same
-      semantics as the registered semantic_dedup_hier family and its
-      hash-exact hier oracle CTEs.
-
-    Both tiers derive the IDENTICAL centroid set from one
-    :func:`scaled_centroid_plan` call, so the dispatch decision and
-    the guards inside the flat tier key off the same clamped k."""
-    cent_df, k, n = scaled_centroid_plan(emb, per_cluster)
-    if n * k > SEMDEDUP_PAIRROW_BUDGET:
-        return semantic_dedup_two_level_joined(
-            emb, cent_df, threshold=threshold, nprobe=nprobe, expected_k=k
-        )
-    return semantic_dedup_joined(
-        emb, cent_df, threshold=threshold, expected_k=k, expected_n=n
     )

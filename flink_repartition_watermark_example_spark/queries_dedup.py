@@ -318,7 +318,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upstream; when its edge count is within the bounded-collect
     # budget (~30 MB of longs) union-find labels it in one job, and an
     # oversized graph falls through to the distributed contraction
-    # automatically — the semantic_dedup_dispatch discipline.
+    # automatically — the SemDeDup tier-chooser discipline.
     cc = connected_components(
         verts, edges, "v", "doc_a", "doc_b",
         driver_max_edges=DRIVER_CC_MAX_EDGES,

@@ -871,7 +871,10 @@ _SEMDEDUP_SCALED_SQL = f"""
     "semantic_dedup operator as semantic_dedup_survivors, but the "
     "centroid count scales with the corpus — k = max(16, n // "
     f"{SIM.SEMDEDUP_PER_CLUSTER}), centroids = the first k eligible "
-    "vec_ids ascending (scaled_centroid_ids).  Cluster size stays "
+    "vec_ids ascending (semantic_dedup(centroids=per_cluster)).  "
+    "The tier is the data's: the closure matrix here, the broadcast "
+    "relation past 4096 centroids, the two-level router past the "
+    "pair-row budget.  Cluster size stays "
     "~constant, so the within-cluster quadratic pairing is O(n · "
     "per_cluster) corpus-wide instead of O(n²/16) — the 100 TB plan, "
     "gate-checked: the oracle computes the identical k and centroid "
@@ -883,65 +886,37 @@ _SEMDEDUP_SCALED_SQL = f"""
     "1188 s vs ~25 h extrapolated at fixed k=16).",
 )
 def q_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scaled_semantic_dedup(spark, sf_dir)
-
-
-def _scaled_semantic_dedup(
-    spark: SparkSession,
-    sf_dir: str,
-    per_cluster: int = SIM.SEMDEDUP_PER_CLUSTER,
-    closure_k_max: int = SIM.SEMDEDUP_CLOSURE_K_MAX,
-) -> DataFrame:
-    """Tiered dispatch for the production SemDeDup config: at
-    k <= closure_k_max the centroid matrix is small enough to ship in
-    the task closure (one O(k) driver collect, the historical path —
-    every gate/sweep scale so far); above it, the centroids stay a
-    RELATION end-to-end (scaled_centroids_df + broadcast-join
-    assignment, zero O(k) driver traffic).  Both tiers hash-match the
-    same oracle SQL."""
     emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    k = max(16, n // per_cluster)
-    if k <= closure_k_max and n * k <= SIM.SEMDEDUP_PAIRROW_BUDGET:
-        return SIM.semantic_dedup(
-            emb, centroid_ids=SIM.scaled_centroid_ids(emb, per_cluster)
-        )
-    # k above the closure ceiling OR n*k above the flat pair-row
-    # budget: semantic_dedup_dispatch picks joined-flat vs two-level
-    # routing from the same cost model (VERDICT r11 #1).
-    return SIM.semantic_dedup_dispatch(emb, per_cluster, nprobe=HIER_NPROBE)
+    return SIM.semantic_dedup(emb, centroids=SIM.SEMDEDUP_PER_CLUSTER, nprobe=HIER_NPROBE)
 
 
 @register(
     "semantic_dedup_joined",
     _SEMDEDUP_SCALED_SQL,
-    doc="The production SemDeDup config through the JOIN-BASED "
-    "assignment tier unconditionally (the k > 4096 path of "
-    "semantic_dedup_scaled, exercised here at every SF so the driver "
-    "hash-checks it): the centroid set is derived as a RELATION "
-    "(scaled_centroids_df — one count plus an exact distributed rank "
-    "cut, O(buckets) driver traffic, NO O(k) id collect) and ships to "
+    doc="The production SemDeDup config with the assignment tier "
+    "pinned to the broadcast RELATION (semantic_dedup(tier='relation'), "
+    "the k > 4096 tier of semantic_dedup_scaled, exercised here at "
+    "every SF so the driver hash-checks it): the centroid set is "
+    "derived as a RELATION (one aggregate plus an exact distributed "
+    "rank cut, O(buckets) driver traffic, NO O(k) id collect) and ships to "
     "tasks as a broadcast exchange feeding a fold-exact per-"
     "(vector, centroid)-row kernel, argmax by hash aggregate.  Same "
     "oracle SQL as the gate query — bit-identical doubles, identical "
     "survivors — and the plan shows BroadcastExchange + the "
     "documented O(k)-row cross join instead of a closure matrix "
     "(VERDICT r9 #2; reference S14's broadcast discipline, "
-    "README.md:28-45).  AUTO-TIERED on the pair-row budget (VERDICT "
-    "r11 #1): past SEMDEDUP_PAIRROW_BUDGET candidate rows (n*k — the "
-    "shape that killed the round-11 sf100 sweep leg at 8e9 rows) the "
-    "dispatcher routes assignment through the fully-relational "
-    "two-level router instead of asking the user to switch queries; "
-    "results there follow the router's documented boundary trade "
-    "(the semantic_dedup_hier oracle CTEs — bit-equality pinned in "
-    "tests/test_semdedup_dispatch.py).  Every oracle-compared SF "
-    "(sf0.001 tests, the sf0.01 driver gate, the sf1/sf10 sweeps) "
-    "sits far below the budget, so the flat tier this oracle "
-    "describes is what runs there.",
+    "README.md:28-45).  Because the tier is pinned, past "
+    "SEMDEDUP_PAIRROW_BUDGET candidate rows (n*k — the shape that "
+    "killed the round-11 sf100 sweep leg at 8e9 rows) the query "
+    "refuses with a ValueError instead of planning that shape; the "
+    "unpinned semantic_dedup_scaled routes through the two-level "
+    "router there.  Every oracle-compared SF (sf0.001 tests, the "
+    "sf0.01 driver gate, the sf1/sf10 sweeps) sits far below the "
+    "budget.",
 )
 def q_semantic_dedup_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.semantic_dedup_dispatch(emb, nprobe=HIER_NPROBE)
+    return SIM.semantic_dedup(emb, centroids=SIM.SEMDEDUP_PER_CLUSTER, tier="relation")
 
 
 # Super-probe width for the two-level router (the recall knob): 2
@@ -1068,8 +1043,8 @@ _SEMDEDUP_HIER_SQL = f"""
 )
 def q_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.semantic_dedup_two_level(
-        emb, centroid_ids=SIM.scaled_centroid_ids(emb), nprobe=HIER_NPROBE
+    return SIM.semantic_dedup(
+        emb, centroids=SIM.SEMDEDUP_PER_CLUSTER, tier="two_level", nprobe=HIER_NPROBE
     )
 
 
@@ -1103,8 +1078,8 @@ def q_semantic_cluster_sizes_routed(spark: SparkSession, sf_dir: str) -> DataFra
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = SIM.two_level_assignment(
-        emb, centroid_ids=SIM.scaled_centroid_ids(emb), nprobe=HIER_NPROBE
+    assigned = SIM.semantic_assign(
+        emb, SIM.SEMDEDUP_PER_CLUSTER, tier="two_level", nprobe=HIER_NPROBE
     )
     sizes = assigned.groupBy("list_id").agg(F.count(F.lit(1)).alias("n"))
     return (
@@ -1350,9 +1325,11 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "purge stage's cost is sum(s^2) over this table and a skewed "
     "tail is the first symptom of a broken centroid set (the "
     "round-10 router work was motivated by exactly this "
-    "distribution).  Spark side dispatches by the same tier rule as "
-    "the gate query — closure-matrix kernel at k <= 4096, broadcast-"
-    "relation assign_by_join above (no O(k) driver collect) — then "
+    "distribution).  Spark side is semantic_assign, so the tier "
+    "rule is the dedup's — closure-matrix kernel at k <= 4096, "
+    "broadcast relation above (no O(k) driver collect), the two-level "
+    "router past the pair-row budget (where this exact-assignment "
+    "oracle no longer describes the rows) — then "
     "two tiny cascaded aggregations: O(k) rows after the first, "
     "O(distinct sizes) after the second.",
 )
@@ -1360,15 +1337,7 @@ def q_semantic_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    k = max(16, n // SIM.SEMDEDUP_PER_CLUSTER)
-    if k <= SIM.SEMDEDUP_CLOSURE_K_MAX:
-        assigned = SIM.closure_assignment(emb, SIM.scaled_centroid_ids(emb))
-    else:
-        vectors = SIM.fan_out(emb, "vec_id").select(
-            "vec_id", SIM.as_double("embedding").alias("v")
-        )
-        assigned = SIM.assign_by_join(vectors, SIM.scaled_centroids_df(emb))
+    assigned = SIM.semantic_assign(emb, SIM.SEMDEDUP_PER_CLUSTER)
     sizes = assigned.groupBy("list_id").agg(F.count(F.lit(1)).alias("n"))
     return (
         sizes.groupBy("n")

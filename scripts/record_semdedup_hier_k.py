@@ -1,14 +1,15 @@
 """Scale evidence for the fully-relational two-level SemDeDup router
 at k >= 1e5 centroids (VERDICT r9 #2's recorder criterion).
 
-At that k the closure path is structurally excluded: scaled_centroid_ids
-would collect ~1e5 ids AND ship a ~50 MB centroid matrix in every task
-closure, and flat assignment would pass n*k = 2e10 fold rows.  The
-relational router (operators/similarity.semantic_dedup_two_level_joined)
-instead derives the centroid set with scaled_centroids_df (exact rank
-cut, O(buckets) driver traffic), broadcasts the m = ceil(sqrt(k)) ~317
-Lloyd-mean supers, and moves the k-row child relation by equi-join —
-n·nprobe·(k/m) candidate rows, the O(n·sqrt(k)) term.
+At that k the closure path is structurally excluded: it would collect
+~1e5 centroid rows AND ship a ~50 MB centroid matrix in every task
+closure, and flat assignment would pass n*k = 2e10 fold rows.  With
+the two-level tier pinned, operators/similarity.semantic_dedup picks
+the relational router there (k > SEMDEDUP_CLOSURE_K_MAX): it derives
+the centroid set with an exact rank cut (O(buckets) driver traffic),
+broadcasts the m = ceil(sqrt(k)) ~317 Lloyd-mean supers, and moves the
+k-row child relation by equi-join — n·nprobe·(k/m) candidate rows,
+the O(n·sqrt(k)) term.
 
 The run records wall time + survivor count + k under
 "semdedup_hier_k1e5" in the sweep artifact (BENCH_sf10.json by
@@ -31,10 +32,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from flink_repartition_watermark_example_spark import get_spark
-from flink_repartition_watermark_example_spark.operators.similarity import (
-    scaled_centroids_df,
-    semantic_dedup_two_level_joined,
-)
+from flink_repartition_watermark_example_spark.operators.similarity import semantic_dedup
 from flink_repartition_watermark_example_spark.sources.tables import load_table
 
 
@@ -56,8 +54,9 @@ def main() -> None:
     n = emb.count()
     k = max(16, n // args.per_cluster)
     t0 = time.time()
-    cent_df = scaled_centroids_df(emb, per_cluster=args.per_cluster)
-    survivors = semantic_dedup_two_level_joined(emb, cent_df).count()
+    survivors = semantic_dedup(
+        emb, centroids=args.per_cluster, tier="two_level"
+    ).count()
     wall = round(time.time() - t0, 2)
     row = {
         "dir": args.dir,

@@ -2,7 +2,7 @@
 
 Since round 9 the production configuration is ALSO a registered,
 oracle-checked gate query: semantic_dedup_scaled (queries_similarity)
-computes k = max(16, n // 500) with scaled_centroid_ids and its DuckDB
+computes k = max(16, n // 500) (semantic_dedup(centroids=500)) and its DuckDB
 oracle derives the identical k and centroid set from fixed SQL.  This
 script remains the BIG-dir evidence runner (sf100 is too heavy for the
 per-round gate) and the historical record of the measurement.
@@ -15,8 +15,10 @@ clusters sized so within-cluster pairing stays bounded) is to grow the
 centroid count with the corpus: cluster size ~= n/k, pair work
 ~= n * (n/k) / 2, so k ~ n/500 keeps per-vector comparisons constant.
 
-This script runs the SAME operator (operators/similarity.semantic_dedup,
-unchanged code) at a corpus-scaled k on the big generated dirs and
+This script runs the SAME operator (operators/similarity.semantic_dedup)
+at a corpus-scaled k on the big generated dirs, with the flat closure
+tier pinned (at sf100 n*k passes the pair-row budget, where the
+unpinned operator would route through the two-level router), and
 appends the wall time + survivor count to BENCH_sf100.json under
 "semdedup_scaled_k" — evidence that the documented lever actually
 holds, not just a docstring claim.
@@ -41,10 +43,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from flink_repartition_watermark_example_spark import get_spark
-from flink_repartition_watermark_example_spark.operators.similarity import (
-    scaled_centroid_ids,
-    semantic_dedup,
-)
+from flink_repartition_watermark_example_spark.operators.similarity import semantic_dedup
 from flink_repartition_watermark_example_spark.sources.tables import load_table
 
 
@@ -65,17 +64,18 @@ def main() -> None:
 
     emb = load_table(spark, args.dir, "embeddings").select("vec_id", "embedding")
     n = emb.count()
-    # shared helper — the registered semantic_dedup_scaled gate query
-    # computes the identical set, so this script measures exactly the
+    # the registered semantic_dedup_scaled gate query derives the
+    # identical centroid set, so this script measures exactly the
     # gate-checked configuration at the big dirs
-    cids = scaled_centroid_ids(emb, per_cluster=args.per_cluster)
-    k = len(cids)
+    k = max(16, n // args.per_cluster)
 
     best, survivors = float("inf"), -1
     for _ in range(args.reps):
         spark.catalog.clearCache()
         t0 = time.perf_counter()
-        survivors = semantic_dedup(emb, centroid_ids=cids).count()
+        survivors = semantic_dedup(
+            emb, centroids=args.per_cluster, tier="closure"
+        ).count()
         best = min(best, time.perf_counter() - t0)
 
     row = {

@@ -162,16 +162,11 @@ SF100 = os.path.join(os.path.dirname(ARTIFACT), "BENCH_sf100.json")
 # (well under the model: the constant factors amortize) still beats
 # flat assignment 2.5× at that decade (BENCH_sf100.json recorder).
 # Admitted BY NAME with the model as its bound; everything else holds
-# the plain near-linear limits.  semantic_dedup_joined rides the SAME
-# router at sf100 since round 12: its registered query auto-tiers on
-# the pair-row (n·k) budget (semantic_dedup_dispatch), so the flat
-# broadcast-join shape that was fenced in round 11 (8e9 two-array
-# Arrow pair rows, killed leg) never plans there — the sf100 row is
-# the router's timing against a flat sf10 baseline leg and carries the
-# same n^1.5 model bound.
+# the plain near-linear limits.  semantic_dedup_joined pins the flat
+# relation tier, which refuses past the pair-row (n·k) budget, so it is
+# SF-fenced at sf100 and holds no timed row there.
 SUPERLINEAR_MODELED = {
     "semantic_dedup_hier": 31.7,
-    "semantic_dedup_joined": 31.7,
 }
 
 # The per-SF fence sets the sweep driver enforces IN CODE

@@ -1,10 +1,10 @@
-"""Auto-tiered SemDeDup dispatch (VERDICT r11 #1): the registered
-semantic_dedup_joined gate query picks its assignment tier from the
-pair-row (n*k) cost model instead of asking the user to know the
-regime map.  Below SEMDEDUP_PAIRROW_BUDGET it is the flat joined tier
-(what every oracle-compared SF runs); above it, assignment routes
-through the fully-relational two-level router and the result is
-bit-identical to the registered semantic_dedup_hier family."""
+"""Auto-tiered SemDeDup (VERDICT r11 #1): the unpinned entry point
+picks its assignment tier from the pair-row (n*k) cost model instead
+of asking the user to know the regime map.  Below
+SEMDEDUP_PAIRROW_BUDGET it is a flat tier (what every oracle-compared
+SF runs); above it, assignment routes through the two-level router
+and the result is bit-identical to the registered semantic_dedup_hier
+family.  A pinned relation tier refuses past the budget instead."""
 
 from __future__ import annotations
 
@@ -14,6 +14,7 @@ from flink_repartition_watermark_example_spark.operators import similarity as SI
 from flink_repartition_watermark_example_spark.queries_similarity import (
     q_semantic_dedup_hier,
     q_semantic_dedup_joined,
+    q_semantic_dedup_scaled,
 )
 from flink_repartition_watermark_example_spark.sources.tables import load_table
 
@@ -26,17 +27,17 @@ def _survivors(df):
 
 
 def test_default_budget_keeps_the_flat_joined_tier(spark, sf_dir):
-    """At every oracle-compared SF the dispatch lands on the flat
-    joined tier — the registered query's rows equal the flat operator
-    called directly, so the existing flat oracle SQL stays the exact
-    description of what the driver hash-checks."""
+    """At every oracle-compared SF the chooser lands on a flat tier,
+    and the unpinned gate query (closure matrix at k=16) equals the
+    registered relation-pinned query, so the shared flat oracle SQL
+    stays the exact description of what the driver hash-checks."""
     emb = load_table(spark, sf_dir, "embeddings")
-    flat = _survivors(
-        SIM.semantic_dedup_joined(emb, SIM.scaled_centroids_df(emb))
-    )
-    dispatched = _survivors(q_semantic_dedup_joined(spark, sf_dir))
-    assert dispatched == flat
-    assert dispatched, "expected survivors"
+    n, k, _ = SIM._centroid_set(emb, SIM.SEMDEDUP_PER_CLUSTER)
+    assert SIM._choose_tier(n, k) == ("closure", True)
+    flat = _survivors(q_semantic_dedup_scaled(spark, sf_dir))
+    joined = _survivors(q_semantic_dedup_joined(spark, sf_dir))
+    assert joined == flat
+    assert joined, "expected survivors"
 
 
 @pytest.mark.parametrize(
@@ -44,51 +45,48 @@ def test_default_budget_keeps_the_flat_joined_tier(spark, sf_dir):
     [SF_001, pytest.param(SF_01, marks=pytest.mark.slow)],
 )
 def test_routed_tier_is_bit_identical_to_hier_family(spark, monkeypatch, dir_):
-    """Force the budget to zero: the dispatcher must route through
-    semantic_dedup_two_level_joined, and the result must be
+    """Force the budget to zero: the unpinned gate query must route
+    through the two-level tier — in its relational form, with the
+    closure ceiling also at zero — and the result must be
     BIT-IDENTICAL to the registered semantic_dedup_hier query (the
     closure-path router) — i.e. above the budget the gate query's
     semantics are exactly the hier family's hash-exact oracle CTEs.
     Two SFs so the equality covers more than one k/component shape."""
-    monkeypatch.setattr(SIM, "SEMDEDUP_PAIRROW_BUDGET", 0)
-    routed = _survivors(q_semantic_dedup_joined(spark, dir_))
     hier = _survivors(q_semantic_dedup_hier(spark, dir_))
+    monkeypatch.setattr(SIM, "SEMDEDUP_PAIRROW_BUDGET", 0)
+    monkeypatch.setattr(SIM, "SEMDEDUP_CLOSURE_K_MAX", 0)
+    routed = _survivors(q_semantic_dedup_scaled(spark, dir_))
     assert routed == hier
     assert routed, "expected survivors"
 
 
 def test_dispatch_boundary_is_exactly_the_budget(spark, sf_dir, monkeypatch):
-    """n*k == budget stays flat; budget - 1 routes.  Observed through
-    which operator the dispatcher invokes, so the test pins the
-    boundary arithmetic itself, not a scale-dependent side effect."""
+    """n*k == budget stays flat; budget - 1 routes.  Read from the
+    chooser's answer for this corpus's (n, k), so the test pins the
+    boundary arithmetic itself, not a scale-dependent side effect;
+    the k rule's boundary is pinned the same way."""
     emb = load_table(spark, sf_dir, "embeddings")
-    _, k, n = SIM.scaled_centroid_plan(emb)
-    calls = []
-    real_flat = SIM.semantic_dedup_joined
-    real_routed = SIM.semantic_dedup_two_level_joined
-    monkeypatch.setattr(
-        SIM,
-        "semantic_dedup_joined",
-        lambda *a, **kw: calls.append("flat") or real_flat(*a, **kw),
-    )
-    monkeypatch.setattr(
-        SIM,
-        "semantic_dedup_two_level_joined",
-        lambda *a, **kw: calls.append("routed") or real_routed(*a, **kw),
-    )
+    n, k, _ = SIM._centroid_set(emb, SIM.SEMDEDUP_PER_CLUSTER)
     monkeypatch.setattr(SIM, "SEMDEDUP_PAIRROW_BUDGET", n * k)
-    SIM.semantic_dedup_dispatch(emb)
+    assert SIM._choose_tier(n, k) == ("closure", True)
+    monkeypatch.setattr(SIM, "SEMDEDUP_CLOSURE_K_MAX", k - 1)
+    assert SIM._choose_tier(n, k) == ("relation", False)
+    assert SIM._choose_tier(n, k, "two_level") == ("two_level", False)
     monkeypatch.setattr(SIM, "SEMDEDUP_PAIRROW_BUDGET", n * k - 1)
-    SIM.semantic_dedup_dispatch(emb)
-    assert calls == ["flat", "routed"]
+    assert SIM._choose_tier(n, k) == ("two_level", False)
+    monkeypatch.setattr(SIM, "SEMDEDUP_CLOSURE_K_MAX", k)
+    assert SIM._choose_tier(n, k) == ("two_level", True)
+    with pytest.raises(ValueError, match="tier must be"):
+        SIM._choose_tier(n, k, "joined")
 
 
 def test_flat_operator_refuses_past_the_pairrow_budget(spark, sf_dir, monkeypatch):
-    """Direct callers of the flat tier (bypassing the dispatcher) get
-    a loud refusal instead of the killed round-11 sweep shape — the
-    pair-row guard joins the broadcast-bytes guard."""
+    """Callers who pin the flat relation tier (the registered
+    semantic_dedup_joined query does) get a loud refusal past the
+    budget instead of the killed round-11 sweep shape — the pair-row
+    guard joins the broadcast-bytes guard."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent, k, n = SIM.scaled_centroid_plan(emb)
+    n, k, _ = SIM._centroid_set(emb, SIM.SEMDEDUP_PER_CLUSTER)
     monkeypatch.setattr(SIM, "SEMDEDUP_PAIRROW_BUDGET", n * k - 1)
     with pytest.raises(ValueError, match="pair-row budget"):
-        SIM.semantic_dedup_joined(emb, cent, expected_k=k, expected_n=n)
+        q_semantic_dedup_joined(spark, sf_dir)

@@ -18,16 +18,16 @@ def test_hier_purge_recall_vs_flat(spark, sf_dir):
     sf0.01; sf1 (k=40) measures 0.991 and sf10 (k=400) 0.999 — the
     sweep artifacts carry those."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ids = SIM.scaled_centroid_ids(emb)
+    per_cluster = SIM.SEMDEDUP_PER_CLUSTER
     allv = {r["vec_id"] for r in emb.select("vec_id").collect()}
     flat_purged = allv - {
         r["vec_id"]
-        for r in SIM.semantic_dedup(emb, centroid_ids=ids).collect()
+        for r in SIM.semantic_dedup(emb, centroids=per_cluster, tier="closure").collect()
     }
     hier_purged = allv - {
         r["vec_id"]
-        for r in SIM.semantic_dedup_two_level(
-            emb, centroid_ids=ids, nprobe=2
+        for r in SIM.semantic_dedup(
+            emb, centroids=per_cluster, tier="two_level", nprobe=2
         ).collect()
     }
     recall = len(hier_purged & flat_purged) / max(1, len(flat_purged))

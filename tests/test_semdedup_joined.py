@@ -1,7 +1,8 @@
 """Join-based SemDeDup assignment tier (VERDICT r9 #2): the centroid
 set stays a RELATION end-to-end — broadcast exchange into a fold-exact
 per-candidate-row kernel — with NO O(k) driver collect, and produces
-bit-identical survivors to the closure path."""
+bit-identical survivors to the closure path.  Every tier is reached
+through the one entry point with a pinned ``tier=``."""
 
 from __future__ import annotations
 
@@ -14,36 +15,41 @@ from flink_repartition_watermark_example_spark.operators import similarity as SI
 from flink_repartition_watermark_example_spark.sources.tables import load_table
 
 
+PER_CLUSTER = SIM.SEMDEDUP_PER_CLUSTER
+
+
 def _survivors(df):
     return sorted((r["vec_id"], r["list_id"]) for r in df.collect())
 
 
+def _ids(cent):
+    return sorted(r["centroid_id"] for r in cent.collect())
+
+
 def test_joined_tier_is_bit_identical_to_closure_tier(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    closure = _survivors(
-        SIM.semantic_dedup(emb, centroid_ids=SIM.scaled_centroid_ids(emb))
-    )
-    joined = _survivors(
-        SIM.semantic_dedup_joined(emb, SIM.scaled_centroids_df(emb))
-    )
+    closure = _survivors(SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="closure"))
+    joined = _survivors(SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="relation"))
     assert closure == joined
     assert closure, "expected survivors"
 
 
-def test_two_level_joined_is_bit_identical_to_closure_two_level(spark, sf_dir):
+def test_two_level_joined_is_bit_identical_to_closure_two_level(
+    spark, sf_dir, monkeypatch
+):
     """The fully-relational router (broadcast Lloyd-mean supers,
     shuffled child equi-join, struct-max argmaxes) reproduces the
     closure-path two-level assignment bit-for-bit — the k>=1e5
-    recorder (scripts/record_semdedup_hier_k.py) runs THIS form."""
+    recorder (scripts/record_semdedup_hier_k.py) runs THIS form.  The
+    two-level tier ships its centroids by the same k rule as flat, so
+    a zero closure ceiling forces the relational form."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ids = SIM.scaled_centroid_ids(emb)
     closure = _survivors(
-        SIM.semantic_dedup_two_level(emb, centroid_ids=ids, nprobe=2)
+        SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="two_level", nprobe=2)
     )
+    monkeypatch.setattr(SIM, "SEMDEDUP_CLOSURE_K_MAX", 0)
     joined = _survivors(
-        SIM.semantic_dedup_two_level_joined(
-            emb, SIM.scaled_centroids_df(emb), nprobe=2
-        )
+        SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="two_level", nprobe=2)
     )
     assert closure == joined
     assert closure
@@ -51,11 +57,8 @@ def test_two_level_joined_is_bit_identical_to_closure_two_level(spark, sf_dir):
 
 def test_joined_assignment_plan_broadcasts_the_centroid_relation(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    vectors = SIM.fan_out(emb, "vec_id").select(
-        "vec_id", SIM.as_double("embedding").alias("v")
-    )
     plan = (
-        SIM.assign_by_join(vectors, SIM.scaled_centroids_df(emb))
+        SIM.semantic_assign(emb, PER_CLUSTER, tier="relation")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -72,13 +75,12 @@ def test_joined_assignment_plan_broadcasts_the_centroid_relation(spark, sf_dir):
 def test_above_threshold_tier_never_collects_centroid_ids(
     spark, sf_dir, monkeypatch
 ):
-    """Force the k > closure_k_max branch and prove it works with the
-    O(k) id collect PHYSICALLY unavailable: scaled_centroid_ids is
-    monkeypatched to raise.  per_cluster=20 puts sf0.001's 500 vectors
-    at k=25 > closure_k_max=16, and the result must still match the
-    closure tier run with the same explicit centroid set."""
-    from flink_repartition_watermark_example_spark import queries_similarity as QS
-
+    """Force the k > SEMDEDUP_CLOSURE_K_MAX branch and prove it works
+    with the O(k) centroid collect PHYSICALLY unavailable:
+    _collect_centroids is monkeypatched to raise.  per_cluster=20 puts
+    sf0.001's 500 vectors at k=25 > a ceiling of 16, and the unpinned
+    entry point must still match the closure tier run with the same
+    explicit centroid set."""
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     per_cluster = max(1, n // 25)
@@ -93,27 +95,26 @@ def test_above_threshold_tier_never_collects_centroid_ids(
         .limit(k)
         .collect()
     ]
-    expected = _survivors(SIM.semantic_dedup(emb, centroid_ids=want_ids))
+    expected = _survivors(SIM.semantic_dedup(emb, centroids=want_ids))
 
     def boom(*a, **kw):
         raise AssertionError("O(k) driver collect above the closure tier")
 
-    monkeypatch.setattr(SIM, "scaled_centroid_ids", boom)
-    got = _survivors(
-        QS._scaled_semantic_dedup(
-            spark, sf_dir, per_cluster=per_cluster, closure_k_max=16
-        )
-    )
+    monkeypatch.setattr(SIM, "_collect_centroids", boom)
+    monkeypatch.setattr(SIM, "SEMDEDUP_CLOSURE_K_MAX", 16)
+    got = _survivors(SIM.semantic_dedup(emb, centroids=per_cluster))
     assert got == expected
 
 
-def test_joined_tier_refuses_beyond_broadcast_ceiling(spark, sf_dir):
+def test_joined_tier_refuses_beyond_broadcast_ceiling(spark, sf_dir, monkeypatch):
+    """A pinned relation tier refuses once the k centroid vectors pass
+    the broadcast ceiling (lowered here to one byte under sf0.001's
+    k=16 set), pointing at the two-level tier."""
     emb = load_table(spark, sf_dir, "embeddings")
-    too_big = SIM.SEMDEDUP_BROADCAST_BYTES // (SIM.EMBED_DIM * 8) + 1
+    _, k, _ = SIM._centroid_set(emb, PER_CLUSTER)
+    monkeypatch.setattr(SIM, "SEMDEDUP_BROADCAST_BYTES", k * SIM.EMBED_DIM * 8 - 1)
     with pytest.raises(ValueError, match="two_level"):
-        SIM.semantic_dedup_joined(
-            emb, SIM.scaled_centroids_df(emb), expected_k=too_big
-        )
+        SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="relation")
 
 
 def test_exact_kth_smallest_matches_sorted_rank(spark):
@@ -142,13 +143,10 @@ def test_scaled_centroids_df_clamps_k_to_eligible_count(spark):
     rows = [(i, [float(i % 7), 1.0]) for i in range(5, 25)]  # 20 rows, ids 5..24
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     # eligible = ids >= 10 → 15 rows; per_cluster=1 → k = max(16, 20) = 20 > 15
-    ids = SIM.scaled_centroid_ids(emb, per_cluster=1)
-    got = sorted(
-        r["centroid_id"]
-        for r in SIM.scaled_centroids_df(emb, per_cluster=1).collect()
-    )
-    assert got == sorted(ids)
-    assert len(got) == 15
+    _, k, derive = SIM._centroid_set(emb, 1)
+    ids = _ids(derive(True))
+    assert _ids(derive(False)) == ids
+    assert k == len(ids) == 15
 
 
 def test_scaled_centroids_df_empty_eligible_set(spark):
@@ -156,8 +154,11 @@ def test_scaled_centroids_df_empty_eligible_set(spark):
         [(i, [1.0, 2.0]) for i in range(5)],
         "vec_id long, embedding array<double>",
     )
-    assert SIM.scaled_centroids_df(emb).count() == 0
-    assert SIM.scaled_centroid_ids(emb) == []
+    _, k, derive = SIM._centroid_set(emb, PER_CLUSTER)
+    assert k == 0
+    assert _ids(derive(True)) == []
+    with pytest.raises(ValueError, match="no eligible centroid"):
+        SIM.semantic_dedup(emb, centroids=PER_CLUSTER)
 
 
 def test_grouped_purge_bit_identical_to_pair_join_path(spark, sf_dir):
@@ -170,14 +171,14 @@ def test_grouped_purge_bit_identical_to_pair_join_path(spark, sf_dir):
     from flink_repartition_watermark_example_spark.operators.similarity import (
         _purge_within_lists,
         _score_pairs,
-        closure_assignment,
+        semantic_assign,
     )
     from flink_repartition_watermark_example_spark.sources.tables import (
         load_table,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = closure_assignment(emb).persist()
+    assigned = semantic_assign(emb).persist()
     assigned.count()
     try:
         # the pre-r13 pair-join purge, verbatim
@@ -214,3 +215,53 @@ def test_grouped_purge_bit_identical_to_pair_join_path(spark, sf_dir):
         assert new  # non-degenerate
     finally:
         assigned.unpersist()
+
+
+def test_purge_slab_cap_blocks_without_changing_survivors(
+    spark, sf_dir, monkeypatch
+):
+    """The purge kernel derives its row block from the cluster size so
+    each cosine slab stays under SEMDEDUP_PURGE_SLAB_BYTES.  A cap
+    small enough to force one-row blocks gives exactly the survivors
+    of a single block: on the whole corpus as one cluster (with and
+    without indexed, non-fresh rows), and end to end through the
+    entry point, whose workers must see the cap read on the driver."""
+    import numpy as np
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    rows = sorted(
+        (r["vec_id"], [float(x) for x in r["embedding"]])
+        for r in emb.select("vec_id", "embedding").collect()
+    )
+    V = np.array([e for _, e in rows], dtype=np.float64)
+    nv = SIM._fold_norm(V)
+    for fresh in (np.ones(len(V), dtype=bool), np.arange(len(V)) % 50 != 0):
+        one = SIM._purge_survivors(V, nv, fresh, 0.25, 8 * len(V) * len(V))
+        tiny = SIM._purge_survivors(V, nv, fresh, 0.25, 8)
+        assert tiny.tolist() == one.tolist()
+        assert 0 < len(one) < fresh.sum()
+
+    whole = _survivors(SIM.semantic_dedup(emb))
+    monkeypatch.setattr(SIM, "SEMDEDUP_PURGE_SLAB_BYTES", 8)
+    assert _survivors(SIM.semantic_dedup(emb)) == whole
+
+
+def test_scaled_call_runs_fewer_jobs_than_the_old_dispatch(spark, sf_dir):
+    """One semantic_dedup_scaled call, after a first call has cached
+    its assignment, runs fewer Spark jobs than the 11 the tiered
+    dispatch it replaced ran: one aggregate sizes the centroid set,
+    one ordered collect fetches it, and no count() pins the
+    persisted assignment."""
+    from flink_repartition_watermark_example_spark.queries import EXTRA_QUERIES
+
+    q = EXTRA_QUERIES["semantic_dedup_scaled"]
+    sc = spark.sparkContext
+    q.spark(spark, sf_dir).collect()
+    sc.setJobGroup("semdedup_scaled_jobs", "job count of one call")
+    try:
+        assert q.spark(spark, sf_dir).collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup("semdedup_scaled_jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs < 11, jobs

@@ -172,7 +172,7 @@ def test_semantic_dedup_matches_python_reference(spark, sf_dir, n_cents):
     emb = load_table(spark, sf_dir, "embeddings")
     got = {
         (r["vec_id"], r["list_id"])
-        for r in semantic_dedup(emb, centroid_ids=cids).collect()
+        for r in semantic_dedup(emb, centroids=cids).collect()
     }
 
     rows = sorted(
@@ -238,13 +238,16 @@ def test_filtered_ann_predicate_contract_and_pushdown(spark, sf_dir):
 
 
 def test_scaled_centroid_ids_matches_oracle_construction(spark, sf_dir):
-    """scaled_centroid_ids must be exactly the set the
-    semantic_dedup_scaled ORACLE derives in SQL: the first
-    max(16, n // per_cluster) vec_ids >= 10, ascending — any drift
-    between the two constructions silently re-clusters the corpus."""
+    """The corpus-scaled centroid set (semantic_assign's int
+    ``centroids``) must be exactly the set the semantic_dedup_scaled
+    ORACLE derives in SQL: the first max(16, n // per_cluster) vec_ids
+    >= 10, ascending — in both the collected (closure) and the
+    rank-cut (relation) derivation.  Any drift between the
+    constructions silently re-clusters the corpus."""
     from flink_repartition_watermark_example_spark.operators.similarity import (
         SEMDEDUP_PER_CLUSTER,
-        scaled_centroid_ids,
+        _centroid_set,
+        _collect_centroids,
     )
     from flink_repartition_watermark_example_spark.sources.tables import load_table
 
@@ -255,8 +258,11 @@ def test_scaled_centroid_ids_matches_oracle_construction(spark, sf_dir):
     for per_cluster in (SEMDEDUP_PER_CLUSTER, 20):
         k = max(16, n // per_cluster)
         want = [i for i in ids if i >= 10][:k]
-        got = scaled_centroid_ids(emb, per_cluster=per_cluster)
+        _, got_k, derive = _centroid_set(emb, per_cluster)
+        got = [cid for cid, _ in _collect_centroids(derive(True))]
         assert got == want, (per_cluster, got[:5], want[:5])
+        assert sorted(r["centroid_id"] for r in derive(False).collect()) == want
+        assert got_k == k
         assert got == sorted(got)
         assert len(got) == k
 
@@ -271,7 +277,6 @@ def test_two_level_routing_degenerates_to_flat_at_full_probe(spark, sf_dir):
 
     from flink_repartition_watermark_example_spark.operators.similarity import (
         semantic_dedup,
-        semantic_dedup_two_level,
     )
     from flink_repartition_watermark_example_spark.sources.tables import load_table
 
@@ -287,19 +292,19 @@ def test_two_level_routing_degenerates_to_flat_at_full_probe(spark, sf_dir):
     n_supers = math.ceil(len(cids) / math.ceil(math.sqrt(len(cids))))
     flat = {
         (r["vec_id"], r["list_id"])
-        for r in semantic_dedup(emb, centroid_ids=cids).collect()
+        for r in semantic_dedup(emb, centroids=cids).collect()
     }
     full_probe = {
         (r["vec_id"], r["list_id"])
-        for r in semantic_dedup_two_level(
-            emb, centroid_ids=cids, nprobe=n_supers
+        for r in semantic_dedup(
+            emb, centroids=cids, tier="two_level", nprobe=n_supers
         ).collect()
     }
     assert full_probe == flat
     # and a widened-but-partial probe purges at least as much as
     # nprobe=1 (recall is monotone in probe width)
-    one = semantic_dedup_two_level(emb, centroid_ids=cids, nprobe=1).count()
-    two = semantic_dedup_two_level(emb, centroid_ids=cids, nprobe=2).count()
+    one = semantic_dedup(emb, centroids=cids, tier="two_level", nprobe=1).count()
+    two = semantic_dedup(emb, centroids=cids, tier="two_level", nprobe=2).count()
     assert two <= one
 
 

@@ -175,22 +175,22 @@ def test_empty_micro_batch_is_a_safe_noop(spark, sf_dir, tmp_path):
 def test_streamed_splits_equal_batch_at_scaled_centroids(
     spark, sf_dir, tmp_path
 ):
-    """The gate's PRODUCTION configuration (scaled_centroid_ids, the
-    semantic_dedup_scaled query) must also hold the stream==batch
+    """The gate's PRODUCTION configuration (the corpus-scaled centroid
+    set of the semantic_dedup_scaled query) must also hold the stream==batch
     contract: replaying id-ordered splits through the incremental
     index with the corpus-scaled centroid set reproduces the batch
     survivors exactly.  (The other tests prove the contract at the
     fixed CENTROID_IDS config; after the round-9 gate rotation the
     scaled set is the one the driver checks.)"""
-    from flink_repartition_watermark_example_spark.operators.similarity import scaled_centroid_ids
+    from flink_repartition_watermark_example_spark.operators.similarity import (
+        SEMDEDUP_PER_CLUSTER,
+        _centroid_set,
+        _collect_centroids,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = emb.count()
-    cids = scaled_centroid_ids(emb)
-    cents = sorted(
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in emb.where(F.col("vec_id").isin(cids)).collect()
-    )
+    cents = _collect_centroids(_centroid_set(emb, SEMDEDUP_PER_CLUSTER)[2](True))
 
     src = str(tmp_path / "emb_stream")
     cuts = [n // 3, 2 * n // 3]
@@ -216,6 +216,49 @@ def test_streamed_splits_equal_batch_at_scaled_centroids(
     q.awaitTermination()
 
     got = _survivor_set(read_semdedup_survivors(spark, surv))
-    want = _survivor_set(semantic_dedup(emb, centroid_ids=cids))
+    want = _survivor_set(semantic_dedup(emb, centroids=SEMDEDUP_PER_CLUSTER))
     assert got == want
     assert 0 < len(got) < n
+
+
+def test_unordered_arrival_leaves_no_survivor_pair_within_threshold(
+    spark, sf_dir, tmp_path
+):
+    """Reverse-order arrival (the upper half of the ids first): a new
+    vector is judged against EVERY indexed row of its list, so the
+    late lower-id twin of an emitted survivor is purged, and no two
+    survivors sharing a list are ever within the threshold.  Cosines
+    are recomputed with the same fold kernels the purge uses."""
+    import numpy as np
+
+    from flink_repartition_watermark_example_spark.operators.similarity import (
+        _fold_dot_matrix,
+        _fold_norm,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    ids = sorted(r["vec_id"] for r in emb.select("vec_id").collect())
+    mid = ids[len(ids) // 2]
+
+    index = str(tmp_path / "index")
+    surv = str(tmp_path / "surv")
+    w = semdedup_index_writer(index, surv, _centroids(emb))
+    w(emb.where(F.col("vec_id") >= mid), 0)
+    w(emb.where(F.col("vec_id") < mid), 1)
+    got = sorted(_survivor_set(read_semdedup_survivors(spark, surv)))
+    assert len({v for v, _ in got}) == len(got)  # each vector emitted once
+    assert 0 < len(got) < len(ids)
+
+    vec = {
+        r["vec_id"]: [float(x) for x in r["embedding"]]
+        for r in emb.collect()
+    }
+    close = []
+    for lid in {lid for _, lid in got}:
+        members = [v for v, l in got if l == lid]
+        V = np.array([vec[v] for v in members], dtype=np.float64)
+        nv = _fold_norm(V)
+        cos = _fold_dot_matrix(V, V) / (nv[:, None] * nv[None, :])
+        i, j = np.nonzero(np.triu(cos >= 0.25, k=1))
+        close += [(members[a], members[b]) for a, b in zip(i, j)]
+    assert not close, f"{len(close)} survivor pairs within the threshold"
