@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import platform
 import statistics
 import sys
 import time
@@ -276,6 +277,13 @@ ACCEPTED_REGRESSIONS = {
 }
 
 
+# Top-level artifact keys main() writes; any other key is carried over.
+OWN_KEYS = {"metric", "value", "unit", "queries", "spread", "reps",
+            "reruns", "sf", "accepted_regressions", "cluster_build_sec",
+            "kmeans_train_sec", "lsh_index_build_sec",
+            "stream_shuffle_partitions", "consumes", "cpus", "python"}
+
+
 def compact_line(
     timings: dict[str, float],
     sf: float,
@@ -299,7 +307,9 @@ def compact_line(
     at the same ``sf`` and ``cpus`` is compared (ADVICE r13 #1): a
     ratio across scale factors or core counts is not a round-over-round
     speedup, so the line then reads null, as it does when ``cpus`` is
-    unknown."""
+    unknown.  ``python`` is this interpreter's version: a Python task's
+    fixed cost differs between CPython 3.10–3.12 and 3.13 (the engine
+    worker daemon's zip-cache guard applies only below 3.13)."""
     import hashlib
     import math
 
@@ -343,6 +353,7 @@ def compact_line(
             "full_artifact": "BENCH_local.json",
             "sf": sf,
             "cpus": cpus,
+            "python": platform.python_version(),
         },
         separators=(",", ":"),
     )
@@ -464,10 +475,6 @@ def main() -> None:
     # (scripts/bench_decode_gate.py's decode_pregate A/B row was
     # clobbered by four subsequent bench runs in round 9) — carry over
     # every top-level key this harness doesn't own.
-    OWN_KEYS = {"metric", "value", "unit", "queries", "spread", "reps",
-                "reruns", "sf", "accepted_regressions", "cluster_build_sec",
-                "kmeans_train_sec", "lsh_index_build_sec",
-                "stream_shuffle_partitions", "consumes", "cpus"}
     preserved: dict = {}
     prev: dict | None = None
     if os.path.exists(out_path):
@@ -495,6 +502,7 @@ def main() -> None:
             "stream_shuffle_partitions": stream_width,
             "sf": sf,
             "cpus": cpus,
+            "python": platform.python_version(),
         }
     )
     with open(out_path, "w") as f:

@@ -456,24 +456,6 @@ def ivf_topk(
     C = np.array([cv for _, cv in cents], dtype=np.float64)
     cnorms = _fold_norm(C)
 
-    def assign_top1(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nv = _fold_norm(V)
-            cos = _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :])
-            # argmax first-win on exact ties == (cos desc, centroid_id
-            # asc) because centroids are scanned in ascending-id order
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "v": pdf["v"],
-                    "nv": nv,
-                    "list_id": cids[np.argmax(cos, axis=1)],
-                }
-            )
-
     def assign_probes(it):
         for pdf in it:
             if len(pdf) == 0:
@@ -516,8 +498,8 @@ def ivf_topk(
             raise ValueError("corpus_pred filters out every corpus vector")
         nprobe = min(len(cents), (nprobe * total + kept - 1) // kept)
     cv = corpus_src.select("vec_id", as_double("embedding").alias("v"))
-    corpus = fan_out(cv.where(F.col("vec_id") >= num_queries), "vec_id").mapInPandas(
-        assign_top1, schema="vec_id long, v array<double>, nv double, list_id long"
+    corpus = _closure_assignment(
+        fan_out(cv.where(F.col("vec_id") >= num_queries), "vec_id"), cents
     )
     q = v.where(F.col("vec_id") < num_queries).mapInPandas(
         assign_probes,
@@ -589,7 +571,7 @@ def ivf_scored_pair(
     re-scored ~nprobe/16 of it again (15/16 — near-total duplication).
     Here one Arrow kernel computes, per corpus row: its list
     (argmax first-win over ascending-cid centroids == ivf_topk's
-    assign_top1), each query's probe rank of that list (driver-
+    _closure_assignment), each query's probe rank of that list (driver-
     precomputed (cos desc, cid asc) table — the same lexsort as
     assign_probes), and each query's cosine in the expression fold's
     exact operation order (`_fold_dot_matrix` — multiplication is

@@ -23,3 +23,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def session_builder(spark, monkeypatch):
+    """Stands in for SparkSession.builder and records the conf
+    get_spark hands it; the last value per key wins, as in
+    SparkSession.Builder.  getOrCreate returns the test session."""
+    from flink_repartition_watermark_example_spark import session
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def __getattr__(self, name):  # appName, master
+            return lambda *a: self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return spark
+
+    builder = Builder()
+    monkeypatch.setattr(session.SparkSession, "builder", builder)
+    return builder

@@ -7,6 +7,7 @@ builder is pure."""
 from __future__ import annotations
 
 import json
+import platform
 
 import pytest
 
@@ -92,6 +93,15 @@ def test_compact_line_compares_only_same_sf_and_cpus():
         d = json.loads(bench.compact_line(t, 0.1, prev, cpus=cpus))
         assert d["geomean_vs_prev"] is None and d["n_common_prev"] == 0, prev
         assert d["cpus"] == cpus
+
+
+def test_artifacts_record_the_python_version():
+    # A Python task's fixed cost depends on the interpreter (the worker
+    # daemon's zip-cache guard applies below CPython 3.13), so the line
+    # and the artifact both carry it.
+    d = json.loads(bench.compact_line({"a": 1.0}, 0.1, None, cpus=4))
+    assert d["python"] == platform.python_version()
+    assert "python" in bench.OWN_KEYS
 
 
 def test_consumes_map_names_benched_queries_and_build_keys():

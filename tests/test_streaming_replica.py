@@ -191,33 +191,19 @@ def test_schemeless_checkpoint_follows_default_fs(spark, tmp_path):
         spark.conf.unset("fs.defaultFS")
 
 
-def test_extra_conf_checkpoint_manager_override_is_kept(spark, monkeypatch, tmp_path):
+def test_extra_conf_checkpoint_manager_override_is_kept(
+    spark, session_builder, monkeypatch, tmp_path
+):
     """get_spark(extra_conf=...) can put the FileContext manager back;
     the pin must not win over it, and the sinks then accept any
     checkpoint location."""
-    class Builder:
-        """Records the conf get_spark hands the session builder; the
-        last value per key wins, as in SparkSession.Builder."""
-
-        def __init__(self):
-            self.conf = {}
-
-        def __getattr__(self, name):  # appName, master
-            return lambda *a: self
-
-        def config(self, key, value):
-            self.conf[key] = value
-            return self
-
-        def getOrCreate(self):
-            return spark
-
-    builder = Builder()
-    monkeypatch.setattr(session.SparkSession, "builder", builder)
     session.get_spark(
         extra_conf={CHECKPOINT_MANAGER_CONF: FILECONTEXT_CHECKPOINT_MANAGER}
     )
-    assert builder.conf[CHECKPOINT_MANAGER_CONF] == FILECONTEXT_CHECKPOINT_MANAGER
+    assert (
+        session_builder.conf[CHECKPOINT_MANAGER_CONF]
+        == FILECONTEXT_CHECKPOINT_MANAGER
+    )
 
     monkeypatch.undo()
     previous = spark.conf.get(CHECKPOINT_MANAGER_CONF)
