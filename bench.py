@@ -31,12 +31,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from flink_repartition_watermark_example_spark import get_spark
 from flink_repartition_watermark_example_spark.queries import EXTRA_QUERIES, QUERIES
 
-# Extras benched alongside the primary 50: the vectorized ANN
-# production twins (speedup vs the oracle-exact paths recorded per
-# round) plus the round-6 additions — the bucketed join twin (vs
-# multi_join_revenue), the real image/audio codecs, the incremental
-# streaming sketches, and the heaviest decorrelation shapes (Q21's
-# double correlation, Q4's semi join).
+# Extras benched alongside the primary 50.  A query that rotates out of
+# the gate keeps its slot here, so the benched set stays the same across
+# rotations (gate_policy.ROTATION_LOG records which round moved which
+# query).  The uncapped streaming_cluster_map equality witness stays out:
+# it is quadratic by contract on the degenerate template bucket.
 BENCH_EXTRAS = [
     "cosine_topk_fast",
     "ivf_ann_topk_fast",
@@ -45,161 +44,70 @@ BENCH_EXTRAS = [
     "image_decode_stats",
     "streaming_hll_distinct_users",
     "audio_decode_stats",
-    # round-8 gate rotation: waiting_suppliers (Q21) moved into the
-    # primary 50; union_active_days moved out to extras — swapping
-    # them here keeps the benched 64-query set identical.
     "union_active_days",
     "order_priority_late_exists",
     "volume_shipping",
     "training_mix_weights",
-    # round-7 gate rotation: these three moved from the primary 50 to
-    # extras (their replacements — semantic_dedup_survivors,
-    # streaming_cms_heavy_hitters, nation_market_share — are now
-    # benched as primaries), keeping the benched set identical.
     "windowed_daily_user_activity",
     "lsh_ann_topk",
     "multimodal_fake_decode",
-    # round-8 additions: sub-document span dedup (the rewrite pass;
-    # the stats pass rotated into the primary gate in round 10) and
-    # filtered ANN (metadata predicate pushed below the IVF
-    # assignment)
     "span_dedup_docs",
     "ivf_ann_filtered_topk",
-    # round-9 gate rotation: the fixed-k semantic_dedup_survivors
-    # moved to extras (its production-k twin semantic_dedup_scaled
-    # took the gate slot and is benched as a primary) — keeping it
-    # here keeps the historical series comparable; set grows 67 → 68
     "semantic_dedup_survivors",
-    # round-9 additions: sharded sequence packing (never benched at
-    # sf0.1 before — sweeps only), the batching/shuffle pair, the
-    # corpus-analysis pair, and token-quota selection; set grows
-    # 68 → 74
     "pack_chunks_into_sequences",
     "length_bucket_padding_stats",
     "shuffle_shard_stats",
     "vocab_growth_by_source",
     "source_overlap_matrix",
     "token_quota_selection",
-    # round-9 late additions: the time-series pair (dense grid,
-    # segmented-carry LOCF) and the product-analytics pair (funnel,
-    # retention); set grows 74 → 78
     "gapfill_hourly_counts",
     "locf_filled_values",
     "funnel_conversion_cohorts",
     "weekly_retention_cohorts",
-    # round-9 TPC-H completion: the six remaining shapes of the
-    # 22-query catalog (Q2/Q6/Q9/Q11/Q16/Q20, partsupp surfaces
-    # derived from lineitem); set grows 78 -> 84
     "forecast_revenue_change",
     "min_cost_regional_supplier",
     "product_type_profit",
     "important_part_values",
     "supplier_part_relationship",
     "potential_promotion_suppliers",
-    # plus the TF-IDF/collocation/anomaly analytics, the embedding
-    # drift stats, and the bucketed Q9 twin; set grows 84 -> 89
     "tfidf_top_terms",
     "bigram_lift",
     "rolling_anomaly_hours",
     "embedding_dim_stats",
     "product_type_profit_bucketed",
-    # graph/sequence analytics: triangle counting on the near-dup
-    # graph and event-path trigram mining; set grows 89 -> 91
     "neardup_triangles",
     "top_event_paths",
-    # round-10 gate rotation: span_dedup_stats and
-    # streaming_anomaly_hours moved into the primary 50 (benched as
-    # primaries now); minhash_signatures and simhash_docs moved out
-    # to extras — keeping them here keeps the benched set identical.
     "minhash_signatures",
     "simhash_docs",
-    # filtered-ANN recall (the starvation regression check); 92 -> 93
     "ann_recall_filtered",
-    # the per-source data-card rollup (release-artifact summary); 93 -> 94
     "corpus_datacard",
-    # contrastive pair mining (sharded deterministic negatives); 94 -> 95
     "contrastive_pairs",
-    # round-11 gate rotation: semantic_dedup_joined (the broadcast-
-    # relation assignment tier, a new physical shape in round 10)
-    # moved into the primary 50 per gate-policy rule 4;
-    # semantic_dedup_scaled moved out to extras — swapping them here
-    # keeps the benched set identical (both were already benched).
     "semantic_dedup_scaled",
-    # round-10 additions: retrieval hard negatives, the SemDeDup
-    # cluster-size histogram, and the int8 quantization audit; 96 -> 99
     "hard_negative_mining",
     "semantic_cluster_sizes",
     "embedding_int8_quant_stats",
-    # QA audit sampling over the near-dup pair graph; 99 -> 100
     "dedup_audit_sample",
-    # the idempotent max-merge scale index replay; 100 -> 101
     "streaming_int8_scales",
-    # dedup-aware split-contamination audit; 101 -> 102
     "split_leakage_audit",
-    # round-11: the remedy the audit prescribes — cluster-based split
-    # assignment and its zero-leakage after-audit; 102 -> 104
     "split_by_cluster",
     "split_leakage_audit_clustered",
-    # the production-nprobe recall pin (the 0.9 crossing of the
-    # recorded nprobe curve); 104 -> 105
     "ann_recall_ivf_production",
-    # split_by_cluster_balanced (quota-balanced cluster split) was
-    # benched here in round 11; it rotated INTO the primary 50 in
-    # round 12 and is benched as a primary now.
-    # router-assignment cluster histogram — the monitoring plan at the
-    # decade where the exact histogram is fenced; 106 -> 107
     "semantic_cluster_sizes_routed",
-    # round-12: the cross-family leakage diagnostic (before-number),
-    # the multi-edge-family CC split, and its all-family zero-leakage
-    # audit; 107 -> 110
     "split_leakage_cross_family",
     "split_by_cluster_multi",
     "split_leakage_audit_multi",
-    # round-12 gate rotation: split_by_cluster_balanced moved into the
-    # primary 50 (benched as a primary now); promo_revenue_share moved
-    # out to extras — swapping them here keeps the benched set
-    # identical.
     "promo_revenue_share",
-    # round-12: the incremental CC cluster-map index replay (label-
-    # graph merges, versioned snapshots).  The benched slot holds the
-    # CAPPED production configuration with the emission-time cap made
-    # oracle-exact (stage = doc_id % 3 renders the cap rule as SQL);
-    # the uncapped equality witness stays registered + oracle-tested
-    # but out of the bench (the semantic_dedup_survivors precedent:
-    # it is quadratic BY CONTRACT on the degenerate template bucket —
-    # 49.8 s of a 211 s bench at sf0.1, SF-fenced past sf1).
-    # (streaming_cluster_map_capped was benched here; it rotated INTO
-    # the primary 50 in the second round-12 rotation and is benched as
-    # a primary now.)
-    # round-12: the trained-quantizer production recall point
-    # (nprobe=12 vs the sampled pin's 15) — benched beside
-    # ann_recall_ivf_production for the per-round wall head-to-head
     "ann_recall_ivf_trained_production",
-    # round-12: the one-pass integer-Gram linear-algebra family
-    # (covariance structure + PCA spectrum) and the per-source
-    # token-distribution drift table.  embedding_covariance_topk
-    # rotated INTO the primary 50 (second round-12 rotation) and is
-    # benched as a primary; the swapped-out pair keeps its bench slot
-    # below so the benched set stays identical.
     "word_count_topn",
     "fingerprint_dedup",
     "embedding_pca_variance",
     "embedding_pca_project_stats",
     "source_token_divergence",
-    # round-12: the cluster-map staleness audit (the recompute-cadence
-    # metric for a materialized map — current vs as-of-horizon batch CC)
     "cluster_map_staleness",
-    # round-12 second rotation: pivot_revenue_by_priority moved out to
-    # extras (dq_constraint_report took its slot and is benched as a
-    # primary) — keeping it here keeps the benched set identical.
     "pivot_revenue_by_priority",
-    # round-12: the data-quality family's non-gate members (one-pass
-    # long-format column profile; shuffle-key skew diagnostics; the
-    # per-hour incremental streaming monitor)
     "table_profile",
     "key_skew_report",
     "streaming_dq_monitor",
-    # round-12: diversified ANN (top-5 across 5 distinct coarse cells)
     "ivf_diverse_topk",
 ]
 
@@ -471,10 +379,9 @@ def main() -> None:
     out_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"
     )
-    # Preserve recorder keys other tools merged into the artifact
-    # (scripts/bench_decode_gate.py's decode_pregate A/B row was
-    # clobbered by four subsequent bench runs in round 9) — carry over
-    # every top-level key this harness doesn't own.
+    # Preserve recorder keys other tools merged into the artifact (the
+    # recorded decode_pregate A/B row, the rebaseline rows) — carry
+    # over every top-level key this harness doesn't own.
     preserved: dict = {}
     prev: dict | None = None
     if os.path.exists(out_path):

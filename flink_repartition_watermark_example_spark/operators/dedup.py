@@ -14,9 +14,10 @@ from __future__ import annotations
 from typing import NamedTuple
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_repartition_watermark_example_spark import artifacts
 from flink_repartition_watermark_example_spark.functions import textfns as TX
 from flink_repartition_watermark_example_spark.functions.hashing import (
     MERSENNE_P,
@@ -474,35 +475,30 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -
     flat = base.select(
         "doc_id", F.explode_outer("ts").alias("t")
     ).select("doc_id", md5_long(F.col("t")).alias("h"))
-    vote_cols, sim_col = _simhash_exprs(bits)
+    vote_cols, sim_col = _simhash_exprs(docs.sparkSession, bits)
     votes = flat.groupBy("doc_id").agg(*vote_cols)
     return votes.select("doc_id", sim_col)
 
 
-_SIMHASH_EXPR_MEMO: dict = {}
-
-
-def _simhash_exprs(bits: int):
-    """Memoized (vote aggregates, reconstruction) Column trees for
-    :func:`simhash`.  Column objects are UNRESOLVED expressions —
-    reusable across any DataFrame with the right input names — so the
-    trees are built once per (application, bits).  Construction goes
-    through ``F.expr`` (one py4j round trip per expression, parsed
-    server-side) instead of composing per-node Column operators: the
+def _simhash_exprs(spark: SparkSession, bits: int):
+    """The (vote aggregates, reconstruction) Column trees for
+    :func:`simhash`, a session artifact (artifacts.py).  Column objects
+    are UNRESOLVED expressions — reusable across any DataFrame with the
+    right input names — so the trees are built once per (application,
+    bits).  Construction goes through ``F.expr`` (one py4j round trip
+    per expression, parsed server-side) instead of composing per-node
+    Column operators: the
     composed 60-wide tree cost ~800 py4j round trips — 2.5 s of pure
     driver time on the FIRST call of a session (measured r13; the
     per-call memo from r12 only helped calls 2+), which was a third of
     the cluster_build one-off.  The parsed trees are the same
     arithmetic on the same types (int shiftright/& masks, ±1 int
     votes summed to bigint, bigint bit reconstruction), verified
-    hash-identical by every simhash-consumer oracle test.  Keyed per
-    application id so a fresh JVM never sees stale gateway handles."""
-    from pyspark.sql import SparkSession
+    hash-identical by every simhash-consumer oracle test.  The store is
+    scoped to the application, so a fresh JVM never sees stale gateway
+    handles."""
 
-    sess = SparkSession.getActiveSession()
-    key = (sess.sparkContext.applicationId if sess else None, bits)
-    hit = _SIMHASH_EXPR_MEMO.get(key)
-    if hit is None:
+    def build():
         # ONE struct-of-sums aggregate expression + ONE reconstruction
         # expression = two parses total (even one parse per ~13 ms of
         # py4j+parse adds up 61 times)
@@ -516,12 +512,13 @@ def _simhash_exprs(bits: int):
             f"ELSE CAST(0 AS BIGINT) END)"
             for b in range(bits)
         )
-        hit = (
+        return (
             [F.expr(votes_sql).alias("_vs")],
             F.expr(sim_sql).alias("simhash"),
         )
-        _SIMHASH_EXPR_MEMO[key] = hit
-    return hit
+
+    key = artifacts.Key("simhash_exprs", (), (bits,))
+    return artifacts.get_or_build(spark, key, build)
 
 
 # --- winnowing -------------------------------------------------------------

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_repartition_watermark_example_spark import artifacts
 from flink_repartition_watermark_example_spark.operators.similarity import CENTROID_IDS
 
 SCALE = 1_000_000
@@ -151,49 +152,25 @@ def _partial_sums_kernel(cents: list[tuple[int, list[int]]]):
     return f
 
 
-_TRAIN_MEMO: dict = {}
-
-
-def _train_key(emb: DataFrame, iters: int):
-    """Memo identity for a trained quantizer: session + the source
-    files WITH their (size, mtime) fingerprints (the cluster_build /
-    storage.py discipline — a regenerated dir must not serve stale
-    centroids) + the iteration count."""
-    import os
-
-    files = sorted(emb.inputFiles())
-    if not files:
-        return None  # in-memory relation: no stable identity, no memo
-    fps = []
-    for f in files:
-        p = f[len("file:") :] if f.startswith("file:") else f
-        try:
-            st = os.stat(p)
-            fps.append((f, st.st_size, st.st_mtime_ns))
-        except OSError:
-            fps.append((f, None, None))
-    return (
-        emb.sparkSession.sparkContext.applicationId,
-        tuple(fps),
-        tuple(sorted(emb.columns)),
-        int(iters),
-    )
-
-
 def train(emb: DataFrame, iters: int = ITERS) -> list[tuple[int, list[int]]]:
     """Lloyd's iterations; returns the final quantized centroids as
     [(centroid_id, [int]*dim)] keyed by the seed row ids.
 
-    Memoized per (session, source fingerprint, iters): the trained
-    centroids are a K x dim integer INDEX ARTIFACT refreshed on the
-    index-build cadence, not per query — a recall query probing the
-    same index at two widths (ann_recall_ivf_trained_production) or a
-    session running several trained-IVF queries pays the Lloyd pass
-    once, exactly like cluster_build's shared cluster map."""
-    key = _train_key(emb, iters)
-    hit = _TRAIN_MEMO.get(key) if key is not None else None
-    if hit is not None:
-        return hit
+    A session artifact keyed by (source fingerprint, plan, iters)
+    (artifacts.py): the trained centroids are a K x dim integer INDEX
+    ARTIFACT refreshed on the index-build cadence, not per query — a
+    recall query probing the same index at two widths
+    (ann_recall_ivf_trained_production) or a session running several
+    trained-IVF queries pays the Lloyd pass once, exactly like
+    cluster_build's shared cluster map."""
+    return artifacts.get_or_build(
+        emb.sparkSession,
+        artifacts.frame_key("train", emb, int(iters)),
+        lambda: _lloyd(emb, iters),
+    )
+
+
+def _lloyd(emb: DataFrame, iters: int) -> list[tuple[int, list[int]]]:
     src = emb.select("embedding")
     cents = initial_centroids(emb)
     for _ in range(iters):
@@ -225,8 +202,6 @@ def train(emb: DataFrame, iters: int = ITERS) -> list[tuple[int, list[int]]]:
         cents = sorted(
             (cid, by_cid.get(cid, prev[cid])) for cid, _ in cents
         )
-    if key is not None:
-        _TRAIN_MEMO[key] = cents
     return cents
 
 

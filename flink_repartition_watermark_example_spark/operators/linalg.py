@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from flink_repartition_watermark_example_spark import artifacts
 from flink_repartition_watermark_example_spark.scale import fan_out
 
 EMBED_DIM = 64
@@ -125,44 +126,6 @@ def covariance_from_gram(rows, dim: int = EMBED_DIM, q: float = GRAM_Q):
     return c / (q * q), n
 
 
-_PCA_MEMO: dict = {}
-
-
-def _pca_key(emb: DataFrame, dim: int, q: float):
-    """Memo identity: session + source files with (size, mtime)
-    fingerprints — the kmeans.train discipline; a regenerated dir must
-    not serve a stale basis.  None (no memo) for in-memory relations.
-
-    The ANALYZED LOGICAL PLAN hash is part of the key (ADVICE r12 #2):
-    inputFiles alone would let pca_components(emb.where(...)) silently
-    reuse a full-corpus basis fitted earlier over the same files — any
-    filter/projection on the relation must miss the memo and fit its
-    own basis.  It is Catalyst's ``semanticHash`` of the canonicalized
-    plan, which drops the per-read exprIds (two loads of the IDENTICAL
-    query share the memo) and, unlike the plan string, is not cut off
-    at ``spark.sql.debug.maxToStringFields`` (ADVICE r13 #2)."""
-    import os
-
-    files = sorted(emb.inputFiles())
-    if not files:
-        return None
-    fps = []
-    for f in files:
-        p = f[len("file:") :] if f.startswith("file:") else f
-        try:
-            st = os.stat(p)
-            fps.append((f, st.st_size, st.st_mtime_ns))
-        except OSError:
-            fps.append((f, None, None))
-    return (
-        emb.sparkSession.sparkContext.applicationId,
-        tuple(fps),
-        emb._jdf.queryExecution().analyzed().semanticHash(),
-        int(dim),
-        float(q),
-    )
-
-
 def pca_components(emb: DataFrame, dim: int = EMBED_DIM, q: float = GRAM_Q):
     """Full PCA fit: (eigenvalues desc, eigenvectors as columns in the
     same order, n).  Same one-pass integer Gram as
@@ -170,15 +133,19 @@ def pca_components(emb: DataFrame, dim: int = EMBED_DIM, q: float = GRAM_Q):
     artifact a projection/whitening stage broadcasts back through the
     corpus.
 
-    Memoized per (session, source fingerprint, dim, q) — the fitted
-    basis is an INDEX ARTIFACT refreshed on the build cadence, exactly
-    like the trained k-means centroids (kmeans.train): the spectrum
-    and projection queries probing the same corpus share one Gram
-    pass per session (r12)."""
-    key = _pca_key(emb, dim, q)
-    hit = _PCA_MEMO.get(key) if key is not None else None
-    if hit is not None:
-        return hit
+    A session artifact keyed by (source fingerprint, plan, dim, q)
+    (artifacts.py) — the fitted basis is an INDEX ARTIFACT refreshed
+    on the build cadence, exactly like the trained k-means centroids
+    (kmeans.train): the spectrum and projection queries probing the
+    same corpus share one Gram pass per session (r12)."""
+    return artifacts.get_or_build(
+        emb.sparkSession,
+        artifacts.frame_key("pca_components", emb, int(dim), float(q)),
+        lambda: _fit_pca(emb, dim, q),
+    )
+
+
+def _fit_pca(emb: DataFrame, dim: int, q: float):
     rows = int_gram(emb, q=q, dim=dim).collect()  # O(d^2) rows
     c, n = covariance_from_gram(rows, dim=dim, q=q)
     vals, vecs = np.linalg.eigh(c)
@@ -191,8 +158,6 @@ def pca_components(emb: DataFrame, dim: int = EMBED_DIM, q: float = GRAM_Q):
         j = np.argmax(np.abs(vecs[:, k]))
         if vecs[j, k] < 0:
             vecs[:, k] = -vecs[:, k]
-    if key is not None:
-        _PCA_MEMO[key] = (vals, vecs, n)
     return vals, vecs, n
 
 

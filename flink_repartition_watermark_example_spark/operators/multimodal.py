@@ -272,20 +272,13 @@ def synth_image_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_image(payloads: DataFrame, pregate: bool = True) -> DataFrame:
+def decode_image(payloads: DataFrame) -> DataFrame:
     """REAL image decode over binary payloads via mapInPandas: parses
     each BMP/PPM byte stream (magic sniff, header fields, row padding,
     bottom-up order, channel order) and emits per-image dimensions and
     exact per-channel pixel sums.  Arrow-batched, per-partition
     streaming — at 100 TB this is a scan-shaped stage with no shuffle;
-    batch size bounded by arrow.maxRecordsPerBatch.
-
-    ``pregate=False`` disables the structural magic/length pre-check
-    so every row goes through decode + exception plumbing — identical
-    output (same err classification, message text aside), exists ONLY
-    so scripts/bench_decode_gate.py can measure the gate's win on
-    dirty corpora A/B in one process.  Production callers keep the
-    default."""
+    batch size bounded by arrow.maxRecordsPerBatch."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -310,14 +303,13 @@ def decode_image(payloads: DataFrame, pregate: bool = True) -> DataFrame:
                 # decode_image_bytes so gate and decoder can't drift —
                 # obvious junk skips the full parse AND the exception
                 # plumbing entirely
-                if pregate:
-                    m = raw[:2]
-                    min_len = IMAGE_MAGICS.get(m)
-                    if min_len is None or len(raw) < min_len:
-                        errs[i] = (
-                            f"ValueError: unknown or truncated image magic {m!r}"
-                        )
-                        continue
+                m = raw[:2]
+                min_len = IMAGE_MAGICS.get(m)
+                if min_len is None or len(raw) < min_len:
+                    errs[i] = (
+                        f"ValueError: unknown or truncated image magic {m!r}"
+                    )
+                    continue
                 try:
                     fmt, img = decode_image_bytes(raw)
                     # dtype= accumulates in int64 without materializing

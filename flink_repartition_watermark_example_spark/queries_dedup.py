@@ -9,6 +9,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_repartition_watermark_example_spark import artifacts
+from flink_repartition_watermark_example_spark.artifacts import (  # noqa: F401
+    release as release_pins,
+)
 from flink_repartition_watermark_example_spark.functions import textfns as TX
 from flink_repartition_watermark_example_spark.functions.hashing import (
     MERSENNE_P,
@@ -836,9 +840,9 @@ def _doc_clusters(spark: SparkSession, sf_dir: str, pairs: DataFrame) -> DataFra
 # loop's clearCache isolation, exactly like a user materializing the
 # cluster map once and reading it from storage; streaming/clustermap.py
 # is the durable on-disk form), and every consumer reads the pinned
-# relation.  The fingerprint (size+mtime of the documents parquet, the
-# storage.py bucketed-table discipline) keeps a regenerated sf_dir from
-# serving a stale map.
+# relation.  Every pin is a session artifact (artifacts.py) keyed by the
+# documents table's file fingerprint, so a regenerated sf_dir never
+# serves a stale map; artifacts.release(sf_dir) drops a corpus's pins.
 
 from typing import NamedTuple
 
@@ -861,39 +865,6 @@ class ClusterBuild(NamedTuple):
 CLUSTER_EDGE_FAMILIES = ("simhash", "jaccard", "containment")
 
 
-_PINNED_SHINGLE_MEMO: dict = {}
-
-
-def release_pins(sf_dir: str | None = None) -> int:
-    """Drop the session-pinned dedup relations (ADVICE r12 #5): the
-    shingle/signature index, the corpus simhash, the per-family pair
-    relations and the cluster builds hold eagerly localCheckpoint-ed
-    corpus-scale blocks in module-level memos with no other release
-    path — a sweep touching several sf_dirs would accumulate every
-    corpus's blocks until JVM exit.  ``sf_dir=None`` clears everything;
-    a specific dir clears just that corpus.  Returns the number of memo
-    entries dropped.  The checkpoint blocks themselves are freed by
-    Spark's ContextCleaner once the dropped references are
-    garbage-collected (the same lifecycle as any localCheckpoint)."""
-    import gc
-
-    target = os.path.abspath(sf_dir) if sf_dir is not None else None
-    dropped = 0
-    for memo in (
-        _PINNED_SHINGLE_MEMO,
-        _PINNED_SIMHASH_MEMO,
-        _FAMILY_PAIRS_MEMO,
-        _CLUSTER_BUILD_MEMO,
-    ):
-        for key in list(memo):
-            # every memo key is (applicationId, abs_sf_dir, ...)
-            if target is None or key[1] == target:
-                del memo[key]
-                dropped += 1
-    gc.collect()
-    return dropped
-
-
 def pinned_shingle_sigs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -908,26 +879,17 @@ def pinned_shingle_sigs(
         fan_out,
         stage_width,
     )
-    from flink_repartition_watermark_example_spark.storage import _source_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _source_fingerprint(sf_dir, "documents"),
-    )
-    hit = _PINNED_SHINGLE_MEMO.get(key)
-    if hit is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         sh = DD.doc_shingles(
             fan_out(docs, "doc_id", parts=stage_width(docs)), "text"
         ).localCheckpoint(eager=True)
         sigs = DD.minhash_sig_array(shingles=sh).localCheckpoint(eager=True)
-        hit = (sh, sigs)
-        _PINNED_SHINGLE_MEMO[key] = hit
-    return hit
+        return sh, sigs
 
-
-_PINNED_SIMHASH_MEMO: dict = {}
+    key = artifacts.table_key("pinned_shingle_sigs", sf_dir, "documents")
+    return artifacts.get_or_build(spark, key, build)
 
 
 def pinned_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -935,19 +897,12 @@ def pinned_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure per-doc function, so one executed relation serves every
     consumer: the pair pipeline AND any sub-corpus leg (the staleness
     audit filters it to the as-of horizon instead of re-hashing)."""
-    from flink_repartition_watermark_example_spark.storage import _source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _source_fingerprint(sf_dir, "documents"),
+    return artifacts.get_or_build(
+        spark,
+        artifacts.table_key("pinned_simhash", sf_dir, "documents"),
+        lambda: DD.simhash(load_table(spark, sf_dir, "documents"))
+        .localCheckpoint(eager=True),
     )
-    hit = _PINNED_SIMHASH_MEMO.get(key)
-    if hit is None:
-        docs = load_table(spark, sf_dir, "documents")
-        hit = DD.simhash(docs).localCheckpoint(eager=True)
-        _PINNED_SIMHASH_MEMO[key] = hit
-    return hit
 
 
 def _edge_pairs(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
@@ -967,15 +922,11 @@ def _edge_pairs(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
     )
 
 
-_CLUSTER_BUILD_MEMO: dict = {}
-_FAMILY_PAIRS_MEMO: dict = {}
-
-
 def pinned_family_pairs(
     spark: SparkSession, sf_dir: str, family: str
 ) -> DataFrame:
     """The pinned near-dup pair relation for ONE detector family —
-    memoized per (application, dir, family, source fingerprint) so
+    a session artifact per (family, source fingerprint), so
     every consumer of a family's pair graph (the CC builds over any
     families-combination, the leakage audits, triangle counting, the
     audit sampler, contrastive mining) reads ONE executed relation per
@@ -984,20 +935,12 @@ def pinned_family_pairs(
     This is the production materialize-once shape: the pair graph is
     an index artifact, rebuilt on the ingest cadence, not per query —
     the same discipline as cluster_build itself (VERDICT r11 #3),
-    whose per-family relations now come from this memo."""
-    from flink_repartition_watermark_example_spark.storage import _source_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        family,
-        _source_fingerprint(sf_dir, "documents"),
+    whose per-family relations now come from this artifact."""
+    return artifacts.get_or_build(
+        spark,
+        artifacts.table_key("pinned_family_pairs", sf_dir, "documents", family),
+        lambda: _edge_pairs(spark, sf_dir, family).localCheckpoint(eager=True),
     )
-    hit = _FAMILY_PAIRS_MEMO.get(key)
-    if hit is None:
-        hit = _edge_pairs(spark, sf_dir, family).localCheckpoint(eager=True)
-        _FAMILY_PAIRS_MEMO[key] = hit
-    return hit
 
 
 def cluster_build(
@@ -1009,39 +952,31 @@ def cluster_build(
 
     Returns the per-family pair relations and the (doc_id, cluster_id)
     connected-component labels over the UNION of the families' edges.
-    Memoized per (application, dir, families, source fingerprint): a
+    A session artifact per (families, source fingerprint): a
     composed run — the three split queries in one bench/sweep session,
     a pipeline computing split + audit together — pays the pair
     pipeline and the CC rounds once.  Pair relations come from the
-    per-family memo (pinned_family_pairs), so the simhash-only build
+    per-family artifact (pinned_family_pairs), so the simhash-only build
     and the three-family build share each family's executed relation.
     All relations are eagerly localCheckpoint-ed, so consumers never
-    re-execute the upstream pipeline and the memo holds bounded
+    re-execute the upstream pipeline and the store holds bounded
     executor-storage blocks (O(pairs) + O(docs) rows), released when
     the session ends."""
-    from flink_repartition_watermark_example_spark.storage import _source_fingerprint
-
     families = tuple(families)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        families,
-        _source_fingerprint(sf_dir, "documents"),
-    )
-    hit = _CLUSTER_BUILD_MEMO.get(key)
-    if hit is not None:
-        return hit
-    pairs = {
-        fam: pinned_family_pairs(spark, sf_dir, fam) for fam in families
-    }
-    edges = None
-    for fam in families:
-        leg = pairs[fam].select("doc_a", "doc_b")
-        edges = leg if edges is None else edges.unionByName(leg)
-    cl = _doc_clusters(spark, sf_dir, edges).localCheckpoint(eager=True)
-    build = ClusterBuild(pairs=pairs, clusters=cl, families=families)
-    _CLUSTER_BUILD_MEMO[key] = build
-    return build
+
+    def build() -> ClusterBuild:
+        pairs = {
+            fam: pinned_family_pairs(spark, sf_dir, fam) for fam in families
+        }
+        edges = None
+        for fam in families:
+            leg = pairs[fam].select("doc_a", "doc_b")
+            edges = leg if edges is None else edges.unionByName(leg)
+        cl = _doc_clusters(spark, sf_dir, edges).localCheckpoint(eager=True)
+        return ClusterBuild(pairs=pairs, clusters=cl, families=families)
+
+    key = artifacts.table_key("cluster_build", sf_dir, "documents", families)
+    return artifacts.get_or_build(spark, key, build)
 
 
 @register_extra(
@@ -1277,7 +1212,7 @@ _FAMILY_PAIRS_SQL = f"""
 
 def _family_pairs_df(spark: SparkSession, sf_dir: str, build: ClusterBuild) -> DataFrame:
     # every family leg reads its pinned relation (a family the build
-    # didn't request comes from the shared per-family memo) — the
+    # didn't request comes from the shared per-family artifact) — the
     # cross-family diagnostic no longer re-runs the jaccard/containment
     # pipelines per execution (r12: 5.7 s -> rollup-only).
     out = None

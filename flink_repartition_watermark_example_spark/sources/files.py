@@ -1,4 +1,4 @@
-"""File sources beyond parquet: CSV / JSON(L), batch and streaming.
+"""File sources beyond parquet: CSV and JSON(L) batch readers.
 
 The reference has no file connectors at all (build.sbt:3-8 — in-memory
 source only); the engine provides the standard lake formats.  Schema is
@@ -31,27 +31,3 @@ def read_jsonl(
 ) -> DataFrame:
     return spark.read.schema(schema).options(**options).json(path)
 
-
-def stream_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    max_files_per_trigger: int | None = None,
-    header: bool = True,
-) -> DataFrame:
-    r = spark.readStream.schema(schema).option("header", str(header).lower())
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.csv(path)
-
-
-def stream_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    r = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.json(path)

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_repartition_watermark_example_spark import artifacts
+
 
 def write_bucketed(
     df: DataFrame,
@@ -24,38 +26,6 @@ def write_bucketed(
     if sort:
         w = w.sortBy(*bucket_cols)
     w.format("parquet").saveAsTable(table)
-
-
-_BUCKETED_MEMO: dict[tuple, str] = {}
-
-
-def _source_files(sf_dir: str, table: str) -> list[str]:
-    import os
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(src):
-        return sorted(
-            os.path.join(src, p)
-            for p in os.listdir(src)
-            if p.endswith(".parquet")
-        )
-    return [src]
-
-
-def _source_fingerprint(sf_dir: str, table: str) -> tuple:
-    """(relative name, size, mtime_ns) of every source parquet file —
-    folded into the bucketed table's identity so a regenerated sf_dir
-    (gen_scale re-run with a different seed/mult, datamodel change)
-    gets a FRESH bucketed copy instead of silently serving the stale
-    files under the old digest.  Pytest hash checks would catch stale
-    data loudly, but the bench/scale sweeps run without them."""
-    import os
-
-    return tuple(
-        (os.path.basename(p), st.st_size, st.st_mtime_ns)
-        for p in _source_files(sf_dir, table)
-        for st in [os.stat(p)]
-    )
 
 
 def bucketed_table(
@@ -77,9 +47,11 @@ def bucketed_table(
     layout decision (the sf10→sf100 sweep's one superlinear entry).
 
     The copy lands under the system temp dir keyed by (sf_dir, table,
-    bucket_cols, num_buckets, source-file fingerprint) and is memoized
-    per session; re-invocations reuse the existing table.  The writer REPARTITIONS on the bucket columns
-    first: repartition(n, cols) and the bucket-file router use the
+    bucket_cols, num_buckets, source-file fingerprint), and its name is
+    a session artifact (artifacts.py): re-invocations in the same
+    application reuse the registered table, and a new application
+    re-registers the files on disk.  The writer REPARTITIONS on the
+    bucket columns first: repartition(n, cols) and the bucket-file router use the
     same Murmur3 hash, so each task then owns exactly one bucket —
     one output file per bucket, and the per-task write sort covers one
     bucket's rows instead of the task's whole input slice (the naive
@@ -106,62 +78,69 @@ def bucketed_table(
     import os
     import tempfile
 
-    # Identity = (dir, table, BUCKET COLS, count, SOURCE FINGERPRINT):
+    from flink_repartition_watermark_example_spark.sources.tables import load_table
+
+    # Identity = (table, BUCKET COLS, count, SOURCE FINGERPRINT):
     # omitting bucket_cols would let two callers bucketing the same
     # table on different columns share one physical layout (a silently
     # wrong zero-exchange join once the DDL path re-registers it);
     # omitting the fingerprint would serve stale buckets after the
     # source data is regenerated in place.
-    key = (
-        os.path.abspath(sf_dir),
-        table,
-        tuple(bucket_cols),
-        num_buckets,
-        _source_fingerprint(sf_dir, table),
+    key = artifacts.table_key(
+        "bucketed_table", sf_dir, table, tuple(bucket_cols), num_buckets
     )
-    if key in _BUCKETED_MEMO:
-        return _BUCKETED_MEMO[key]
-    from flink_repartition_watermark_example_spark.sources.tables import load_table
 
-    digest = hashlib.md5(repr(key).encode()).hexdigest()[:10]
-    name = f"{table}_bkt_{digest}"
-    if not spark.catalog.tableExists(name):
-        path = os.path.join(
-            tempfile.gettempdir(), "spark_graft_bucketed", name
+    def build() -> str:
+        # the name digest covers the same identity with per-file base
+        # names, so layouts written by earlier versions keep their names
+        ident = (
+            os.path.abspath(sf_dir),
+            table,
+            tuple(bucket_cols),
+            num_buckets,
+            tuple((os.path.basename(p), n, t) for p, n, t in key.sources),
         )
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            # A previous SESSION already paid the bucketed write (the
-            # layout's entire point): register the existing files with
-            # bucket DDL instead of rewriting — Spark's bucketed file
-            # names carry the bucket id, so a metadata-only CREATE
-            # TABLE restores HashPartitioning to the scan.  At sf100
-            # the rewrite is a 600M-row shuffle+sort+write; the DDL is
-            # instant (and the rewrite under 32 concurrent bucket
-            # writers once OOMed an 8g sweep heap).
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in load_table(spark, sf_dir, table).schema.fields
+        digest = hashlib.md5(repr(ident).encode()).hexdigest()[:10]
+        name = f"{table}_bkt_{digest}"
+        if not spark.catalog.tableExists(name):
+            path = os.path.join(
+                tempfile.gettempdir(), "spark_graft_bucketed", name
             )
-            bcols = ", ".join(f"`{c}`" for c in bucket_cols)
-            spark.sql(
-                f"CREATE TABLE {name} ({cols}) USING parquet "
-                f"CLUSTERED BY ({bcols}) SORTED BY ({bcols}) "
-                f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
-            )
-        else:
-            (
-                load_table(spark, sf_dir, table)
-                .repartition(num_buckets, *bucket_cols)
-                .write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(num_buckets, *bucket_cols)
-                .sortBy(*bucket_cols)
-                .format("parquet")
-                .saveAsTable(name)
-            )
-    _BUCKETED_MEMO[key] = name
-    return name
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            if os.path.exists(os.path.join(path, "_SUCCESS")):
+                # A previous SESSION already paid the bucketed write
+                # (the layout's entire point): register the existing
+                # files with bucket DDL instead of rewriting — Spark's
+                # bucketed file names carry the bucket id, so a
+                # metadata-only CREATE TABLE restores HashPartitioning
+                # to the scan.  At sf100 the rewrite is a 600M-row
+                # shuffle+sort+write; the DDL is instant (and the
+                # rewrite under 32 concurrent bucket writers once
+                # OOMed an 8g sweep heap).
+                cols = ", ".join(
+                    f"`{f.name}` {f.dataType.simpleString()}"
+                    for f in load_table(spark, sf_dir, table).schema.fields
+                )
+                bcols = ", ".join(f"`{c}`" for c in bucket_cols)
+                spark.sql(
+                    f"CREATE TABLE {name} ({cols}) USING parquet "
+                    f"CLUSTERED BY ({bcols}) SORTED BY ({bcols}) "
+                    f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
+                )
+            else:
+                (
+                    load_table(spark, sf_dir, table)
+                    .repartition(num_buckets, *bucket_cols)
+                    .write.mode("overwrite")
+                    .option("path", path)
+                    .bucketBy(num_buckets, *bucket_cols)
+                    .sortBy(*bucket_cols)
+                    .format("parquet")
+                    .saveAsTable(name)
+                )
+        return name
+
+    return artifacts.get_or_build(spark, key, build)
 
 
 def suggest_buckets(

@@ -52,34 +52,52 @@ def test_trained_ivf_returns_full_topk_per_query(spark, sf_dir):
 
 
 def test_train_memo_hits_and_fingerprint_busts(spark, sf_dir, tmp_path):
-    """The trained-quantizer memo: same source + iters returns the
+    """The trained-quantizer artifact: same source + iters returns the
     SAME artifact without retraining; rewriting the source file (new
-    mtime/size) busts the key; in-memory relations are never memoized."""
+    mtime/size) busts the key; in-memory relations are never stored."""
+    from flink_repartition_watermark_example_spark import artifacts
     from flink_repartition_watermark_example_spark.operators import kmeans as KM
     from flink_repartition_watermark_example_spark.sources.tables import load_table
 
+    def train_keys():
+        return [k for k in artifacts._MEMO if k.kind == "train"]
+
     emb = load_table(spark, sf_dir, "embeddings")
-    KM._TRAIN_MEMO.clear()
+    artifacts.release()
     first = KM.train(emb)
-    assert len(KM._TRAIN_MEMO) == 1
+    assert len(train_keys()) == 1
     again = KM.train(load_table(spark, sf_dir, "embeddings"))
     assert again is first  # memo hit, no second Lloyd pass
-    assert len(KM._TRAIN_MEMO) == 1
+    assert len(train_keys()) == 1
 
     # fingerprint: a REWRITTEN source (same path, new bytes) re-trains
     p = str(tmp_path / "emb.parquet")
     emb.limit(40).write.mode("overwrite").parquet(p)
-    k1 = KM._train_key(spark.read.parquet(p), KM.ITERS)
+    k1 = artifacts.frame_key("train", spark.read.parquet(p), KM.ITERS)
     emb.limit(40).write.mode("overwrite").parquet(p)
-    k2 = KM._train_key(spark.read.parquet(p), KM.ITERS)
+    k2 = artifacts.frame_key("train", spark.read.parquet(p), KM.ITERS)
     assert k1 != k2
 
     # in-memory relation: no stable identity -> no memo key
     mem = spark.createDataFrame(
         [(1, [0.0] * KM.DIM)], "vec_id bigint, embedding array<double>"
     )
-    assert KM._train_key(mem, KM.ITERS) is None
-    KM._TRAIN_MEMO.clear()
+    assert artifacts.frame_key("train", mem, KM.ITERS) is None
+    artifacts.release()
+
+
+def test_train_on_filtered_relation_equals_fresh_fit(spark, sf_dir):
+    """A filter over the same files is a different relation: training
+    it after a full-corpus train must fit the filtered rows, not return
+    the full corpus's centroids."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    full = KM.train(emb)
+    filt = emb.where(F.col("vec_id") % 2 == 0)
+    got = KM.train(filt)
+    # an in-memory copy has no input files, so it is always fitted afresh
+    fresh = KM.train(spark.createDataFrame(filt.collect(), filt.schema))
+    assert got == fresh
+    assert got != full
 
 
 def test_quantize_and_distance_kernels_match_expression_path(spark, sf_dir):

@@ -121,12 +121,13 @@ def test_pca_memo_distinguishes_derived_relations(spark, sf_dir):
     # ADVICE r12 #2: a filtered relation over the SAME files must not
     # be served the full-corpus basis; two loads of the identical
     # query must share the memo (exprIds normalized).
-    from flink_repartition_watermark_example_spark.operators.linalg import (
-        _pca_key,
-    )
+    from flink_repartition_watermark_example_spark.artifacts import frame_key
     from flink_repartition_watermark_example_spark.sources.tables import (
         load_table,
     )
+
+    def _pca_key(df, dim, q):
+        return frame_key("pca_components", df, dim, q)
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb2 = load_table(spark, sf_dir, "embeddings")
@@ -145,9 +146,10 @@ def test_pca_memo_key_sees_past_plan_string_truncation(spark, sf_dir):
     # and shared one memo key.  The key now comes from semanticHash.
     from pyspark.sql import functions as F
 
-    from flink_repartition_watermark_example_spark.operators.linalg import (
-        _pca_key,
-    )
+    from flink_repartition_watermark_example_spark.artifacts import frame_key
+
+    def _pca_key(df, dim, q):
+        return frame_key("pca_components", df, dim, q)
 
     emb = load_table(spark, sf_dir, "embeddings")
 

@@ -454,18 +454,23 @@ def test_release_pins_drops_memo_entries_per_dir(spark, sf_dir):
     # ADVICE r12 #5: the pinned dedup relations need a release path so
     # multi-sf sweeps don't accumulate unbounded checkpoint blocks.
     import flink_repartition_watermark_example_spark.queries_dedup as QD
+    from flink_repartition_watermark_example_spark import artifacts
 
-    QD.release_pins()
+    def pinned(kind):
+        return [k for k in artifacts._MEMO if k.kind == kind]
+
+    assert QD.release_pins is artifacts.release  # one name, no wrapper
+    artifacts.release()
     QD.pinned_simhash(spark, sf_dir)
     QD.pinned_family_pairs(spark, sf_dir, "simhash")
-    assert QD._PINNED_SIMHASH_MEMO and QD._FAMILY_PAIRS_MEMO
+    assert pinned("pinned_simhash") and pinned("pinned_family_pairs")
     # a different dir is untouched
-    assert QD.release_pins("/nonexistent/dir") == 0
-    assert QD._PINNED_SIMHASH_MEMO
-    n = QD.release_pins(sf_dir)
+    assert artifacts.release("/nonexistent/dir") == 0
+    assert pinned("pinned_simhash")
+    n = artifacts.release(sf_dir)
     assert n >= 2
-    assert not QD._PINNED_SIMHASH_MEMO and not QD._FAMILY_PAIRS_MEMO
+    assert not pinned("pinned_simhash") and not pinned("pinned_family_pairs")
     # re-pin after release works
     QD.pinned_simhash(spark, sf_dir)
-    assert QD._PINNED_SIMHASH_MEMO
-    QD.release_pins()
+    assert pinned("pinned_simhash")
+    artifacts.release()

@@ -165,12 +165,18 @@ def test_bucketed_join_tree_no_orderkey_exchange(spark, sf_dir):
     assert "Bucketed: true" in plan, plan
 
     # idempotent: a second invocation reuses the materialized tables
-    from flink_repartition_watermark_example_spark import storage
+    from flink_repartition_watermark_example_spark import artifacts
 
-    before = dict(storage._BUCKETED_MEMO)
+    def bucketed():
+        return {
+            k: v for k, v in artifacts._MEMO.items()
+            if k.kind == "bucketed_table"
+        }
+
+    before = bucketed()
     again = EXTRA_QUERIES["multi_join_revenue_bucketed"].spark(spark, sf_dir)
     assert sorted(map(tuple, again.collect())) == got
-    assert storage._BUCKETED_MEMO == before
+    assert bucketed() == before and before
 
 
 def test_bucketed_q8_tree_no_orderkey_exchange(spark, sf_dir):
@@ -199,7 +205,7 @@ def test_bucketed_table_cross_session_reuse_is_metadata_only(spark, sf_dir):
     registers them with CLUSTERED BY DDL — and the DDL-registered
     table must scan bucketed with identical rows (at sf100 the rewrite
     is a 600M-row shuffle+sort+write that once OOMed the sweep heap)."""
-    from flink_repartition_watermark_example_spark import storage
+    from flink_repartition_watermark_example_spark import artifacts, storage
 
     nb = storage.suggest_buckets(sf_dir, "lineitem")
     name = storage.bucketed_table(spark, sf_dir, "lineitem", ["l_orderkey"], nb)
@@ -209,7 +215,7 @@ def test_bucketed_table_cross_session_reuse_is_metadata_only(spark, sf_dir):
 
     # simulate a fresh session: catalog entry and memo gone, files kept
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    storage._BUCKETED_MEMO.clear()
+    artifacts.release(sf_dir)
     again = storage.bucketed_table(spark, sf_dir, "lineitem", ["l_orderkey"], nb)
     assert again == name
     ddl = spark.sql(f"SHOW CREATE TABLE {name}").first()[0]
