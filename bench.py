@@ -82,7 +82,6 @@ BENCH_EXTRAS = [
     "ann_recall_filtered",
     "corpus_datacard",
     "contrastive_pairs",
-    "semantic_dedup_scaled",
     "hard_negative_mining",
     "semantic_cluster_sizes",
     "embedding_int8_quant_stats",

@@ -35,7 +35,10 @@ THE POLICY
    requires the log entries newer than that artifact to explain the
    diff EXACTLY — an unlogged rotation (or a logged-but-not-performed
    one, the round-8 item #4 failure mode this rule exists to prevent)
-   fails the suite.
+   fails the suite.  A rotated-out query normally stays registered as
+   an extra; one whose code is deleted outright is named in its
+   entry's ``deleted`` list, and a name may appear there only while
+   no query of that name is registered.
 
 Families deliberately include extras: an extra sharing a family with a
 gate member is the natural swap candidate when its family needs a new
@@ -174,7 +177,6 @@ FAMILIES: dict[str, set[str]] = {
     "semantic_dedup": {
         "semantic_dedup_scaled",
         "semantic_dedup_survivors",
-        "semantic_dedup_joined",
         "semantic_dedup_hier",
         "semantic_cluster_sizes",
         "semantic_cluster_sizes_routed",
@@ -209,9 +211,9 @@ REQUIRED_FAMILIES = frozenset(FAMILIES)
 
 # Gate membership changes, newest last.  `round` is the build round the
 # rotation shipped in; `added` entered the 50-slot gate, `removed` left
-# it for the extras registry (never deleted).  The policy test replays
-# entries newer than the latest CORRECTNESS artifact against the live
-# gate (rule 5).
+# it for the extras registry, unless the optional `deleted` list names
+# it (its code is gone).  The policy test replays entries newer than
+# the latest CORRECTNESS artifact against the live gate (rule 5).
 ROTATION_LOG: list[dict] = [
     {
         "round": 7,
@@ -307,5 +309,19 @@ ROTATION_LOG: list[dict] = [
         " machinery; the PIVOT rendering stays oracle-checked in"
         " pytest).  All three removals stay oracle-checked in pytest"
         " and benched",
+    },
+    {
+        "round": 14,
+        "added": ["semantic_dedup_scaled"],
+        "removed": ["semantic_dedup_joined"],
+        "deleted": ["semantic_dedup_joined"],
+        "reason": "the flat broadcast-relation SemDeDup tier that"
+        " semantic_dedup_joined pinned is deleted: with corpus-scaled"
+        " centroids the tier rule never chose it (k > 4096 needs"
+        " n >= 2,048,500, and then n*k is past the pair-row budget), so"
+        " the query existed only to run it.  The production query"
+        " semantic_dedup_scaled takes the slot back (reversing round"
+        " 11) with the same oracle SQL, so the semantic_dedup family"
+        " keeps a member",
     },
 ]

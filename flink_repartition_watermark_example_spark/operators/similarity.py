@@ -212,32 +212,24 @@ SEMDEDUP_PER_CLUSTER = 500
 
 # Closure-matrix ceiling: with k centroids of EMBED_DIM doubles the
 # task closure carries k*64*8 bytes; 4096 keeps that under ~2 MB (fine
-# to serialize per task batch).  Above it the centroids ship as a
-# broadcast RELATION instead — one torrent transfer per executor, no
-# per-task closure cost, no O(k) driver collect.
+# to serialize per task batch).  Above it assignment is two-level, and
+# the router's centroids ship as a broadcast RELATION instead — one
+# torrent transfer per executor, no per-task closure cost, no O(k)
+# driver collect.
 SEMDEDUP_CLOSURE_K_MAX = 4096
 
-# Broadcast ceiling for the flat relation tier: past ~256 MB of
-# centroid vectors (k ~ 500k at dim 64) even a broadcast relation is
-# the wrong plan — flat assignment is O(n*k) pair rows by then, and
-# the two-level router (O(n*sqrt(k)) equi-joins, shuffled fine) is the
-# next tier.
-SEMDEDUP_BROADCAST_BYTES = 256 * 1024 * 1024
-
-# Pair-row budget for FLAT assignment.  Flat assignment materializes
-# one candidate row per (vector, centroid) — n*k rows, each carrying
-# two EMBED_DIM-double arrays on the relation tier — so its regime ends
-# long before the broadcast ceiling trips: at sf100 the centroid set
-# is a harmless 2 MB (k=4000), but 2M vectors x 4000 = 8e9 pair rows
-# is TBs of transient Arrow transfer, and the round-11 sweep leg was
-# killed after 40 min (BENCH_sf100.json.fenced_out post-mortem).
-# Measured brackets at dim 64: 8e7 pair rows (sf10) ran the relation
-# tier in 87 s; the two-level router ran the 8e9-pair corpus in
-# ~480 s.  5e8 places the switch at the measured regime boundary
-# (~500 s of flat work extrapolating linearly — right where
-# O(n*sqrt(k)) routing takes over).  Above the budget
-# :func:`semantic_dedup` routes assignment through the two-level
-# router (VERDICT r11 #1); results then follow the router's
+# Pair-row budget for FLAT assignment.  Flat assignment scores every
+# (vector, centroid) pair — n*k cosines — so its regime ends long
+# before the centroid set is large: at sf100 the centroid set is a
+# harmless 2 MB (k=4000), but 2M vectors x 4000 = 8e9 pairs: a flat
+# kernel that materialized them as Arrow rows was killed after 40 min
+# (BENCH_sf100.json.fenced_out post-mortem).  Measured brackets at
+# dim 64: 8e7 pair rows (sf10) ran flat in 87 s; the two-level router
+# ran the 8e9-pair corpus in ~480 s.  5e8 places the switch at the
+# measured regime boundary (~500 s of flat work extrapolating
+# linearly — right where O(n*sqrt(k)) routing takes over).  Above the
+# budget :func:`semantic_dedup` routes assignment through the
+# two-level router (VERDICT r11 #1); results then follow the router's
 # documented IVF boundary trade (purge recall 0.991 at sf1, 0.999 at
 # sf10 vs flat) instead of requiring the user to know the regime map.
 #
@@ -1190,12 +1182,11 @@ def pq_adc_topk_fast(
 # One entry point (semantic_dedup) and its assignment stage
 # (semantic_assign, which the cluster-size histograms call).  The
 # assignment tier is a data decision made in ONE place, _choose_tier.
-# The four tier implementations below stay separate private functions
-# because each is another's bit-equality reference in the tests: flat
-# closure == flat relation, two-level closure == two-level relation,
-# and two-level at full probe == flat.
+# The three kernels below stay separate private functions because
+# each is another's bit-equality reference in the tests: two-level
+# closure == two-level relation, and two-level at full probe == flat.
 
-SEMDEDUP_TIERS = ("closure", "relation", "two_level")
+SEMDEDUP_TIERS = ("closure", "two_level")
 
 
 def semantic_dedup(
@@ -1257,16 +1248,21 @@ def semantic_assign(
     oracle computes from fixed SQL.
 
     Tiers (``tier`` pins one; None lets :func:`_choose_tier` decide):
-    - "closure": flat, the centroid matrix ships in the task closure;
-    - "relation": flat, the centroids stay a relation broadcast into a
-      per-(vector, centroid)-row kernel — no O(k) driver collect;
+    - "closure": flat, exact nearest centroid, the centroid matrix
+      ships in the task closure;
     - "two_level": one fold-exact Lloyd round builds ceil(sqrt(k))
       mean supers, each vector probes its top-``nprobe`` supers and
       picks the nearest centroid among their children — O(n*sqrt(k))
       folds.  Deterministic (the DuckDB hier CTEs reproduce it
       hash-exactly) but it may differ from flat near cluster
       boundaries, the IVF coarse-quantizer trade.  Its centroids ship
-      in the closure or as a relation by the same k rule as flat."""
+      in the closure up to SEMDEDUP_CLOSURE_K_MAX and as a broadcast
+      relation above it (no O(k) driver collect).
+
+    An unpinned call with more than SEMDEDUP_CLOSURE_K_MAX centroids
+    (only an explicit id list can have that many below the pair-row
+    budget) therefore gets two-level routing, not exact flat
+    assignment; ``tier="closure"`` keeps it flat."""
     if nprobe < 1:
         raise ValueError("nprobe must be >= 1")
     n, k, derive = _centroid_set(emb, centroids)
@@ -1275,14 +1271,12 @@ def semantic_assign(
     tier, closure = _choose_tier(n, k, tier)
     vectors = fan_out(emb, "vec_id").select("vec_id", as_double("embedding").alias("v"))
     cent = derive(closure)
-    if closure:
-        cents = _collect_centroids(cent)
-        if tier == "two_level":
-            return _two_level_assignment(vectors, cents, nprobe)
-        return _closure_assignment(vectors, cents)
-    if tier == "two_level":
+    if not closure:
         return _two_level_joined_assignment(vectors, cent, k, nprobe)
-    return _assign_by_join(vectors, cent)
+    cents = _collect_centroids(cent)
+    if tier == "two_level":
+        return _two_level_assignment(vectors, cents, nprobe)
+    return _closure_assignment(vectors, cents)
 
 
 def _choose_tier(n: int, k: int, tier: str | None = None) -> tuple[str, bool]:
@@ -1291,41 +1285,17 @@ def _choose_tier(n: int, k: int, tier: str | None = None) -> tuple[str, bool]:
     (tier, closure): closure says the centroids ship as a task-closure
     matrix rather than a broadcast relation.
 
-    Unpinned: two-level when n*k > SEMDEDUP_PAIRROW_BUDGET (flat
-    assignment is out of regime), else the closure matrix when
-    k <= SEMDEDUP_CLOSURE_K_MAX, else the broadcast relation.  A pinned
-    relation tier still refuses past the broadcast ceiling and the
-    pair-row budget: raising beats silently planning the killed
-    round-11 sf100 shape."""
+    Unpinned: the flat closure tier when k <= SEMDEDUP_CLOSURE_K_MAX
+    and n*k <= SEMDEDUP_PAIRROW_BUDGET, else two-level.  Two-level
+    ships its centroids in the closure up to SEMDEDUP_CLOSURE_K_MAX and
+    as a relation above it; a pinned closure tier always uses the
+    closure."""
     if tier is None:
-        if n * k > SEMDEDUP_PAIRROW_BUDGET:
-            tier = "two_level"
-        elif k <= SEMDEDUP_CLOSURE_K_MAX:
-            tier = "closure"
-        else:
-            tier = "relation"
+        flat = k <= SEMDEDUP_CLOSURE_K_MAX and n * k <= SEMDEDUP_PAIRROW_BUDGET
+        tier = "closure" if flat else "two_level"
     elif tier not in SEMDEDUP_TIERS:
         raise ValueError(f"tier must be one of {SEMDEDUP_TIERS} or None, got {tier!r}")
-    if tier == "relation":
-        if k * EMBED_DIM * 8 > SEMDEDUP_BROADCAST_BYTES:
-            raise ValueError(
-                f"k={k} centroids exceed the broadcast ceiling "
-                f"({SEMDEDUP_BROADCAST_BYTES} B of vectors): flat assignment is "
-                "O(n*k) pair rows by this size — use tier='two_level' "
-                "(O(n*sqrt(k)) equi-join routing) instead"
-            )
-        if n * k > SEMDEDUP_PAIRROW_BUDGET:
-            raise ValueError(
-                f"n*k = {n}*{k} exceeds the flat-assignment pair-row budget "
-                f"({SEMDEDUP_PAIRROW_BUDGET}): the candidate relation would "
-                "materialize that many two-array Arrow rows (the killed "
-                "round-11 sf100 sweep leg) — leave tier unset or use "
-                "tier='two_level'"
-            )
-    closure = tier == "closure" or (
-        tier == "two_level" and k <= SEMDEDUP_CLOSURE_K_MAX
-    )
-    return tier, closure
+    return tier, tier == "closure" or k <= SEMDEDUP_CLOSURE_K_MAX
 
 
 def _centroid_set(emb: DataFrame, centroids: list[int] | int | None):
@@ -1478,24 +1448,6 @@ def _argmax_by_cos(scored: DataFrame, id_col: str) -> DataFrame:
             F.col("b.nv").alias("nv"),
             (-F.col("b.neg_id")).alias(id_col),
         )
-    )
-
-
-def _assign_by_join(vectors: DataFrame, cent_df: DataFrame) -> DataFrame:
-    """Flat relation tier: (vec_id, v) × (centroid_id, cv) → (vec_id,
-    v, nv, list_id).  The centroids ship through the ENGINE — a
-    broadcast exchange (one torrent transfer per executor), never in
-    the task closure and never via a driver collect (reference S14
-    discipline, README.md:28-45).  Fold-exact cosine per candidate
-    row, then the struct-max argmax of :func:`_argmax_by_cos` — no
-    window sort.  The vector side re-joins by vec_id to regain the
-    embedding, so the n×k candidate relation never carries the
-    64-double vectors into the aggregate."""
-    best = _argmax_by_cos(
-        _score_candidates(vectors.crossJoin(F.broadcast(cent_df))), "centroid_id"
-    )
-    return vectors.join(best, "vec_id").select(
-        "vec_id", "v", "nv", F.col("centroid_id").alias("list_id")
     )
 
 

@@ -864,7 +864,7 @@ _SEMDEDUP_SCALED_SQL = f"""
     """
 
 
-@register_extra(
+@register(
     "semantic_dedup_scaled",
     _SEMDEDUP_SCALED_SQL,
     doc="SemDeDup at the PRODUCTION configuration: the same "
@@ -872,9 +872,8 @@ _SEMDEDUP_SCALED_SQL = f"""
     "centroid count scales with the corpus — k = max(16, n // "
     f"{SIM.SEMDEDUP_PER_CLUSTER}), centroids = the first k eligible "
     "vec_ids ascending (semantic_dedup(centroids=per_cluster)).  "
-    "The tier is the data's: the closure matrix here, the broadcast "
-    "relation past 4096 centroids, the two-level router past the "
-    "pair-row budget.  Cluster size stays "
+    "The tier is the data's: the closure matrix here, the two-level "
+    "router past the pair-row budget.  Cluster size stays "
     "~constant, so the within-cluster quadratic pairing is O(n · "
     "per_cluster) corpus-wide instead of O(n²/16) — the 100 TB plan, "
     "gate-checked: the oracle computes the identical k and centroid "
@@ -888,35 +887,6 @@ _SEMDEDUP_SCALED_SQL = f"""
 def q_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return SIM.semantic_dedup(emb, centroids=SIM.SEMDEDUP_PER_CLUSTER, nprobe=HIER_NPROBE)
-
-
-@register(
-    "semantic_dedup_joined",
-    _SEMDEDUP_SCALED_SQL,
-    doc="The production SemDeDup config with the assignment tier "
-    "pinned to the broadcast RELATION (semantic_dedup(tier='relation'), "
-    "the k > 4096 tier of semantic_dedup_scaled, exercised here at "
-    "every SF so the driver hash-checks it): the centroid set is "
-    "derived as a RELATION (one aggregate plus an exact distributed "
-    "rank cut, O(buckets) driver traffic, NO O(k) id collect) and ships to "
-    "tasks as a broadcast exchange feeding a fold-exact per-"
-    "(vector, centroid)-row kernel, argmax by hash aggregate.  Same "
-    "oracle SQL as the gate query — bit-identical doubles, identical "
-    "survivors — and the plan shows BroadcastExchange + the "
-    "documented O(k)-row cross join instead of a closure matrix "
-    "(VERDICT r9 #2; reference S14's broadcast discipline, "
-    "README.md:28-45).  Because the tier is pinned, past "
-    "SEMDEDUP_PAIRROW_BUDGET candidate rows (n*k — the shape that "
-    "killed the round-11 sf100 sweep leg at 8e9 rows) the query "
-    "refuses with a ValueError instead of planning that shape; the "
-    "unpinned semantic_dedup_scaled routes through the two-level "
-    "router there.  Every oracle-compared SF (sf0.001 tests, the "
-    "sf0.01 driver gate, the sf1/sf10 sweeps) sits far below the "
-    "budget.",
-)
-def q_semantic_dedup_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.semantic_dedup(emb, centroids=SIM.SEMDEDUP_PER_CLUSTER, tier="relation")
 
 
 # Super-probe width for the two-level router (the recall knob): 2
@@ -1326,8 +1296,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tail is the first symptom of a broken centroid set (the "
     "round-10 router work was motivated by exactly this "
     "distribution).  Spark side is semantic_assign, so the tier "
-    "rule is the dedup's — closure-matrix kernel at k <= 4096, "
-    "broadcast relation above (no O(k) driver collect), the two-level "
+    "rule is the dedup's — the closure-matrix kernel, the two-level "
     "router past the pair-row budget (where this exact-assignment "
     "oracle no longer describes the rows) — then "
     "two tiny cascaded aggregations: O(k) rows after the first, "

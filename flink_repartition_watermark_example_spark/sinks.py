@@ -25,6 +25,7 @@ from flink_repartition_watermark_example_spark.session import (
     FILESYSTEM_CHECKPOINT_MANAGER,
 )
 from flink_repartition_watermark_example_spark.streaming.vstore import (
+    drop,
     versions as _snapshot_versions,
 )
 
@@ -216,15 +217,15 @@ def vacuum_cdc_snapshot(snapshot_path: str, keep_last: int = 2) -> list[int]:
     """Retention: drop all but the newest ``keep_last`` committed
     versions (each version is a full snapshot, so older ones are only
     needed for time travel).  Returns the removed version numbers.
-    Never removes the newest version; ``keep_last < 1`` is rejected."""
-    import shutil
-
+    Never removes the newest version; ``keep_last < 1`` is rejected.
+    A failed delete raises, and the version it was deleting is already
+    invisible to readers (:func:`streaming.vstore.drop`), never short."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     versions = _snapshot_versions(snapshot_path)
     doomed = versions[:-keep_last] if keep_last < len(versions) else []
     for v in doomed:
-        shutil.rmtree(os.path.join(snapshot_path, f"v{v}"), ignore_errors=True)
+        drop(os.path.join(snapshot_path, f"v{v}"))
     return doomed
 
 

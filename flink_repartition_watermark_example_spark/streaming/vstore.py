@@ -103,9 +103,10 @@ def _version_ids(path: str) -> list[int]:
     )
 
 
-def _drop(vdir: str) -> None:
-    # _SUCCESS goes first, so a crash mid-delete leaves an invisible
-    # dir instead of a committed version missing some of its files
+def drop(vdir: str) -> None:
+    """Delete the version dir ``vdir``.  ``_SUCCESS`` goes first, so a
+    crash or I/O error mid-delete leaves an invisible dir instead of a
+    committed version missing some of its files; the error raises."""
     if os.path.exists(os.path.join(vdir, "_SUCCESS")):
         os.remove(os.path.join(vdir, "_SUCCESS"))
     shutil.rmtree(vdir)
@@ -172,7 +173,7 @@ class VersionedStore:
             if marked:
                 for v in _version_ids(self.path):
                     if v <= n:
-                        _drop(self._vdir(v))
+                        drop(self._vdir(v))
                 os.rename(tmp, self._vdir(n))
 
     def read(self, spark: SparkSession, below: int | None = None) -> DataFrame | None:
@@ -224,7 +225,7 @@ class VersionedStore:
         """Publish batch ``bid``'s stage as ``v{bid}``, replacing the
         version an earlier run of the same batch committed."""
         if os.path.isdir(self._vdir(bid)):
-            _drop(self._vdir(bid))
+            drop(self._vdir(bid))
         os.rename(self._stage_dir(bid), self._vdir(bid))
 
     def publish(self, df: DataFrame, bid: int) -> int:

@@ -36,7 +36,6 @@ HEADLINE = [
     "neardup_triangles",            # degree-ordered triangle enumeration
     "pack_chunks_into_sequences",   # sharded cumsum window
     # round-10 additions
-    "semantic_dedup_joined",        # broadcast centroid relation + struct-max argmax
     "hard_negative_mining",         # exact positives + IVF negatives union
     "embedding_int8_quant_stats",   # exploded dims + 64-row broadcast scale join
     # round-11 additions

@@ -196,10 +196,6 @@ DEFAULT_QUERIES = [
     # round-10 additions (merge-swept at sf1/sf10 in round 10, at
     # sf100 in round 11) — in the default list so future full sweeps
     # re-check them automatically.
-    # semantic_dedup_joined: the registered query pins the flat
-    # relation tier, which refuses past the pair-row budget — fenced
-    # from sf10 upward (SF_FENCES below).
-    "semantic_dedup_joined",
     "hard_negative_mining",
     "semantic_cluster_sizes",
     "embedding_int8_quant_stats",
@@ -267,21 +263,6 @@ SF_FENCES: dict[str, tuple] = {
         "clusters by construction: measured 90x on 10x data at sf10 "
         "(historical rows under fenced_out in BENCH_sf1/sf10); the "
         "production config is semantic_dedup_scaled",
-    ),
-    "semantic_dedup_joined": (
-        10,
-        "the registered query PINS the flat broadcast-relation tier, "
-        "whose candidate rows grow ~100x per decade by construction (n "
-        "and k = n/500 both scale) — once the r13 grouped-kernel purge "
-        "removed the purge-side pair traffic, the assignment's O(n*k) "
-        "Arrow rows dominate both legs and the sf1->sf10 ratio is ~14x "
-        "regardless of box (measured r13: sf1 3.2 s -> sf10 46.0 s, "
-        "itself 2.1x better than r12's 96.7 s row — preserved under "
-        "fenced_out).  The sf1 decade (800k pair rows) is the flat "
-        "tier's timed regime.  At sf100 (8e9 pairs > the 5e8 budget) "
-        "the pinned tier refuses with a ValueError instead of routing; "
-        "the router's rows there are semantic_dedup_hier and the "
-        "unpinned semantic_dedup_scaled",
     ),
     "embedding_neardup_pairs_8p": (
         10,

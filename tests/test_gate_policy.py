@@ -92,9 +92,26 @@ def test_rule5_rotation_log_explains_gate_drift_exactly():
 def test_rotation_log_entries_are_swaps_into_the_extras_registry():
     # every removed query must still exist (as an extra today, or have
     # later re-entered the gate); rotation never deletes coverage
+    # unless an entry's "deleted" list records the deletion
     registered = set(QUERIES) | set(EXTRA_QUERIES)
+    deleted = {q for e in ROTATION_LOG for q in e.get("deleted", [])}
     for e in ROTATION_LOG:
         for q in e["removed"]:
-            assert q in registered, f"round {e['round']} removed {q} entirely"
+            assert q in registered or q in deleted, (
+                f"round {e['round']} removed {q} entirely"
+            )
         for q in e["added"]:
-            assert q in registered, f"round {e['round']} added unknown {q}"
+            assert q in registered or q in deleted, (
+                f"round {e['round']} added unknown {q}"
+            )
+
+
+def test_rotation_log_deleted_names_are_not_registered():
+    # the "deleted" list records code that is gone; naming a live
+    # query there would waive the swap check above for it
+    registered = set(QUERIES) | set(EXTRA_QUERIES)
+    for e in ROTATION_LOG:
+        for q in e.get("deleted", []):
+            assert q not in registered, (
+                f"round {e['round']} lists {q} as deleted, but it is registered"
+            )

@@ -69,14 +69,6 @@ NESTED_LOOP_ALLOWED = {
     # per-part value relation — the Q11 HAVING-scalar decorrelation
     # (queries_subqueries.py)
     "important_part_values",
-    # broadcast of the O(k)-row centroid RELATION onto the vector
-    # corpus — the deliberate join-based SemDeDup assignment tier
-    # (operators/similarity.py _assign_by_join): k is bounded by
-    # SEMDEDUP_BROADCAST_BYTES (the operator refuses flat assignment
-    # past it), so the broadcast side is never data-scale
-    "semantic_dedup_joined",
-    # same _assign_by_join tier feeding the cluster-size histogram
-    "semantic_cluster_sizes",
     # embeds cosine_topk (the 10-query broadcast brute-force baseline)
     # as its positives side
     "hard_negative_mining",

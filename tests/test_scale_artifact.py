@@ -162,9 +162,7 @@ SF100 = os.path.join(os.path.dirname(ARTIFACT), "BENCH_sf100.json")
 # (well under the model: the constant factors amortize) still beats
 # flat assignment 2.5× at that decade (BENCH_sf100.json recorder).
 # Admitted BY NAME with the model as its bound; everything else holds
-# the plain near-linear limits.  semantic_dedup_joined pins the flat
-# relation tier, which refuses past the pair-row (n·k) budget, so it is
-# SF-fenced at sf100 and holds no timed row there.
+# the plain near-linear limits.
 SUPERLINEAR_MODELED = {
     "semantic_dedup_hier": 31.7,
 }

@@ -4,7 +4,7 @@ of asking the user to know the regime map.  Below
 SEMDEDUP_PAIRROW_BUDGET it is a flat tier (what every oracle-compared
 SF runs); above it, assignment routes through the two-level router
 and the result is bit-identical to the registered semantic_dedup_hier
-family.  A pinned relation tier refuses past the budget instead."""
+family."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ import pytest
 from flink_repartition_watermark_example_spark.operators import similarity as SIM
 from flink_repartition_watermark_example_spark.queries_similarity import (
     q_semantic_dedup_hier,
-    q_semantic_dedup_joined,
     q_semantic_dedup_scaled,
 )
 from flink_repartition_watermark_example_spark.sources.tables import load_table
@@ -27,17 +26,13 @@ def _survivors(df):
 
 
 def test_default_budget_keeps_the_flat_joined_tier(spark, sf_dir):
-    """At every oracle-compared SF the chooser lands on a flat tier,
-    and the unpinned gate query (closure matrix at k=16) equals the
-    registered relation-pinned query, so the shared flat oracle SQL
-    stays the exact description of what the driver hash-checks."""
+    """At every oracle-compared SF the chooser lands on the flat
+    closure tier, so the flat oracle SQL stays the exact description
+    of what the driver hash-checks for the gate query."""
     emb = load_table(spark, sf_dir, "embeddings")
     n, k, _ = SIM._centroid_set(emb, SIM.SEMDEDUP_PER_CLUSTER)
     assert SIM._choose_tier(n, k) == ("closure", True)
-    flat = _survivors(q_semantic_dedup_scaled(spark, sf_dir))
-    joined = _survivors(q_semantic_dedup_joined(spark, sf_dir))
-    assert joined == flat
-    assert joined, "expected survivors"
+    assert _survivors(q_semantic_dedup_scaled(spark, sf_dir)), "expected survivors"
 
 
 @pytest.mark.parametrize(
@@ -70,23 +65,26 @@ def test_dispatch_boundary_is_exactly_the_budget(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(SIM, "SEMDEDUP_PAIRROW_BUDGET", n * k)
     assert SIM._choose_tier(n, k) == ("closure", True)
     monkeypatch.setattr(SIM, "SEMDEDUP_CLOSURE_K_MAX", k - 1)
-    assert SIM._choose_tier(n, k) == ("relation", False)
+    assert SIM._choose_tier(n, k) == ("two_level", False)
     assert SIM._choose_tier(n, k, "two_level") == ("two_level", False)
     monkeypatch.setattr(SIM, "SEMDEDUP_PAIRROW_BUDGET", n * k - 1)
     assert SIM._choose_tier(n, k) == ("two_level", False)
     monkeypatch.setattr(SIM, "SEMDEDUP_CLOSURE_K_MAX", k)
     assert SIM._choose_tier(n, k) == ("two_level", True)
-    with pytest.raises(ValueError, match="tier must be"):
-        SIM._choose_tier(n, k, "joined")
+    for gone in ("joined", "relation"):
+        with pytest.raises(ValueError, match="tier must be"):
+            SIM._choose_tier(n, k, gone)
 
 
-def test_flat_operator_refuses_past_the_pairrow_budget(spark, sf_dir, monkeypatch):
-    """Callers who pin the flat relation tier (the registered
-    semantic_dedup_joined query does) get a loud refusal past the
-    budget instead of the killed round-11 sweep shape — the pair-row
-    guard joins the broadcast-bytes guard."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    n, k, _ = SIM._centroid_set(emb, SIM.SEMDEDUP_PER_CLUSTER)
-    monkeypatch.setattr(SIM, "SEMDEDUP_PAIRROW_BUDGET", n * k - 1)
-    with pytest.raises(ValueError, match="pair-row budget"):
-        q_semantic_dedup_joined(spark, sf_dir)
+def test_unpinned_chooser_reaches_every_tier():
+    """Every tier value is reachable from data: over a log grid of
+    corpus sizes n from 1 to 1e10, with the production centroid rule
+    k = max(16, n // SEMDEDUP_PER_CLUSTER), the unpinned chooser picks
+    each of SEMDEDUP_TIERS somewhere.  A tier no corpus reaches is
+    code only a pinned query runs.  No Spark."""
+    chosen = set()
+    for e in range(101):
+        n = round(10 ** (e / 10))
+        k = max(16, n // SIM.SEMDEDUP_PER_CLUSTER)
+        chosen.add(SIM._choose_tier(n, k)[0])
+    assert chosen == set(SIM.SEMDEDUP_TIERS)

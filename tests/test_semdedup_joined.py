@@ -1,8 +1,9 @@
-"""Join-based SemDeDup assignment tier (VERDICT r9 #2): the centroid
-set stays a RELATION end-to-end — broadcast exchange into a fold-exact
-per-candidate-row kernel — with NO O(k) driver collect, and produces
-bit-identical survivors to the closure path.  Every tier is reached
-through the one entry point with a pinned ``tier=``."""
+"""Relational SemDeDup assignment (VERDICT r9 #2): above the closure
+ceiling the two-level router keeps the centroid set a RELATION
+end-to-end — broadcast exchange into a fold-exact per-candidate-row
+kernel — with NO O(k) driver collect, and produces bit-identical
+survivors to its closure form.  Every tier is reached through the one
+entry point with a pinned ``tier=``."""
 
 from __future__ import annotations
 
@@ -26,14 +27,6 @@ def _ids(cent):
     return sorted(r["centroid_id"] for r in cent.collect())
 
 
-def test_joined_tier_is_bit_identical_to_closure_tier(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    closure = _survivors(SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="closure"))
-    joined = _survivors(SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="relation"))
-    assert closure == joined
-    assert closure, "expected survivors"
-
-
 def test_two_level_joined_is_bit_identical_to_closure_two_level(
     spark, sf_dir, monkeypatch
 ):
@@ -41,8 +34,9 @@ def test_two_level_joined_is_bit_identical_to_closure_two_level(
     shuffled child equi-join, struct-max argmaxes) reproduces the
     closure-path two-level assignment bit-for-bit — the k>=1e5
     recorder (scripts/record_semdedup_hier_k.py) runs THIS form.  The
-    two-level tier ships its centroids by the same k rule as flat, so
-    a zero closure ceiling forces the relational form."""
+    two-level tier ships its centroids as a relation above
+    SEMDEDUP_CLOSURE_K_MAX, so a zero closure ceiling forces the
+    relational form."""
     emb = load_table(spark, sf_dir, "embeddings")
     closure = _survivors(
         SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="two_level", nprobe=2)
@@ -55,23 +49,6 @@ def test_two_level_joined_is_bit_identical_to_closure_two_level(
     assert closure
 
 
-def test_joined_assignment_plan_broadcasts_the_centroid_relation(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    plan = (
-        SIM.semantic_assign(emb, PER_CLUSTER, tier="relation")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastExchange" in plan, plan[:1500]
-    # the argmax is an aggregate with a map-side partial (struct max
-    # compiles to SortAggregate — partial_max runs BEFORE the vec_id
-    # exchange, so only n rows shuffle), never a window sort that
-    # would shuffle all n*k candidate rows
-    assert "partial_max" in plan, plan[:1500]
-    assert "WindowExec" not in plan, plan[:1500]
-
-
 def test_above_threshold_tier_never_collects_centroid_ids(
     spark, sf_dir, monkeypatch
 ):
@@ -79,23 +56,17 @@ def test_above_threshold_tier_never_collects_centroid_ids(
     with the O(k) centroid collect PHYSICALLY unavailable:
     _collect_centroids is monkeypatched to raise.  per_cluster=20 puts
     sf0.001's 500 vectors at k=25 > a ceiling of 16, and the unpinned
-    entry point must still match the closure tier run with the same
-    explicit centroid set."""
+    entry point must route two-level and still match the two-level
+    closure form over the same scaled centroid set."""
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     per_cluster = max(1, n // 25)
     k = max(16, n // per_cluster)
     assert k > 16
 
-    want_ids = [
-        r["vec_id"]
-        for r in emb.where(F.col("vec_id") >= 10)
-        .select("vec_id")
-        .orderBy("vec_id")
-        .limit(k)
-        .collect()
-    ]
-    expected = _survivors(SIM.semantic_dedup(emb, centroids=want_ids))
+    expected = _survivors(
+        SIM.semantic_dedup(emb, centroids=per_cluster, tier="two_level")
+    )
 
     def boom(*a, **kw):
         raise AssertionError("O(k) driver collect above the closure tier")
@@ -104,17 +75,7 @@ def test_above_threshold_tier_never_collects_centroid_ids(
     monkeypatch.setattr(SIM, "SEMDEDUP_CLOSURE_K_MAX", 16)
     got = _survivors(SIM.semantic_dedup(emb, centroids=per_cluster))
     assert got == expected
-
-
-def test_joined_tier_refuses_beyond_broadcast_ceiling(spark, sf_dir, monkeypatch):
-    """A pinned relation tier refuses once the k centroid vectors pass
-    the broadcast ceiling (lowered here to one byte under sf0.001's
-    k=16 set), pointing at the two-level tier."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, k, _ = SIM._centroid_set(emb, PER_CLUSTER)
-    monkeypatch.setattr(SIM, "SEMDEDUP_BROADCAST_BYTES", k * SIM.EMBED_DIM * 8 - 1)
-    with pytest.raises(ValueError, match="two_level"):
-        SIM.semantic_dedup(emb, centroids=PER_CLUSTER, tier="relation")
+    assert got, "expected survivors"
 
 
 def test_exact_kth_smallest_matches_sorted_rank(spark):
@@ -252,9 +213,9 @@ def test_scaled_call_runs_fewer_jobs_than_the_old_dispatch(spark, sf_dir):
     dispatch it replaced ran: one aggregate sizes the centroid set,
     one ordered collect fetches it, and no count() pins the
     persisted assignment."""
-    from flink_repartition_watermark_example_spark.queries import EXTRA_QUERIES
+    from flink_repartition_watermark_example_spark.queries import QUERIES
 
-    q = EXTRA_QUERIES["semantic_dedup_scaled"]
+    q = QUERIES["semantic_dedup_scaled"]
     sc = spark.sparkContext
     q.spark(spark, sf_dir).collect()
     sc.setJobGroup("semdedup_scaled_jobs", "job count of one call")

@@ -159,6 +159,38 @@ def test_time_travel_and_vacuum(spark, tmp_path):
     assert _state(spark, snap) == {(2, "b2"), (4, "d2"), (5, "e1")}
 
 
+def test_vacuum_interrupted_mid_delete_leaves_no_short_version(
+    spark, tmp_path, monkeypatch
+):
+    """An I/O error (or crash) while vacuum deletes a version: the
+    delete has removed one data file of v0 and then fails.  Vacuum
+    must raise rather than report v0 removed, and v0 must read as
+    gone (FileNotFoundError), never as a snapshot short of rows."""
+    import shutil
+
+    from flink_repartition_watermark_example_spark.sinks import vacuum_cdc_snapshot
+
+    snap = str(tmp_path / "snapshot")
+    w = cdc_merge_writer(snap, ["k"])
+    for bid, rows in enumerate((BATCH_1, BATCH_2, BATCH_3)):
+        w(spark.createDataFrame(rows, SCHEMA), bid)
+
+    def failing_rmtree(path, ignore_errors=False, *a, **kw):
+        data = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+        os.remove(os.path.join(path, data[0]))
+        if not ignore_errors:
+            raise OSError(f"simulated I/O error deleting {path}")
+
+    monkeypatch.setattr(shutil, "rmtree", failing_rmtree)
+    with pytest.raises(OSError, match="simulated"):
+        vacuum_cdc_snapshot(snap, keep_last=2)
+    monkeypatch.undo()
+
+    with pytest.raises(FileNotFoundError):
+        read_cdc_snapshot(spark, snap, version=0)
+    assert _state(spark, snap) == _expected(spark, BATCH_1 + BATCH_2 + BATCH_3)
+
+
 def test_partial_version_without_success_marker_is_invisible(spark, tmp_path):
     """Crash DURING a version write: the v{N} directory exists but has
     no _SUCCESS marker — readers must serve the previous committed
