@@ -9,11 +9,13 @@ Scale notes baked in:
   exactly-once window emission contract, S10) with a mandatory
   checkpoint location, which must be on the local filesystem while the
   session pins the FileSystem checkpoint manager (``session.py``).
+- The CDC snapshot sink and its maintenance (time travel, vacuum,
+  ``forget_keys``) keep their versions through streaming/vstore.py,
+  the one module that writes, replaces or deletes a ``v{N}`` dir.
 """
 
 from __future__ import annotations
 
-import os
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
@@ -25,7 +27,7 @@ from flink_repartition_watermark_example_spark.session import (
     FILESYSTEM_CHECKPOINT_MANAGER,
 )
 from flink_repartition_watermark_example_spark.streaming.vstore import (
-    drop,
+    VersionedStore,
     versions as _snapshot_versions,
 )
 
@@ -159,16 +161,17 @@ def cdc_merge_writer(
 
     Each micro-batch applies :func:`operators.cdc.apply_changes`
     (latest-seq-wins upsert/delete) to the previous snapshot and
-    writes the result as ``v{batch_id}/`` under ``snapshot_path`` —
-    Delta-style versioning from first principles:
+    writes the result as the whole of version ``v{batch_id}`` of a
+    snapshot store under ``snapshot_path`` (streaming/vstore.py holds
+    the protocol) — Delta-style versioning from first principles:
 
     - the base read is always the newest version BELOW the current
       batch id, so a crash-replayed batch N re-reads the same base it
-      saw the first time and OVERWRITES its own ``v{N}`` (possibly
-      partial) output instead of double-applying;
-    - readers resolve the snapshot as the highest complete version
-      (:func:`read_cdc_snapshot`), so a partial write is never
-      visible — the version directory is the commit point;
+      saw the first time and replaces its own ``v{N}`` instead of
+      double-applying;
+    - each version is staged and committed by one rename, so readers
+      (:func:`read_cdc_snapshot`) never see a partial write, and a
+      batch that deletes every key commits an empty snapshot;
     - old versions are retained for time travel / vacuum policy,
       exactly the transactional-table-format story.
 
@@ -176,22 +179,13 @@ def cdc_merge_writer(
     """
     from flink_repartition_watermark_example_spark.operators.cdc import apply_changes
 
+    store = VersionedStore(snapshot_path)
+
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        bid = int(batch_id)
         payload = [c for c in batch_df.columns if c not in (seq_col, op_col)]
-        prior = [
-            v for v in _snapshot_versions(snapshot_path) if v < int(batch_id)
-        ]
-        if prior:
-            base = spark.read.parquet(
-                os.path.join(snapshot_path, f"v{max(prior)}")
-            )
-        else:
-            base = spark.createDataFrame([], batch_df.select(*payload).schema)
-        out = apply_changes(base, batch_df, key_cols, seq_col, op_col)
-        out.write.mode("overwrite").parquet(
-            os.path.join(snapshot_path, f"v{int(batch_id)}")
-        )
+        base = store.base(batch_df.sparkSession, bid, batch_df.select(*payload).schema)
+        store.put(apply_changes(base, batch_df, key_cols, seq_col, op_col), bid)
 
     return write
 
@@ -200,17 +194,7 @@ def read_cdc_snapshot(spark, snapshot_path: str, version: int | None = None) -> 
     """Materialized state: the highest committed version, or — time
     travel — the state as of a specific ``version`` (batch id), the
     same AS OF contract transactional table formats expose."""
-    versions = _snapshot_versions(snapshot_path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {snapshot_path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not committed under {snapshot_path}; "
-            f"have {versions}"
-        )
-    return spark.read.parquet(os.path.join(snapshot_path, f"v{version}"))
+    return VersionedStore(snapshot_path).snapshot(spark, version)
 
 
 def vacuum_cdc_snapshot(snapshot_path: str, keep_last: int = 2) -> list[int]:
@@ -219,14 +203,8 @@ def vacuum_cdc_snapshot(snapshot_path: str, keep_last: int = 2) -> list[int]:
     needed for time travel).  Returns the removed version numbers.
     Never removes the newest version; ``keep_last < 1`` is rejected.
     A failed delete raises, and the version it was deleting is already
-    invisible to readers (:func:`streaming.vstore.drop`), never short."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    versions = _snapshot_versions(snapshot_path)
-    doomed = versions[:-keep_last] if keep_last < len(versions) else []
-    for v in doomed:
-        drop(os.path.join(snapshot_path, f"v{v}"))
-    return doomed
+    invisible to readers, never short."""
+    return VersionedStore(snapshot_path).retain(keep_last)
 
 
 def forget_keys(
@@ -248,67 +226,24 @@ def forget_keys(
     is scanned once per retained version and never shuffled.  Keep the
     version count bounded with :func:`vacuum_cdc_snapshot` first.
 
-    Durability: each rewrite lands in a ``v{N}_purge`` staging dir
-    (invisible to readers — version resolution only accepts all-digit
-    suffixes), then atomically swaps in via rename.  A crash between
-    the rmtree and the rename leaves the completed rewrite in the
-    staging dir and the version transiently ABSENT; the next
-    forget_keys run repairs it FIRST (a committed ``v{N}_purge``
-    whose ``v{N}`` is missing is renamed into place before any new
-    work), so no version is ever lost and re-runs are idempotent.
+    Durability: each version is replaced through
+    ``VersionedStore.rewrite``, so a crash leaves it whole, purged or
+    transiently absent (the next read installs the purge), never
+    short.  Re-runs are idempotent: a version with nothing to remove
+    is not rewritten.  Maintenance path only, like compaction.
 
-    Cost per version: ONE broadcast anti-join pass (the staging
-    write); the before/after row counts come from parquet footers,
-    not data scans.
+    Cost per version: ONE broadcast anti-join pass (the rewrite); the
+    before/after row counts come from parquet footers.
 
     Returns {version: rows_removed}.
     """
-    import shutil
-
-    from pyspark.sql import functions as F  # noqa: F401  (parity with callers)
-
-    # Repair a prior crashed swap before doing new work.  A COMMITTED
-    # staging dir wins unconditionally: the swap sequence is
-    # rmtree(v{N}) then rename, so whatever remains at v{N} when a
-    # committed v{N}_purge exists is either intact (crash before the
-    # rmtree started) or a mid-rmtree truncation — in both cases the
-    # staging holds the completed rewrite and must be installed.
-    # Gating the install on `not isdir(target)` would route the
-    # committed staging into the stale-partial branch whenever the
-    # interrupted rmtree left the directory behind, deleting the
-    # rewrite and keeping the truncated version (silent row loss if
-    # its _SUCCESS survived, permanent version loss otherwise).
-    for name in sorted(os.listdir(snapshot_path)):
-        if not (name.startswith("v") and name.endswith("_purge")):
-            continue
-        n = name[1:-len("_purge")]
-        tmp = os.path.join(snapshot_path, name)
-        target = os.path.join(snapshot_path, f"v{n}")
-        if n.isdigit() and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            shutil.rmtree(target, ignore_errors=True)
-            os.rename(tmp, target)  # finish the crashed swap
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)  # stale partial
-
-    keys = keys_df.select(*key_cols).dropDuplicates()
-    removed: dict[int, int] = {}
-    for v in _snapshot_versions(snapshot_path):
-        vdir = os.path.join(snapshot_path, f"v{v}")
-        base = spark.read.parquet(vdir)
-        before = base.count()  # footer metadata, not a scan
-        staging = os.path.join(snapshot_path, f"v{v}_purge")
-        base.join(keys.hint("broadcast"), key_cols, "left_anti").write.mode(
-            "overwrite"
-        ).parquet(staging)
-        after = spark.read.parquet(staging).count()
-        removed[v] = before - after
-        if removed[v] == 0:
-            # idempotent: untouched versions are not swapped
-            shutil.rmtree(staging)
-            continue
-        shutil.rmtree(vdir)
-        os.rename(staging, vdir)
-    return removed
+    store = VersionedStore(snapshot_path)
+    keys = keys_df.select(*key_cols).dropDuplicates().hint("broadcast")
+    store.recover()
+    return {
+        v: store.rewrite(spark, v, lambda df: df.join(keys, key_cols, "left_anti"))
+        for v in _snapshot_versions(snapshot_path)
+    }
 
 
 def stream_to_memory(df: DataFrame, name: str, checkpoint: str) -> StreamingQuery:

@@ -30,11 +30,12 @@ labels.  The writer maintains, per micro-batch (foreachBatch):
    clusters are relabeled; the split column is recomputed for exactly
    those rows (split is a pure md5 function of the label).
 4. **versioned map snapshot** — (doc_id, cluster_id, split) written as
-   ``v{batch_id}`` under the map path, the sinks.cdc_merge_writer
-   discipline: the base read is always the newest version BELOW the
-   current batch id, so a crash-replayed batch re-reads the same base
-   and overwrites its own output (exactly-once); readers resolve the
-   highest committed version, older versions give AS-OF time travel
+   the whole of version ``v{batch_id}`` of a snapshot store under the
+   map path, the same store as sinks.cdc_merge_writer: the base read
+   is always the newest version BELOW the current batch id, so a
+   crash-replayed batch re-reads the same base and replaces its own
+   output (exactly-once); readers resolve the highest committed
+   version, older versions give AS-OF time travel
    (sinks.read_cdc_snapshot reads these directly).
 
 Compaction of the band index (:func:`compact_index`) is the shared
@@ -58,8 +59,6 @@ touching changed rows — the compute is already touched-clusters-only.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -164,6 +163,7 @@ def cluster_map_writer(
     stream==batch contracts."""
 
     index = _index(index_path)
+    cmap = VersionedStore(map_path)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -200,15 +200,9 @@ def cluster_map_writer(
             # r12: ~1 s/replay at sf0.1 batch sizes)
         )
 
-        prior = [v for v in versions(map_path) if v < bid]
-        if prior:
-            base = read_cluster_map(spark, map_path, version=max(prior)).select(
-                "doc_id", "cluster_id"
-            )
-        else:
-            base = spark.createDataFrame(
-                [], "doc_id long, cluster_id long"
-            )
+        base = cmap.base(spark, bid, "doc_id long, cluster_id long").select(
+            "doc_id", "cluster_id"
+        )
 
         # label-graph merge: endpoints resolve to their CURRENT labels
         # (a doc this batch introduces labels itself), and CC runs over
@@ -285,9 +279,7 @@ def cluster_map_writer(
         # files from the data (one file at sf0.1, 128MB-advisory-sized
         # files at scale) instead of one tiny file per upstream task —
         # and the NEXT batch's base read starts from that many splits.
-        merged.repartition("doc_id").write.mode("overwrite").parquet(
-            os.path.join(map_path, f"v{bid}")
-        )
+        cmap.put(merged.repartition("doc_id"), bid)
         index.commit(bid)
 
     return write

@@ -18,8 +18,8 @@ Algebra: the index is a plain union of per-batch deltas, written
 ``partitionBy("band", "bucket")``; a batch writes its pairs before
 its index delta.  Exactly-once under crash replay, staging, empty
 batches and compaction are the versioned-store protocol of
-streaming/vstore.py; the pairs output is one ``v{batch_id}`` dir per
-batch, so a replayed batch overwrites its own.
+streaming/vstore.py; the pairs output is one whole version per batch
+(``VersionedStore.put``), so a replayed batch replaces its own.
 
 Scale shape: each index version is written ``partitionBy("band",
 "bucket")`` with bucket = band_hash mod INDEX_BUCKETS, and the
@@ -53,8 +53,6 @@ are per-doc and bucket membership is order-independent.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -193,9 +191,7 @@ def neardup_index_writer(
         pairs = cand.select("doc_a", "doc_b", _est_jaccard()).where(
             F.col("est_jaccard") >= threshold
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_path, f"v{bid}")
-        )
+        VersionedStore(pairs_path).put(pairs, bid)
         index.publish(new, bid)
 
     return write

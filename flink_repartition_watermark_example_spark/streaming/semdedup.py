@@ -24,8 +24,9 @@ Algebra: the index is a plain union of per-batch deltas, written
 ``partitionBy("list_id")``; a batch stages its index delta, writes its
 survivors, and only then commits the delta.  Exactly-once under crash
 replay, staging, empty batches and compaction are the versioned-store
-protocol of streaming/vstore.py; the survivors output is one
-``v{batch_id}`` dir per batch, so a replayed batch overwrites its own.
+protocol of streaming/vstore.py; the survivors output is one whole
+version per batch (``VersionedStore.put``), so a replayed batch
+replaces its own.
 
 Scale shape: each index version is written ``partitionBy("list_id")``
 and the index rows join the batch by a semi-join on list_id, so the
@@ -49,8 +50,6 @@ required.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,9 +116,7 @@ def semdedup_index_writer(
                 )
             )
         survivors = _purge_within_lists(rows, threshold)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(survivors_path, f"v{bid}")
-        )
+        VersionedStore(survivors_path).put(survivors, bid)
         index.commit(bid)
 
     return write

@@ -26,8 +26,8 @@ keys (each key enters exactly once), written ``partitionBy("bucket")``;
 a batch writes its docs output before its index delta.  Exactly-once
 under crash replay, staging, empty batches and compaction are the
 versioned-store protocol of streaming/vstore.py; the docs output is
-one ``v{batch_id}`` dir per batch, so a replayed batch overwrites its
-own.
+one whole version per batch (``VersionedStore.put``), so a replayed
+batch replaces its own.
 
 Scale shape: the index is partitioned by ``bucket = crc32(seg_key)
 mod SPAN_INDEX_BUCKETS`` and the new-vs-index anti-join carries
@@ -57,8 +57,6 @@ DISTINCT span count, not the corpus size.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,9 +128,7 @@ def spandedup_index_writer(index_path: str, docs_path: str):
             # rewrite (every span already seen, or an empty batch)
             # still writes a readable empty parquet, unlike the
             # partitioned index, whose empty delta is never published.
-            reassemble_spans(kept).write.mode("overwrite").parquet(
-                os.path.join(docs_path, f"v{bid}")
-            )
+            VersionedStore(docs_path).put(reassemble_spans(kept), bid)
             index.publish(kept.select("bucket", "seg_key", "doc_id", "chunk_id"), bid)
         finally:
             kept.unpersist()

@@ -1,32 +1,37 @@
-"""The versioned parquet store every streaming index is kept in.
+"""The versioned parquet store every streaming index, snapshot and
+per-batch output is kept in: the only module that names, writes,
+replaces or deletes a ``v{N}`` directory.
 
 One copy of the exactly-once sink protocol: a replayable source plus
 an idempotent sink, the argument Structured Streaming makes.  The
-stores (neardup, CMS, HLL, anomaly, dqmonitor, int8scale, semdedup,
-spandedup, the clustermap band index) keep only their own algebra —
-the fold that merges versions, the ``partitionBy`` layout, and the
-order in which they write their outputs before the index.
+stores keep only their own algebra — the fold that merges versions,
+the ``partitionBy`` layout, and the order in which they write their
+outputs before the index.
 
 Layout under a store's root:
 
-- ``v{N}`` — a committed version: the delta of micro-batch ``N``, or a
-  compacted snapshot of every version ``<= N``.  Committed means it
-  holds parquet's ``_SUCCESS``; a dir without it is invisible.
+- ``v{N}`` — a committed version: the delta of micro-batch ``N`` (the
+  nine streaming indexes), a compacted snapshot of every version
+  ``<= N``, or the whole state or output of batch ``N`` (the CDC
+  snapshot, the cluster map, pairs, survivors, docs).  Committed means
+  it holds parquet's ``_SUCCESS``; a dir without it is invisible.
 - ``v{N}/_COMPACTED`` — marks ``v{N}`` as a compacted snapshot.
-- ``_tmp_v{N}`` — a stage.  Writers stage batch ``N``'s delta here,
-  compaction stages its merge of every version ``<= N`` here.  A stage
-  holding ``_COMPACTED`` is a committed compaction; one without it is
-  a partial write.
+- ``_tmp_v{N}`` — a stage: of batch ``N``'s version, of a compaction's
+  merge of every version ``<= N``, or of a rewrite of ``v{N}``.  A
+  stage holding a marker is committed, and the marker says what its
+  install replaces: ``_COMPACTED`` every version ``<= N``,
+  ``_REWRITE`` only ``v{N}``.  One without is a partial write.
 
 Protocol:
 
 - A writer's batch head is :meth:`VersionedStore.begin`.  It repairs
-  crashed compactions, deletes unmarked stages (the single writer is
-  the only one that can have a stage in flight, and at its batch head
-  it has none) and says whether the replayed batch id is a compacted
-  snapshot.  A crash-replay of such a batch must skip its writes: its
-  delta is already folded in, and overwriting ``v{N}`` would destroy
-  every delta folded with it.
+  crashed compactions and rewrites, deletes unmarked stages (the
+  single writer is the only one that can have a stage in flight, and
+  at its batch head it has none) and says whether the replayed batch
+  id is a compacted snapshot.  A crash-replay of such a batch must
+  skip its writes: its delta is already folded in, and overwriting
+  ``v{N}`` would destroy every delta folded with it.  A rewritten
+  ``v{N}`` is not skipped: its replay recomputes it.
 - A delta is :meth:`staged <VersionedStore.stage>` with one Spark job,
   its row count read from the parquet footers, and then
   :meth:`committed <VersionedStore.commit>` by one rename.  An empty
@@ -35,6 +40,12 @@ Protocol:
   make every later read die on ``UNABLE_TO_INFER_SCHEMA``.  A replay
   of batch ``N`` restages and commits over its own ``v{N}``, so
   replays are idempotent.
+- A whole version (:meth:`VersionedStore.put`) is written as given
+  and committed even when empty: unpartitioned, an empty write still
+  leaves a 0-row part file holding the schema, and an empty snapshot
+  (every key deleted) is a state.  A snapshot writer's base
+  (:meth:`VersionedStore.base`) is the newest version below its batch
+  id, so a replay re-reads the base it saw the first time.
 - A store whose batch also writes outputs (pairs, survivors, docs, a
   map) commits its delta last.  A committed delta then always implies
   committed outputs, so compaction while the stream is down can never
@@ -45,23 +56,22 @@ Protocol:
   stage to ``v{max}``.  The snapshot reuses the max id: one past it is
   the resumed stream's next batch id, whose delta commit would replace
   the snapshot.
-- :meth:`VersionedStore.recover` installs a committed compaction left
-  by a crash: it finishes the deletes and the rename.  Readers,
-  writers and compactors all run it first, so state can be
-  transiently absent but never silently partial.  Only the marker
-  commits a compaction stage, not parquet's ``_SUCCESS``: a stage
-  that crashed between its parquet commit and the marker, installed
-  as ``v{N}`` without the marker, would let a replay of batch ``N``
-  miss the compacted check and overwrite every folded delta.  Such a
-  stage is a partial write; the writer's next batch head deletes it,
-  and every version it merged is still in place because deletes only
-  start after the marker.
+- :meth:`VersionedStore.recover` installs a committed compaction or
+  rewrite left by a crash: it finishes the deletes and the rename.
+  Readers, writers, compactors and rewriters all run it first, so
+  state can be transiently absent but never silently partial.  Only
+  the marker commits a stage, not parquet's ``_SUCCESS``: a
+  compaction stage that crashed between its parquet commit and the
+  marker, installed without the marker, would let a replay of batch
+  ``N`` miss the compacted check and overwrite every folded delta.  Such a stage is a partial write; the writer's next
+  batch head deletes it, and every version it merged is still in
+  place because deletes only start after the marker.
 - Nothing but ``begin`` deletes an unmarked stage: a reader or a
   compactor may run while a writer's stage is in flight (semdedup
   stages its index across the survivors write).
 
-Not safe against a second concurrent writer or compactor: compaction
-belongs on the maintenance path, like ``sinks.vacuum_cdc_snapshot``.
+Not safe against a second concurrent writer: compaction, rewrites
+(``sinks.forget_keys``) and retention belong on the maintenance path.
 """
 
 from __future__ import annotations
@@ -72,9 +82,11 @@ from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 STAGE_PREFIX = "_tmp_v"
 COMPACTED_MARKER = "_COMPACTED"
+REWRITE_MARKER = "_REWRITE"
 
 
 def versions(path: str) -> list[int]:
@@ -148,8 +160,8 @@ class VersionedStore:
     def _stage_dir(self, n: int) -> str:
         return os.path.join(self.path, f"{STAGE_PREFIX}{n}")
 
-    def _stages(self) -> list[tuple[int, str, bool]]:
-        """(target id, dir, marked) of every stage, in id order."""
+    def _stages(self) -> list[tuple[int, str, str | None]]:
+        """(target id, dir, marker or None) of every stage, in id order."""
         if not os.path.isdir(self.path):
             return []
         out = []
@@ -157,7 +169,12 @@ class VersionedStore:
             n = name.removeprefix(STAGE_PREFIX)
             if name.startswith(STAGE_PREFIX) and n.isdigit():
                 tmp = os.path.join(self.path, name)
-                out.append((int(n), tmp, os.path.exists(os.path.join(tmp, COMPACTED_MARKER))))
+                marker = next(
+                    (m for m in (COMPACTED_MARKER, REWRITE_MARKER)
+                     if os.path.exists(os.path.join(tmp, m))),
+                    None,
+                )
+                out.append((int(n), tmp, marker))
         return sorted(out)
 
     def _write(self, df: DataFrame, path: str) -> None:
@@ -167,12 +184,12 @@ class VersionedStore:
             df.coalesce(1).write.mode("overwrite").parquet(path)
 
     def recover(self) -> None:
-        """Install every committed compaction stage: delete the
-        versions it merged, then rename it into place."""
-        for n, tmp, marked in self._stages():
-            if marked:
+        """Install every committed stage: delete the versions it
+        replaces, then rename it into place."""
+        for n, tmp, marker in self._stages():
+            if marker:
                 for v in _version_ids(self.path):
-                    if v <= n:
+                    if v == n or (v < n and marker == COMPACTED_MARKER):
                         drop(self._vdir(v))
                 os.rename(tmp, self._vdir(n))
 
@@ -203,8 +220,8 @@ class VersionedStore:
         compacted snapshot: the batch is a replay whose delta is
         already folded in, and it must write nothing."""
         self.recover()
-        for _, tmp, marked in self._stages():
-            if not marked:
+        for _, tmp, marker in self._stages():
+            if not marker:
                 shutil.rmtree(tmp)
         return os.path.exists(os.path.join(self._vdir(bid), COMPACTED_MARKER))
 
@@ -234,6 +251,66 @@ class VersionedStore:
         if rows:
             self.commit(bid)
         return rows
+
+    def put(self, df: DataFrame, bid: int) -> None:
+        """Write ``df``, as given, as the whole of ``v{bid}``: staged,
+        then committed, also when empty."""
+        df.write.mode("overwrite").parquet(self._stage_dir(bid))
+        self.commit(bid)
+
+    def base(self, spark: SparkSession, bid: int, empty: str | StructType) -> DataFrame:
+        """A snapshot writer's batch head: :meth:`begin`, then the
+        newest committed version below ``bid`` — the state batch
+        ``bid`` applies to — or an empty frame of schema ``empty``."""
+        self.begin(bid)
+        vs = [v for v in versions(self.path) if v < bid]
+        if not vs:
+            return spark.createDataFrame([], empty)
+        return spark.read.parquet(self._vdir(vs[-1]))
+
+    def snapshot(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+        """A snapshot store's newest committed version, or
+        ``v{version}``; FileNotFoundError when it is not committed."""
+        self.recover()
+        vs = versions(self.path)
+        if not vs:
+            raise FileNotFoundError(f"no committed snapshot under {self.path}")
+        if version is not None and version not in vs:
+            raise FileNotFoundError(
+                f"version {version} not committed under {self.path}; have {vs}"
+            )
+        return spark.read.parquet(self._vdir(vs[-1] if version is None else version))
+
+    def retain(self, keep_last: int) -> list[int]:
+        """Drop all but the newest ``keep_last`` committed versions of
+        a snapshot store and return the dropped ids.  A failed delete
+        raises, and its version is already invisible (:func:`drop`)."""
+        if keep_last < 1:
+            raise ValueError("keep_last must be >= 1")
+        self.recover()
+        doomed = versions(self.path)[:-keep_last]
+        for v in doomed:
+            drop(self._vdir(v))
+        return doomed
+
+    def rewrite(
+        self, spark: SparkSession, n: int, fn: Callable[[DataFrame], DataFrame]
+    ) -> int:
+        """Replace ``v{n}`` of a snapshot store by ``fn(v{n})``,
+        written as given, and return the rows that removed (footer
+        counts, no Spark job).  A rewrite that removes none is
+        discarded; one that does is marked ``_REWRITE`` and installed
+        by :meth:`recover`, so a crash leaves ``v{n}`` whole,
+        rewritten or transiently absent, never short."""
+        tmp = self._stage_dir(n)
+        fn(spark.read.parquet(self._vdir(n))).write.mode("overwrite").parquet(tmp)
+        removed = parquet_rows(self._vdir(n)) - parquet_rows(tmp)
+        if removed == 0:
+            shutil.rmtree(tmp)
+        else:
+            open(os.path.join(tmp, REWRITE_MARKER), "w").close()
+            self.recover()
+        return removed
 
     def writer(
         self, delta: Callable[[DataFrame], DataFrame]

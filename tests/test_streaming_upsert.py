@@ -250,96 +250,82 @@ def test_forget_keys_purges_all_retained_versions(spark, tmp_path):
     assert all(n == 0 for n in forget_keys(spark, snap, forget, ["k"]).values())
 
 
-def test_forget_keys_staging_dir_is_invisible_to_readers(spark, tmp_path):
-    """A crashed purge leaves only the v{N}_purge staging dir — version
-    resolution must never read it as a committed version."""
+def test_batch_deleting_every_key_commits_an_empty_version(spark, tmp_path):
+    """An empty snapshot is a state: a batch that deletes every key
+    commits an empty v{N}, and the latest read returns 0 rows instead
+    of falling back to the previous version."""
     from flink_repartition_watermark_example_spark.sinks import _snapshot_versions
 
-    src, ckpt, snap = (str(tmp_path / d) for d in ("src", "ckpt", "snap"))
-    _write_change_file(spark, src, 0, BATCH_1)
-    _drain(spark, src, ckpt, snap)
-    (versions,) = (_snapshot_versions(snap),)
-    # simulate a mid-purge crash artifact
-    os.makedirs(os.path.join(snap, f"v{versions[-1]}_purge"))
-    open(os.path.join(snap, f"v{versions[-1]}_purge", "_SUCCESS"), "w").close()
-    assert _snapshot_versions(snap) == versions
+    snap = str(tmp_path / "snapshot")
+    w = cdc_merge_writer(snap, ["k"])
+    w(spark.createDataFrame(BATCH_1, SCHEMA), 0)
+    w(spark.createDataFrame([(k, None, "D", 3 + k) for k in (1, 2, 3)], SCHEMA), 1)
+    assert _snapshot_versions(snap) == [0, 1]
+    assert read_cdc_snapshot(spark, snap).count() == 0
 
 
-def test_forget_keys_crashed_swap_is_repaired(spark, tmp_path):
-    """A crash between rmtree(v{N}) and the rename leaves the
-    completed rewrite in v{N}_purge and the version absent; the next
-    forget_keys run must repair it BEFORE doing new work — no version
-    is ever lost."""
+def test_forget_keys_interrupted_swap_leaves_no_short_version(
+    spark, tmp_path, monkeypatch
+):
+    """An I/O error (or crash) while forget_keys replaces v0 with its
+    purged rewrite: the delete of the old v0 removes the data file
+    holding the most rows (the first part file of a CDC version is
+    often empty) and then fails.  v0 must then read as purged or as
+    gone (FileNotFoundError), never as a snapshot short of rows."""
+    import re
     import shutil
 
-    from flink_repartition_watermark_example_spark.sinks import _snapshot_versions, forget_keys
+    import pyarrow.parquet as pq
 
-    src, ckpt, snap = (str(tmp_path / d) for d in ("src", "ckpt", "snap"))
-    _write_change_file(spark, src, 0, BATCH_1)
-    _write_change_file(spark, src, 1, BATCH_2)
-    _drain(spark, src, ckpt, snap)
-    versions = _snapshot_versions(snap)
-    vmax = versions[-1]
+    from flink_repartition_watermark_example_spark.sinks import forget_keys
 
-    # simulate the crash window: the purged rewrite of v{max} is
-    # committed in staging, v{max} itself is gone
+    batch_0 = BATCH_1 + [(k, f"x{k}", "I", 100 + k) for k in range(10, 46)]
+    snap = str(tmp_path / "snapshot")
+    w = cdc_merge_writer(snap, ["k"])
+    for bid, rows in enumerate((batch_0, BATCH_2, BATCH_3)):
+        w(spark.createDataFrame(rows, SCHEMA), bid)
+    purged = {(k, v) for k, v, _, _ in batch_0 if k != 1}
+
+    real = shutil.rmtree
+
+    def failing_rmtree(path, *a, **kw):
+        if not re.fullmatch(r"v\d+", os.path.basename(path)):
+            return real(path, *a, **kw)
+        data = [os.path.join(path, n) for n in os.listdir(path) if n.endswith(".parquet")]
+        os.remove(max(data, key=lambda f: pq.read_metadata(f).num_rows))
+        raise OSError(f"simulated I/O error deleting {path}")
+
+    monkeypatch.setattr(shutil, "rmtree", failing_rmtree)
+    with pytest.raises(OSError, match="simulated"):
+        forget_keys(spark, snap, spark.createDataFrame([(1,)], "k long"), ["k"])
+    monkeypatch.undo()
+
+    try:
+        at0 = {(r["k"], r["val"]) for r in read_cdc_snapshot(spark, snap, version=0).collect()}
+    except FileNotFoundError:
+        at0 = None
+    assert at0 in (purged, None), f"v0 reads {len(at0)} of {len(purged)} rows"
+    assert _state(spark, snap) == _expected(spark, batch_0 + BATCH_2 + BATCH_3)
+
+
+def test_forget_keys_counts_rows_from_parquet_footers(spark, tmp_path):
+    """The before/after row counts of each version come from parquet
+    footers, not count() jobs: one call over three versions runs 12
+    Spark jobs, four per version's rewrite, where two count()s per
+    version made it 27."""
+    from flink_repartition_watermark_example_spark.sinks import forget_keys
+
+    snap = str(tmp_path / "snapshot")
+    w = cdc_merge_writer(snap, ["k"])
+    for bid, rows in enumerate((BATCH_1, BATCH_2, BATCH_3)):
+        w(spark.createDataFrame(rows, SCHEMA), bid)
     forget = spark.createDataFrame([(1,)], "k long")
-    vdir = os.path.join(snap, f"v{vmax}")
-    staging = os.path.join(snap, f"v{vmax}_purge")
-    spark.read.parquet(vdir).join(
-        forget, ["k"], "left_anti"
-    ).write.mode("overwrite").parquet(staging)
-    shutil.rmtree(vdir)
-    assert _snapshot_versions(snap) == versions[:-1]  # transiently absent
-
-    removed = forget_keys(spark, snap, forget, ["k"])
-    # repaired: every original version is back and fully purged
-    assert _snapshot_versions(snap) == versions
-    for v in versions:
-        keys = {r["k"] for r in read_cdc_snapshot(spark, snap, version=v).collect()}
-        assert 1 not in keys
-    # the repaired version needed no further removal (already purged)
-    assert removed[vmax] == 0
-
-
-def test_forget_keys_mid_rmtree_crash_prefers_committed_staging(spark, tmp_path):
-    """Round-6 advisor finding: a crash MID-rmtree(v{N}) leaves v{N}
-    partially deleted but still a directory.  The committed v{N}_purge
-    must win unconditionally — the old `not isdir(target)` guard
-    routed it into the stale-partial branch and deleted the completed
-    rewrite, keeping the truncated version (silent row loss if its
-    _SUCCESS survived the partial delete, permanent version loss
-    otherwise)."""
-    import shutil
-
-    from flink_repartition_watermark_example_spark.sinks import _snapshot_versions, forget_keys
-
-    src, ckpt, snap = (str(tmp_path / d) for d in ("src", "ckpt", "snap"))
-    _write_change_file(spark, src, 0, BATCH_1)
-    _write_change_file(spark, src, 1, BATCH_2)
-    _drain(spark, src, ckpt, snap)
-    versions = _snapshot_versions(snap)
-    vmax = versions[-1]
-
-    forget = spark.createDataFrame([(2,)], "k long")
-    vdir = os.path.join(snap, f"v{vmax}")
-    staging = os.path.join(snap, f"v{vmax}_purge")
-    expected = spark.read.parquet(vdir).join(forget, ["k"], "left_anti")
-    want = {(r["k"], r["val"]) for r in expected.collect()}
-    expected.write.mode("overwrite").parquet(staging)
-
-    # simulate the mid-rmtree crash: the data files are gone but the
-    # directory (and its _SUCCESS) survived — the nastier variant,
-    # since the truncated version still LOOKS committed
-    for name in os.listdir(vdir):
-        p = os.path.join(vdir, name)
-        if name.endswith(".parquet"):
-            os.remove(p) if os.path.isfile(p) else shutil.rmtree(p)
-
-    forget_keys(spark, snap, forget, ["k"])
-    assert _snapshot_versions(snap) == versions
-    got = {
-        (r["k"], r["val"])
-        for r in read_cdc_snapshot(spark, snap, version=vmax).collect()
-    }
-    assert got == want and 2 not in {k for k, _ in got}
+    sc = spark.sparkContext
+    sc.setJobGroup("forget_keys_jobs", "job count of one call")
+    try:
+        assert forget_keys(spark, snap, forget, ["k"]) == {0: 1, 1: 1, 2: 0}
+        jobs = len(sc.statusTracker().getJobIdsForGroup("forget_keys_jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= 12, jobs

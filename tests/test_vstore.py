@@ -12,12 +12,19 @@ Writers are driven directly, one call per micro-batch, on the
 sf0.001 tables: three key-ordered arrival batches, ordered so the
 stores whose stream==batch contract needs id-ordered arrival
 (semdedup, spandedup) hold it too.
+
+The CDC snapshot store (``sinks.cdc_merge_writer``, ``forget_keys``)
+runs through the same injected crashes on the small change sets of
+test_streaming_upsert.py: it is crashed at every vstore call of a
+replayed batch and of a purge, and no version may ever read short.
 """
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import os
+import re
 import shutil
 from dataclasses import dataclass
 from typing import Callable
@@ -235,7 +242,8 @@ def _stages(root):
 @contextlib.contextmanager
 def _crash(fn: str, at: int, root: str):
     """Make the ``at``-th call (1-based) of vstore's ``fn`` on a path
-    under ``root`` raise, as a process dying there would stop it."""
+    under ``root`` raise, as a process dying there would stop it.
+    Yields the list of calls seen; ``at=0`` only counts them."""
     from flink_repartition_watermark_example_spark.streaming import vstore
 
     real = {"rename": os.rename, "rmtree": vstore.shutil.rmtree, "open": open}[fn]
@@ -255,7 +263,7 @@ def _crash(fn: str, at: int, root: str):
             mp.setattr(vstore.shutil, "rmtree", fake)
         else:
             mp.setattr(vstore, "open", fake, raising=False)
-        yield
+        yield calls
 
 
 def _after_stage_write(spark, st, df, parts, w, root):
@@ -348,3 +356,133 @@ def test_parquet_rows_walks_partitions_and_rejects_stray_files(spark, tmp_path):
         f.write("{}")
     with pytest.raises(ValueError, match="part-stray.json"):
         parquet_rows(d)
+
+
+_CDC_PREFIX: dict[str, str] = {}
+
+
+def _cdc_rows(df) -> set:
+    return {(r["k"], r["val"]) for r in df.collect()}
+
+
+@pytest.fixture
+def cdc(spark, tmp_path_factory):
+    """(prefix, states): a CDC snapshot with batches 0-2 of
+    test_streaming_upsert committed, written once; ``states[v]`` holds
+    version v's rows, whole and with key 1 forgotten.  Key 1 is
+    inserted by batch 0 and deleted by batch 2, so the purge rewrites
+    v0 and v1 and leaves the latest state alone."""
+    from pyspark.sql import types as T
+
+    from flink_repartition_watermark_example_spark.operators.cdc import apply_changes
+    from flink_repartition_watermark_example_spark.sinks import cdc_merge_writer
+    from tests.test_streaming_upsert import BATCH_1, BATCH_2, BATCH_3, SCHEMA
+
+    batches = (BATCH_1, BATCH_2, BATCH_3)
+    if not _CDC_PREFIX:
+        prefix = str(tmp_path_factory.mktemp("prefix_cdc") / "snap")
+        w = cdc_merge_writer(prefix, ["k"])
+        for bid, rows in enumerate(batches):
+            w(spark.createDataFrame(rows, SCHEMA), bid)
+        _CDC_PREFIX["path"] = prefix
+    empty = spark.createDataFrame([], T.StructType(SCHEMA.fields[:2]))
+    states = []
+    for v in range(len(batches)):
+        changes = [r for b in batches[: v + 1] for r in b]
+        whole = _cdc_rows(apply_changes(empty, spark.createDataFrame(changes, SCHEMA), ["k"]))
+        states.append((whole, {r for r in whole if r[0] != 1}))
+    return _CDC_PREFIX["path"], states
+
+
+@pytest.mark.parametrize("step", ["replay", "forget"])
+def test_snapshot_crash_at_every_call(spark, cdc, tmp_path, step):
+    """Crash at each vstore rename, rmtree and marker open of one step:
+    a replay of batch 2 (the batch the checkpoint never committed) or
+    a forget_keys purge of key 1.  Right after the crash no committed
+    version reads short, only whole, purged or absent.  Resuming re-runs
+    the step and the ones after it (replay, then forget); then every
+    version is back and purged, and the latest equals apply_changes
+    over all batches."""
+    from flink_repartition_watermark_example_spark.sinks import (
+        _snapshot_versions,
+        cdc_merge_writer,
+        forget_keys,
+        read_cdc_snapshot,
+    )
+    from tests.test_streaming_upsert import BATCH_3, SCHEMA
+
+    prefix, states = cdc
+    forget = spark.createDataFrame([(1,)], "k long")
+
+    def steps(snap):
+        w = cdc_merge_writer(snap, ["k"])
+        run = {
+            "replay": lambda: w(spark.createDataFrame(BATCH_3, SCHEMA), 2),
+            "forget": lambda: forget_keys(spark, snap, forget, ["k"]),
+        }
+        names = list(run)
+        return [run[n] for n in names[names.index(step):]]
+
+    def assert_resumed(snap):
+        assert _snapshot_versions(snap) == [0, 1, 2]
+        for v, (_, purged) in enumerate(states):
+            assert _cdc_rows(read_cdc_snapshot(spark, snap, version=v)) == purged
+        assert _cdc_rows(read_cdc_snapshot(spark, snap)) == states[2][0]
+
+    dry = str(tmp_path / "dry")
+    shutil.copytree(prefix, dry)
+    with _crash("rename", 0, dry) as renames, _crash("rmtree", 0, dry) as rmtrees, \
+            _crash("open", 0, dry) as opens:
+        steps(dry)[0]()
+    counts = {"rename": len(renames), "rmtree": len(rmtrees), "open": len(opens)}
+    assert counts["rename"] and counts["rmtree"], counts
+    for s in steps(dry)[1:]:
+        s()
+    assert_resumed(dry)
+
+    for fn, n in counts.items():
+        for at in range(1, n + 1):
+            snap = str(tmp_path / f"{fn}{at}")
+            shutil.copytree(prefix, snap)
+            run = steps(snap)
+            with _crash(fn, at, snap), pytest.raises(OSError, match="injected"):
+                run[0]()
+            for v in _snapshot_versions(snap):
+                try:
+                    got = _cdc_rows(read_cdc_snapshot(spark, snap, version=v))
+                except FileNotFoundError:
+                    continue
+                assert got in states[v], f"{fn}#{at}: v{v} reads short: {got}"
+            for s in run:
+                s()
+            assert_resumed(snap)
+
+
+def test_only_vstore_names_a_version_dir():
+    """A versioned writer goes through streaming/vstore.py, not a hand
+    copy of the version-directory protocol: no other package module
+    builds a ``v{...}`` path in an f-string."""
+    from flink_repartition_watermark_example_spark.streaming import vstore
+
+    package = os.path.dirname(os.path.dirname(vstore.__file__))
+    offenders, scanned = [], 0
+    for root, _, files in os.walk(package):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == vstore.__file__:
+                continue
+            scanned += 1
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            offenders += [
+                f"{path}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.JoinedStr)
+                and any(
+                    isinstance(a, ast.Constant)
+                    and isinstance(b, ast.FormattedValue)
+                    and re.search(r"(^|/)v$", a.value)
+                    for a, b in zip(n.values, n.values[1:])
+                )
+            ]
+    assert scanned > 20 and not offenders, offenders
