@@ -61,6 +61,9 @@ from flink_repartition_watermark_example_spark.sources.tables import load_table
 from flink_repartition_watermark_example_spark.streaming.neardup import (
     neardup_index_writer,
 )
+from flink_repartition_watermark_example_spark.streaming.replica import (
+    write_close_sentinel,
+)
 from flink_repartition_watermark_example_spark.streaming.stateful import sessionize
 
 # The near-dup purge threshold on the minhash agreement estimate.
@@ -190,24 +193,16 @@ def run_streaming_curation(
     # --- events leg ---------------------------------------------------
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     ev.orderBy("ts").coalesce(1).write.parquet(paths["events_src"])
-    ev_schema = spark.read.parquet(paths["events_src"]).schema
-    # close sentinels: first advances the watermark past every open
-    # session's horizon, second drives the timeout-firing batch
-    for ts in ("2100-01-01 00:00:00", "2100-01-02 00:00:00"):
-        spark.createDataFrame([(ts,)], ["ts_s"]).select(
-            F.lit(-1).cast("long").alias("user_id"),
-            F.col("ts_s").cast("timestamp").alias("ts"),
-        ).select(
-            *[F.col(f.name).cast(f.dataType) for f in ev_schema]
-        ).coalesce(1).write.mode("append").parquet(paths["events_src"])
+    # close sentinels: the first advances the watermark past every open
+    # session's horizon, the second drives the timeout-firing batch
+    ev_schema = write_close_sentinel(spark, paths["events_src"])
 
     stream = (
         spark.readStream.schema(ev_schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(paths["events_src"])
     )
-    # sentinel filtered on the OUTPUT so it still drives the watermark
-    sessions = sessionize(stream, gap="30 minutes").where(F.col("user_id") >= 0)
+    sessions = sessionize(stream, gap="30 minutes")
     q_ev = (
         sessions.writeStream.outputMode("append")
         .format("parquet")

@@ -65,9 +65,10 @@ class WatermarkShape:
 
     Rows dropped by a below-watermark filter never feed the watermark.
     Any predicate here must therefore be satisfiable by the
-    watermark-driving control rows (the close sentinels in
-    ``queries_streaming._replay_dir``) — an inferred predicate that a
-    sentinel cannot satisfy silently freezes that side's watermark."""
+    watermark-driving control rows (the close sentinels of
+    ``streaming/replica.write_close_sentinel``) — an inferred predicate
+    that a sentinel cannot satisfy silently freezes that side's
+    watermark."""
 
     event_time: str
     # (condition SQL, frozenset of referenced column names) per filter

@@ -4,22 +4,20 @@
 correctness gate with the reference's actual emission contract
 (S10, reference README.md:54-58): **append** output mode — each
 key+window row is emitted exactly once, when the watermark passes the
-window end, and its state is evicted.  A bounded file replay has no
-end-of-input watermark in Spark (Flink sources emit
-Watermark(Long.MaxValue) on close), so the replay dir carries two
-far-future close-sentinel files, written last: they advance the
-source watermark past every real window and are dropped before
-aggregation by a predicate on the event-time column (see
-streaming/replica.py for why the predicate must be on that column).
-The drained result must equal the plain batch GROUP BY, so the DuckDB
-oracle applies.
+window end, and its state is evicted.  It is the paper's replica
+builder, ``replica.windowed_count_stream``, over one source.  A
+bounded file replay has no end-of-input watermark in Spark (Flink
+sources emit Watermark(Long.MaxValue) on close), so each replay dir
+(:func:`_replay`) carries the close sentinels of streaming/replica.py,
+written after the data: they advance the source watermark past every
+real window and are dropped above it.  The drained result must equal
+the plain batch GROUP BY, so the DuckDB oracle applies.
 
-All streaming queries here (windowed count, interval join, and the
-sessionize extra) return the memory-sink table directly — no
+All streaming queries here (windowed count, interval joins,
+sessionize, dedup) return the memory-sink table directly — no
 driver-side collect/createDataFrame round-trip; the sink table lives
 in the session as a uuid-named temp view.
 """
-
 from __future__ import annotations
 
 import contextlib
@@ -27,87 +25,47 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_repartition_watermark_example_spark.queries import register, register_extra
 from flink_repartition_watermark_example_spark.sources.tables import load_table
-
-# Sentinel event times and the cutoff that excludes them from
-# aggregation while still letting them advance the watermark.  The
-# parquet ts column has shipped both as int64 epoch nanos and as
-# TIMESTAMP(MICROS); sentinels are built against whichever type the
-# file declares (epoch nanos for long, a wall-clock string cast for
-# timestamp — session timezone is pinned UTC so both are the same
-# instants).
-_SENTINEL_TIMES = ("2100-01-01 00:00:00", "2100-01-02 00:00:00")
-_CUTOFF = "2099-01-01 00:00:00"
-
-# `import ... as T` lives here (not at top) to keep the public imports
-# of this module unchanged.
-from pyspark.sql import types as T  # noqa: E402
+from flink_repartition_watermark_example_spark.streaming.eventtime import (
+    ensure_event_time,
+)
+from flink_repartition_watermark_example_spark.streaming.replica import (
+    drop_close_sentinels,
+    windowed_count_stream,
+    write_close_sentinel,
+)
 
 
-def _sentinel_lit(dtype, ts_str: str):
-    """A ts-typed literal for a close sentinel: epoch nanos for the
-    legacy int64-nanos encoding, else the string cast to the column's
-    own timestamp type (NTZ or LTZ — UTC session tz either way)."""
-    if isinstance(dtype, T.LongType):
-        import calendar
-        import time
-
-        secs = calendar.timegm(time.strptime(ts_str, "%Y-%m-%d %H:%M:%S"))
-        return F.lit(secs * 10**9)
-    return F.lit(ts_str).cast(dtype)
-
-
-def _event_ts(df: DataFrame) -> DataFrame:
-    """Normalize the raw ts column to a watermark-compatible
-    ``TIMESTAMP`` (legacy int64 nanos rescaled, NTZ relabeled under
-    the UTC session tz — streaming/eventtime.py)."""
-    from flink_repartition_watermark_example_spark.streaming.eventtime import (
-        ensure_event_time,
-    )
-
-    return ensure_event_time(df)
-
-
-def _cutoff_lit(df: DataFrame):
-    """The sentinel-exclusion cutoff, cast to the ts column's own type
-    so the comparison never needs an implicit NTZ/LTZ coercion."""
-    return F.lit(_CUTOFF).cast(df.schema["ts"].dataType)
-
-
-def _replay_dir(
+@contextlib.contextmanager
+def _replay(
     spark: SparkSession,
     sf_dir: str,
-    raw_schema,
-    sentinel_event_types: tuple[str, ...] | None = None,
+    event_type: str | None = None,
     files_per_trigger: int = 1,
-) -> str:
-    """Stage a file-stream replay dir: the events file plus two close-
-    sentinel files written afterwards (the file source orders batches
-    by modification time, so sentinels replay last).
+) -> Iterator[DataFrame]:
+    """A file-stream replay of the events table, ts normalized to
+    event time, over a temporary dir that holds a copy of the data
+    files (mtime-ordered, single file or a directory-shaped table)
+    followed by the close sentinels; the dir is removed on exit.
 
-    ``sentinel_event_types``: by default sentinel rows carry NULL in
-    every column but ts; queries that FILTER on event_type before
-    their watermark node (the two-sided interval joins) would drop
-    such sentinels below EventTimeWatermark — for those, each sentinel
-    file carries one row per listed type so every side's filter keeps
-    its own close signal.  Typed sentinels also carry user_id = -1
-    (non-null, matches no real user): Catalyst infers
+    ``event_type``: replay only that type.  The filter sits below the
+    watermark node, so the sentinel rows carry the type too, and
+    ``user_id = -1`` (non-null, matches no real user): Catalyst infers
     ``isnotnull(user_id)`` from a join's equi-key on the non-preserved
     side and pushes it into the scan, which would silently drop an
     all-NULL sentinel below the watermark node — observed as the
     purchase-side watermark freezing at its data max while the view
     side advanced."""
+    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     d = tempfile.mkdtemp(prefix="stream_replay_")
     try:
         src = os.path.join(sf_dir, "events.parquet")
-        # Single-file testdata or a directory-shaped table (Spark's own
-        # multi-part write, e.g. the generated sf1 scale data) — either
-        # way the data files land first in mtime order, sentinels after.
         parts = (
             sorted(
                 os.path.join(src, p)
@@ -122,46 +80,19 @@ def _replay_dir(
             shutil.copy(part, data)
             now = os.stat(data).st_mtime
             os.utime(data, (now - 60, now - 60))
-        for ts_str in _SENTINEL_TIMES:
-
-            def row(event_type: str | None):
-                def col(f):
-                    if f.name == "ts":
-                        return _sentinel_lit(f.dataType, ts_str).alias(f.name)
-                    if f.name == "event_type":
-                        return F.lit(event_type).cast(f.dataType).alias(f.name)
-                    if f.name == "user_id" and event_type is not None:
-                        # non-null join key that matches no real user —
-                        # survives inferred isnotnull pushdown (see doc)
-                        return F.lit(-1).cast(f.dataType).alias(f.name)
-                    return F.lit(None).cast(f.dataType).alias(f.name)
-
-                return spark.range(1).select(
-                    *[col(f) for f in raw_schema.fields]
-                )
-
-            if sentinel_event_types:
-                sent = row(sentinel_event_types[0])
-                for et in sentinel_event_types[1:]:
-                    sent = sent.unionByName(row(et))
-            else:
-                sent = row(None)
-            # With maxFilesPerTrigger = k > 1 the flush contract needs
-            # a batch BOUNDARY between the two sentinels (the second
-            # sentinel's batch flushes windows the first closed; if
-            # both share a batch, the tail windows stay in state
-            # forever under availableNow).  k copies of the FIRST
-            # sentinel guarantee it: ceil((P+1+k)/k) = ceil((P+1)/k)+1,
-            # so sentinel 2 always lands at least one batch after the
-            # first sentinel-1 file.  Duplicate sentinel rows are
-            # dropped by the cutoff predicate before aggregation.
-            copies = files_per_trigger if ts_str == _SENTINEL_TIMES[0] else 1
-            for _ in range(copies):
-                sent.coalesce(1).write.mode("append").parquet(d)
-        return d
-    except BaseException:
+        typed = {"event_type": event_type, "user_id": -1} if event_type else None
+        schema = write_close_sentinel(spark, d, typed, files_per_trigger)
+        stream = ensure_event_time(
+            spark.readStream.schema(schema)  # ts as the file declares it
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", files_per_trigger)
+            .parquet(d)
+        )
+        if event_type is not None:
+            stream = stream.where(F.col("event_type") == event_type)
+        yield stream
+    finally:
         shutil.rmtree(d, ignore_errors=True)
-        raise
 
 
 def stream_shuffle_width() -> int:
@@ -273,46 +204,17 @@ def _drain(agg: DataFrame, spark: SparkSession, name: str, mode: str) -> DataFra
     "must equal the batch GROUP BY.",
 )
 def q_streaming_windowed_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_wc_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     # SPARK_GRAFT_STREAM_FPT batches k files per micro-batch: at sf100
     # the events table is ~250 part files, and with k=1 the drain is
     # linear in BATCH COUNT (per-trigger state commit + planning
     # overhead), measuring the harness rather than throughput.  The
-    # replay dir pads sentinel-1 copies so the two-sentinel flush
-    # contract survives any k (see _replay_dir).
+    # replay pads first-sentinel copies so the two-sentinel flush
+    # contract survives any k (replica.write_close_sentinel).
     fpt = max(1, int(os.environ.get("SPARK_GRAFT_STREAM_FPT", "1")))
-    replay = _replay_dir(spark, sf_dir, raw_schema, files_per_trigger=fpt)
-    try:
-        stream = (
-            spark.readStream.schema(raw_schema)  # ts arrives as long nanos
-            .option("pathGlobFilter", "*.parquet")
-            # k files per micro-batch: data, then each sentinel — the
-            # second sentinel batch flushes windows closed by the first
-            # (emission happens at the start of the batch AFTER the
-            # watermark advances; availableNow runs no no-data batch).
-            .option("maxFilesPerTrigger", fpt)
-            .parquet(replay)
-        )
-        stream = _event_ts(stream).withWatermark("ts", "0 seconds")
-        # Drop sentinels AFTER the watermark node; the predicate is
-        # on the event-time column so Catalyst keeps it above
-        # EventTimeWatermark (streaming/replica.py).
-        stream = stream.where(F.col("ts") < _cutoff_lit(stream))
-        agg = (
-            stream.groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(F.count(F.lit(1)).alias("aggregate"))
-            .select(
-                F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"),
-                "event_type",
-                "aggregate",
-            )
-        )
+    with _replay(spark, sf_dir, files_per_trigger=fpt) as stream:
+        agg = windowed_count_stream([stream], key_col="event_type")
         return _drain(agg, spark, name, "append")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
 
 
 @register(
@@ -352,7 +254,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", glob)
             .parquet(base)
         )
-        return _event_ts(raw).where(F.col("event_type") == event_type)
+        return ensure_event_time(raw).where(F.col("event_type") == event_type)
 
     joined = interval_join_views_purchases(side("view"), side("purchase"))
     return _drain(joined, spark, name, "append")
@@ -387,21 +289,9 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_repartition_watermark_example_spark.streaming.stateful import sessionize
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_sess_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    replay = _replay_dir(spark, sf_dir, raw_schema)
-    try:
-        stream = _event_ts(
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-        )
-        sess = sessionize(stream, gap="30 minutes", drop_after=_CUTOFF)
-        return _drain(sess, spark, name, "append")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)
+    with _replay(spark, sf_dir) as stream:
+        return _drain(sessionize(stream, gap="30 minutes"), spark, name, "append")
 
 
 @register_extra(
@@ -429,38 +319,20 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
         interval_join_left_outer,
     )
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_ijo_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     # One replay dir PER SIDE: two readStreams over one identical path
     # share file-source bookkeeping, which left one side's watermark
     # stuck at its data max — separate dirs make the two sources (and
     # their sentinel-driven watermarks) fully independent.
-    replays = {
-        et: _replay_dir(spark, sf_dir, raw_schema, sentinel_event_types=(et,))
-        for et in ("view", "purchase")
-    }
-    try:
-
-        def side(event_type: str) -> DataFrame:
-            raw = (
-                spark.readStream.schema(raw_schema)
-                .option("pathGlobFilter", "*.parquet")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(replays[event_type])
-            )
-            return _event_ts(raw).where(F.col("event_type") == event_type)
-
-        joined = interval_join_left_outer(
-            side("view"), side("purchase"), keep_view_ts=True
+    with (
+        _replay(spark, sf_dir, "view") as views,
+        _replay(spark, sf_dir, "purchase") as purchases,
+    ):
+        joined = interval_join_left_outer(views, purchases, keep_view_ts=True)
+        out = drop_close_sentinels(joined, "view_ts").select(
+            "view_id", "purchase_id", "user_id"
         )
-        out = joined.where(
-            F.col("view_ts") < F.lit(_CUTOFF).cast("timestamp")
-        ).select("view_id", "purchase_id", "user_id")
         return _drain(out, spark, name, "append")
-    finally:
-        for d in replays.values():
-            shutil.rmtree(d, ignore_errors=True)
 
 
 @register_extra(
@@ -500,33 +372,3 @@ def q_streaming_dedup_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(
         deduped.select("event_id", "user_id", "event_type"), spark, name, "append"
     )
-
-
-def q_streaming_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sessionization operator on Spark 4's
-    transformWithStateInPandas (typed ValueState + explicit event-time
-    timers — the successor stateful extension point to
-    applyInPandasWithState), over the same close-sentinel replay.
-
-    NOT in the query registry: the TWS Python runner needs
-    google.protobuf, absent in this container (streaming/tws.py
-    docstring) — tests/test_tws.py runs the oracle comparison where
-    the dependency exists and asserts the explicit guard where it
-    doesn't, mirroring the Kafka-source gating."""
-    from flink_repartition_watermark_example_spark.streaming.tws import sessionize_tws
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    name = "stream_tws_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    replay = _replay_dir(spark, sf_dir, raw_schema)
-    try:
-        stream = _event_ts(
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
-        )
-        sess = sessionize_tws(stream, gap="30 minutes", drop_after=_CUTOFF)
-        return _drain(sess, spark, name, "append")
-    finally:
-        shutil.rmtree(replay, ignore_errors=True)

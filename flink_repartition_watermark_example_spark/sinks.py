@@ -232,13 +232,20 @@ def forget_keys(
     short.  Re-runs are idempotent: a version with nothing to remove
     is not rewritten.  Maintenance path only, like compaction.
 
-    Cost per version: ONE broadcast anti-join pass (the rewrite); the
-    before/after row counts come from parquet footers.
+    Cost: the forget set is deduplicated once per call and pinned
+    (``localCheckpoint``), so each version pays ONE broadcast anti-join
+    pass (the rewrite) over the pinned set; the before/after row
+    counts come from parquet footers.
 
     Returns {version: rows_removed}.
     """
     store = VersionedStore(snapshot_path)
-    keys = keys_df.select(*key_cols).dropDuplicates().hint("broadcast")
+    keys = (
+        keys_df.select(*key_cols)
+        .dropDuplicates()
+        .localCheckpoint(eager=True)
+        .hint("broadcast")
+    )
     store.recover()
     return {
         v: store.rewrite(spark, v, lambda df: df.join(keys, key_cols, "left_anti"))

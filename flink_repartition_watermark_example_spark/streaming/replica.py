@@ -28,26 +28,66 @@ passes a window, so long-running jobs don't accumulate state.
 
 from __future__ import annotations
 
+import calendar
 import tempfile
+from collections.abc import Mapping
 from dataclasses import dataclass, field
+from datetime import datetime
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from flink_repartition_watermark_example_spark.operators.windowed import (
+    windowed_agg,
+    windowed_count,
+)
+from flink_repartition_watermark_example_spark.streaming.eventtime import (
+    ensure_event_time,
+)
 
 # Flink sources emit Watermark(Long.MaxValue) when they close — that is
 # what flushes the reference's day-3 windows at end of input
-# (README.md:58).  Spark has no end-of-input watermark, so the replica
-# encodes "source closed" as far-future sentinel records per source:
-# they advance that source's watermark past every real window, then are
-# dropped before aggregation.  The drop predicate MUST reference the
-# event-time column: Catalyst pushes any other predicate below the
+# (README.md:58).  Spark has no end-of-input watermark, so a bounded
+# replay encodes "source closed" as two far-future sentinel files per
+# source (:func:`write_close_sentinel`): they advance that source's
+# watermark past every real window, then :func:`drop_close_sentinels`
+# removes them before aggregation.  The drop predicate MUST reference
+# the event-time column: Catalyst pushes any other predicate below the
 # EventTimeWatermark node (PushPredicateThroughNonJoin spares only
 # predicates on the watermark attribute), which would hide the sentinel
-# from the watermark collector entirely.
+# from the watermark collector entirely.  This module is the only one
+# that knows the sentinel times and the cutoff.
+#
+# FLUSH_KEY is the url that sentinel rows staged outside Spark carry
+# (perfbench/datagen.py); the drop keys on the time, never on it.
 FLUSH_KEY = "__source_closed__"
 FLUSH_TS = "2100-01-01 00:00:00"
+_CLOSE_TIMES = (FLUSH_TS, "2100-01-02 00:00:00")
 _FLUSH_CUTOFF = "2099-01-01 00:00:00"
+
+
+def drop_close_sentinels(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """Drop the close-sentinel rows of ``df``.  Apply it above the
+    watermark (the predicate is on the event-time column, so Catalyst
+    keeps it there): the sentinels must reach the watermark first.
+    The cutoff is cast to the column's own type, so the comparison
+    needs no implicit coercion."""
+    cutoff = F.lit(_FLUSH_CUTOFF).cast(df.schema[ts_col].dataType)
+    return df.where(F.col(ts_col) < cutoff)
+
+
+def _watermarked_union(
+    sources: list[DataFrame], ts_col: str, watermark_delay: str
+) -> DataFrame:
+    """Each source with its own watermark, unioned (min-of-sources
+    policy), close sentinels dropped above the watermarks."""
+    marked = [
+        ensure_event_time(df, ts_col).withWatermark(ts_col, watermark_delay)
+        for df in sources
+    ]
+    return drop_close_sentinels(reduce(DataFrame.unionByName, marked), ts_col)
 
 
 def windowed_count_stream(
@@ -65,32 +105,14 @@ def windowed_count_stream(
     window count.  Works on batch DataFrames too (withWatermark is a
     no-op in batch), which is how tests cross-check stream vs batch.
 
-    Rows keyed ``FLUSH_KEY`` advance the watermark but are excluded
-    from aggregation (see note above).
+    Close sentinels advance the watermark but are excluded from
+    aggregation (see note above).
     """
-    from flink_repartition_watermark_example_spark.streaming.eventtime import (
-        ensure_event_time,
-    )
-
-    marked = [
-        ensure_event_time(df, ts_col).withWatermark(ts_col, watermark_delay)
-        for df in sources
-    ]
-    unioned = marked[0]
-    for m in marked[1:]:
-        unioned = unioned.unionByName(m)
-    unioned = unioned.where(
-        F.col(ts_col) < F.lit(_FLUSH_CUTOFF).cast("timestamp")
-    )
-    return (
-        unioned.groupBy(F.window(F.col(ts_col), window_size), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("aggregate"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            F.col(key_col),
-            F.col("aggregate"),
-        )
+    return windowed_count(
+        _watermarked_union(sources, ts_col, watermark_delay),
+        ts_col,
+        [key_col],
+        window_size,
     )
 
 
@@ -123,38 +145,19 @@ def salted_windowed_count_stream(
     once, when the min-of-sources watermark passes the window end —
     tests assert stream == batch on a hot-key distribution.
     """
-    from flink_repartition_watermark_example_spark.streaming.eventtime import (
-        ensure_event_time,
-    )
-
-    marked = [
-        ensure_event_time(df, ts_col).withWatermark(ts_col, watermark_delay)
-        for df in sources
-    ]
-    unioned = marked[0]
-    for m in marked[1:]:
-        unioned = unioned.unionByName(m)
-    unioned = unioned.where(
-        F.col(ts_col) < F.lit(_FLUSH_CUTOFF).cast("timestamp")
-    )
-    salted = unioned.withColumn(
+    salted = _watermarked_union(sources, ts_col, watermark_delay).withColumn(
         "__salt",
         F.pmod(F.crc32(F.col(salt_from).cast("string")), F.lit(salt_buckets)),
     )
     partial = salted.groupBy(
         F.window(F.col(ts_col), window_size), F.col(key_col), F.col("__salt")
     ).agg(F.count(F.lit(1)).alias("__partial"))
-    return (
-        partial.groupBy(
-            F.window(F.col("window"), window_size), F.col(key_col)
-        )
-        .agg(F.sum("__partial").alias("aggregate"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            F.col(key_col),
-            F.col("aggregate"),
-        )
+    return windowed_agg(
+        partial,
+        "window",
+        [key_col],
+        [F.sum("__partial").alias("aggregate")],
+        window_size,
     )
 
 
@@ -170,27 +173,59 @@ class ReplayResult:
         return [r for _, rows in self.batches for r in rows]
 
 
-def write_close_sentinel(spark: SparkSession, partition_dir: str) -> None:
-    """Append source-close sentinel files to a partition dir (must be
-    written last — the file stream replays files in order).
+def _close_lit(dtype: T.DataType, ts: str):
+    """A ``dtype`` literal for a close-sentinel time: epoch nanos for the
+    legacy int64-nanos encoding, else the string cast to the column's
+    own timestamp type (NTZ or LTZ — the session tz is pinned UTC, so
+    both are the same instant)."""
+    if isinstance(dtype, T.LongType):
+        return F.lit(calendar.timegm(datetime.fromisoformat(ts).timetuple()) * 10**9)
+    return F.lit(ts).cast(dtype)
+
+
+def write_close_sentinel(
+    spark: SparkSession,
+    path: str,
+    values: Mapping[str, object] | None = None,
+    first_copies: int = 1,
+) -> T.StructType:
+    """Append the two source-close sentinel files to a file-stream
+    source dir, after its data files (the file source replays files in
+    modification-time order), and return the dir's schema.
 
     Two files, not one: the first advances the source watermark past
-    every real window at the end of batch N; window emission happens at
-    the start of a batch, so a second sentinel batch N+1 is needed to
-    flush — availableNow terminates once files are drained and runs no
-    further no-data batch."""
-    schema = spark.read.parquet(partition_dir).schema
-    for ts in (FLUSH_TS, "2100-01-02 00:00:00"):
-        df = (
-            spark.createDataFrame([(ts, FLUSH_KEY)], ["ts_s", "url"])
-            .select(
-                F.col("url"),
-                F.col("ts_s").cast("timestamp").alias("ts"),
-                F.lit("sentinel").alias("event_id"),
-            )
-            .select(*[F.col(f.name).cast(f.dataType) for f in schema])
+    every real window at the end of batch N; window emission and
+    event-time timeouts happen at the start of a batch, so a second
+    sentinel batch N+1 is needed to flush — availableNow terminates
+    once files are drained and runs no further no-data batch.
+
+    ``values``: the sentinel row's non-ts columns (NULL for every
+    column left out).  A query that filters before its watermark node
+    must give the sentinel values that pass that filter, or the
+    sentinel never reaches the watermark.
+
+    ``first_copies``: copies of the first sentinel file.  With
+    ``maxFilesPerTrigger`` = k > 1 the flush needs a batch boundary
+    between the two sentinels; k copies of the first guarantee it:
+    ceil((P+1+k)/k) = ceil((P+1)/k)+1, so the second always lands at
+    least one batch after the first copy.  The duplicates are dropped
+    with every other sentinel row."""
+    values = values or {}
+    schema = spark.read.parquet(path).schema
+    for ts in _CLOSE_TIMES:
+        sentinel = spark.range(1).select(
+            *[
+                (
+                    _close_lit(f.dataType, ts)
+                    if f.name == "ts"
+                    else F.lit(values.get(f.name)).cast(f.dataType)
+                ).alias(f.name)
+                for f in schema.fields
+            ]
         )
-        df.coalesce(1).write.mode("append").parquet(partition_dir)
+        for _ in range(first_copies if ts == FLUSH_TS else 1):
+            sentinel.coalesce(1).write.mode("append").parquet(path)
+    return schema
 
 
 def run_skew_experiment(

@@ -26,6 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from flink_repartition_watermark_example_spark.streaming.eventtime import (
+    ensure_event_time,
+)
+from flink_repartition_watermark_example_spark.streaming.replica import (
+    drop_close_sentinels,
+)
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -96,17 +103,14 @@ def sessionize(
     events: DataFrame,
     gap: str = "30 minutes",
     watermark_delay: str = "0 seconds",
-    drop_after: str | None = None,
 ) -> DataFrame:
     """Inactivity-gap sessions per user over a streaming DataFrame.
     Emits each session exactly once, when the watermark passes its gap
     horizon (append semantics, like the reference's window firing).
 
-    ``drop_after`` excludes rows at/after the given timestamp from
-    sessionization while still letting them advance the watermark —
-    the close-sentinel replay pattern (streaming/replica.py): the
-    predicate sits above the EventTimeWatermark node because it
-    references the event-time column."""
+    Close-sentinel rows (streaming/replica.py) advance the watermark,
+    which fires the last sessions' timeouts at end of input, and are
+    dropped after it, so they never open a session of their own."""
     gap_seconds = {"30 minutes": 1800}.get(gap)
     if gap_seconds is None:
         parts = gap.split()
@@ -116,17 +120,9 @@ def sessionize(
     def fn(key, pdfs, state):
         return _sessionize_group(key, pdfs, state, gap_seconds)
 
-    from flink_repartition_watermark_example_spark.streaming.eventtime import (
-        ensure_event_time,
-    )
-
     marked = ensure_event_time(events).withWatermark("ts", watermark_delay)
-    if drop_after is not None:
-        from pyspark.sql import functions as F
-
-        marked = marked.where(F.col("ts") < F.lit(drop_after).cast("timestamp"))
     return (
-        marked
+        drop_close_sentinels(marked)
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,

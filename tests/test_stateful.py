@@ -7,6 +7,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from flink_repartition_watermark_example_spark.sources.tables import load_table
+from flink_repartition_watermark_example_spark.streaming.replica import (
+    write_close_sentinel,
+)
 from flink_repartition_watermark_example_spark.streaming.stateful import sessionize
 import pytest
 
@@ -17,17 +20,15 @@ def test_custom_sessionize_equals_builtin(spark, sf_dir, tmp_path):
     src = str(tmp_path / "events_stream")
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     # sorted single file so event time is in arrival order, then the
-    # close sentinel flushes the final open sessions
+    # close sentinels: the first advances the watermark past every open
+    # session's gap horizon, the second drives the batch in which the
+    # event-time timeouts fire.  sessionize drops the sentinel rows
+    # after its watermark, so none of them opens a session.
     ev.orderBy("ts").coalesce(1).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    write_close_sentinel_compatible(spark, src, schema)
+    schema = write_close_sentinel(spark, src)
 
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    # Filter the sentinel key on the OUTPUT, not the input: an input
-    # predicate on a non-event-time column is pushed below the
-    # EventTimeWatermark node and would hide the sentinel from the
-    # watermark collector (see streaming/replica.py).
-    out = sessionize(stream, gap="30 minutes").where(F.col("user_id") >= 0)
+    out = sessionize(stream, gap="30 minutes")
     q = (
         out.writeStream.format("memory")
         .queryName("sessions_custom")
@@ -56,22 +57,3 @@ def test_custom_sessionize_equals_builtin(spark, sf_dir, tmp_path):
     )
     assert custom == builtin
 
-
-def write_close_sentinel_compatible(spark, path, schema):
-    """Two far-future rows (separate files, written last) matching the
-    (user_id, ts) schema: the first advances the watermark past every
-    open session's gap horizon, the second drives the batch in which
-    the event-time timeouts actually fire (timeout processing happens
-    at the start of the batch AFTER the watermark advance)."""
-    from pyspark.sql import functions as F
-
-    for ts in ("2100-01-01 00:00:00", "2100-01-02 00:00:00"):
-        df = (
-            spark.createDataFrame([(ts,)], ["ts_s"])
-            .select(
-                F.lit(-1).cast("long").alias("user_id"),
-                F.col("ts_s").cast("timestamp").alias("ts"),
-            )
-            .select(*[F.col(f.name).cast(f.dataType) for f in schema])
-        )
-        df.coalesce(1).write.mode("append").parquet(path)

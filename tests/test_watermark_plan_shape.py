@@ -1,13 +1,13 @@
 """Plan-shape guard for the streaming interval joins' watermark wiring.
 
-The close-sentinel replay (queries_streaming._replay_dir) keeps each
+The close-sentinel replay (queries_streaming._replay) keeps each
 join side's watermark alive by making sentinel rows survive every
 filter Catalyst places BELOW that side's EventTimeWatermark node.
 Today those filters are the user-written ``event_type = <side>`` and
 the *inferred* ``isnotnull(user_id)`` that Catalyst derives from the
 join's equi-key and pushes into the scan — the exact behavior that
 once froze the purchase-side watermark when sentinels carried NULL
-user_id (see the _replay_dir docstring).
+user_id (see the _replay docstring).
 
 These tests pin that contract against Spark upgrades, analysis-only
 (no stream is started):
@@ -92,7 +92,7 @@ def _assert_sentinel_safe(
             f"inferred isnotnull(user_id) no longer sits below the "
             f"{s.event_time} watermark — Catalyst's pushdown behavior "
             f"changed; revisit the sentinel notes in "
-            f"queries_streaming._replay_dir: "
+            f"queries_streaming._replay: "
             f"{[sql for sql, _ in s.below_filters]}"
         )
 
