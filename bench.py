@@ -29,6 +29,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_repartition_watermark_example_spark import get_spark
+from flink_repartition_watermark_example_spark.session import (
+    TIER4_THRESHOLDS,
+    vm_options,
+)
 from flink_repartition_watermark_example_spark.queries import EXTRA_QUERIES, QUERIES
 
 # Extras benched alongside the primary 50.  A query that rotates out of
@@ -188,7 +192,13 @@ ACCEPTED_REGRESSIONS = {
 OWN_KEYS = {"metric", "value", "unit", "queries", "spread", "reps",
             "reruns", "sf", "accepted_regressions", "cluster_build_sec",
             "kmeans_train_sec", "lsh_index_build_sec",
-            "stream_shuffle_partitions", "consumes", "cpus", "python"}
+            "stream_shuffle_partitions", "consumes", "cpus", "python",
+            "jit_tier4"}
+
+
+def jit_tier4(spark) -> dict[str, int]:
+    """The live driver JVM's tier-4 (C2) compile thresholds."""
+    return {k: int(v) for k, (v, _) in vm_options(spark, TIER4_THRESHOLDS).items()}
 
 
 def compact_line(
@@ -196,6 +206,7 @@ def compact_line(
     sf: float,
     prev: dict | None = None,
     cpus: int | None = None,
+    jit: dict[str, int] | None = None,
 ) -> str:
     """The stdout summary line (VERDICT r10 #3): the driver tail-
     captures a bounded (~2000-char) window and the full per-query map
@@ -216,7 +227,10 @@ def compact_line(
     speedup, so the line then reads null, as it does when ``cpus`` is
     unknown.  ``python`` is this interpreter's version: a Python task's
     fixed cost differs between CPython 3.10–3.12 and 3.13 (the engine
-    worker daemon's zip-cache guard applies only below 3.13)."""
+    worker daemon's zip-cache guard applies only below 3.13).
+    ``jit_tier4`` is ``jit``, the driver JVM's effective tier-4 (C2)
+    compile thresholds: the JVM rows' warm-up cost depends on them
+    (session.py's JIT compile policy)."""
     import hashlib
     import math
 
@@ -261,6 +275,7 @@ def compact_line(
             "sf": sf,
             "cpus": cpus,
             "python": platform.python_version(),
+            "jit_tier4": jit,
         },
         separators=(",", ":"),
     )
@@ -271,6 +286,7 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark(app_name="engine-bench")
     cpus = spark.sparkContext.defaultParallelism
+    jit = jit_tier4(spark)
 
     # JVM/codegen warmup + one touch per table so the first measured
     # query isn't charged for JIT or file-index building.
@@ -409,11 +425,12 @@ def main() -> None:
             "sf": sf,
             "cpus": cpus,
             "python": platform.python_version(),
+            "jit_tier4": jit,
         }
     )
     with open(out_path, "w") as f:
         f.write(full + "\n")
-    print(compact_line(timings, sf, prev, cpus), flush=True)
+    print(compact_line(timings, sf, prev, cpus, jit), flush=True)
 
 
 if __name__ == "__main__":

@@ -51,11 +51,45 @@ for correctness and 100 TB scale are made once:
   ``spark.executorEnv.PYTHONPATH`` is set to the engine's root: workers
   then find it from any working directory.  ``extra_conf`` may set
   ``DAEMON_MODULE_CONF`` back to ``PYSPARK_DAEMON``, Spark's default.
+- **JIT compile policy** — ``DRIVER_JAVA_OPTIONS`` raises HotSpot's
+  tier-4 (C2) thresholds to 4x JDK 17's defaults
+  (``TIER4_THRESHOLDS``: invocation 20000, min-invocation 2400,
+  compile 60000, back-edge 160000).  In local mode the driver JVM also
+  runs the executors, so the one pin covers every Spark thread.  The
+  engine's sessions are short, and most of their JVM CPU went to C2
+  compiling framework code that runs a few hundred times per
+  micro-batch: a JFR recording of one perfbench ``skew_backfill`` run
+  (4 vCPU, Java 17.0.20) counted 3,017 C2 compiles taking 12.7 s
+  against 3.1 s of C1 work, spread over Catalyst planning, py4j,
+  pickling and Hadoop conf, while executor task threads used about
+  0.35 s per drain.  C1 still compiles everything warm; C2 spends its
+  work on code that stays hot (a codegen'd row loop reaches 160k
+  back-edges within a fraction of a second at any real input size).
+  Same box, interleaved parent/pin pairs of ``perfbench/run.py
+  --seconds 5 --trace 0``: ``skew_backfill`` ``cpu_s`` median
+  5.48 → 4.29 s over 20 pairs (17 lower; in each of the other three a
+  slow first drain left the 5-s window a single drain), compile time
+  on the first two timed drains 3.7/2.7 → 2.5/1.0 s, ``index_replay``
+  2.61 → 2.01 s and ``batch_mix`` 2.82 → 2.56 s; ``setup_s``, peak
+  RSS, drain wall time and the steady state after ~28 drains (2.1
+  CPU-s) did not move.  In sizing runs 2x gave about −20 % and 8x no
+  more than 4x.  What it costs: code that runs a few thousand times
+  stays in profiled C1 longer, so a traced late drain plans ~20 %
+  slower and ``bench.py``'s sf0.1 total read 41.7 → 43.5 s (medians
+  of 4 runs each, inside the 40.8–46.7 s spread of all eight).  C1-only
+  compilation (``TieredStopAtLevel=1``) is cheaper still in short
+  runs but made ``bench.py``'s JVM-bound rows 1.5–1.9x slower, so C2
+  stays on.  The pin does not reach executors on a real cluster,
+  which are long-lived and take ``spark.executor.extraJavaOptions``.
+  ``extra_conf`` may set ``spark.driver.extraJavaOptions``; that
+  replaces the whole string, GCLocker retries included, so append to
+  ``DRIVER_JAVA_OPTIONS``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import SparkSession
 
@@ -72,6 +106,19 @@ DAEMON_MODULE_CONF = "spark.python.daemon.module"
 ENGINE_WORKER_DAEMON = "flink_repartition_watermark_example_spark.worker_daemon"
 PYSPARK_DAEMON = "pyspark.daemon"
 ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TIER4_THRESHOLDS = {
+    "Tier4InvocationThreshold": 20000,
+    "Tier4MinInvocationThreshold": 2400,
+    "Tier4CompileThreshold": 60000,
+    "Tier4BackEdgeThreshold": 160000,
+}
+DRIVER_JAVA_OPTIONS = " ".join(
+    [
+        "-XX:+UnlockDiagnosticVMOptions",
+        "-XX:GCLockerRetryAllocationCount=100",
+        *(f"-XX:{flag}={value}" for flag, value in TIER4_THRESHOLDS.items()),
+    ]
+)
 
 
 def _default_parallelism() -> int:
@@ -89,6 +136,10 @@ def get_spark(
     On a real cluster ``master`` comes from spark-submit; locally we
     default to ``local[$SPARK_GRAFT_CPUS]`` which models a
     32-slot executor pool in one JVM.
+
+    ``extra_conf`` is applied last, so each of its values replaces the
+    pinned one whole: a ``spark.driver.extraJavaOptions`` override
+    drops ``DRIVER_JAVA_OPTIONS`` unless it appends to it.
     """
     cpus = _default_parallelism()
     builder = (
@@ -153,12 +204,9 @@ def get_spark(
         # OutOfMemoryError with most of the heap free — observed
         # reproducibly on the sf1 exploded-aggregation stages.  With
         # more retries the allocation succeeds and TaskMemoryManager
-        # falls back to its normal spill path instead of dying.
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:+UnlockDiagnosticVMOptions "
-            "-XX:GCLockerRetryAllocationCount=100",
-        )
+        # falls back to its normal spill path instead of dying.  The
+        # same string pins the JIT compile policy (module docstring).
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         # Managed-table warehouse outside the repo (bucketed tables,
         # storage.py); real deployments point this at the lake.
         .config("spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse")
@@ -194,3 +242,20 @@ def _quiet_bounded_window_warnings(spark: SparkSession) -> None:
         )
     except Exception:
         pass
+
+
+def vm_options(
+    spark: SparkSession, names: Iterable[str]
+) -> dict[str, tuple[str, str]]:
+    """Each HotSpot flag's (value, origin) in the live driver JVM, as
+    ``HotSpotDiagnosticMXBean.getVMOption`` reports it; the origin is
+    ``VM_CREATION`` for a flag set on the JVM's command line."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    options = {}
+    for name in names:
+        option = bean.getVMOption(name)
+        options[name] = (option.getValue(), option.getOrigin().toString())
+    return options

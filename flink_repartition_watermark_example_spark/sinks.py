@@ -233,9 +233,10 @@ def forget_keys(
     is not rewritten.  Maintenance path only, like compaction.
 
     Cost: the forget set is deduplicated once per call and pinned
-    (``localCheckpoint``), so each version pays ONE broadcast anti-join
-    pass (the rewrite) over the pinned set; the before/after row
-    counts come from parquet footers.
+    (``localCheckpoint``), and the store's schema is inferred once per
+    call (every version shares it), so each version pays ONE broadcast
+    anti-join pass (the rewrite) over the pinned set and no schema
+    inference; the before/after row counts come from parquet footers.
 
     Returns {version: rows_removed}.
     """
@@ -247,9 +248,13 @@ def forget_keys(
         .hint("broadcast")
     )
     store.recover()
+    vs = _snapshot_versions(snapshot_path)
+    schema = store.snapshot(spark).schema if vs else None
     return {
-        v: store.rewrite(spark, v, lambda df: df.join(keys, key_cols, "left_anti"))
-        for v in _snapshot_versions(snapshot_path)
+        v: store.rewrite(
+            spark, v, lambda df: df.join(keys, key_cols, "left_anti"), schema
+        )
+        for v in vs
     }
 
 

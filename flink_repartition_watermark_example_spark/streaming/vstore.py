@@ -294,16 +294,22 @@ class VersionedStore:
         return doomed
 
     def rewrite(
-        self, spark: SparkSession, n: int, fn: Callable[[DataFrame], DataFrame]
+        self,
+        spark: SparkSession,
+        n: int,
+        fn: Callable[[DataFrame], DataFrame],
+        schema: StructType | None = None,
     ) -> int:
         """Replace ``v{n}`` of a snapshot store by ``fn(v{n})``,
         written as given, and return the rows that removed (footer
         counts, no Spark job).  A rewrite that removes none is
         discarded; one that does is marked ``_REWRITE`` and installed
         by :meth:`recover`, so a crash leaves ``v{n}`` whole,
-        rewritten or transiently absent, never short."""
+        rewritten or transiently absent, never short.  ``schema``, the
+        store's, skips the schema-inference job of opening ``v{n}``."""
         tmp = self._stage_dir(n)
-        fn(spark.read.parquet(self._vdir(n))).write.mode("overwrite").parquet(tmp)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        fn(reader.parquet(self._vdir(n))).write.mode("overwrite").parquet(tmp)
         removed = parquet_rows(self._vdir(n)) - parquet_rows(tmp)
         if removed == 0:
             shutil.rmtree(tmp)

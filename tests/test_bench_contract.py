@@ -104,6 +104,22 @@ def test_artifacts_record_the_python_version():
     assert "python" in bench.OWN_KEYS
 
 
+def test_artifacts_record_the_jit_policy(spark):
+    # The JVM rows' warm-up cost depends on the driver's C2 compile
+    # thresholds (session.py pins them), so the line and the artifact
+    # carry the values the live JVM runs with.
+    jit = bench.jit_tier4(spark)
+    assert jit == {
+        "Tier4InvocationThreshold": 20000,
+        "Tier4MinInvocationThreshold": 2400,
+        "Tier4CompileThreshold": 60000,
+        "Tier4BackEdgeThreshold": 160000,
+    }
+    d = json.loads(bench.compact_line({"a": 1.0}, 0.1, None, cpus=4, jit=jit))
+    assert d["jit_tier4"] == jit
+    assert "jit_tier4" in bench.OWN_KEYS
+
+
 def test_consumes_map_names_benched_queries_and_build_keys():
     # VERDICT r12 #6: every consumes entry must reference a benched
     # query and an artifact build key the harness actually writes

@@ -310,11 +310,12 @@ def test_forget_keys_interrupted_swap_leaves_no_short_version(
 
 def test_forget_keys_counts_rows_from_parquet_footers(spark, tmp_path):
     """The before/after row counts of each version come from parquet
-    footers, not count() jobs, and the forget set is deduplicated once
-    per call: one call over three versions runs 11 Spark jobs, two to
-    pin the forget set and three per version's rewrite, where two
-    count()s per version made it 27 and a per-version dedup made it
-    12."""
+    footers, not count() jobs, and the forget set and the store's
+    schema are each found once per call: one call over three versions
+    runs 9 Spark jobs, two to pin the forget set, one to infer the
+    schema and two per version's rewrite, where two count()s per
+    version made it 27, a per-version dedup 12 and a per-version schema
+    inference 11."""
     from flink_repartition_watermark_example_spark.sinks import forget_keys
 
     snap = str(tmp_path / "snapshot")
@@ -330,4 +331,4 @@ def test_forget_keys_counts_rows_from_parquet_footers(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert jobs <= 11, jobs
+    assert jobs <= 9, jobs
