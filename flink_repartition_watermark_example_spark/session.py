@@ -66,17 +66,20 @@ for correctness and 100 TB scale are made once:
   work on code that stays hot (a codegen'd row loop reaches 160k
   back-edges within a fraction of a second at any real input size).
   Same box, interleaved parent/pin pairs of ``perfbench/run.py
-  --seconds 5 --trace 0``: ``skew_backfill`` ``cpu_s`` median
-  5.48 → 4.29 s over 20 pairs (17 lower; in each of the other three a
-  slow first drain left the 5-s window a single drain), compile time
-  on the first two timed drains 3.7/2.7 → 2.5/1.0 s, ``index_replay``
-  2.61 → 2.01 s and ``batch_mix`` 2.82 → 2.56 s; ``setup_s``, peak
-  RSS, drain wall time and the steady state after ~28 drains (2.1
-  CPU-s) did not move.  In sizing runs 2x gave about −20 % and 8x no
-  more than 4x.  What it costs: code that runs a few thousand times
-  stays in profiled C1 longer, so a traced late drain plans ~20 %
-  slower and ``bench.py``'s sf0.1 total read 41.7 → 43.5 s (medians
-  of 4 runs each, inside the 40.8–46.7 s spread of all eight).  C1-only
+  --seconds 5 --trace 0``: the ``skew_backfill`` ``cpu_s`` gain is
+  unresolved.  The median moved 5.48 → 4.29 s over 20 pairs, but only
+  17 were lower, short of a 9-in-10 win rate; in each of the other
+  three a slow first drain left the 5-s window a single drain.
+  Compile time on the first two timed drains fell 3.7/2.7 → 2.5/1.0 s;
+  ``index_replay`` moved 2.61 → 2.01 s and ``batch_mix``
+  2.82 → 2.56 s (not claimed); ``setup_s``, peak RSS, drain wall time
+  and the steady state after ~28 drains (2.1 CPU-s) did not move.  In
+  sizing runs 2x gave about −20 % and 8x no more than 4x.  What it
+  costs: code that runs a few thousand times stays in profiled C1
+  longer, so a traced late drain plans ~20 % slower (stream
+  ``queryPlanning`` 113 → 137 ms), and ``bench.py``'s sf0.1 total
+  median moved 41.7 → 43.5 s (4 runs each) inside the 40.8–46.7 s
+  spread of all eight, so whether it slowed is unresolved.  C1-only
   compilation (``TieredStopAtLevel=1``) is cheaper still in short
   runs but made ``bench.py``'s JVM-bound rows 1.5–1.9x slower, so C2
   stays on.  The pin does not reach executors on a real cluster,

@@ -249,7 +249,9 @@ def forget_keys(
     )
     store.recover()
     vs = _snapshot_versions(snapshot_path)
-    schema = store.snapshot(spark).schema if vs else None
+    if not vs:
+        return {}
+    schema = store.snapshot(spark).schema
     return {
         v: store.rewrite(
             spark, v, lambda df: df.join(keys, key_cols, "left_anti"), schema

@@ -298,18 +298,19 @@ class VersionedStore:
         spark: SparkSession,
         n: int,
         fn: Callable[[DataFrame], DataFrame],
-        schema: StructType | None = None,
+        schema: StructType,
     ) -> int:
         """Replace ``v{n}`` of a snapshot store by ``fn(v{n})``,
         written as given, and return the rows that removed (footer
         counts, no Spark job).  A rewrite that removes none is
         discarded; one that does is marked ``_REWRITE`` and installed
         by :meth:`recover`, so a crash leaves ``v{n}`` whole,
-        rewritten or transiently absent, never short.  ``schema``, the
-        store's, skips the schema-inference job of opening ``v{n}``."""
+        rewritten or transiently absent, never short.  ``v{n}`` is
+        opened with ``schema``, the store's, so no schema-inference
+        job runs per version."""
         tmp = self._stage_dir(n)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        fn(reader.parquet(self._vdir(n))).write.mode("overwrite").parquet(tmp)
+        src = spark.read.schema(schema).parquet(self._vdir(n))
+        fn(src).write.mode("overwrite").parquet(tmp)
         removed = parquet_rows(self._vdir(n)) - parquet_rows(tmp)
         if removed == 0:
             shutil.rmtree(tmp)

@@ -1,8 +1,8 @@
 """The driver-facing bench contract (VERDICT r10 #3): stdout must be
 ONE JSON line small enough for the driver's ~2000-char tail window —
 BENCH_r{N}.json.parsed was null for four rounds because the full
-per-query map outgrew it.  No SparkSession needed here: the line
-builder is pure."""
+per-query map outgrew it.  The line builder is pure; only the JIT
+policy test reads a live JVM."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ import platform
 import pytest
 
 import bench
+from flink_repartition_watermark_example_spark.session import TIER4_THRESHOLDS
 
 
 def _fake_timings():
@@ -109,12 +110,7 @@ def test_artifacts_record_the_jit_policy(spark):
     # thresholds (session.py pins them), so the line and the artifact
     # carry the values the live JVM runs with.
     jit = bench.jit_tier4(spark)
-    assert jit == {
-        "Tier4InvocationThreshold": 20000,
-        "Tier4MinInvocationThreshold": 2400,
-        "Tier4CompileThreshold": 60000,
-        "Tier4BackEdgeThreshold": 160000,
-    }
+    assert jit == TIER4_THRESHOLDS
     d = json.loads(bench.compact_line({"a": 1.0}, 0.1, None, cpus=4, jit=jit))
     assert d["jit_tier4"] == jit
     assert "jit_tier4" in bench.OWN_KEYS

@@ -30,12 +30,6 @@ def test_pinned_flags_reach_the_jvm(spark):
     }
 
 
-def test_java_options_are_pinned_and_extra_conf_override_is_kept(
-    session_builder,
-):
+def test_java_options_are_pinned(session_builder):
     session.get_spark()
     assert session_builder.conf[JAVA_OPTIONS_CONF] == DRIVER_JAVA_OPTIONS
-    # An override replaces the whole string, so a caller appends.
-    override = DRIVER_JAVA_OPTIONS + " -XX:TieredStopAtLevel=1"
-    session.get_spark(extra_conf={JAVA_OPTIONS_CONF: override})
-    assert session_builder.conf[JAVA_OPTIONS_CONF] == override
