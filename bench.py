@@ -41,9 +41,7 @@ from flink_repartition_watermark_example_spark.queries import EXTRA_QUERIES, QUE
 # query).  The uncapped streaming_cluster_map equality witness stays out:
 # it is quadratic by contract on the degenerate template bucket.
 BENCH_EXTRAS = [
-    "cosine_topk_fast",
-    "ivf_ann_topk_fast",
-    "pq_adc_topk_fast",
+    "pq_adc_topk",
     "multi_join_revenue_bucketed",
     "image_decode_stats",
     "streaming_hll_distinct_users",
@@ -158,13 +156,14 @@ ACCEPTED_REGRESSIONS = {
     # so their cross-round deltas under ~spread are not regressions:
     "hard_negative_mining": {
         "round": 13,
-        "median_sec": 2.54,
-        "spread_sec": 0.91,
-        "reason": "every rep legitimately re-executes two Arrow-kernel "
-        "corpus scans (brute-force cosine_topk pin + ivf_topk) whose "
-        "32-way python-worker scheduling varies ±0.4 s on this box; "
-        "isolated 5-rep spread is 36% of median with no plan change "
-        "(plans/r12 dumps unchanged)",
+        "median_sec": 0.63,
+        "spread_sec": 0.19,
+        "reason": "every rep legitimately re-executes two one-pass "
+        "corpus scans (the pinned exact top-5 and the IVF top-15), each "
+        "with its driver collects; re-measured isolated on a 4-core box "
+        "(scripts/record_rebaseline.py, 9 reps, two runs): median "
+        "0.60-0.67 s, spread 0.18-0.19 s, about 30% of median with no "
+        "plan change",
     },
     "span_dedup_stats": {
         "round": 13,

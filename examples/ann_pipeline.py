@@ -11,7 +11,7 @@ component:
   3. search       — three paths over the same corpus:
                       exact      cosine_topk        (the baseline)
                       trained    ivf_trained_topk   (k-means lists)
-                      production ivf_topk_fast      (BLAS mapInPandas)
+                      static     ivf_topk           (sampled lists)
   4. measure      — recall@5 of each approximate path vs the baseline
 
 Run:  python examples/ann_pipeline.py [sf_dir]
@@ -55,8 +55,6 @@ def main() -> None:
         "exact (cosine_topk)": SIM.cosine_topk,
         "trained IVF (ivf_trained_topk)": KM.ivf_trained_topk,
         "static IVF (ivf_topk)": SIM.ivf_topk,
-        "production BLAS (ivf_topk_fast)": SIM.ivf_topk_fast,
-        "production BLAS (cosine_topk_fast)": SIM.cosine_topk_fast,
     }
     results, times = {}, {}
     for name, fn in paths.items():

@@ -1,13 +1,16 @@
 """Similarity search over the ``embeddings`` table (north-star
-surface): brute-force cosine top-k as the correctness baseline, and a
-random-hyperplane LSH-bucketed path as the scale variant.
+surface): exact cosine top-k as the correctness baseline, and the LSH,
+IVF and PQ approximate paths beside it.
 
 Scale shapes:
-- Brute force is O(|Q|·|N|) but |Q| (the query set) is broadcast, so
-  the big side never shuffles — per-executor it's a tight
-  codegen'd loop over zip_with/aggregate.  Right answer for small
-  query sets; at 100 TB of corpus it's one full scan per batch of
-  queries.
+- Exact top-k, IVF top-k and the IVF recall pair share ONE fold-exact
+  scan (`_fold_topk_scan`).  The query batch — and for IVF the
+  centroids and each query's probe ranks — is collected once on the
+  driver; each Arrow batch of corpus vectors is scored in a single
+  mapInPandas pass and only that batch's top-k per query leaves it (a
+  map-side combine), so the ranking window sees O(k·batches·|Q|) rows
+  however large the corpus is.  No join, no shuffle of the corpus
+  beyond the fan-out; at 100 TB it's one corpus scan per query batch.
 - The LSH path buckets both sides by hyperplane sign-bits first, so
   candidate generation is an equi-join on bucket id — sublinear
   per-query work at the cost of recall.  The hyperplanes are
@@ -55,34 +58,16 @@ def cosine_topk(
     num_queries: int = 10,
     k: int = 5,
 ) -> DataFrame:
-    """Brute-force exact top-k: for each query vector (vec_id <
-    num_queries), the k nearest corpus vectors (vec_id >= num_queries)
-    by cosine, vec_id as the deterministic tiebreak.
+    """Exact top-k: for each query vector (vec_id < num_queries), the k
+    nearest corpus vectors (vec_id >= num_queries) by cosine, vec_id as
+    the deterministic tiebreak.
 
-    The query side is broadcast — the corpus scan never shuffles; the
-    only wide operation is the per-query top-k (TakeOrdered per
-    window partition over k·|Q| rows).
-
-    Parity-preserving perf: both sides carry their norm as a column
-    computed once (identical fold ⇒ identical double), and each
-    scored pair runs through the shared fold-exact numpy kernel stage
-    (`_score_pairs`) — bit-identical doubles to the interpreted
-    expression folds at Arrow-batch throughput."""
-    q = emb.where(F.col("vec_id") < num_queries).select(
-        F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
-    ).withColumn("nqv", norm(F.col("qv")))
-    c = fan_out(emb.where(F.col("vec_id") >= num_queries), "vec_id").select(
-        "vec_id", as_double("embedding").alias("v")
-    ).withColumn("nv", norm(F.col("v")))
-    scored = _score_pairs(c.crossJoin(F.broadcast(q)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos_sim", F.col("rank").cast("long").alias("rank"))
-    )
+    One pass of `_fold_topk_scan` scores every corpus row against the
+    collected query batch and keeps each Arrow batch's top-k per
+    query; the shared window ranks the survivors.  The corpus never
+    joins anything, and the doubles are the DuckDB oracle's (the
+    scan's fold-exact kernels)."""
+    return _topk_cos(_fold_topk_scan(emb, num_queries, k), k)
 
 
 def lsh_ann_topk(
@@ -127,16 +112,8 @@ def lsh_ann_topk(
     c = _bucketize_fold(
         fan_out(raw.where(F.col("vec_id") >= num_queries), "vec_id"), planes
     )
-    scored = _score_pairs(
-        c.join(F.broadcast(q), F.col("probe") == F.col("bucket"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos_sim", F.col("rank").cast("long").alias("rank"))
+    return _topk_cos(
+        _score_pairs(c.join(F.broadcast(q), F.col("probe") == F.col("bucket"))), k
     )
 
 
@@ -303,8 +280,7 @@ def exact_kth_smallest(df: DataFrame, col: str, k: int, buckets: int = 128,
 # rows with numpy, so they are bit-identical to the interpreted
 # expression folds (asserted in tests/test_similarity_ann.py) at
 # ~50× the throughput.  np.matmul/BLAS would reorder the additions
-# (pairwise/SIMD summation) and break value-hash parity — that's the
-# `*_fast` twins' territory.
+# (pairwise/SIMD summation) and break value-hash parity.
 
 
 def _fold_dot_matrix(V, C):
@@ -424,123 +400,57 @@ def ivf_topk(
     """Approximate top-k via an IVF-flat coarse index — the k-means-
     family counterpart of `lsh_ann_topk`.  Index build collects the 16
     centroid vectors to the driver (tiny, the classic broadcast-model
-    pattern); assignment scans the corpus ONCE with no shuffle; each
-    query probes its `nprobe` nearest lists, so only ~nprobe/16 of the
-    corpus is scored per query.
+    pattern); each query probes its `nprobe` nearest lists, so only
+    ~nprobe/16 of the corpus is scored per query.  Assignment and
+    scoring are one `_fold_topk_scan` pass: the corpus is scanned once
+    and never joined.
 
     Scale shape: at 100 TB the index build samples/trains centroids
-    once and ships them in the task closure exactly as here; candidate
-    generation stays a broadcast hash join on list id.  Recall < 1 by
-    construction; `cosine_topk` is the exact baseline.
+    once and ships them in the task closure exactly as here.  Recall <
+    1 by construction; `cosine_topk` is the exact baseline.
 
-    Parity + perf: all cosines run through the fold-exact numpy
-    kernels above — Arrow-batched mapInPandas stages whose doubles are
-    bit-identical to both the interpreted expression folds
-    (`ivf_topk_hof`, the retained cross-check) and the DuckDB oracle's
-    list_reduce, while scoring whole row batches per dimension step.
-    This replaced 17 interpreted folds per corpus row (2.7 s at sf0.1)
-    with vectorized kernels at the same value hashes."""
-    import numpy as np
-    import pandas as pd
+    Filtered search: `corpus_pred` restricts the INDEXED side only —
+    queries and centroids always come from the full table, so the
+    index geometry is stable and the predicate lands in the parquet
+    scan under the scan's kernel (pre-filter, not post-filter:
+    non-matching rows are never decoded, assigned, or scored).  The
+    probe widens by the inverse selectivity (see `_fold_topk_scan`).
 
-    cents = _centroids(emb)
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    C = np.array([cv for _, cv in cents], dtype=np.float64)
-    cnorms = _fold_norm(C)
+    `per_list_top1` is diversified retrieval: only the best hit per
+    probed list enters the final ranking, so the top-k spans k
+    DISTINCT coarse cells (the cheap, fully-distributed stand-in for
+    MMR-style diversification — cells are the diversity buckets the
+    index already maintains); the result gains a `list_id` column.
 
-    def assign_probes(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nv = _fold_norm(V)
-            cos = _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :])
-            qids, qvs, nqvs, lists = [], [], [], []
-            for i in range(len(pdf)):
-                order = np.lexsort((cids, -cos[i]))  # cos desc, cid asc
-                for li in order[:nprobe]:
-                    qids.append(pdf["vec_id"].iloc[i])
-                    qvs.append(pdf["v"].iloc[i])
-                    nqvs.append(nv[i])
-                    lists.append(cids[li])
-            yield pd.DataFrame(
-                {"query_id": qids, "qv": qvs, "nqv": nqvs, "list_id": lists}
-            )
-
-    v = emb.select("vec_id", as_double("embedding").alias("v"))
-    # Filtered search: `corpus_pred` restricts the INDEXED side only —
-    # queries and centroids always come from the full table, so the
-    # index geometry is stable and the predicate lands in the parquet
-    # scan under the assignment stage (pre-filter, not post-filter:
-    # non-matching rows are never decoded, assigned, or scored).
-    #
-    # ADAPTIVE NPROBE (VERDICT r9 #5): a selective predicate thins
-    # every list by ~the selectivity s, so a fixed nprobe sees ~s of
-    # its usual candidates — the measured starvation (0.8/5 mean hits
-    # at s~0.5).  Widen the probe by the inverse selectivity,
-    # integer-ceil so both engines compute the identical width:
-    # nprobe' = min(#lists, ceil(nprobe * total / kept)).  Two scalar
-    # counts (the same pushed-filter scan the index pays anyway);
-    # the scan stays a pre-filter.
-    corpus_src = emb.where(corpus_pred) if corpus_pred is not None else emb
-    if corpus_pred is not None:
-        total = emb.where(F.col("vec_id") >= num_queries).count()
-        kept = corpus_src.where(F.col("vec_id") >= num_queries).count()
-        if kept == 0:
-            raise ValueError("corpus_pred filters out every corpus vector")
-        nprobe = min(len(cents), (nprobe * total + kept - 1) // kept)
-    cv = corpus_src.select("vec_id", as_double("embedding").alias("v"))
-    corpus = _closure_assignment(
-        fan_out(cv.where(F.col("vec_id") >= num_queries), "vec_id"), cents
+    Parity: every double is bit-identical to both the interpreted
+    expression folds (`ivf_topk_hof`, the retained cross-check) and
+    the DuckDB oracle's list_reduce."""
+    scored = _fold_topk_scan(
+        emb, num_queries, k, (nprobe,), corpus_pred, per_list_top1
     )
-    q = v.where(F.col("vec_id") < num_queries).mapInPandas(
-        assign_probes,
-        schema="query_id long, qv array<double>, nqv double, list_id long",
-    )
-    scored = _score_pairs(
-        corpus.join(F.broadcast(q), "list_id"),
-        carry=("list_id",) if per_list_top1 else (),
-    )
-    if per_list_top1:
-        # Diversified retrieval: keep only the best hit per probed
-        # list before the global ranking, so the final top-k spans k
-        # DISTINCT coarse cells (the cheap, fully-distributed stand-in
-        # for MMR-style diversification — cells are the diversity
-        # buckets the index already maintains).  The per-(query, list)
-        # argmax is a partitioned window over the probe-bounded
-        # candidate set; nothing here adds driver work or a new
-        # shuffle shape.
-        wl = Window.partitionBy("query_id", "list_id").orderBy(
-            F.col("cos_sim").desc(), F.col("vec_id").asc()
-        )
-        scored = (
-            scored.withColumn("list_rn", F.row_number().over(wl))
-            .where(F.col("list_rn") == 1)
-            .drop("list_rn")
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-    cols = ["query_id", "vec_id", "cos_sim", F.col("rank").cast("long").alias("rank")]
-    if per_list_top1:
-        cols.insert(2, F.col("list_id").cast("long").alias("list_id"))
-    return ranked.select(*cols)
+    if not per_list_top1:
+        return _topk_cos(scored, k)
+    best = _topk_cos(scored, 1, ("query_id", "list_id"), ("list_id",))
+    return _topk_cos(best, k, carry=("list_id",))
 
 
-def _topk_cos(scored: DataFrame, k: int) -> DataFrame:
-    """(cos desc, vec_id asc) top-k of a (query_id, vec_id, cos_sim)
-    relation — the shared ranking of cosine_topk / ivf_topk."""
-    w = Window.partitionBy("query_id").orderBy(
+def _topk_cos(
+    scored: DataFrame,
+    k: int,
+    by: tuple[str, ...] = ("query_id",),
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(cos desc, vec_id asc) top-k per `by` group of a (query_id,
+    vec_id, cos_sim) relation — the one ranking of every cosine
+    top-k; `carry` names columns kept in the result."""
+    w = Window.partitionBy(*by).orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            "query_id", "vec_id", "cos_sim",
+            "query_id", "vec_id", *carry, "cos_sim",
             F.col("rank").cast("long").alias("rank"),
         )
     )
@@ -553,101 +463,162 @@ def ivf_scored_pair(
     nprobe_approx: int = IVF_PRODUCTION_NPROBE,
     corpus_pred=None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(approx_topk, exact_topk) for the SAMPLED-index recall queries,
-    sharing ONE corpus scan that scores every (query, corpus) pair and
-    carries each pair's probe_rank — the `ivf_trained_topk_pair`
-    discipline ported to the cosine family (r12).
+    """(approx_topk, exact_topk) for the SAMPLED-index recall queries
+    from ONE corpus scan: `_fold_topk_scan` keeps both sides' per-batch
+    survivors, so each side is bit-identical to the independent
+    ``ivf_topk(nprobe=nprobe_approx, corpus_pred=...)`` and
+    ``cosine_topk`` over the same corpus.  The survivor relation
+    (O(k·batches·|Q|) rows) is pinned: the recall join's branches would
+    otherwise re-run the scan per branch."""
+    survivors = _fold_topk_scan(
+        emb, num_queries, k, (nprobe_approx, None), corpus_pred
+    ).localCheckpoint(eager=True)
+    approx, exact = (
+        _topk_cos(survivors.where(F.col("side") == side), k) for side in (0, 1)
+    )
+    return approx, exact
 
-    The exhaustive side of a recall query scores the whole corpus per
-    query anyway, and at the production probe width the approx side
-    re-scored ~nprobe/16 of it again (15/16 — near-total duplication).
-    Here one Arrow kernel computes, per corpus row: its list
-    (argmax first-win over ascending-cid centroids == ivf_topk's
-    _closure_assignment), each query's probe rank of that list (driver-
-    precomputed (cos desc, cid asc) table — the same lexsort as
-    assign_probes), and each query's cosine in the expression fold's
-    exact operation order (`_fold_dot_matrix` — multiplication is
-    bitwise commutative, the per-dimension add order is identical to
-    `_score_pairs`).  approx = pairs with probe_rank <= nprobe', exact
-    = all pairs; both ranked by the shared (cos desc, vec_id asc)
-    window, so each side is bit-identical to the independent
-    ivf_topk/cosine_topk composition it replaces.  The scored relation
-    is pinned: the recall join's branches would otherwise re-run the
-    kernel per branch.
 
-    ``corpus_pred`` reproduces ivf_topk's filtered search exactly,
-    including the adaptive probe widening (same two counts, same
-    integer-ceil formula)."""
+def _collect_queries(emb: DataFrame, num_queries: int):
+    """(query ids, query matrix) of the query batch, ascending id — |Q|
+    is small by contract (a query *batch*, not the corpus); the corpus
+    side never collects."""
+    import numpy as np
+
+    rows = sorted(
+        (int(r["vec_id"]), list(r["v"]))
+        for r in emb.where(F.col("vec_id") < num_queries)
+        .select("vec_id", as_double("embedding").alias("v"))
+        .collect()
+    )
+    qids = np.array([qid for qid, _ in rows], dtype=np.int64)
+    Q = np.array([v for _, v in rows] or np.zeros((0, EMBED_DIM)), dtype=np.float64)
+    return qids, Q
+
+
+def _desc_order(cos, vid):
+    """Indices ordering rows by (cos desc, vec_id asc) as Spark orders
+    doubles — NaN above every value, -0.0 equal to 0.0 — so a per-batch
+    cut keeps exactly the rows the ranking window would."""
+    import numpy as np
+
+    nan = np.isnan(cos)
+    return np.lexsort((vid, -np.where(nan, 0.0, cos), ~nan))
+
+
+def _fold_topk_scan(
+    emb: DataFrame,
+    num_queries: int,
+    k: int,
+    nprobes: tuple[int | None, ...] = (None,),
+    corpus_pred=None,
+    per_list: bool = False,
+) -> DataFrame:
+    """The one scoring pass behind `cosine_topk`, `ivf_topk` and
+    `ivf_scored_pair`: (query_id, vec_id, cos_sim, side[, list_id])
+    survivors of a single mapInPandas scan over the corpus (vec_id >=
+    num_queries, filtered by ``corpus_pred``) against the query batch
+    (vec_id < num_queries of the FULL table, collected once).
+
+    Side i holds, per Arrow batch and query, the batch's top-k under
+    (cos desc, vec_id asc) among the rows in the query's ``nprobes[i]``
+    nearest IVF lists (every row when ``nprobes[i]`` is None) — with
+    ``per_list``, instead the top-1 of each probed (query, list), and
+    the rows carry their list_id.  Every row the global ranking keeps
+    is its batch's top-k (top-1 of its list) too, so ranking the
+    survivors with `_topk_cos` is exact: the map-side top-k combine
+    (Incremental Top-K Similarity Search, EDBT 2020), in fold-exact
+    arithmetic.
+
+    Cosines are dot/(nv·nq) in the expression fold's operation order
+    (`_fold_dot_matrix`, `_fold_norm`), so the doubles equal the DuckDB
+    oracle's list_reduce.  A corpus row's list is the argmax first-win
+    over ascending-id centroids (== `_closure_assignment`); a query's
+    probe rank of a list is the driver-side (cos desc, centroid_id
+    asc) order.  Centroids come from the full table.  With
+    ``corpus_pred`` each probe widens by the inverse selectivity
+    (VERDICT r9 #5: a selective predicate thins every list, measured
+    0.8/5 mean hits at fixed nprobe): nprobe' = min(#lists,
+    ceil(nprobe · total / kept)), integer-exact as in the oracle, from
+    two counts over the same pushed-filter scan.
+
+    Memory per task: one Arrow batch of vectors plus its (batch × |Q|)
+    and (batch × #lists) cosine matrices; the driver holds |Q| and the
+    centroids."""
     import numpy as np
     import pandas as pd
 
-    cents = _centroids(emb)
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    C = np.array([cv for _, cv in cents], dtype=np.float64)
-    cnorms = _fold_norm(C)
-    qrows = sorted(
-        emb.where(F.col("vec_id") < num_queries)
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    Qm = np.array([list(r["v"]) for r in qrows], dtype=np.float64)
-    nq = _fold_norm(Qm)
-    qcos = _fold_dot_matrix(Qm, C) / (nq[:, None] * cnorms[None, :])
-    ranks = np.empty((len(qids), len(cids)), dtype=np.int64)
-    for i in range(len(qids)):
-        oc = np.lexsort((cids, -qcos[i]))
-        ranks[i, oc] = np.arange(1, len(cids) + 1)
+    qids, Q = _collect_queries(emb, num_queries)
+    nq = _fold_norm(Q)
+    corpus = emb.where(corpus_pred) if corpus_pred is not None else emb
+    probed = [None] * len(nprobes)  # per side: (|Q|, #lists) bool mask
+    cids = C = cnorms = None
+    if any(p is not None for p in nprobes):
+        cents = _centroids(emb)
+        cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+        C = np.array([cv for _, cv in cents], dtype=np.float64)
+        cnorms = _fold_norm(C)
+        qcos = _fold_dot_matrix(Q, C) / (nq[:, None] * cnorms[None, :])
+        rank = np.empty(qcos.shape, dtype=np.int64)
+        for i in range(len(qids)):
+            rank[i, np.lexsort((cids, -qcos[i]))] = np.arange(1, len(cids) + 1)
+        if corpus_pred is not None:
+            total = emb.where(F.col("vec_id") >= num_queries).count()
+            kept = corpus.where(F.col("vec_id") >= num_queries).count()
+            if kept == 0:
+                raise ValueError("corpus_pred filters out every corpus vector")
+            nprobes = tuple(
+                p if p is None else min(len(cids), (p * total + kept - 1) // kept)
+                for p in nprobes
+            )
+        probed = [p if p is None else rank <= p for p in nprobes]
 
-    corpus_src = emb.where(corpus_pred) if corpus_pred is not None else emb
-    nprobe = nprobe_approx
-    if corpus_pred is not None:
-        total = emb.where(F.col("vec_id") >= num_queries).count()
-        kept = corpus_src.where(F.col("vec_id") >= num_queries).count()
-        if kept == 0:
-            raise ValueError("corpus_pred filters out every corpus vector")
-        nprobe = min(len(cents), (nprobe_approx * total + kept - 1) // kept)
-
-    def f(it):
+    def survivors(it):
         for pdf in it:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or len(qids) == 0:
                 continue
             V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            nv = _fold_norm(V)
-            ccos = _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :])
-            a = np.argmax(ccos, axis=1)
-            pr = ranks[:, a]  # (n_queries, batch) probe_rank per pair
-            qc = _fold_dot_matrix(V, Qm) / (nv[:, None] * nq[None, :])
             vid = pdf["vec_id"].to_numpy()
-            frames = []
-            for qi in range(len(qids)):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(
-                                len(vid), qids[qi], dtype=np.int64
-                            ),
-                            "vec_id": vid,
-                            "cos_sim": qc[:, qi],
-                            "probe_rank": pr[qi],
-                        }
-                    )
+            nv = _fold_norm(V)
+            cos = _fold_dot_matrix(V, Q) / (nv[:, None] * nq[None, :])
+            if C is not None:
+                lists = np.argmax(
+                    _fold_dot_matrix(V, C) / (nv[:, None] * cnorms[None, :]), axis=1
                 )
-            yield pd.concat(frames, ignore_index=True)
+            take, take_q, take_side = [], [], []
+            for side, ok in enumerate(probed):
+                for qi in range(len(qids)):
+                    rows = (
+                        np.arange(len(vid)) if ok is None
+                        else np.flatnonzero(ok[qi, lists])
+                    )
+                    rows = rows[_desc_order(cos[rows, qi], vid[rows])]
+                    if per_list:
+                        rows = rows[np.unique(lists[rows], return_index=True)[1]]
+                    else:
+                        rows = rows[:k]
+                    take.append(rows)
+                    take_q.append(np.full(len(rows), qi))
+                    take_side.append(np.full(len(rows), side))
+            rows, qs = np.concatenate(take), np.concatenate(take_q)
+            out = {
+                "query_id": qids[qs],
+                "vec_id": vid[rows],
+                "cos_sim": cos[rows, qs],
+                "side": np.concatenate(take_side),
+            }
+            if per_list:
+                out["list_id"] = cids[lists[rows]]
+            yield pd.DataFrame(out)
 
-    scored = (
-        fan_out(corpus_src.where(F.col("vec_id") >= num_queries), "vec_id")
-        .select("vec_id", as_double("embedding").alias("v"))
-        .mapInPandas(
-            f,
-            schema="query_id long, vec_id long, cos_sim double, probe_rank long",
-        )
-        .localCheckpoint(eager=True)
+    schema = "query_id long, vec_id long, cos_sim double, side long" + (
+        ", list_id long" if per_list else ""
     )
-    approx = _topk_cos(scored.where(F.col("probe_rank") <= nprobe), k)
-    exact = _topk_cos(scored, k)
-    return approx, exact
+    return (
+        fan_out(corpus.where(F.col("vec_id") >= num_queries), "vec_id")
+        .select("vec_id", as_double("embedding").alias("v"))
+        .mapInPandas(survivors, schema=schema)
+    )
 
 
 def ivf_topk_hof(
@@ -730,167 +701,6 @@ def ivf_topk_hof(
     )
 
 
-# --- vectorized production twins ------------------------------------------
-# The oracle-exact paths above keep float folds in interpreted
-# left-fold order for bit-identical DuckDB comparison (see ivf_topk's
-# perf note).  These twins are the production scorers: Arrow-batched
-# mapInPandas + numpy/BLAS matmuls.  Float summation order differs, so
-# they are NOT hash-comparable to the SQL oracles — their correctness
-# contract is the recall/agreement tests against `cosine_topk`
-# (tests/test_similarity_ann.py) and the registered integer recall
-# queries (queries_similarity.py).
-
-
-def _collect_queries(emb: DataFrame, num_queries: int):
-    """Driver-side query matrix — |Q| is small by contract (a query
-    *batch*, not the corpus); the corpus side never collects."""
-    rows = (
-        emb.where(F.col("vec_id") < num_queries)
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect()
-    )
-    return sorted((int(r["vec_id"]), list(r["v"])) for r in rows)
-
-
-def cosine_topk_fast(
-    emb: DataFrame,
-    num_queries: int = 10,
-    k: int = 5,
-) -> DataFrame:
-    """Vectorized production twin of `cosine_topk`: the query matrix is
-    shipped in the task closure; each Arrow batch of corpus vectors is
-    scored as ONE numpy matmul (|batch| × dim @ dim × |Q|) and only the
-    per-batch top-k survivors per query are emitted — a map-side
-    combine for top-k, so the final window ranks O(k·batches·|Q|) rows
-    however large the corpus is."""
-    import numpy as np
-    import pandas as pd
-
-    qs = _collect_queries(emb, num_queries)
-    qids = np.array([q[0] for q in qs], dtype=np.int64)
-    Q = np.array([q[1] for q in qs], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            S = (M / np.linalg.norm(M, axis=1, keepdims=True)) @ Qn.T
-            vec_ids = pdf["vec_id"].to_numpy()
-            kk = min(k, len(pdf))
-            # per-query local top-k (cos desc, vec_id asc tiebreak)
-            order = np.lexsort((vec_ids[:, None].repeat(len(qids), 1), -S), axis=0)
-            sel = order[:kk, :]
-            out_q = np.repeat(qids[None, :], kk, axis=0).ravel()
-            out_v = vec_ids[sel].ravel()
-            out_s = np.take_along_axis(S, sel, axis=0).ravel()
-            yield pd.DataFrame(
-                {"query_id": out_q, "vec_id": out_v, "cos_sim": out_s}
-            )
-
-    corpus = fan_out(emb.where(F.col("vec_id") >= num_queries), "vec_id").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    cand = corpus.mapInPandas(
-        score, schema="query_id long, vec_id long, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-        )
-    )
-
-
-def ivf_topk_fast(
-    emb: DataFrame,
-    num_queries: int = 10,
-    k: int = 5,
-    nprobe: int = NPROBE,
-) -> DataFrame:
-    """Vectorized production twin of `ivf_topk`: identical index
-    geometry (same CENTROID_IDS, same nprobe, same tiebreaks) but the
-    whole probe runs as ONE mapInPandas pass — per Arrow batch, a
-    single (|batch| × dim @ dim × 16) matmul assigns lists, each
-    query's candidates are the rows assigned to its nprobe lists
-    (mask, no join), scoring is one matmul over the masked rows, and
-    only the per-batch top-k per query survives (map-side combine).
-    Query routing happens on the driver (|Q| rows).  One Python
-    stage, zero shuffles before the final O(k·batches·|Q|)-row
-    window."""
-    import numpy as np
-    import pandas as pd
-
-    cents = (
-        emb.where(F.col("vec_id").isin(CENTROID_IDS))
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect()
-    )
-    cents = sorted((int(r["vec_id"]), list(r["v"])) for r in cents)
-    cent_ids = np.array([c[0] for c in cents], dtype=np.int64)
-    C = np.array([c[1] for c in cents], dtype=np.float64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-
-    qs = _collect_queries(emb, num_queries)
-    qids = np.array([q[0] for q in qs], dtype=np.int64)
-    Q = np.array([q[1] for q in qs], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    # per-query probed list ids (cos desc, centroid_id asc — the
-    # cid-ascending column order + stable sort give the tiebreak)
-    probe_sets = []
-    for qn in Qn:
-        order = np.argsort(-(qn @ Cn.T), kind="stable")
-        probe_sets.append(set(cent_ids[order[:nprobe]].tolist()))
-
-    def probe(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            # ties → smaller centroid id: argmax returns the first max
-            # over cid-ascending columns
-            lists = cent_ids[np.argmax(Mn @ Cn.T, axis=1)]
-            vec_ids = pdf["vec_id"].to_numpy()
-            out_q, out_v, out_s = [], [], []
-            for qi, qn, pset in zip(qids, Qn, probe_sets):
-                mask = np.isin(lists, list(pset))
-                if not mask.any():
-                    continue
-                cos = Mn[mask] @ qn
-                cand_ids = vec_ids[mask]
-                kk = min(k, len(cand_ids))
-                sel = np.lexsort((cand_ids, -cos))[:kk]
-                out_q.extend([qi] * kk)
-                out_v.extend(cand_ids[sel])
-                out_s.extend(cos[sel])
-            yield pd.DataFrame(
-                {"query_id": out_q, "vec_id": out_v, "cos_sim": out_s}
-            )
-
-    corpus = fan_out(emb.where(F.col("vec_id") >= num_queries), "vec_id").select(
-        "vec_id", as_double("embedding").alias("v")
-    )
-    scored = corpus.mapInPandas(
-        probe, schema="query_id long, vec_id long, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-        )
-    )
-
-
 # --- product quantization -------------------------------------------------
 # PQ geometry: 64-dim vectors → 4 subspaces × 16 dims, 8 codewords per
 # subspace (3 bits), codebook = fixed corpus rows (deterministic
@@ -927,24 +737,41 @@ def _fold_l2sq_matrix(V, C):
     return acc
 
 
+def _pq_codebook(emb: DataFrame) -> list[tuple[int, list[float]]]:
+    """The 8 codebook rows (codeword id, vector), ascending id — the
+    order the encode argmin's first-win tie-break relies on."""
+    return sorted(
+        (int(r["vec_id"]), list(r["v"]))
+        for r in emb.where(F.col("vec_id").isin(PQ_CODEBOOK_IDS))
+        .select("vec_id", as_double("embedding").alias("v"))
+        .collect()
+    )
+
+
+def _pq_encode(V, C):
+    """(n, EMBED_DIM) vectors → (n, PQ_SUBSPACES) codebook-row indices:
+    the per-subspace fold-exact `_fold_l2sq_matrix` argmin, first-win
+    over ascending-id rows == (d asc, cid asc)."""
+    import numpy as np
+
+    codes = np.empty((V.shape[0], PQ_SUBSPACES), dtype=np.int64)
+    for j in range(PQ_SUBSPACES):
+        sub = slice(j * PQ_SUBDIM, (j + 1) * PQ_SUBDIM)
+        codes[:, j] = np.argmin(_fold_l2sq_matrix(V[:, sub], C[:, sub]), axis=1)
+    return codes
+
+
 def pq_codes(emb: DataFrame) -> DataFrame:
     """(vec_id, code0..code3): per-subspace nearest-codeword ids
     (ties → smaller codeword id).  The codebook is collected once
     (8 rows) and shipped in the task closure; encoding is one
-    Arrow-batched scan through the fold-exact `_fold_l2sq_matrix`
-    kernel — argmin first-win over codewords scanned in ascending-id
-    order == (d asc, cid asc), so the integer codes are bit-identical
-    to the interpreted expression path (`pq_codes_hof`, the retained
-    cross-check) and the DuckDB oracle."""
+    Arrow-batched scan through `_pq_encode`, so the integer codes are
+    bit-identical to the interpreted expression path (`pq_codes_hof`,
+    the retained cross-check) and the DuckDB oracle."""
     import numpy as np
     import pandas as pd
 
-    cb = (
-        emb.where(F.col("vec_id").isin(PQ_CODEBOOK_IDS))
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect()
-    )
-    cb = sorted((r["vec_id"], list(r["v"])) for r in cb)
+    cb = _pq_codebook(emb)
     cids = np.array([cid for cid, _ in cb], dtype=np.int64)
     C = np.array([cv for _, cv in cb], dtype=np.float64)
 
@@ -953,11 +780,10 @@ def pq_codes(emb: DataFrame) -> DataFrame:
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            codes = cids[_pq_encode(V, C)]
             out = {"vec_id": pdf["vec_id"]}
             for j in range(PQ_SUBSPACES):
-                sub = slice(j * PQ_SUBDIM, (j + 1) * PQ_SUBDIM)
-                d = _fold_l2sq_matrix(V[:, sub], C[:, sub])
-                out[f"code{j}"] = cids[np.argmin(d, axis=1)]
+                out[f"code{j}"] = codes[:, j]
             yield pd.DataFrame(out)
 
     v = fan_out(emb, "vec_id").select("vec_id", as_double("embedding").alias("v"))
@@ -971,13 +797,7 @@ def pq_codes_hof(emb: DataFrame) -> DataFrame:
     """Pure-expression encode path (the original formulation) kept as
     the cross-check for `pq_codes`'s kernel: 32 interpreted `_l2sq`
     folds per row, exact same codes."""
-    cb = (
-        emb.where(F.col("vec_id").isin(PQ_CODEBOOK_IDS))
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect()
-    )
-    cb = sorted((r["vec_id"], list(r["v"])) for r in cb)
-
+    cb = _pq_codebook(emb)
     v = fan_out(emb, "vec_id").select("vec_id", as_double("embedding").alias("v"))
     cols = ["vec_id"]
     for j in range(PQ_SUBSPACES):
@@ -1012,152 +832,54 @@ def pq_adc_topk(
 ) -> DataFrame:
     """Asymmetric-distance top-k over the PQ-compressed corpus: the
     query keeps its full vector, each corpus vector is its 4 codes,
-    and distance ≈ Σ_j L2²(query_sub_j, codeword(code_j)).
+    and distance ≈ Σ_j L2²(query_sub_j, codeword(code_j)),
+    floor-quantized per subspace to integers (floor(d·1e9)), so the
+    sum is order-independent and oracle-exact; ties break by vec_id.
 
-    The classic ADC decomposition makes the per-(query, corpus) work a
-    4-way integer lookup into a per-query distance table of
-    |Q|·SUBSPACES·8 rows — built once, broadcast, and equi-joined
-    against the exploded (vec_id, j, code) corpus codes, then summed.
-    No full-vector math touches the corpus at query time; at 100 TB
-    the codes table is ~60× smaller than the vectors it stands in
-    for.  Approximation error vs `cosine_topk` is the PQ quantization
-    error; ranking ties break by vec_id.
-    """
-    codes = pq_codes(emb)
-    corpus_codes = codes.where(F.col("vec_id") >= num_queries).select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"code{j}") for j in range(PQ_SUBSPACES)])
-        ).alias("j", "code"),
-    )
-    cb = (
-        emb.where(F.col("vec_id").isin(PQ_CODEBOOK_IDS))
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect()
-    )
-    cb = sorted((r["vec_id"], list(r["v"])) for r in cb)
-
-    q = emb.where(F.col("vec_id") < num_queries).select(
-        F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
-    )
-    # per-query distance table: (query_id, j, code, d)
-    entries = []
-    for j in range(PQ_SUBSPACES):
-        qsub = F.slice(F.col("qv"), j * PQ_SUBDIM + 1, PQ_SUBDIM)
-        for cid, cv in cb:
-            entries.append(
-                F.struct(
-                    F.lit(j).cast("int").alias("j"),
-                    F.lit(cid).cast("long").alias("code"),
-                    _l2sq(
-                        qsub,
-                        F.array(
-                            *[F.lit(x) for x in cv[j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]]
-                        ),
-                    ).alias("d"),
-                )
-            )
-    dtable = q.select(
-        "query_id", F.explode(F.array(*entries)).alias("e")
-    ).select("query_id", "e.j", "e.code", "e.d")
-
-    scored = (
-        corpus_codes.join(F.broadcast(dtable), ["j", "code"])
-        .groupBy("query_id", "vec_id")
-        # quantized-integer sum: 4 doubles per key, order-independent
-        .agg(
-            F.sum(F.floor(F.col("d") * 1000000000.0).cast("long")).alias("dist_q")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_q").asc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "dist_q", F.col("rank").cast("long").alias("rank")
-        )
-    )
-
-
-def pq_adc_topk_fast(
-    emb: DataFrame,
-    num_queries: int = 10,
-    k: int = 5,
-) -> DataFrame:
-    """Vectorized production twin of `pq_adc_topk`: identical PQ
-    geometry (same codebook rows, same subspace split, same
-    floor(d·1e9) integer quantization, same tiebreaks) but the whole
-    encode→lookup→rank pipeline runs as ONE mapInPandas pass — per
-    Arrow batch, codes are numpy argmins per subspace, ADC distances
-    are 4 integer table lookups summed, and only the per-batch top-k
-    per query survives (map-side combine).  No exploded codes
-    relation, no broadcast join, zero shuffles before the final
-    O(k·batches·|Q|)-row window.
-
-    Distance arithmetic reproduces the interpreted path's LEFT-FOLD
-    summation order (dim 0 → 15 sequentially), so the doubles — and
-    hence the quantized ints, codes, and ranks — are bit-identical to
-    `pq_adc_topk`, which the exact-agreement test pins.
-    """
+    The per-query distance table (|Q|·SUBSPACES·8 integers) is built
+    once on the driver and shipped in the task closure.  The whole
+    encode → lookup → rank pipeline is ONE mapInPandas pass: per Arrow
+    batch the codes are `_pq_encode`'s argmins, the ADC distances are
+    4 integer table lookups summed, and only the batch's top-k per
+    query survives (map-side combine) — no exploded codes relation, no
+    join, no shuffle before the final O(k·batches·|Q|)-row window.  At
+    100 TB the codes stand in for vectors ~60× larger; approximation
+    error vs `cosine_topk` is the PQ quantization error."""
     import numpy as np
     import pandas as pd
 
-    def _fold_l2(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        # (n, d) × (m, d) → (n, m), accumulating dims sequentially to
-        # match F.aggregate's left fold bit-for-bit.
-        acc = np.zeros((A.shape[0], B.shape[0]))
-        for i in range(A.shape[1]):
-            d = A[:, i : i + 1] - B[None, :, i]
-            acc = acc + d * d
-        return acc
-
-    cb = (
-        emb.where(F.col("vec_id").isin(PQ_CODEBOOK_IDS))
-        .select("vec_id", as_double("embedding").alias("v"))
-        .collect()
-    )
-    cb = sorted((int(r["vec_id"]), list(r["v"])) for r in cb)
-    cb_ids = np.array([c[0] for c in cb], dtype=np.int64)  # cid-ascending
-    CB = np.array([c[1] for c in cb], dtype=np.float64)
-
-    qs = _collect_queries(emb, num_queries)
-    qids = np.array([q[0] for q in qs], dtype=np.int64)
-    Q = np.array([q[1] for q in qs], dtype=np.float64)
-    # per-query ADC table: DT[q, j, c] = floor(1e9 · l2sq(Q_sub, CB_sub))
-    DT = np.zeros((len(qids), PQ_SUBSPACES, len(cb_ids)), dtype=np.int64)
+    cb = _pq_codebook(emb)
+    C = np.array([cv for _, cv in cb], dtype=np.float64)
+    qids, Q = _collect_queries(emb, num_queries)
+    # DT[q, j, c] = floor(1e9 · l2sq(Q_sub_j, C_sub_j[c]))
+    DT = np.zeros((len(qids), PQ_SUBSPACES, len(cb)), dtype=np.int64)
     for j in range(PQ_SUBSPACES):
         sub = slice(j * PQ_SUBDIM, (j + 1) * PQ_SUBDIM)
-        DT[:, j, :] = np.floor(_fold_l2(Q[:, sub], CB[:, sub]) * 1e9).astype(
-            np.int64
-        )
+        DT[:, j, :] = np.floor(
+            _fold_l2sq_matrix(Q[:, sub], C[:, sub]) * 1e9
+        ).astype(np.int64)
 
     def score(batches):
         for pdf in batches:
-            if len(pdf) == 0:
+            if len(pdf) == 0 or len(qids) == 0:
                 continue
             M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
             vec_ids = pdf["vec_id"].to_numpy()
-            # encode: per-subspace argmin (first min ⇒ smallest cid,
-            # CB rows are cid-ascending)
-            codes = np.empty((len(M), PQ_SUBSPACES), dtype=np.int64)
-            for j in range(PQ_SUBSPACES):
-                sub = slice(j * PQ_SUBDIM, (j + 1) * PQ_SUBDIM)
-                codes[:, j] = np.argmin(_fold_l2(M[:, sub], CB[:, sub]), axis=1)
+            codes = _pq_encode(M, C)
             # ADC: dist[q, row] = Σ_j DT[q, j, codes[row, j]]
             dist = np.zeros((len(qids), len(M)), dtype=np.int64)
             for j in range(PQ_SUBSPACES):
                 dist += DT[:, j, codes[:, j]]
             kk = min(k, len(M))
-            out_q, out_v, out_s = [], [], []
-            for qi_idx, qi in enumerate(qids):
-                sel = np.lexsort((vec_ids, dist[qi_idx]))[:kk]
-                out_q.extend([qi] * kk)
-                out_v.extend(vec_ids[sel])
-                out_s.extend(dist[qi_idx][sel])
+            sel = [np.lexsort((vec_ids, dist[qi]))[:kk] for qi in range(len(qids))]
             yield pd.DataFrame(
-                {"query_id": out_q, "vec_id": out_v, "dist_q": out_s}
+                {
+                    "query_id": np.repeat(qids, kk),
+                    "vec_id": np.concatenate([vec_ids[s] for s in sel]),
+                    "dist_q": np.concatenate(
+                        [dist[qi][s] for qi, s in enumerate(sel)]
+                    ),
+                }
             )
 
     corpus = fan_out(emb.where(F.col("vec_id") >= num_queries), "vec_id").select(

@@ -43,8 +43,10 @@ def _bucket_sql(vec: str, num_planes: int = SIM.NUM_PLANES) -> str:
     )
     SELECT query_id, vec_id, cos_sim, rank FROM ranked WHERE rank <= 5
     """,
-    doc="Exact cosine top-5 for 10 query vectors, broadcast brute force "
-    "— the ANN correctness baseline.",
+    doc="Exact cosine top-5 for 10 query vectors — the ANN correctness "
+    "baseline: one fold-exact corpus scan against the collected query "
+    "batch, keeping each Arrow batch's top-5 per query for the final "
+    "window.",
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.cosine_topk(load_table(spark, sf_dir, "embeddings"))
@@ -182,8 +184,9 @@ def _ivf_topk_oracle(nprobe: int) -> str:
     _ivf_topk_oracle(SIM.NPROBE),
     doc="Approximate top-5 via an IVF-flat coarse index (16 sampled "
     "centroids, 2-list probe): index build collects the centroids once "
-    "and ships them as literals, corpus assignment is a shuffle-free "
-    "map-side projection — the k-means-family scale path next to "
+    "and ships them in the task closure; list assignment, probing and "
+    "scoring are one shuffle-free map-side pass that keeps each Arrow "
+    "batch's top-5 per query — the k-means-family scale path next to "
     "lsh_ann_topk's hashing-family one.",
 )
 def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,7 +329,7 @@ DIVERSE_NPROBE = 8
     "making this the fully-distributed O(probe-bounded) stand-in for "
     "greedy MMR (which is sequential in k by definition).  Physical "
     "delta vs ivf_ann_topk: one extra PARTITIONED window (query_id, "
-    "list_id) over the probe-bounded candidate set — no new shuffle "
+    "list_id) over each Arrow batch's per-list best hits — no new shuffle "
     "shape, no driver work; same fold-exact scoring kernels, so "
     "cos_sim doubles stay bit-identical to the oracle's list_reduce.",
 )
@@ -435,65 +438,16 @@ _PQ_SLICE_Q = f"q.qv[(r.j * {SIM.PQ_SUBDIM} + 1):((r.j + 1) * {SIM.PQ_SUBDIM})]"
     """,
     doc="Asymmetric-distance PQ search: queries keep full vectors, the "
     "corpus is only its 4 codes; distance = Σ per-subspace table "
-    "lookups. The per-query distance table (|Q|×4×8 rows) broadcasts "
-    "and equi-joins the exploded code table — query-time cost is "
-    "independent of vector dimensionality, the property that makes "
-    "RAM-resident search over a 100 TB corpus possible. Per-subspace "
+    "lookups. The per-query distance table (|Q|×4×8 integers) ships in "
+    "the task closure, and encode, lookup and per-batch top-5 run in "
+    "one mapInPandas pass — query-time cost is independent of vector "
+    "dimensionality, the property that makes RAM-resident search over "
+    "a 100 TB corpus possible. Per-subspace "
     "distances are floor-quantized to integers before the sum, so "
     "ranking is order-independent and exactly oracle-comparable.",
 )
 def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.pq_adc_topk(load_table(spark, sf_dir, "embeddings"))
-
-
-# --- vectorized production twins (no SQL oracle by design) ---------------
-# BLAS/numpy summation order differs from the left-fold oracles, so
-# float hash-comparison is impossible; their contract is the integer
-# recall queries below plus the agreement tests in
-# tests/test_similarity_ann.py.
-
-
-@register_extra(
-    "cosine_topk_fast",
-    None,
-    doc="Vectorized production twin of cosine_topk: per-Arrow-batch "
-    "numpy matmul scoring with map-side top-k combine (k rows per "
-    "query per batch reach the final window, whatever the corpus "
-    "size). No SQL oracle — float order differs from the left-fold "
-    "baseline; checked by the exact-agreement test in "
-    "tests/test_similarity_ann.py (recall >= 0.95 vs cosine_topk).",
-)
-def q_cosine_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return SIM.cosine_topk_fast(load_table(spark, sf_dir, "embeddings"))
-
-
-@register_extra(
-    "ivf_ann_topk_fast",
-    None,
-    doc="Vectorized production twin of ivf_ann_topk: same coarse index "
-    "geometry (CENTROID_IDS, nprobe, tiebreaks), numpy-matmul "
-    "assignment + scoring in mapInPandas. No SQL oracle — checked by "
-    "the agreement test vs the oracle-exact ivf_topk "
-    "(tests/test_similarity_ann.py, >= 0.9 set agreement).",
-)
-def q_ivf_ann_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return SIM.ivf_topk_fast(load_table(spark, sf_dir, "embeddings"))
-
-
-@register_extra(
-    "pq_adc_topk_fast",
-    EXTRA_QUERIES["pq_adc_topk"].oracle,
-    doc="Vectorized production twin of pq_adc_topk: encode + ADC table "
-    "lookup + map-side top-k in ONE mapInPandas pass, zero shuffles "
-    "before the final k·batches·|Q|-row window. Unlike the float "
-    "twins this one carries the SAME DuckDB oracle as its interpreted "
-    "sibling: the ADC distances are floor-quantized to integers "
-    "per-subspace and the numpy arithmetic reproduces the left-fold "
-    "summation order, so codes, distances, and ranks are bit-identical "
-    "across all three implementations.",
-)
-def q_pq_adc_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return SIM.pq_adc_topk_fast(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- ANN recall as first-class integer-oracled queries -------------------
@@ -597,9 +551,9 @@ def q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ann_recall_ivf_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    # fused pair (r12): one scan scores all pairs and carries probe
-    # ranks; bit-identical to the ivf_topk/cosine_topk composition
-    # (tests/test_similarity_ann.py pins the equality)
+    # one scan keeps both sides' per-batch survivors; bit-identical to
+    # the ivf_topk/cosine_topk composition (tests/test_similarity_ann.py
+    # pins the equality)
     approx, exact = SIM.ivf_scored_pair(
         emb, nprobe_approx=SIM.IVF_PRODUCTION_NPROBE
     )
@@ -1171,10 +1125,9 @@ def q_ann_recall_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     pred = F.col("label").isin(0, 2, 4, 6, 8)
-    # fused pair (r12): the filtered corpus is scanned/scored once
-    # (pred still a scan pre-filter; adaptive probe widening
-    # reproduced inside) — bit-identical to the previous
-    # ivf_topk(corpus_pred)/filtered cosine_topk composition
+    # one scan of the filtered corpus serves both sides (pred still a
+    # scan pre-filter, adaptive probe widening included) — bit-identical
+    # to the ivf_topk(corpus_pred)/filtered cosine_topk composition
     approx, exact = SIM.ivf_scored_pair(
         emb, nprobe_approx=SIM.NPROBE, corpus_pred=pred
     )
@@ -1246,18 +1199,18 @@ _HARDNEG_LO, _HARDNEG_HI = 6, 15
     "against the positives — close-but-not-nearest neighbors, the "
     "negatives that actually move a contrastive loss (random "
     "negatives are too easy; see contrastive_pairs for that shape).  "
-    "Scale shape: the exact side is the broadcast brute-force "
-    "baseline over 10 queries; the negative side reuses the IVF "
-    "machinery — candidate generation stays a broadcast hash join on "
-    "list_id, never all-pairs; both sides' cosines share the "
-    "fold-exact kernels so the union hash-matches the oracle.",
+    "Scale shape: both sides are one corpus scan each (the exact "
+    "cosine_topk over 10 queries and the IVF probe), keeping only "
+    "each Arrow batch's top-k per query, never all pairs; both "
+    "sides' cosines share the fold-exact kernels so the union "
+    "hash-matches the oracle.",
 )
 def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings")
     # pos feeds the output union AND the anti-join; pinned (O(queries
-    # x k) rows) so the exact brute-force side executes once (r12).
+    # x k) rows) so the exact side executes once.
     pos = (
         SIM.cosine_topk(emb)
         .select(

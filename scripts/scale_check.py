@@ -40,13 +40,12 @@ sys.path.insert(0, REPO)
 from flink_repartition_watermark_example_spark import get_spark
 from flink_repartition_watermark_example_spark.queries import EXTRA_QUERIES, QUERIES
 
-# The 10 most expensive sf0.1 queries (BENCH_r02) + the vectorized ANN
-# twin, spanning every heavy family: ANN (interpreted + BLAS), the
+# The 10 most expensive sf0.1 queries (BENCH_r02) plus the ANN
+# searches, spanning every heavy family: ANN (IVF and PQ), the
 # minhash/LSH dedup chain, streaming, multimodal, and the scan-heavy
 # TPC-H-style aggregations/joins.
 DEFAULT_QUERIES = [
     "ivf_ann_topk",
-    "ivf_ann_topk_fast",
     "streaming_windowed_count",
     "streaming_interval_join",
     "lsh_candidate_pairs",
@@ -59,9 +58,7 @@ DEFAULT_QUERIES = [
     "windowed_count",
     "multi_join_revenue",
     "minhash_signatures",
-    "cosine_topk_fast",
     "pq_adc_topk",
-    "pq_adc_topk_fast",
     # iterative driver-loop operators: cost tracks |vocab| (BPE) and
     # corpus×K (k-means), not raw corpus bytes — the artifact records
     # that their growth stays bounded too

@@ -4,9 +4,9 @@ the 100 TB-safe envelope.
 Checked for EVERY registered batch query (primary + extras):
 
 - no CartesianProduct — an unkeyed pair blowup never survives scale;
-- no BroadcastNestedLoopJoin except the one documented case
-  (cosine_topk's exact-baseline crossJoin of a broadcast 10-row query
-  set — the two ANN paths beside it are the scale story);
+- no BroadcastNestedLoopJoin except in the allowlisted queries whose
+  build side is O(1) rows (NESTED_LOOP_ALLOWED), and every allowlisted
+  query must still plan one, so the list cannot go stale;
 - no BatchEvalPython / row-at-a-time Python UDF — Python only at the
   Arrow boundary (ArrowEvalPython / mapInPandas are the allowed
   shapes).
@@ -35,23 +35,10 @@ BATCH = [
 ]
 
 # Nested-loop joins allowed only where the build side is O(1) rows:
-# - cosine_topk: documented exact-baseline broadcast crossJoin of the
-#   10-row query set (operators/similarity.py);
-# - bm25_search: broadcast of the single-row corpus-stats aggregate
-#   (N, total_dl) onto the posting list;
-# - ann_recall_*: embed cosine_topk as the exact side of the recall
-#   intersection, inheriting its allowed shape.
 NESTED_LOOP_ALLOWED = {
-    "cosine_topk",
+    # broadcast of the single-row corpus-stats aggregate (N, total_dl)
+    # onto the posting list
     "bm25_search",
-    "ann_recall_lsh",
-    "ann_recall_ivf",
-    "ann_recall_pq",
-    # embeds the filtered-corpus cosine_topk as its exact side
-    "ann_recall_filtered",
-    # same recall family at the production probe width — embeds
-    # cosine_topk (the bounded 10-query broadcast) as its exact side
-    "ann_recall_ivf_production",
     # broadcast of the single-row (n_pos, tot_pos) balance aggregate
     # onto customer (queries_subqueries.py)
     "rich_inactive_customers",
@@ -69,9 +56,6 @@ NESTED_LOOP_ALLOWED = {
     # per-part value relation — the Q11 HAVING-scalar decorrelation
     # (queries_subqueries.py)
     "important_part_values",
-    # embeds cosine_topk (the 10-query broadcast brute-force baseline)
-    # as its positives side
-    "hard_negative_mining",
     # broadcast joins BETWEEN single-row aggregate relations: each
     # constraint metric is one row (per-table conditional agg × the
     # LeftSemi RI count), so every nested-loop input is exactly one
@@ -105,6 +89,12 @@ GLOBAL_WINDOW_ALLOWED = {
     # (queries_dedup.py: split_by_cluster_balanced)
     "split_by_cluster_balanced",
 }
+
+
+def test_nested_loop_allowlist_names_audited_queries():
+    """Every allowlisted name must be a batch query the audit runs, so
+    its entry is checked against its plan."""
+    assert NESTED_LOOP_ALLOWED <= {p.values[0] for p in BATCH}
 
 
 def _physical_nodes(jplan):
@@ -145,7 +135,12 @@ def test_plan_stays_in_scale_envelope(spark, sf_dir, name):
     df = ALL[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product\n{plan[:1500]}"
-    if name not in NESTED_LOOP_ALLOWED:
+    if name in NESTED_LOOP_ALLOWED:
+        assert "BroadcastNestedLoopJoin" in plan, (
+            f"{name}: allowlisted but plans no nested-loop join — drop "
+            f"it from NESTED_LOOP_ALLOWED\n{plan[:1500]}"
+        )
+    else:
         assert "BroadcastNestedLoopJoin" not in plan, (
             f"{name}: nested-loop join\n{plan[:1500]}"
         )

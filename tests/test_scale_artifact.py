@@ -72,8 +72,7 @@ def test_no_broadcast_join_degrades_to_sort_merge(artifact):
 def test_artifact_covers_the_heavy_families(artifact):
     qs = set(artifact["queries"])
     for required in (
-        "ivf_ann_topk",            # ANN interpreted
-        "ivf_ann_topk_fast",       # ANN vectorized twin
+        "ivf_ann_topk",            # ANN
         "lsh_candidate_pairs",     # minhash/LSH dedup chain
         "streaming_windowed_count",  # streaming state
         "pricing_summary",         # scan-heavy agg

@@ -47,9 +47,10 @@ def test_ivf_numpy_kernels_bit_identical_to_hof(spark, sf_dir):
     lets the gate path run vectorized while staying hash-comparable
     to the DuckDB oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    fast = sorted(map(tuple, SIM.ivf_topk(emb).collect()))
-    hof = sorted(map(tuple, SIM.ivf_topk_hof(emb).collect()))
-    assert fast == hof
+    for nprobe in (SIM.NPROBE, SIM.IVF_PRODUCTION_NPROBE):
+        fast = sorted(map(tuple, SIM.ivf_topk(emb, nprobe=nprobe).collect()))
+        hof = sorted(map(tuple, SIM.ivf_topk_hof(emb, nprobe=nprobe).collect()))
+        assert fast == hof, nprobe
 
 
 def test_ivf_assignment_is_deterministic(spark, sf_dir):
@@ -96,56 +97,6 @@ def test_pq_adc_recall_against_exact_l2(spark, sf_dir):
     # not parity — reranking over full vectors is the production
     # second stage.
     assert total and hits / total > 0.05, f"ADC recall {hits/total:.2f}"
-
-
-def _id_sets(df):
-    out = {}
-    for r in df.collect():
-        out.setdefault(r["query_id"], set()).add(r["vec_id"])
-    return out
-
-
-def test_vectorized_twins_agree_with_oracle_exact_paths(spark, sf_dir):
-    """The BLAS/mapInPandas production twins must reproduce the
-    oracle-exact paths' result sets: brute-force twin ≥ 0.95 recall vs
-    exact (expected 1.0 — only float rounding at exact ties can
-    differ), IVF twin ≥ 0.9 agreement vs the interpreted-HOF IVF
-    (same index geometry; only list-assignment boundary rounding can
-    differ)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    exact = _id_sets(SIM.cosine_topk(emb))
-    fast = _id_sets(SIM.cosine_topk_fast(emb))
-    assert set(fast) == set(exact)
-    hits = sum(len(exact[q] & fast[q]) for q in exact)
-    total = sum(len(exact[q]) for q in exact)
-    assert hits / total >= 0.95, f"cosine fast-twin recall {hits/total:.2f}"
-
-    ivf = _id_sets(SIM.ivf_topk(emb))
-    ivf_fast = _id_sets(SIM.ivf_topk_fast(emb))
-    assert set(ivf_fast) == set(ivf)
-    hits = sum(len(ivf[q] & ivf_fast[q]) for q in ivf)
-    total = sum(len(ivf[q]) for q in ivf)
-    assert hits / total >= 0.9, f"ivf fast-twin agreement {hits/total:.2f}"
-
-
-def test_pq_fast_twin_is_bit_identical(spark, sf_dir):
-    """pq_adc_topk_fast must agree with pq_adc_topk EXACTLY — not just
-    set overlap: the ADC distances are integer-quantized per subspace
-    and the numpy arithmetic reproduces the interpreted path's
-    left-fold order, so every (query_id, vec_id, dist_q, rank) row is
-    identical.  (The fast twin also carries the same DuckDB oracle in
-    the registry — this test pins the twins to each other directly.)"""
-    emb = load_table(spark, sf_dir, "embeddings")
-    slow = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["dist_q"])
-        for r in SIM.pq_adc_topk(emb).collect()
-    }
-    fast = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["dist_q"])
-        for r in SIM.pq_adc_topk_fast(emb).collect()
-    }
-    assert slow == fast
 
 
 @pytest.mark.parametrize("n_cents", [None, 40])
@@ -352,9 +303,9 @@ def test_trained_production_nprobe_holds_point_nine_recall(spark, sf_dir):
 
 
 def test_ivf_scored_pair_bit_identical_to_independent_paths(spark, sf_dir):
-    """The fused sampled-family pair (one scan scoring all pairs +
-    probe ranks, r12) must reproduce BOTH sides of the recall
-    composition it replaced exactly: approx == ivf_topk at the same
+    """The sampled-family pair (one scan keeping both sides' per-batch
+    survivors) must reproduce BOTH sides of the recall composition
+    exactly: approx == ivf_topk at the same
     nprobe, exact == cosine_topk — same rows, bit-identical doubles
     (== on floats, no tolerance), including the filtered variant with
     its adaptive probe widening."""
@@ -380,3 +331,42 @@ def test_ivf_scored_pair_bit_identical_to_independent_paths(spark, sf_dir):
     assert sorted(map(tuple, fe.collect())) == sorted(
         map(tuple, SIM.cosine_topk(emb.where((F.col("vec_id") < 10) | pred)).collect())
     )
+
+
+def test_topk_scans_hold_when_batches_are_smaller_than_k(spark, sf_dir):
+    """The per-batch top-k cut (map-side combine) must not depend on
+    batch size: with Arrow batches of 2 rows (k=5), every batch holds
+    fewer than k rows and most hold no row of a query's probed lists,
+    yet every scan must return exactly the rows it returns at the
+    default batch size — and ivf_topk must still equal the
+    interpreted-fold reference."""
+    from pyspark.sql import functions as F
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    pred = F.col("label").isin(0, 2, 4, 6, 8)
+
+    def run():
+        pair = SIM.ivf_scored_pair(emb, nprobe_approx=SIM.NPROBE, corpus_pred=pred)
+        dfs = {
+            "cosine_topk": SIM.cosine_topk(emb),
+            "ivf_topk": SIM.ivf_topk(emb),
+            "ivf_topk_filtered": SIM.ivf_topk(emb, corpus_pred=pred),
+            "ivf_topk_per_list": SIM.ivf_topk(emb, nprobe=8, per_list_top1=True),
+            "ivf_scored_pair_approx": pair[0],
+            "ivf_scored_pair_exact": pair[1],
+            "pq_adc_topk": SIM.pq_adc_topk(emb),
+        }
+        return {name: sorted(map(tuple, df.collect())) for name, df in dfs.items()}
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = run()
+    saved = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "2")
+        small = run()
+    finally:
+        spark.conf.set(conf, saved)
+    for name, rows in default.items():
+        assert rows, name
+        assert small[name] == rows, name
+    assert small["ivf_topk"] == sorted(map(tuple, SIM.ivf_topk_hof(emb).collect()))
