@@ -6,7 +6,8 @@ each one value-checked against a closed-form SQL oracle):
 
   1. decode   — image (BMP/PPM), audio (RIFF/WAVE PCM16), and video
                 (AVI + DIB frames) payloads parsed from genuine bytes
-                via Arrow-batched mapInPandas; per-item exact stats.
+                via Arrow-batched mapInPandas, synth and decode in one
+                pass per modality; per-item exact stats.
   2. gate     — per-modality quality filters:
                   image: mean channel brightness inside [16, 240]
                          (reject washed-out / black scans)
@@ -43,7 +44,7 @@ def run(spark, sf_dir: str) -> dict[str, int]:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     total = docs.count()
 
-    img = MM.decode_image(MM.synth_image_payload(docs))
+    img = MM.synth_decode_image(docs)
     img_ok = img.where(
         (
             (F.col("sum_r") + F.col("sum_g") + F.col("sum_b"))
@@ -51,13 +52,13 @@ def run(spark, sf_dir: str) -> dict[str, int]:
         ).between(16, 240)
     ).select("doc_id", "width", "height")
 
-    aud = MM.decode_audio(MM.synth_audio_payload(docs))
+    aud = MM.synth_decode_audio(docs)
     aud_ok = aud.where(F.col("sample_rate") >= 16000).select(
         "doc_id", "sample_rate", "channels", "n_frames"
     )
 
     vid = (
-        MM.decode_video_frames(MM.synth_video_payload(docs))
+        MM.synth_decode_video_frames(docs)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("sampled_frames"))
     )

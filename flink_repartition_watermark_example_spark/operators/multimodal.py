@@ -18,18 +18,37 @@ batches, never row-at-a-time.
   library; the Spark-side contract is identical.
 - ``fake_decode_features``  deterministic pseudo-decode (seeded from
   the digest) exercising the fixed-width feature-vector path end-to-end.
+- ``synth_decode_image`` / ``synth_decode_audio`` /
+  ``synth_audio_block_energy`` / ``synth_decode_video_frames``  the
+  synth→decode chain of each codec as ONE mapInPandas pass.
+
+Each codec is one pair of module-level batch functions (pandas batch
+iterator → pandas batch iterator): a synth step and a decode step.
+``synth_*_payload`` runs the synth step alone, ``decode_*`` the decode
+step alone over any payload relation (the dirty-bytes path), and
+``synth_decode_*`` composes both into one pass, so the decode step
+consumes the synth step's batches in the same worker.
+
+Rule: one Python pass per stage.  Each Python exec node in a stage gets
+its own Python worker per task, and two chained ``mapInPandas`` nodes
+with no exchange between them make every task hold two workers at once
+and send the payload bytes across JVM↔Python twice.  Compose the steps
+into one pass instead (tests/test_plan_audit.py fails a query whose
+stage holds two Python exec nodes).
 
 Scale: mapInPandas is per-partition streaming — no shuffle, no driver
 collect; 100 TB of media shards across executors exactly like any
 other scan.  Batch size is bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a partition of
-large blobs cannot OOM the Python worker.
+large blobs cannot OOM the Python worker; a composed pass holds one
+batch per step at a time, so the bound is unchanged.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -66,6 +85,44 @@ FRAMES_SCHEMA = T.StructType(
 )
 
 FRAME_STRIDE = 2  # sample every 2nd frame
+
+PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+Step = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
+
+
+def _one_pass(*steps: Step) -> Step:
+    """Compose batch-iterator steps into one mapInPandas function: each
+    step's batches feed the next inside the same Python worker."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for step in steps:
+            batches = step(batches)
+        return batches
+
+    return run
+
+
+def _synth_pass(docs: DataFrame, schema: T.StructType, *steps: Step) -> DataFrame:
+    """Fan the cheap doc_id rows out BEFORE any bytes exist, then run
+    ``steps`` (a synth step, optionally followed by a decode step) as
+    one Python pass."""
+    flat = fan_out(docs.select("doc_id"), "doc_id")
+    return flat.mapInPandas(_one_pass(*steps), schema)
+
+
+def _decode_pass(payloads: DataFrame, schema: T.StructType, step: Step) -> DataFrame:
+    """One decode step over a payload relation.  NO fan_out here: the
+    payload relation arrives already fanned (the synth/load stage
+    repartitions the cheap doc_id rows BEFORE the bytes exist) —
+    re-fanning would shuffle O(corpus bytes) of media a second time
+    for nothing.  Feed adequately-partitioned input."""
+    return payloads.select("doc_id", "payload").mapInPandas(step, schema)
 
 
 def attach_payload(docs: DataFrame, modality: str = "text") -> DataFrame:
@@ -230,119 +287,111 @@ def decode_image_bytes(raw: bytes):
     raise ValueError(f"unknown image magic {raw[:2]!r}")
 
 
-def synth_image_payload(docs: DataFrame) -> DataFrame:
-    """Deterministic image fixture: each doc gets a small RGB image
+def _image_synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Synth step of the image codec: each doc gets a small RGB image
     whose pixel (x, y) is a closed-form function of doc_id (so a SQL
     oracle can recompute the decoded stats), encoded to REAL bytes —
-    BMP for even doc_ids, PPM for odd — via mapInPandas.  Stands in
-    for reading media blobs from object storage."""
+    BMP for even doc_ids, PPM for odd."""
+    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    for pdf in batches:
+        payloads = []
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            w, h = 4 + d % 5, 4 + d % 3
+            x = np.arange(w, dtype=np.int64)[None, :]
+            y = np.arange(h, dtype=np.int64)[:, None]
+            img = np.stack(
+                [
+                    (d + 3 * x + 7 * y) % 256,
+                    (2 * d + 5 * x + y) % 256,
+                    (3 * d + x + 11 * y) % 256,
+                ],
+                axis=-1,
+            ).astype(np.uint8)
+            payloads.append(encode_bmp(img) if d % 2 == 0 else encode_ppm(img))
+        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 5, 4 + d % 3
-                x = np.arange(w, dtype=np.int64)[None, :]
-                y = np.arange(h, dtype=np.int64)[:, None]
-                img = np.stack(
-                    [
-                        (d + 3 * x + 7 * y) % 256,
-                        (2 * d + 5 * x + y) % 256,
-                        (3 * d + x + 11 * y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                payloads.append(
-                    encode_bmp(img) if d % 2 == 0 else encode_ppm(img)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    flat = fan_out(docs.select("doc_id"), "doc_id")
-    return flat.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
+def _image_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Decode step of the image codec: parses each BMP/PPM byte stream
+    (magic sniff, header fields, row padding, bottom-up order, channel
+    order) to per-image dimensions and exact per-channel pixel sums;
+    a corrupt payload costs one err row."""
+    for pdf in batches:
+        n = len(pdf)
+        # Pre-sized columns + index writes: the hardening cost is
+        # confined to corrupt rows — well-formed rows take one
+        # magic/length pre-check and a straight-line parse (the try
+        # block is a safety net that costs nothing unless it fires);
+        # the dict-of-append version charged 8 dict lookups + appends
+        # to every row.
+        fmts: list = [None] * n
+        ws: list = [None] * n
+        hs: list = [None] * n
+        rs: list = [None] * n
+        gs: list = [None] * n
+        bs: list = [None] * n
+        errs: list = [None] * n
+        for i, b in enumerate(pdf["payload"]):
+            raw = bytes(b) if b is not None else b""
+            # cheap structural gate: magic + minimal header length,
+            # driven by the IMAGE_MAGICS table next to
+            # decode_image_bytes so gate and decoder can't drift —
+            # obvious junk skips the full parse AND the exception
+            # plumbing entirely
+            m = raw[:2]
+            min_len = IMAGE_MAGICS.get(m)
+            if min_len is None or len(raw) < min_len:
+                errs[i] = f"ValueError: unknown or truncated image magic {m!r}"
+                continue
+            try:
+                fmt, img = decode_image_bytes(raw)
+                # dtype= accumulates in int64 without materializing an
+                # int64 copy of the pixel array first
+                sums = img.sum(axis=(0, 1), dtype="int64")
+            except Exception as e:  # dirty bytes → row, not task
+                errs[i] = f"{type(e).__name__}: {e}"[:200]
+                continue
+            fmts[i] = fmt
+            ws[i] = img.shape[1]
+            hs[i] = img.shape[0]
+            rs[i] = int(sums[0])
+            gs[i] = int(sums[1])
+            bs[i] = int(sums[2])
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"].to_numpy(),
+                "format": fmts,
+                "width": ws,
+                "height": hs,
+                "sum_r": rs,
+                "sum_g": gs,
+                "sum_b": bs,
+                "err": errs,
+            }
+        )
+
+
+def synth_image_payload(docs: DataFrame) -> DataFrame:
+    """Deterministic image fixture (the image synth step) as a
+    (doc_id, payload) relation.  Stands in for reading media blobs
+    from object storage."""
+    return _synth_pass(docs, PAYLOAD_SCHEMA, _image_synth)
 
 
 def decode_image(payloads: DataFrame) -> DataFrame:
-    """REAL image decode over binary payloads via mapInPandas: parses
-    each BMP/PPM byte stream (magic sniff, header fields, row padding,
-    bottom-up order, channel order) and emits per-image dimensions and
-    exact per-channel pixel sums.  Arrow-batched, per-partition
-    streaming — at 100 TB this is a scan-shaped stage with no shuffle;
-    batch size bounded by arrow.maxRecordsPerBatch."""
+    """REAL image decode over any binary payload relation via
+    mapInPandas: per-image dimensions and exact per-channel pixel sums.
+    Arrow-batched, per-partition streaming — at 100 TB this is a
+    scan-shaped stage with no shuffle; batch size bounded by
+    arrow.maxRecordsPerBatch."""
+    return _decode_pass(payloads, IMAGE_STATS_SCHEMA, _image_decode)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            # Pre-sized columns + index writes: the hardening cost is
-            # confined to corrupt rows — well-formed rows take one
-            # magic/length pre-check and a straight-line parse (the
-            # try block is a safety net that costs nothing unless it
-            # fires); the dict-of-append version charged 8 dict
-            # lookups + appends to every row.
-            fmts: list = [None] * n
-            ws: list = [None] * n
-            hs: list = [None] * n
-            rs: list = [None] * n
-            gs: list = [None] * n
-            bs: list = [None] * n
-            errs: list = [None] * n
-            for i, b in enumerate(pdf["payload"]):
-                raw = bytes(b) if b is not None else b""
-                # cheap structural gate: magic + minimal header length,
-                # driven by the IMAGE_MAGICS table next to
-                # decode_image_bytes so gate and decoder can't drift —
-                # obvious junk skips the full parse AND the exception
-                # plumbing entirely
-                m = raw[:2]
-                min_len = IMAGE_MAGICS.get(m)
-                if min_len is None or len(raw) < min_len:
-                    errs[i] = (
-                        f"ValueError: unknown or truncated image magic {m!r}"
-                    )
-                    continue
-                try:
-                    fmt, img = decode_image_bytes(raw)
-                    # dtype= accumulates in int64 without materializing
-                    # an int64 copy of the pixel array first
-                    sums = img.sum(axis=(0, 1), dtype="int64")
-                except Exception as e:  # dirty bytes → row, not task
-                    errs[i] = f"{type(e).__name__}: {e}"[:200]
-                    continue
-                fmts[i] = fmt
-                ws[i] = img.shape[1]
-                hs[i] = img.shape[0]
-                rs[i] = int(sums[0])
-                gs[i] = int(sums[1])
-                bs[i] = int(sums[2])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "format": fmts,
-                    "width": ws,
-                    "height": hs,
-                    "sum_r": rs,
-                    "sum_g": gs,
-                    "sum_b": bs,
-                    "err": errs,
-                }
-            )
 
-    # NO fan_out here: the payload relation arrives already fanned (the
-    # synth/load stage repartitions the cheap doc_id rows BEFORE the
-    # bytes exist) — re-fanning would shuffle O(corpus bytes) of media
-    # a second time for nothing.  Feed adequately-partitioned input.
-    flat = payloads.select("doc_id", "payload")
-    return flat.mapInPandas(batches, IMAGE_STATS_SCHEMA)
+def synth_decode_image(docs: DataFrame) -> DataFrame:
+    """``decode_image(synth_image_payload(docs))`` as one Python pass."""
+    return _synth_pass(docs, IMAGE_STATS_SCHEMA, _image_synth, _image_decode)
 
 
 # --- real audio codec (RIFF/WAVE PCM16, no audio lib needed) --------------
@@ -434,111 +483,111 @@ def decode_wav_bytes(raw: bytes):
     return sample_rate, frames
 
 
+def _audio_synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Synth step of the audio codec: each doc gets a short PCM16 clip
+    whose sample (frame i, channel c) is a closed form of doc_id (so a
+    SQL oracle can recompute the decoded stats), encoded to REAL
+    RIFF/WAVE bytes.  Mono for even ids, stereo for odd; every 5th doc
+    carries an unknown odd-sized chunk the decoder must skip."""
+    import numpy as np
+
+    for pdf in batches:
+        payloads = []
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            ch = 1 + d % 2
+            sr = 8000 * (1 + d % 3)
+            n = 64 + d % 33
+            i = np.arange(n, dtype=np.int64)[:, None]
+            c = np.arange(ch, dtype=np.int64)[None, :]
+            v = ((31 * d + 17 * i + 7 * c) % 4001) - 2000
+            payloads.append(encode_wav(v.astype(np.int16), sr, junk_chunk=d % 5 == 0))
+        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+
+def _audio_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Decode step of the audio codec: walks each RIFF chunk list,
+    parses fmt_, de-interleaves PCM16 frames, and emits per-clip format
+    fields plus exact integer amplitude stats (sum of |sample|, peak);
+    a corrupt payload costs one err row."""
+    for pdf in batches:
+        rows = {k: [] for k in ("doc_id", "sample_rate", "channels",
+                                "n_frames", "sum_abs", "peak", "err")}
+        for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
+            rows["doc_id"].append(doc_id)
+            try:
+                sr, frames = decode_wav_bytes(bytes(b))
+                absv = abs(frames.astype("int64"))
+                stats = (sr, frames.shape[1], frames.shape[0],
+                         int(absv.sum()),
+                         int(absv.max()) if frames.size else 0)
+            except Exception as e:  # dirty bytes → row, not task
+                for k in ("sample_rate", "channels", "n_frames",
+                          "sum_abs", "peak"):
+                    rows[k].append(None)
+                rows["err"].append(f"{type(e).__name__}: {e}"[:200])
+                continue
+            for k, v in zip(("sample_rate", "channels", "n_frames",
+                             "sum_abs", "peak"), stats):
+                rows[k].append(v)
+            rows["err"].append(None)
+        yield pd.DataFrame(rows)
+
+
+def _audio_energy(
+    batches: Iterator[pd.DataFrame], block_frames: int = AUDIO_BLOCK_FRAMES
+) -> Iterator[pd.DataFrame]:
+    """Blockwise decode step of the audio codec: each clip expands to
+    one row per ``block_frames``-frame block with the block's exact
+    integer energy (sum of sample², all channels)."""
+    for pdf in batches:
+        ids, idxs, energies = [], [], []
+        for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
+            _, frames = decode_wav_bytes(bytes(b))
+            sq = frames.astype("int64") ** 2
+            for blk in range(0, frames.shape[0], block_frames):
+                ids.append(doc_id)
+                idxs.append(blk // block_frames)
+                energies.append(int(sq[blk : blk + block_frames].sum()))
+        yield pd.DataFrame({"doc_id": ids, "block_idx": idxs, "energy": energies})
+
+
 def synth_audio_payload(docs: DataFrame) -> DataFrame:
-    """Deterministic audio fixture: each doc gets a short PCM16 clip
-    whose sample (frame i, channel c) is a closed form of doc_id (so
-    a SQL oracle can recompute the decoded stats), encoded to REAL
-    RIFF/WAVE bytes.  Mono for even ids, stereo for odd; every 5th
-    doc carries an unknown odd-sized chunk the decoder must skip."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ch = 1 + d % 2
-                sr = 8000 * (1 + d % 3)
-                n = 64 + d % 33
-                i = np.arange(n, dtype=np.int64)[:, None]
-                c = np.arange(ch, dtype=np.int64)[None, :]
-                v = ((31 * d + 17 * i + 7 * c) % 4001) - 2000
-                payloads.append(
-                    encode_wav(v.astype(np.int16), sr, junk_chunk=d % 5 == 0)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    flat = fan_out(docs.select("doc_id"), "doc_id")
-    return flat.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
+    """Deterministic audio fixture (the audio synth step) as a
+    (doc_id, payload) relation."""
+    return _synth_pass(docs, PAYLOAD_SCHEMA, _audio_synth)
 
 
 def decode_audio(payloads: DataFrame) -> DataFrame:
-    """REAL audio decode over binary payloads via mapInPandas: walks
-    each RIFF chunk list, parses fmt_, de-interleaves PCM16 frames,
-    and emits per-clip format fields plus exact integer amplitude
-    stats (sum of |sample|, peak).  Scan-shaped at 100 TB — no
-    shuffle, Arrow-batched, per-partition streaming."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "sample_rate", "channels",
-                                    "n_frames", "sum_abs", "peak", "err")}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    sr, frames = decode_wav_bytes(bytes(b))
-                    absv = abs(frames.astype("int64"))
-                    stats = (sr, frames.shape[1], frames.shape[0],
-                             int(absv.sum()),
-                             int(absv.max()) if frames.size else 0)
-                except Exception as e:  # dirty bytes → row, not task
-                    for k in ("sample_rate", "channels", "n_frames",
-                              "sum_abs", "peak"):
-                        rows[k].append(None)
-                    rows["err"].append(f"{type(e).__name__}: {e}"[:200])
-                    continue
-                for k, v in zip(("sample_rate", "channels", "n_frames",
-                                 "sum_abs", "peak"), stats):
-                    rows[k].append(v)
-                rows["err"].append(None)
-            yield pd.DataFrame(rows)
-
-    # NO fan_out here: the payload relation arrives already fanned (the
-    # synth/load stage repartitions the cheap doc_id rows BEFORE the
-    # bytes exist) — re-fanning would shuffle O(corpus bytes) of media
-    # a second time for nothing.  Feed adequately-partitioned input.
-    flat = payloads.select("doc_id", "payload")
-    return flat.mapInPandas(batches, AUDIO_STATS_SCHEMA)
+    """REAL audio decode over any binary payload relation via
+    mapInPandas: per-clip format fields plus exact integer amplitude
+    stats.  Scan-shaped at 100 TB — no shuffle, Arrow-batched,
+    per-partition streaming."""
+    return _decode_pass(payloads, AUDIO_STATS_SCHEMA, _audio_decode)
 
 
 def audio_block_energy(
     payloads: DataFrame, block_frames: int = AUDIO_BLOCK_FRAMES
 ) -> DataFrame:
     """Blockwise feature extraction — the audio analog of video frame
-    sampling: each clip expands to one row per ``block_frames``-frame
-    block with the block's exact integer energy (sum of sample², all
-    channels).  The 1→N row expansion across the Arrow boundary a
-    real spectral-feature extractor uses."""
+    sampling: the 1→N row expansion across the Arrow boundary a real
+    spectral-feature extractor uses."""
+    step = functools.partial(_audio_energy, block_frames=block_frames)
+    return _decode_pass(payloads, AUDIO_ENERGY_SCHEMA, step)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, energies = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                _, frames = decode_wav_bytes(bytes(b))
-                sq = frames.astype("int64") ** 2
-                for blk in range(0, frames.shape[0], block_frames):
-                    ids.append(doc_id)
-                    idxs.append(blk // block_frames)
-                    energies.append(int(sq[blk : blk + block_frames].sum()))
-            yield pd.DataFrame(
-                {"doc_id": ids, "block_idx": idxs, "energy": energies}
-            )
 
-    # NO fan_out here: the payload relation arrives already fanned (the
-    # synth/load stage repartitions the cheap doc_id rows BEFORE the
-    # bytes exist) — re-fanning would shuffle O(corpus bytes) of media
-    # a second time for nothing.  Feed adequately-partitioned input.
-    flat = payloads.select("doc_id", "payload")
-    return flat.mapInPandas(batches, AUDIO_ENERGY_SCHEMA)
+def synth_decode_audio(docs: DataFrame) -> DataFrame:
+    """``decode_audio(synth_audio_payload(docs))`` as one Python pass."""
+    return _synth_pass(docs, AUDIO_STATS_SCHEMA, _audio_synth, _audio_decode)
+
+
+def synth_audio_block_energy(
+    docs: DataFrame, block_frames: int = AUDIO_BLOCK_FRAMES
+) -> DataFrame:
+    """``audio_block_energy(synth_audio_payload(docs))`` as one Python
+    pass."""
+    step = functools.partial(_audio_energy, block_frames=block_frames)
+    return _synth_pass(docs, AUDIO_ENERGY_SCHEMA, _audio_synth, step)
 
 
 # --- real video codec (AVI + uncompressed DIB frames) ---------------------
@@ -666,84 +715,87 @@ def decode_avi_bytes(raw: bytes):
     return w, h, np.stack([_dib_decode(f, w, h) for f in frames])
 
 
+def _video_synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Synth step of the video codec: each doc gets a short clip whose
+    frame f's pixel (x, y) is a closed form of doc_id (so a SQL oracle
+    can recompute per-frame channel sums), encoded to REAL AVI bytes
+    with uncompressed DIB frames."""
+    import numpy as np
+
+    for pdf in batches:
+        payloads = []
+        for doc_id in pdf["doc_id"]:
+            d = int(doc_id)
+            w, h, n = 4 + d % 4, 3 + d % 3, 3 + d % 5
+            f = np.arange(n, dtype=np.int64)[:, None, None]
+            y = np.arange(h, dtype=np.int64)[None, :, None]
+            x = np.arange(w, dtype=np.int64)[None, None, :]
+            clip = np.stack(
+                [
+                    (d + 13 * f + 3 * x + 7 * y) % 256,
+                    (2 * d + 13 * f + 5 * x + y) % 256,
+                    (3 * d + 13 * f + x + 11 * y) % 256,
+                ],
+                axis=-1,
+            ).astype(np.uint8)
+            payloads.append(encode_avi(clip))
+        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+
+def _video_decode(
+    batches: Iterator[pd.DataFrame], stride: int = FRAME_STRIDE
+) -> Iterator[pd.DataFrame]:
+    """Decode step of the video codec: parses each AVI container,
+    decodes every ``stride``-th DIB frame (row padding, bottom-up,
+    BGR), and emits exact per-frame channel sums; a corrupt payload
+    costs ONE err row."""
+    for pdf in batches:
+        rows = {k: [] for k in ("doc_id", "frame_idx", "sum_r",
+                                "sum_g", "sum_b", "err")}
+        for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
+            try:
+                _, _, clip = decode_avi_bytes(bytes(b))
+            except Exception as e:  # dirty bytes → ONE err row
+                rows["doc_id"].append(doc_id)
+                for k in ("frame_idx", "sum_r", "sum_g", "sum_b"):
+                    rows[k].append(None)
+                rows["err"].append(f"{type(e).__name__}: {e}"[:200])
+                continue
+            for f in range(0, clip.shape[0], stride):
+                sums = clip[f].astype("int64").sum(axis=(0, 1))
+                rows["doc_id"].append(doc_id)
+                rows["frame_idx"].append(f)
+                rows["sum_r"].append(int(sums[0]))
+                rows["sum_g"].append(int(sums[1]))
+                rows["sum_b"].append(int(sums[2]))
+                rows["err"].append(None)
+        yield pd.DataFrame(rows)
+
+
 def synth_video_payload(docs: DataFrame) -> DataFrame:
-    """Deterministic video fixture: each doc gets a short clip whose
-    frame f's pixel (x, y) is a closed form of doc_id (so a SQL
-    oracle can recompute per-frame channel sums), encoded to REAL
-    AVI bytes with uncompressed DIB frames."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, n = 4 + d % 4, 3 + d % 3, 3 + d % 5
-                f = np.arange(n, dtype=np.int64)[:, None, None]
-                y = np.arange(h, dtype=np.int64)[None, :, None]
-                x = np.arange(w, dtype=np.int64)[None, None, :]
-                clip = np.stack(
-                    [
-                        (d + 13 * f + 3 * x + 7 * y) % 256,
-                        (2 * d + 13 * f + 5 * x + y) % 256,
-                        (3 * d + 13 * f + x + 11 * y) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                payloads.append(encode_avi(clip))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    flat = fan_out(docs.select("doc_id"), "doc_id")
-    return flat.mapInPandas(
-        batches,
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("payload", T.BinaryType()),
-            ]
-        ),
-    )
+    """Deterministic video fixture (the video synth step) as a
+    (doc_id, payload) relation."""
+    return _synth_pass(docs, PAYLOAD_SCHEMA, _video_synth)
 
 
 def decode_video_frames(
     payloads: DataFrame, stride: int = FRAME_STRIDE
 ) -> DataFrame:
-    """REAL video decode + frame sampling over binary payloads: parses
-    each AVI container, decodes every ``stride``-th DIB frame (row
-    padding, bottom-up, BGR), and emits exact per-frame channel sums —
-    the 1→N row expansion of fake_frame_sample with a genuine codec
-    inside.  Scan-shaped at 100 TB: no shuffle, Arrow-batched."""
+    """REAL video decode + frame sampling over any binary payload
+    relation — the 1→N row expansion of fake_frame_sample with a
+    genuine codec inside.  Scan-shaped at 100 TB: no shuffle,
+    Arrow-batched."""
+    step = functools.partial(_video_decode, stride=stride)
+    return _decode_pass(payloads, VIDEO_FRAME_SCHEMA, step)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "frame_idx", "sum_r",
-                                    "sum_g", "sum_b", "err")}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    _, _, clip = decode_avi_bytes(bytes(b))
-                except Exception as e:  # dirty bytes → ONE err row
-                    rows["doc_id"].append(doc_id)
-                    for k in ("frame_idx", "sum_r", "sum_g", "sum_b"):
-                        rows[k].append(None)
-                    rows["err"].append(f"{type(e).__name__}: {e}"[:200])
-                    continue
-                for f in range(0, clip.shape[0], stride):
-                    sums = clip[f].astype("int64").sum(axis=(0, 1))
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(f)
-                    rows["sum_r"].append(int(sums[0]))
-                    rows["sum_g"].append(int(sums[1]))
-                    rows["sum_b"].append(int(sums[2]))
-                    rows["err"].append(None)
-            yield pd.DataFrame(rows)
 
-    # NO fan_out here: the payload relation arrives already fanned (the
-    # synth/load stage repartitions the cheap doc_id rows BEFORE the
-    # bytes exist) — re-fanning would shuffle O(corpus bytes) of media
-    # a second time for nothing.  Feed adequately-partitioned input.
-    flat = payloads.select("doc_id", "payload")
-    return flat.mapInPandas(batches, VIDEO_FRAME_SCHEMA)
+def synth_decode_video_frames(
+    docs: DataFrame, stride: int = FRAME_STRIDE
+) -> DataFrame:
+    """``decode_video_frames(synth_video_payload(docs))`` as one Python
+    pass."""
+    step = functools.partial(_video_decode, stride=stride)
+    return _synth_pass(docs, VIDEO_FRAME_SCHEMA, _video_synth, step)
 
 
 def fake_decode_features(payloads: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:

@@ -107,7 +107,7 @@ def q_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # synth payloads are well-formed, so the decoded-rows filter is a
     # no-op here; the err column is the dirty-bytes path, exercised in
     # tests/test_multimodal_robustness.py
-    decoded = MM.decode_image(MM.synth_image_payload(docs))
+    decoded = MM.synth_decode_image(docs)
     return decoded.where(F.col("err").isNull()).drop("err")
 
 
@@ -146,7 +146,7 @@ def q_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    decoded = MM.decode_audio(MM.synth_audio_payload(docs))
+    decoded = MM.synth_decode_audio(docs)
     return decoded.where(F.col("err").isNull()).drop("err")
 
 
@@ -179,7 +179,7 @@ def q_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_audio_block_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return MM.audio_block_energy(MM.synth_audio_payload(docs))
+    return MM.synth_audio_block_energy(docs)
 
 
 @register_extra(
@@ -215,7 +215,7 @@ def q_audio_block_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    decoded = MM.decode_video_frames(MM.synth_video_payload(docs))
+    decoded = MM.synth_decode_video_frames(docs)
     return decoded.where(F.col("err").isNull()).drop("err")
 
 

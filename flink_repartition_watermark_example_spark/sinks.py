@@ -241,16 +241,16 @@ def forget_keys(
     Returns {version: rows_removed}.
     """
     store = VersionedStore(snapshot_path)
+    store.recover()
+    vs = _snapshot_versions(snapshot_path)
+    if not vs:
+        return {}  # before pinning the forget set: no Spark job runs
     keys = (
         keys_df.select(*key_cols)
         .dropDuplicates()
         .localCheckpoint(eager=True)
         .hint("broadcast")
     )
-    store.recover()
-    vs = _snapshot_versions(snapshot_path)
-    if not vs:
-        return {}
     schema = store.snapshot(spark).schema
     return {
         v: store.rewrite(

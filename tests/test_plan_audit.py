@@ -9,7 +9,11 @@ Checked for EVERY registered batch query (primary + extras):
   query must still plan one, so the list cannot go stale;
 - no BatchEvalPython / row-at-a-time Python UDF — Python only at the
   Arrow boundary (ArrowEvalPython / mapInPandas are the allowed
-  shapes).
+  shapes);
+- at most one Python exec node per stage, except in the allowlisted
+  queries (TWO_PYTHON_PASSES_ALLOWED): each Python exec node in a stage
+  holds its own Python worker per task, so two in one stage double the
+  worker pool and send the rows across JVM↔Python twice.
 
 Streaming queries are excluded: invoking them executes a full replay
 (they are audited by their own tests); this audit is analysis-only and
@@ -66,6 +70,14 @@ NESTED_LOOP_ALLOWED = {
     "key_skew_report",
 }
 
+# Stages with two Python exec nodes, allowed only where the passes
+# cannot be composed into one mapInPandas function:
+TWO_PYTHON_PASSES_ALLOWED = {
+    # a broadcast probe join sits between the bucket-hash pass and the
+    # scoring pass (queries_similarity.py)
+    "lsh_ann_topk",
+    "ann_recall_lsh",
+}
 
 # Partition-less WindowExec funnels its entire input through ONE task
 # (Spark's contract for a window with no PARTITION BY) — the silent
@@ -94,35 +106,55 @@ GLOBAL_WINDOW_ALLOWED = {
 def test_nested_loop_allowlist_names_audited_queries():
     """Every allowlisted name must be a batch query the audit runs, so
     its entry is checked against its plan."""
-    assert NESTED_LOOP_ALLOWED <= {p.values[0] for p in BATCH}
+    audited = {p.values[0] for p in BATCH}
+    assert NESTED_LOOP_ALLOWED <= audited
+    assert TWO_PYTHON_PASSES_ALLOWED <= audited
 
 
 def _physical_nodes(jplan):
-    """DFS over a physical plan's JVM tree.  AdaptiveSparkPlanExec and
+    """DFS over a physical plan's JVM tree, yielding (node, stage id).
+    A stage is the subtree between Exchange nodes: an exchange's
+    children run in the stage below it.  AdaptiveSparkPlanExec and
     query-stage wrappers are LEAF nodes whose real plan hangs off an
     accessor, not children() — without unwrapping them the walk sees
     nothing and the guard silently passes everything."""
-    stack = [jplan]
+    stack, next_stage = [(jplan, 0)], 1
     while stack:
-        node = stack.pop()
-        yield node
+        node, stage = stack.pop()
+        yield node, stage
         cls = node.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
-            stack.append(node.executedPlan())
+            stack.append((node.executedPlan(), stage))
             continue
         if cls.endswith("QueryStageExec"):
-            stack.append(node.plan())
+            stack.append((node.plan(), stage))
             continue
+        if "Exchange" in cls:
+            stage, next_stage = next_stage, next_stage + 1
         it = node.children().iterator()
         while it.hasNext():
-            stack.append(it.next())
+            stack.append((it.next(), stage))
+
+
+_PYTHON_EXEC_SUFFIXES = ("InPandasExec", "PythonExec", "InArrowExec")
+
+
+def _stacked_python_nodes(df) -> list[list[str]]:
+    """Simple names of the Python exec nodes of each stage that holds
+    more than one."""
+    stages: dict[int, list[str]] = {}
+    for node, stage in _physical_nodes(df._jdf.queryExecution().executedPlan()):
+        cls = node.getClass().getSimpleName()
+        if cls.endswith(_PYTHON_EXEC_SUFFIXES):
+            stages.setdefault(stage, []).append(cls)
+    return [nodes for nodes in stages.values() if len(nodes) > 1]
 
 
 def _unpartitioned_windows(df) -> list[str]:
     """Simple names of Window-style physical nodes whose partitionSpec
     is empty — each one is a single-task global sort at runtime."""
     hits = []
-    for node in _physical_nodes(df._jdf.queryExecution().executedPlan()):
+    for node, _ in _physical_nodes(df._jdf.queryExecution().executedPlan()):
         cls = node.getClass().getSimpleName()
         if cls in ("WindowExec", "WindowGroupLimitExec", "WindowInPandasExec"):
             if node.partitionSpec().isEmpty():
@@ -147,6 +179,18 @@ def test_plan_stays_in_scale_envelope(spark, sf_dir, name):
     assert "BatchEvalPython" not in plan, (
         f"{name}: row-at-a-time Python UDF in the plan\n{plan[:1500]}"
     )
+    stacked = _stacked_python_nodes(df)
+    if name in TWO_PYTHON_PASSES_ALLOWED:
+        assert stacked, (
+            f"{name}: allowlisted but no stage holds two Python exec "
+            f"nodes — drop it from TWO_PYTHON_PASSES_ALLOWED\n{plan[:1500]}"
+        )
+    else:
+        assert not stacked, (
+            f"{name}: {stacked} in one stage — each holds its own Python "
+            f"worker per task; compose the steps into one mapInPandas "
+            f"pass\n{plan[:1500]}"
+        )
     if name not in GLOBAL_WINDOW_ALLOWED:
         bad = _unpartitioned_windows(df)
         assert not bad, (

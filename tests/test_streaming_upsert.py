@@ -332,3 +332,21 @@ def test_forget_keys_counts_rows_from_parquet_footers(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert jobs <= 9, jobs
+
+
+def test_forget_keys_on_an_empty_store_runs_no_job(spark, tmp_path):
+    """A store with no version has nothing to purge: forget_keys returns
+    {} before it deduplicates and pins the forget set, so the call runs
+    zero Spark jobs."""
+    from flink_repartition_watermark_example_spark.sinks import forget_keys
+
+    forget = spark.createDataFrame([(1,), (1,)], "k long")
+    sc = spark.sparkContext
+    sc.setJobGroup("forget_keys_empty", "job count of one call")
+    try:
+        assert forget_keys(spark, str(tmp_path / "snapshot"), forget, ["k"]) == {}
+        jobs = len(sc.statusTracker().getJobIdsForGroup("forget_keys_empty"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == 0, jobs
