@@ -581,13 +581,10 @@ def synth_decode_audio(docs: DataFrame) -> DataFrame:
     return _synth_pass(docs, AUDIO_STATS_SCHEMA, _audio_synth, _audio_decode)
 
 
-def synth_audio_block_energy(
-    docs: DataFrame, block_frames: int = AUDIO_BLOCK_FRAMES
-) -> DataFrame:
+def synth_audio_block_energy(docs: DataFrame) -> DataFrame:
     """``audio_block_energy(synth_audio_payload(docs))`` as one Python
     pass."""
-    step = functools.partial(_audio_energy, block_frames=block_frames)
-    return _synth_pass(docs, AUDIO_ENERGY_SCHEMA, _audio_synth, step)
+    return _synth_pass(docs, AUDIO_ENERGY_SCHEMA, _audio_synth, _audio_energy)
 
 
 # --- real video codec (AVI + uncompressed DIB frames) ---------------------
@@ -789,13 +786,10 @@ def decode_video_frames(
     return _decode_pass(payloads, VIDEO_FRAME_SCHEMA, step)
 
 
-def synth_decode_video_frames(
-    docs: DataFrame, stride: int = FRAME_STRIDE
-) -> DataFrame:
+def synth_decode_video_frames(docs: DataFrame) -> DataFrame:
     """``decode_video_frames(synth_video_payload(docs))`` as one Python
     pass."""
-    step = functools.partial(_video_decode, stride=stride)
-    return _synth_pass(docs, VIDEO_FRAME_SCHEMA, _video_synth, step)
+    return _synth_pass(docs, VIDEO_FRAME_SCHEMA, _video_synth, _video_decode)
 
 
 def fake_decode_features(payloads: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:

@@ -195,25 +195,23 @@ def test_single_deliberate_shuffle_in_decode_plan(payloads):
 
 
 @pytest.mark.parametrize(
-    "one_pass, synth, decode, kwargs",
+    "one_pass, synth, decode",
     [
-        ("synth_decode_image", "synth_image_payload", "decode_image", {}),
-        ("synth_decode_audio", "synth_audio_payload", "decode_audio", {}),
-        ("synth_audio_block_energy", "synth_audio_payload", "audio_block_energy",
-         {"block_frames": 10}),
-        ("synth_decode_video_frames", "synth_video_payload", "decode_video_frames",
-         {"stride": 3}),
+        ("synth_decode_image", "synth_image_payload", "decode_image"),
+        ("synth_decode_audio", "synth_audio_payload", "decode_audio"),
+        ("synth_audio_block_energy", "synth_audio_payload", "audio_block_energy"),
+        ("synth_decode_video_frames", "synth_video_payload", "decode_video_frames"),
     ],
 )
-def test_one_pass_chain_equals_synth_then_decode(spark, sf_dir, one_pass, synth, decode, kwargs):
+def test_one_pass_chain_equals_synth_then_decode(spark, sf_dir, one_pass, synth, decode):
     """The one-pass synth→decode form returns exactly the rows of the
     decode step run over the synth step's payload relation, from ONE
     Python exec node in the plan instead of two."""
     docs = load_table(spark, sf_dir, "documents").limit(60)
-    fused = getattr(MM, one_pass)(docs, **kwargs)
+    fused = getattr(MM, one_pass)(docs)
     # the plan before it runs: a run's AQE plan prints initial and final
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
-    chained = getattr(MM, decode)(getattr(MM, synth)(docs), **kwargs)
+    chained = getattr(MM, decode)(getattr(MM, synth)(docs))
     rows = fused.collect()
     assert rows and sorted(rows) == sorted(chained.collect())

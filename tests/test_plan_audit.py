@@ -112,54 +112,89 @@ def test_nested_loop_allowlist_names_audited_queries():
 
 
 def _physical_nodes(jplan):
-    """DFS over a physical plan's JVM tree, yielding (node, stage id).
-    A stage is the subtree between Exchange nodes: an exchange's
-    children run in the stage below it.  AdaptiveSparkPlanExec and
+    """DFS over a physical plan's JVM tree.  AdaptiveSparkPlanExec and
     query-stage wrappers are LEAF nodes whose real plan hangs off an
     accessor, not children() — without unwrapping them the walk sees
     nothing and the guard silently passes everything."""
-    stack, next_stage = [(jplan, 0)], 1
+    stack = [jplan]
     while stack:
-        node, stage = stack.pop()
-        yield node, stage
+        node = stack.pop()
+        yield node
         cls = node.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
-            stack.append((node.executedPlan(), stage))
+            stack.append(node.executedPlan())
             continue
         if cls.endswith("QueryStageExec"):
-            stack.append((node.plan(), stage))
+            stack.append(node.plan())
             continue
-        if "Exchange" in cls:
-            stage, next_stage = next_stage, next_stage + 1
         it = node.children().iterator()
         while it.hasNext():
-            stack.append((it.next(), stage))
+            stack.append(it.next())
 
 
 _PYTHON_EXEC_SUFFIXES = ("InPandasExec", "PythonExec", "InArrowExec")
 
 
 def _stacked_python_nodes(df) -> list[list[str]]:
-    """Simple names of the Python exec nodes of each stage that holds
-    more than one."""
-    stages: dict[int, list[str]] = {}
-    for node, stage in _physical_nodes(df._jdf.queryExecution().executedPlan()):
+    """Simple names of the Python exec nodes one task runs, for each
+    stage where that is more than one.  A stage is the subtree between
+    Exchange nodes (wrappers unwrapped as in _physical_nodes).  A task
+    runs every child of a join, but only ONE child of a UnionExec (a
+    union partition is one branch's partition), so a union counts its
+    largest branch, not the sum."""
+    stages: list[list[str]] = []
+
+    def task(node) -> list[str]:
         cls = node.getClass().getSimpleName()
-        if cls.endswith(_PYTHON_EXEC_SUFFIXES):
-            stages.setdefault(stage, []).append(cls)
-    return [nodes for nodes in stages.values() if len(nodes) > 1]
+        if cls == "AdaptiveSparkPlanExec":
+            return task(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return task(node.plan())
+        it, children = node.children().iterator(), []
+        while it.hasNext():
+            children.append(it.next())
+        if "Exchange" in cls:
+            # the exchange's child runs in the stage below it
+            for child in children:
+                stages.append(task(child))
+            return []
+        below = [task(child) for child in children]
+        if cls == "UnionExec":
+            below = [max(below, key=len, default=[])]
+        own = [cls] if cls.endswith(_PYTHON_EXEC_SUFFIXES) else []
+        return own + [name for branch in below for name in branch]
+
+    stages.append(task(df._jdf.queryExecution().executedPlan()))
+    return [nodes for nodes in stages if len(nodes) > 1]
 
 
 def _unpartitioned_windows(df) -> list[str]:
     """Simple names of Window-style physical nodes whose partitionSpec
     is empty — each one is a single-task global sort at runtime."""
     hits = []
-    for node, _ in _physical_nodes(df._jdf.queryExecution().executedPlan()):
+    for node in _physical_nodes(df._jdf.queryExecution().executedPlan()):
         cls = node.getClass().getSimpleName()
         if cls in ("WindowExec", "WindowGroupLimitExec", "WindowInPandasExec"):
             if node.partitionSpec().isEmpty():
                 hits.append(cls)
     return hits
+
+
+def test_union_branches_count_as_one_task_each(spark):
+    """Two Python passes in separate union branches run in separate
+    tasks; a pass above the union runs in the same task as either."""
+
+    def same(batches):
+        return batches
+
+    base = spark.range(8)
+    branches = base.mapInPandas(same, "id long").unionAll(
+        base.mapInPandas(same, "id long")
+    )
+    assert _stacked_python_nodes(branches) == []
+    assert _stacked_python_nodes(branches.mapInPandas(same, "id long")) == [
+        ["MapInPandasExec", "MapInPandasExec"]
+    ]
 
 
 @pytest.mark.parametrize("name", BATCH)
