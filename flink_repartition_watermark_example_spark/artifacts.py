@@ -3,7 +3,9 @@
 An index artifact is something a session computes once and reuses:
 the dedup cluster build and its pinned pair relations, the LSH
 signatures, the trained k-means quantizer, the PCA basis, bucketed
-table layouts and the simhash expression trees.  Reuse is sound only
+table layouts, the simhash expression trees and the inferred schema of
+each testdata table (``sources.tables.table_schema``: inferring it
+runs a Spark job).  Reuse is sound only
 when the key covers everything the artifact was computed from, so
 every key is built here, by one rule:
 

@@ -5,6 +5,14 @@ The reference's schema system is compile-time case classes
 explicit StructTypes — never ``inferSchema``.  Parquet files carry their
 own (authoritative) schema; these structs document the contract and are
 used to validate loads and to construct synthetic frames in tests.
+
+``TABLE_SCHEMAS`` is not the read schema of the test tables:
+``sources.tables.table_schema`` reads the files' own schema (once per
+session).  The files store ``l_shipdate``, ``o_orderdate`` and
+``events.ts`` as timestamps without a zone, which Spark reads as
+``timestamp_ntz`` where the declared schemas say ``timestamp``; reading
+with the declared schema would change the type of every query over
+those columns.
 """
 
 from __future__ import annotations

@@ -422,6 +422,7 @@ AUDIO_ENERGY_SCHEMA = T.StructType(
         T.StructField("doc_id", T.LongType()),
         T.StructField("block_idx", T.LongType()),
         T.StructField("energy", T.LongType()),
+        T.StructField("err", T.StringType()),  # null = decoded (see IMAGE_STATS_SCHEMA)
     ]
 )
 
@@ -539,17 +540,26 @@ def _audio_energy(
 ) -> Iterator[pd.DataFrame]:
     """Blockwise decode step of the audio codec: each clip expands to
     one row per ``block_frames``-frame block with the block's exact
-    integer energy (sum of sample², all channels)."""
+    integer energy (sum of sample², all channels); a corrupt payload
+    costs ONE err row."""
     for pdf in batches:
-        ids, idxs, energies = [], [], []
+        rows = {k: [] for k in ("doc_id", "block_idx", "energy", "err")}
         for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-            _, frames = decode_wav_bytes(bytes(b))
+            try:
+                _, frames = decode_wav_bytes(bytes(b))
+            except Exception as e:  # dirty bytes → ONE err row
+                rows["doc_id"].append(doc_id)
+                rows["block_idx"].append(None)
+                rows["energy"].append(None)
+                rows["err"].append(f"{type(e).__name__}: {e}"[:200])
+                continue
             sq = frames.astype("int64") ** 2
             for blk in range(0, frames.shape[0], block_frames):
-                ids.append(doc_id)
-                idxs.append(blk // block_frames)
-                energies.append(int(sq[blk : blk + block_frames].sum()))
-        yield pd.DataFrame({"doc_id": ids, "block_idx": idxs, "energy": energies})
+                rows["doc_id"].append(doc_id)
+                rows["block_idx"].append(blk // block_frames)
+                rows["energy"].append(int(sq[blk : blk + block_frames].sum()))
+                rows["err"].append(None)
+        yield pd.DataFrame(rows)
 
 
 def synth_audio_payload(docs: DataFrame) -> DataFrame:

@@ -166,7 +166,8 @@ def q_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM fic)
     SELECT doc_id,
            CAST(block_idx AS BIGINT) AS block_idx,
-           CAST(sum(v * v) AS BIGINT) AS energy
+           CAST(sum(v * v) AS BIGINT) AS energy,
+           CAST(NULL AS VARCHAR) AS err
     FROM s GROUP BY doc_id, block_idx
     """,
     doc="Blockwise audio feature extraction (the audio analog of video "
@@ -175,7 +176,9 @@ def q_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "integer energy — the 1-to-N flatMap shape across the Arrow "
     "boundary a real spectral extractor uses.  The oracle re-derives "
     "each block's sum-of-squares from the sample formula, so the row "
-    "expansion AND the decode are value-checked.",
+    "expansion AND the decode are value-checked.  A corrupt payload is "
+    "one row with null block_idx/energy and a populated err (null on "
+    "every decoded row).",
 )
 def q_audio_block_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_repartition_watermark_example_spark.queries import register, register_extra
-from flink_repartition_watermark_example_spark.sources.tables import load_table
+from flink_repartition_watermark_example_spark.sources.tables import table_schema
 from flink_repartition_watermark_example_spark.streaming.eventtime import (
     ensure_event_time,
 )
@@ -62,7 +62,7 @@ def _replay(
     all-NULL sentinel below the watermark node — observed as the
     purchase-side watermark freezing at its data max while the view
     side advanced."""
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
+    table_schema(spark, sf_dir, "events")  # sets the nanosAsLong conf
     d = tempfile.mkdtemp(prefix="stream_replay_")
     try:
         src = os.path.join(sf_dir, "events.parquet")
@@ -238,9 +238,8 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         interval_join_views_purchases,
     )
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_ij_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = table_schema(spark, sf_dir, "events")
 
     src = os.path.join(sf_dir, "events.parquet")
     # pathGlobFilter matches leaf FILES: a directory-shaped table's
@@ -352,9 +351,8 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
 def q_streaming_dedup_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_repartition_watermark_example_spark.streaming.dedup import dedup_stream
 
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
     name = "stream_dd_" + uuid.uuid4().hex[:8]
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = table_schema(spark, sf_dir, "events")
     src = os.path.join(sf_dir, "events.parquet")
     base, glob = (
         (src, "*.parquet") if os.path.isdir(src) else (sf_dir, "events.parquet")

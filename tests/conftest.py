@@ -49,3 +49,26 @@ def session_builder(spark, monkeypatch):
     builder = Builder()
     monkeypatch.setattr(session.SparkSession, "builder", builder)
     return builder
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (fn(), the number of Spark jobs fn launched),
+    counted under a job group of its own.  The listener bus is drained
+    before the status tracker is read, so no finished job is missed."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = "count_jobs_" + uuid.uuid4().hex[:8]
+        sc.setJobGroup(group, "job count of one call")
+        try:
+            out = fn()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return run

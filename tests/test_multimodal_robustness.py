@@ -84,6 +84,42 @@ def test_audio_decoder_survives_corrupt_payloads(spark):
         assert (got[d].err is None) != (got[d].sum_abs is None)
 
 
+def test_audio_block_energy_survives_corrupt_payloads(spark):
+    """One corrupt payload is one err row with null block_idx/energy, in
+    the two-pass form and in the one-pass synth→energy form (both run
+    ``_audio_energy``); the good clip's blocks keep their exact energy."""
+    import pandas as pd
+
+    samples = ((np.arange(40, dtype=np.int64) * 977) % 4001 - 2000).astype(
+        np.int16
+    ).reshape(20, 2)
+    payloads = {1: MM.encode_wav(samples, 8000), 2: b"OggS" + b"\x00" * 40}
+    out = spark.createDataFrame(sorted(payloads.items()), PAYLOAD_SCHEMA)
+
+    def synth(batches):  # stands in for the synth step: same bytes
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"],
+                 "payload": [payloads[int(d)] for d in pdf["doc_id"]]}
+            )
+
+    one_pass = out.select("doc_id").mapInPandas(
+        MM._one_pass(synth, MM._audio_energy), MM.AUDIO_ENERGY_SCHEMA
+    )
+    sq = samples.astype("int64") ** 2
+    want = [
+        (1, b, int(sq[b * MM.AUDIO_BLOCK_FRAMES : (b + 1) * MM.AUDIO_BLOCK_FRAMES].sum()))
+        for b in range(-(-20 // MM.AUDIO_BLOCK_FRAMES))
+    ]
+    for df in (MM.audio_block_energy(out), one_pass):
+        got = df.collect()
+        ok = sorted((r.doc_id, r.block_idx, r.energy) for r in got if r.err is None)
+        assert ok == want
+        (bad,) = [r for r in got if r.doc_id == 2]
+        assert bad.err.startswith("ValueError: not a RIFF/WAVE payload")
+        assert bad.block_idx is None and bad.energy is None
+
+
 def test_video_decoder_survives_corrupt_payloads(spark):
     clip = np.stack([_img(f) for f in range(4)])
     good = MM.encode_avi(clip)

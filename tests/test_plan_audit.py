@@ -15,12 +15,23 @@ Checked for EVERY registered batch query (primary + extras):
   holds its own Python worker per task, so two in one stage double the
   worker pool and send the rows across JVM↔Python twice.
 
+Checked for every batch GATE query, built twice at sf0.01:
+
+- the second build launches no Spark job (a table's schema is inferred
+  once per session, and construction must not re-run eager work),
+  except in the allowlisted queries whose builder collects driver-side
+  data or pins a relation by design (REBUILD_JOBS_ALLOWED), and every
+  allowlisted query must still launch one, so the list cannot go
+  stale.
+
 Streaming queries are excluded: invoking them executes a full replay
 (they are audited by their own tests); this audit is analysis-only and
 builds each plan without running it.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -37,6 +48,28 @@ BATCH = [
     for n in ALL
     if not n.startswith("streaming_")
 ]
+
+GATE_BATCH = [n for n in QUERIES if not n.startswith("streaming_")]
+
+# Gate builders allowed to launch Spark jobs when built a second time
+# in a session: each collects a small driver-side input or pins a
+# reused relation by design.
+REBUILD_JOBS_ALLOWED = {
+    # _centroid_set's count sizes the centroid set and the ordered
+    # collect fetches it (operators/similarity.py)
+    "semantic_dedup_scaled",
+    # _collect_queries collects the |Q|-row query batch the scan's
+    # closure scores against (operators/similarity.py)
+    "cosine_topk",
+    # the query-batch collect plus _centroids' collect of the 16 IVF
+    # centroids (operators/similarity.py)
+    "ivf_ann_topk",
+    # neardup_pairs_lsh pins the bucketized relation that feeds both
+    # sides of its self-join with an eager localCheckpoint (the fan-out
+    # exchange plus the checkpoint), so the kernel runs once, not once
+    # per side (operators/similarity.py)
+    "embedding_neardup_pairs",
+}
 
 # Nested-loop joins allowed only where the build side is O(1) rows:
 NESTED_LOOP_ALLOWED = {
@@ -109,6 +142,7 @@ def test_nested_loop_allowlist_names_audited_queries():
     audited = {p.values[0] for p in BATCH}
     assert NESTED_LOOP_ALLOWED <= audited
     assert TWO_PYTHON_PASSES_ALLOWED <= audited
+    assert REBUILD_JOBS_ALLOWED <= set(GATE_BATCH)
 
 
 def _physical_nodes(jplan):
@@ -232,6 +266,26 @@ def test_plan_stays_in_scale_envelope(spark, sf_dir, name):
             f"{name}: partition-less {bad} — the whole input funnels "
             f"through one task; add a shard key to PARTITION BY or "
             f"allowlist with a boundedness argument\n{plan[:1500]}"
+        )
+
+
+@pytest.mark.parametrize("name", GATE_BATCH)
+def test_second_build_launches_no_job(spark, sf_dir, count_jobs, name):
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf):
+        pytest.skip(f"no {sf}")
+    build = QUERIES[name].spark
+    build(spark, sf)
+    _, jobs = count_jobs(lambda: build(spark, sf))
+    if name in REBUILD_JOBS_ALLOWED:
+        assert jobs, (
+            f"{name}: allowlisted but its second build launched no job "
+            f"— drop it from REBUILD_JOBS_ALLOWED"
+        )
+    else:
+        assert jobs == 0, (
+            f"{name}: its second build launched {jobs} Spark job(s) — "
+            f"building a plan must not re-run inference or eager work"
         )
 
 

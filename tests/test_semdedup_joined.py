@@ -207,7 +207,7 @@ def test_purge_slab_cap_blocks_without_changing_survivors(
     assert _survivors(SIM.semantic_dedup(emb)) == whole
 
 
-def test_scaled_call_runs_fewer_jobs_than_the_old_dispatch(spark, sf_dir):
+def test_scaled_call_runs_fewer_jobs_than_the_old_dispatch(spark, sf_dir, count_jobs):
     """One semantic_dedup_scaled call, after a first call has cached
     its assignment, runs fewer Spark jobs than the 11 the tiered
     dispatch it replaced ran: one aggregate sizes the centroid set,
@@ -216,13 +216,7 @@ def test_scaled_call_runs_fewer_jobs_than_the_old_dispatch(spark, sf_dir):
     from flink_repartition_watermark_example_spark.queries import QUERIES
 
     q = QUERIES["semantic_dedup_scaled"]
-    sc = spark.sparkContext
     q.spark(spark, sf_dir).collect()
-    sc.setJobGroup("semdedup_scaled_jobs", "job count of one call")
-    try:
-        assert q.spark(spark, sf_dir).collect()
-        jobs = len(sc.statusTracker().getJobIdsForGroup("semdedup_scaled_jobs"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    rows, jobs = count_jobs(lambda: q.spark(spark, sf_dir).collect())
+    assert rows
     assert jobs < 11, jobs

@@ -308,7 +308,7 @@ def test_forget_keys_interrupted_swap_leaves_no_short_version(
     assert _state(spark, snap) == _expected(spark, batch_0 + BATCH_2 + BATCH_3)
 
 
-def test_forget_keys_counts_rows_from_parquet_footers(spark, tmp_path):
+def test_forget_keys_counts_rows_from_parquet_footers(spark, tmp_path, count_jobs):
     """The before/after row counts of each version come from parquet
     footers, not count() jobs, and the forget set and the store's
     schema are each found once per call: one call over three versions
@@ -323,30 +323,20 @@ def test_forget_keys_counts_rows_from_parquet_footers(spark, tmp_path):
     for bid, rows in enumerate((BATCH_1, BATCH_2, BATCH_3)):
         w(spark.createDataFrame(rows, SCHEMA), bid)
     forget = spark.createDataFrame([(1,)], "k long")
-    sc = spark.sparkContext
-    sc.setJobGroup("forget_keys_jobs", "job count of one call")
-    try:
-        assert forget_keys(spark, snap, forget, ["k"]) == {0: 1, 1: 1, 2: 0}
-        jobs = len(sc.statusTracker().getJobIdsForGroup("forget_keys_jobs"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    purged, jobs = count_jobs(lambda: forget_keys(spark, snap, forget, ["k"]))
+    assert purged == {0: 1, 1: 1, 2: 0}
     assert jobs <= 9, jobs
 
 
-def test_forget_keys_on_an_empty_store_runs_no_job(spark, tmp_path):
+def test_forget_keys_on_an_empty_store_runs_no_job(spark, tmp_path, count_jobs):
     """A store with no version has nothing to purge: forget_keys returns
     {} before it deduplicates and pins the forget set, so the call runs
     zero Spark jobs."""
     from flink_repartition_watermark_example_spark.sinks import forget_keys
 
     forget = spark.createDataFrame([(1,), (1,)], "k long")
-    sc = spark.sparkContext
-    sc.setJobGroup("forget_keys_empty", "job count of one call")
-    try:
-        assert forget_keys(spark, str(tmp_path / "snapshot"), forget, ["k"]) == {}
-        jobs = len(sc.statusTracker().getJobIdsForGroup("forget_keys_empty"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    purged, jobs = count_jobs(
+        lambda: forget_keys(spark, str(tmp_path / "snapshot"), forget, ["k"])
+    )
+    assert purged == {}
     assert jobs == 0, jobs
